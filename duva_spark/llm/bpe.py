@@ -102,6 +102,34 @@ def greedy_merge(syms: Column, a: str, b: str) -> Column:
     return F.aggregate(syms, F.array().cast("array<string>"), step)
 
 
+def encode_word_py(
+    word: str, pairs: list[tuple[str, str, str]], alphabet: str = "char"
+) -> list[str]:
+    """Python twin of ``symbolize`` + one ``greedy_merge`` per rule:
+    the word's symbols (chars, or UTF-8 bytes as 2-char uppercase hex)
+    after each (a, b, merged) rule in TRAINING ORDER as one greedy
+    left-to-right merge-and-consume scan. The Arrow encode kernels run
+    this per distinct word."""
+    if alphabet == "byte":
+        h = word.encode("utf-8").hex().upper()
+        syms = [h[i : i + 2] for i in range(0, len(h), 2)]
+    else:
+        syms = list(word)
+    for a, b, m in pairs:
+        out = []
+        i = 0
+        n = len(syms)
+        while i < n:
+            if i + 1 < n and syms[i] == a and syms[i + 1] == b:
+                out.append(m)
+                i += 2
+            else:
+                out.append(syms[i])
+                i += 1
+        syms = out
+    return syms
+
+
 def _pair_counts(seqs: DataFrame) -> DataFrame:
     """(a, b, n): adjacent-pair frequencies over the current symbol
     sequences, weighted by word count (overlapping pairs counted, the
@@ -188,22 +216,6 @@ def bpe_train_frame(
     )
 
 
-def encode_word(
-    word: Column,
-    rules: list[tuple[int, str, str, str, int]],
-    alphabet: str = "char",
-) -> Column:
-    """A word's BPE symbol sequence after applying the trained merge
-    rules IN TRAINING ORDER: char split, then one greedy fold per rule
-    with the pair inlined as literals — a single codegen expression, no
-    UDF, no lookup table, no shuffle. (The tokenizer-application dual
-    of bpe_train: train once, encode as a pure projection.)"""
-    syms = symbolize(word, alphabet)
-    for _, a, b, _, _ in rules:
-        syms = greedy_merge(syms, a, b)
-    return syms
-
-
 def encode_token_counts(
     docs: DataFrame,
     rules: list[tuple[int, str, str, str, int]],
@@ -212,49 +224,20 @@ def encode_token_counts(
     alphabet: str = "char",
 ) -> DataFrame:
     """(id_col, n_words, n_char_tokens, n_bpe_tokens, compression):
-    per-document token census under the trained merges. The whole
-    encode folds into the scan projection — per-word nested greedy
-    folds in codegen, zero exchanges before the per-doc aggregate."""
-    ws = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
-    per_word = F.transform(ws, lambda w: F.size(encode_word(w, rules, alphabet)))
-    chars = F.transform(
-        ws,
-        (lambda w: F.octet_length(w)) if alphabet == "byte" else (lambda w: F.length(w)),
-    )
-    n_char = F.aggregate(chars, F.lit(0), lambda acc, v: acc + v)
-    n_bpe = F.aggregate(per_word, F.lit(0), lambda acc, v: acc + v)
-    return docs.select(
-        id_col,
-        F.size(ws).cast("long").alias("n_words"),
-        n_char.cast("long").alias("n_char_tokens"),
-        n_bpe.cast("long").alias("n_bpe_tokens"),
-        # empty/whitespace-only doc: 0/0 is defined as 0.0 (the oracle's
-        # LEFT JOIN + CASE twin), not NULL
-        F.when(n_char > 0, F.round(n_bpe * 1.0 / n_char, 6))
-        .otherwise(F.lit(0.0))
-        .alias("compression"),
-    )
+    per-document token census under the trained merges — the
+    tokenizer-application dual of bpe_train (train once, encode as a
+    pure per-row projection, zero exchanges before the per-doc
+    aggregate).
 
-
-def encode_token_counts_arrow(
-    docs: DataFrame,
-    rules: list[tuple[int, str, str, str, int]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    alphabet: str = "char",
-) -> DataFrame:
-    """Arrow-kernel twin of :func:`encode_token_counts` (mapInPandas,
-    one batched Python pass, per-task word→count memo) — the same
-    measured remedy as the Gopher and unigram-Viterbi kernels: the
-    nested per-rule ``F.aggregate`` folds are interpreted
-    (CodegenFallback) per SYMBOL, and the byte alphabet roughly doubles
-    the symbol count, so the fold form pays ~10× over a batched scan.
-    Pinned value-identical to the fold form by
-    tests/test_llm_ops.py::test_bpe_encode_arrow_matches_fold.
-
-    Semantics replicated exactly: symbolization (chars, or UTF-8 bytes
-    as 2-char uppercase hex), then each trained rule applied in
-    TRAINING ORDER as one greedy left-to-right merge-and-consume scan.
+    An Arrow kernel (mapInPandas, one batched Python pass, per-task
+    word→count memo): symbolization (chars, or UTF-8 bytes as 2-char
+    uppercase hex), then each trained rule applied in TRAINING ORDER as
+    one greedy left-to-right merge-and-consume scan (``encode_word_py``).
+    The Column form of
+    the same encode (nested per-rule ``greedy_merge`` folds) is
+    interpreted per SYMBOL and measured ~30× slower; it is the pin-test
+    oracle in ``tests/reference_folds.py``
+    (tests/test_llm_ops.py::test_bpe_encode_arrow_matches_fold).
     """
     pairs = [(a, b, m) for _, a, b, m, _ in rules]
 
@@ -265,27 +248,9 @@ def encode_token_counts_arrow(
 
         def n_tokens(word: str) -> int:
             hit = memo.get(word)
-            if hit is not None:
-                return hit
-            if alphabet == "byte":
-                h = word.encode("utf-8").hex().upper()
-                syms = [h[i : i + 2] for i in range(0, len(h), 2)]
-            else:
-                syms = list(word)
-            for a, b, m in pairs:
-                out = []
-                i = 0
-                n = len(syms)
-                while i < n:
-                    if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                        out.append(m)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            memo[word] = len(syms)
-            return len(syms)
+            if hit is None:
+                hit = memo[word] = len(encode_word_py(word, pairs, alphabet))
+            return hit
 
         for pdf in batches:
             ids, nw, nc, nb = [], [], [], []
@@ -322,6 +287,8 @@ def encode_token_counts_arrow(
             F.col("n_char_tokens") > 0,
             F.round(F.col("n_bpe_tokens") * 1.0 / F.col("n_char_tokens"), 6),
         )
+        # empty/whitespace-only doc: 0/0 is defined as 0.0 (the oracle's
+        # LEFT JOIN + CASE twin), not NULL
         .otherwise(F.lit(0.0))
         .alias("compression"),
     )
@@ -347,40 +314,34 @@ def encode_dropout_counts(
     outcome in any implementation order, which is exactly what lets the
     DuckDB oracle replay the same segmentation with the window-function
     merge chain plus one extra mask predicate. Same Arrow/memo shape as
-    encode_token_counts_arrow; one batched pass, zero exchanges before
+    encode_token_counts; one batched pass, zero exchanges before
     the downstream aggregate."""
     import hashlib
 
     pairs = [(r, a, b, m) for r, a, b, m, _ in rules]
+    std_pairs = [(a, b, m) for _, a, b, m in pairs]
 
     def kernel(batches):
         import pandas as pd
 
         memo: dict[str, tuple[int, int]] = {}
 
-        def split_syms(word: str) -> list[str]:
-            if alphabet == "byte":
-                h = word.encode("utf-8").hex().upper()
-                return [h[i : i + 2] for i in range(0, len(h), 2)]
-            return list(word)
-
-        def merge_pass(syms, a, b, m, drop_key=None):
+        def dropout_pass(syms, a, b, m, drop_key):
             out = []
             i = 0
             n = len(syms)
             while i < n:
                 if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                    if drop_key is not None:
-                        h = int(
-                            hashlib.md5(
-                                f"{drop_key}|{i + 1}".encode("utf-8")
-                            ).hexdigest()[:15],
-                            16,
-                        )
-                        if h % p_inv == 0:
-                            out.append(syms[i])
-                            i += 1
-                            continue
+                    h = int(
+                        hashlib.md5(
+                            f"{drop_key}|{i + 1}".encode("utf-8")
+                        ).hexdigest()[:15],
+                        16,
+                    )
+                    if h % p_inv == 0:
+                        out.append(syms[i])
+                        i += 1
+                        continue
                     out.append(m)
                     i += 2
                 else:
@@ -392,12 +353,10 @@ def encode_dropout_counts(
             hit = memo.get(word)
             if hit is not None:
                 return hit
-            std = split_syms(word)
-            drp = list(std)
+            drp = encode_word_py(word, [], alphabet)
             for r, a, b, m in pairs:
-                std = merge_pass(std, a, b, m)
-                drp = merge_pass(drp, a, b, m, drop_key=f"{word}|{r}")
-            memo[word] = (len(std), len(drp))
+                drp = dropout_pass(drp, a, b, m, drop_key=f"{word}|{r}")
+            memo[word] = (len(encode_word_py(word, std_pairs, alphabet)), len(drp))
             return memo[word]
 
         for pdf in batches:

@@ -90,9 +90,7 @@ def funnel_features(
             & F.col("pass_alpha")
         ).alias("pass_gopher"),
     )
-    # Arrow kernel: the r8 A/B measured it 15x faster than the codegen
-    # HOF form at sf0.1 (interpreted lambdas dominate); value-identical
-    rep = textstats.gopher_repetition_arrow(
+    rep = textstats.gopher_repetition(
         docs, id_col=id_col, text_col=text_col
     ).select(id_col, "pass_repetition")
     h = minhash.md5_hash60(F.col(id_col).cast("string")) % 100

@@ -1,8 +1,9 @@
 """Text analysis operators: tokenization, quality scoring, language-ID,
 document fingerprinting.
 
-All pure Column expressions (whole-stage codegen, no UDFs) — at 100 TB
-these run at parquet-scan speed with full column pruning. A BPE-ish
+All pure Column expressions (whole-stage codegen, no UDFs) except the
+Gopher repetition battery, a batched Arrow kernel — at 100 TB these run
+at parquet-scan speed with full column pruning. A BPE-ish
 regex token count is included alongside whitespace tokens for
 token-budget estimation.
 """
@@ -281,12 +282,11 @@ GOPHER_DUP_NGRAM_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
 def _repetition_report(
     raw: DataFrame, id_col: str, dp: int
 ) -> DataFrame:
-    """Shared tail of both repetition implementations: turn the exact
-    integer counts (tc_n = top-gram char mass, dc_n = duplicate-gram
-    char coverage) into rounded fractions + the threshold conjunction.
-    Keeping the division/rounding in the SAME Column expressions for
-    both the codegen and the Arrow kernel means the two impls can be
-    swapped without touching the cross-engine rounding contract."""
+    """Repetition-battery tail: turn the exact integer counts (tc_n =
+    top-gram char mass, dc_n = duplicate-gram char coverage) into
+    rounded fractions + the threshold conjunction. The test-side Column
+    fold shares this tail, so kernel and reference cannot drift on the
+    cross-engine rounding contract."""
     wc = F.col("word_chars")
 
     def frac(col):
@@ -308,26 +308,43 @@ def _repetition_report(
     return raw.select(*cols, conj.alias("pass_repetition"))
 
 
-def gopher_repetition_arrow(
+def gopher_repetition(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     dp: int = 6,
 ) -> DataFrame:
-    """The repetition battery as an Arrow kernel (mapInPandas): one
-    python pass per document computes the EXACT INTEGER statistics
-    (top-gram char mass per n, duplicate-coverage char mass per n);
-    the fractions, rounding, and thresholds stay in the shared Column
-    tail, so the kernel and the codegen form are value-identical by
-    construction (asserted against each other in tests and under the
-    same oracle). Same shuffle story as the codegen form: a pure
-    per-row projection, embarrassingly parallel, no Exchange.
+    """Per-doc Gopher REPETITION battery (Rae et al. 2021 A1.1, table
+    A1) — the within-document complement of the cross-document span
+    family:
 
-    Rationale: the codegen form's higher-order-function lambdas are
-    INTERPRETED per element; dict-based counting in an Arrow batch
-    amortizes that — the r8 A/B keeps whichever measures faster (the
-    r3 money_cents precedent: measure, keep the winner, document the
-    loser)."""
+    - ``top_frac_{2,3,4}``: fraction of word characters contained in
+      the most frequently occurring n-gram (occurrence count × the
+      gram's word-char length, over the doc's total word chars); ties
+      on count break to the LEXICOGRAPHICALLY SMALLEST gram on both
+      engines.
+    - ``dup_frac_{5..10}``: fraction of word characters covered by any
+      n-gram occurring >= 2 times in the doc, counted by POSITION
+      COVERAGE (overlapping duplicate grams never double-count) — the
+      DataTrove/NeMo-Curator accounting.
+    - ``pass_repetition``: the conjunction of all nine thresholds
+      (table A1), each compared on the ``dp``-rounded fraction.
+
+    Character accounting covers word characters only (inter-word
+    whitespace excluded on both engines — on canonically single-spaced
+    text the two differ only by the whitespace mass, documented
+    deviation from the paper's raw-char counts).
+
+    Scale design — ZERO SHUFFLES: every statistic is a function of ONE
+    document, so the battery is an Arrow kernel (mapInPandas) over the
+    scan, plan-asserted no-Exchange. One python pass per document
+    computes the EXACT INTEGER statistics (top-gram char mass per n,
+    duplicate-coverage char mass per n); the fractions, rounding, and
+    thresholds live in the Column tail ``_repetition_report``. The
+    Column form of the same battery (sorted-gram-array higher-order
+    functions, interpreted per element) measured 15× slower in the r8
+    A/B; it shares ``_repetition_report`` and is the pin-test oracle
+    in ``tests/reference_folds.py``."""
     import pandas as pd
 
     top_ns = sorted(GOPHER_TOP_NGRAM_MAX)
@@ -346,9 +363,9 @@ def gopher_repetition_arrow(
             rows = []
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 if not isinstance(text, str):
-                    # NULL text: the codegen form's split(NULL) yields
-                    # NULL n_words/word_chars and 0.0 fractions after
-                    # the report's guard — emit the same, don't crash
+                    # NULL text: NULL n_words/word_chars and 0.0
+                    # fractions after the report's guard (split(NULL)
+                    # semantics), don't crash
                     rows.append(
                         [did, None, None] + [0] * (len(top_ns) + len(dup_ns))
                     )
@@ -373,8 +390,7 @@ def gopher_repetition_arrow(
                     if L >= n:
                         counts = Counter(zip(*(ws[i:] for i in range(n))))
                         best = max(counts.values())
-                        # tie → lexicographically smallest gram (the
-                        # sorted-run rule of the codegen form)
+                        # tie → lexicographically smallest gram
                         bg = min(
                             " ".join(t) for t, c in counts.items() if c == best
                         )
@@ -411,135 +427,3 @@ def gopher_repetition_arrow(
 
     raw = df.select(id_col, text_col).mapInPandas(kernel, schema=schema)
     return _repetition_report(raw, id_col, dp)
-
-
-def gopher_repetition(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    dp: int = 6,
-) -> DataFrame:
-    """Per-doc Gopher REPETITION battery (Rae et al. 2021 A1.1, table
-    A1) — the within-document complement of the cross-document span
-    family:
-
-    - ``top_frac_{2,3,4}``: fraction of word characters contained in
-      the most frequently occurring n-gram (occurrence count × the
-      gram's word-char length, over the doc's total word chars); ties
-      on count break to the LEXICOGRAPHICALLY SMALLEST gram on both
-      engines.
-    - ``dup_frac_{5..10}``: fraction of word characters covered by any
-      n-gram occurring >= 2 times in the doc, counted by POSITION
-      COVERAGE (overlapping duplicate grams never double-count) — the
-      DataTrove/NeMo-Curator accounting.
-    - ``pass_repetition``: the conjunction of all nine thresholds
-      (table A1), each compared on the ``dp``-rounded fraction.
-
-    Character accounting covers word characters only (inter-word
-    whitespace excluded on both engines — on canonically single-spaced
-    text the two differ only by the whitespace mass, documented
-    deviation from the paper's raw-char counts).
-
-    Scale design — ZERO SHUFFLES: every statistic here is a function of
-    ONE document, so the whole battery is array expressions inside the
-    scan projection (plan-asserted no-Exchange, like the quality
-    battery). Per n: sort the doc's gram array once — the longest
-    equal-adjacent run IS the top count (ascending sort makes the first
-    maximal run the lexicographic tie-winner), adjacent-equal pairs ARE
-    the duplicate-gram set, and coverage is a width-n sliding OR over
-    the dup flags. An earlier draft shuffled a 9-way-amplified
-    (doc, n, gram-hash) stream to count grams corpus-wide — measurably
-    the wrong shape (13x per 10x from single-host spill) for a
-    statistic that never needed cross-document state.
-    """
-    ws = words_of(F.col(text_col))
-    top_ns = sorted(GOPHER_TOP_NGRAM_MAX)
-    dup_ns = sorted(GOPHER_DUP_NGRAM_MAX)
-    base = df.select(F.col(id_col), ws.alias("ws"))
-    wc = F.length(F.concat_ws("", "ws"))
-    L = F.size("ws")
-
-    def grams_of(n: int):
-        # slot i (0-based) is the gram starting at word i; guarded so a
-        # doc shorter than n words yields an empty array
-        return F.when(
-            L >= n,
-            F.transform(
-                F.sequence(F.lit(0), L - n),
-                lambda i: F.concat_ws(" ", F.slice("ws", i + 1, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    def top_chars(n: int):
-        # longest equal-adjacent run in the SORTED gram array = the max
-        # occurrence count; strict '>' keeps the first (lexicographically
-        # smallest) maximal run's gram as the tie-winner
-        sg = F.array_sort(grams_of(n))
-        z = F.aggregate(
-            sg,
-            F.struct(
-                F.lit("").alias("prev"),
-                F.lit(0).alias("run"),
-                F.lit(0).alias("best"),
-                F.lit("").alias("bg"),
-            ),
-            lambda a, x: F.struct(
-                x.alias("prev"),
-                F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)).alias("run"),
-                F.greatest(
-                    a["best"],
-                    F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)),
-                ).alias("best"),
-                F.when(
-                    F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)) > a["best"],
-                    x,
-                )
-                .otherwise(a["bg"])
-                .alias("bg"),
-            ),
-        )
-        return z["best"].cast("long") * (F.length(z["bg"]) - (n - 1))
-
-    def dup_chars(n: int):
-        # duplicate grams = values with an equal neighbor in the sorted
-        # array; coverage = width-n sliding OR over per-gram dup flags,
-        # charged at each covered word's length (overlap-safe)
-        g = grams_of(n)
-        sg = F.array_sort(g)
-        eqs = F.zip_with(
-            sg,
-            F.slice(sg, 2, F.greatest(F.size(sg) - 1, F.lit(0))),
-            lambda a, b: F.when(a == b, a),
-        )
-        dups = F.array_distinct(F.filter(eqs, lambda x: x.isNotNull()))
-        flags = F.transform(g, lambda x: F.array_contains(dups, x))
-        covered = F.aggregate(
-            F.sequence(F.lit(0), L - 1),
-            F.lit(0).cast("long"),
-            lambda acc, j: acc
-            + F.when(
-                F.exists(
-                    F.sequence(
-                        F.greatest(j - (n - 1), F.lit(0)),
-                        F.least(j, F.size(g) - 1),
-                    ),
-                    lambda i: F.element_at(flags, i + 1),
-                ),
-                F.length(F.element_at(F.col("ws"), j + 1)),
-            ).otherwise(F.lit(0)),
-        )
-        return F.when((L >= n) & (F.size(dups) > 0), covered).otherwise(F.lit(0))
-
-    # integer counts only — the fractions, rounding and thresholds live
-    # in _repetition_report, SHARED with the Arrow kernel so the two
-    # implementations cannot drift (they are swapped by measured A/B)
-    cols = [
-        F.col(id_col),
-        L.cast("long").alias("n_words"),
-        wc.cast("long").alias("word_chars"),
-    ]
-    for n in top_ns:
-        cols.append(top_chars(n).cast("long").alias(f"tc_{n}"))
-    for n in dup_ns:
-        cols.append(dup_chars(n).cast("long").alias(f"dc_{n}"))
-    return _repetition_report(base.select(*cols), id_col, dp)

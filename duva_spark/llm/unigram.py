@@ -21,22 +21,18 @@ Spark-first shape (the bpe_train contract):
   pieces by count, ties to the lexicographically smallest) plus ALL
   single characters — guaranteeing every word stays segmentable.
 - Per round: the ≤(n_seed + alphabet) piece log-probs ride to the
-  executors (map literal in the fold form, pandas-UDF closure in the
-  Arrow form); the E-step count is one vocab-bounded shuffle; driver
-  state is V floats — the kcenter/kmeans/doremi bounded-iteration
-  contract.
+  executors in the pandas-UDF closure; the E-step count is one
+  vocab-bounded shuffle; driver state is V floats — the
+  kcenter/kmeans/doremi bounded-iteration contract.
 
-Execution paths (``impl=``): the Viterbi DP exists twice, value-
-identical by construction and asserted against each other in tests —
-'fold' (a pure ``F.aggregate`` Column fold: no UDF, no join, no
-shuffle, but INTERPRETED per element — higher-order-function lambdas
-fall out of codegen) and 'arrow' (mapInPandas kernels with the same
-IEEE-double additions in the same order, plus a per-task word→count
-memo on the encode leg). The r9 A/B at sf0.1 measured the full
-train+encode chain at 28.6 s (fold) vs 2.1 s (arrow) min-of-2 — the
-same ~15× the Gopher-repetition A/B found for the same construct
-(``textstats.gopher_repetition_arrow``) — so 'arrow' is the default
-and the fold is kept for the A/B reproduction and plan-shape tests.
+Execution: every Viterbi pass (E-step, encode, prune, fertility) is a
+mapInPandas kernel over ``_viterbi_seg_py`` / ``_viterbi_count_py``,
+with a per-task word→count memo on the encode legs. The interpreted
+``F.aggregate`` Column fold of the same DP (higher-order-function
+lambdas fall out of codegen) measured 28.6 s vs 2.1 s for the kernels
+on the r9 train+encode chain at sf0.1, min-of-2; it lives on only as
+the pin-test oracle in ``tests/reference_folds.py``, asserted
+value-identical to the kernels.
 
 Determinism spec (both engines replay it exactly):
 
@@ -47,7 +43,7 @@ Determinism spec (both engines replay it exactly):
   sub-ulp cross-engine ln() drift.
 - Viterbi: ``best[i] = max_j best[j] + lp(w[j+1..i])`` over start
   positions ``j ∈ [max(0, i−max_len), i−1]``; the chosen predecessor
-  is the SMALLEST j attaining the max (equivalently: the fold keeps a
+  is the SMALLEST j attaining the max (equivalently: the DP keeps a
   candidate only when strictly better, scanning j ascending). Score
   sums are the same left-to-right double additions on both engines, so
   the exact-equality backtrace the oracle uses picks the same path.
@@ -61,9 +57,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from duva_spark.llm.bpe import word_vocab
+from duva_spark.llm.bpe import encode_word_py, word_vocab
 from duva_spark.llm.hashed_lm import round_half_up
 
 _SENTINEL = -1e18
@@ -92,99 +88,17 @@ def substring_counts(words: DataFrame, max_len: int) -> DataFrame:
     )
 
 
-def viterbi_segment(word: Column, vocab_map: Column, max_len: int) -> Column:
-    """The word's max-likelihood segmentation under ``vocab_map``
-    (piece → 6-dp log-prob) as ``array<string>`` — a single pure fold
-    (``F.aggregate``) over character positions: state i carries
-    (best score, best segment) for the prefix w[1..i]; candidates scan
-    start positions j ascending and replace only when STRICTLY better,
-    so the smallest j attaining the max wins (the rule the oracle's
-    exact-equality backtrace reproduces). No UDF, no join, no shuffle."""
-    n = F.length(word)
-    init = F.array(
-        F.struct(
-            F.lit(0.0).alias("s"), F.array().cast("array<string>").alias("seg")
-        )
-    )
-    sentinel = F.struct(
-        F.lit(_SENTINEL).alias("s"), F.array().cast("array<string>").alias("seg")
-    )
-
-    def step(acc: Column, i: Column) -> Column:
-        def cand(b: Column, j: Column) -> Column:
-            piece = word.substr(j + 1, i - j)
-            lpv = F.element_at(vocab_map, piece)
-            st = F.element_at(acc, j + 1)
-            cs = st["s"] + lpv
-            better = lpv.isNotNull() & (cs > b["s"])
-            return F.when(
-                better,
-                F.struct(
-                    cs.alias("s"),
-                    F.concat(st["seg"], F.array(piece)).alias("seg"),
-                ),
-            ).otherwise(b)
-
-        best = F.aggregate(
-            F.sequence(F.greatest(i - F.lit(max_len), F.lit(0)), i - 1),
-            sentinel,
-            cand,
-        )
-        return F.concat(acc, F.array(best))
-
-    states = F.aggregate(F.sequence(F.lit(1), n), init, step)
-    return F.element_at(states, n + 1)["seg"]
-
-
-def viterbi_token_count(word: Column, vocab_map: Column, max_len: int) -> Column:
-    """Number of pieces in the word's max-likelihood segmentation — the
-    ``viterbi_segment`` fold with the DP state slimmed to
-    (score, n_pieces): the strictly-better replace rule picks the same
-    smallest-start predecessor chain, and each state has a unique chosen
-    predecessor under it, so the count equals
-    ``size(viterbi_segment(...))`` without carrying piece arrays
-    through the fold. Unsegmentable words (impossible when the vocab
-    was trained on the same corpus — every single char is a piece)
-    yield 0."""
-    n = F.length(word)
-    init = F.array(
-        F.struct(F.lit(0.0).alias("s"), F.lit(0).alias("np"))
-    )
-    sentinel = F.struct(F.lit(_SENTINEL).alias("s"), F.lit(0).alias("np"))
-
-    def step(acc: Column, i: Column) -> Column:
-        def cand(b: Column, j: Column) -> Column:
-            piece = word.substr(j + 1, i - j)
-            lpv = F.element_at(vocab_map, piece)
-            st = F.element_at(acc, j + 1)
-            cs = st["s"] + lpv
-            better = lpv.isNotNull() & (cs > b["s"])
-            return F.when(
-                better, F.struct(cs.alias("s"), (st["np"] + 1).alias("np"))
-            ).otherwise(b)
-
-        best = F.aggregate(
-            F.sequence(F.greatest(i - F.lit(max_len), F.lit(0)), i - 1),
-            sentinel,
-            cand,
-        )
-        return F.concat(acc, F.array(best))
-
-    states = F.aggregate(F.sequence(F.lit(1), n), init, step)
-    final = F.element_at(states, n + 1)
-    return F.when(final["s"] > _SENTINEL / 2, final["np"]).otherwise(F.lit(0))
-
-
 def _viterbi_count_py(word: str, lp: dict[str, float], max_len: int) -> int:
-    """Python replica of the ``viterbi_token_count`` fold — EXACTLY the
-    same IEEE-double additions in the same left-to-right order and the
-    same strictly-better / smallest-start rule, so the two
-    implementations are value-identical by construction (asserted
-    against each other in tests and under the same oracle). Sentinel
-    extensions never win: lp values are negative and ``-1e18 + lp``
-    rounds back to -1e18 in double, which is not strictly greater than
-    the -1e18 candidate floor — the same absorption the Column fold
-    relies on."""
+    """Number of pieces in the word's max-likelihood segmentation under
+    ``lp`` — the forward DP with the state slimmed to (score,
+    n_pieces): left-to-right IEEE-double additions, candidates scanned
+    j ascending and replaced only when STRICTLY better (the smallest
+    start wins, the rule the oracle's exact-equality backtrace
+    reproduces). Unsegmentable words yield 0. Sentinel extensions never
+    win: lp values are negative and ``-1e18 + lp`` rounds back to -1e18
+    in double, which is not strictly greater than the -1e18 candidate
+    floor. Pinned value-identical to the Column fold in
+    ``tests/reference_folds.py``."""
     n = len(word)
     s = [0.0] + [_SENTINEL] * n
     np_ = [0] * (n + 1)
@@ -201,9 +115,9 @@ def _viterbi_count_py(word: str, lp: dict[str, float], max_len: int) -> int:
 
 
 def _viterbi_seg_py(word: str, lp: dict[str, float], max_len: int) -> list[str]:
-    """Python replica of the ``viterbi_segment`` fold (same contract as
-    ``_viterbi_count_py``, carrying the chosen-predecessor chain
-    instead of the count)."""
+    """The word's max-likelihood segmentation under ``lp`` (same DP and
+    tie rule as ``_viterbi_count_py``, carrying the chosen-predecessor
+    chain instead of the count); ``[]`` when unsegmentable."""
     n = len(word)
     s = [0.0] + [_SENTINEL] * n
     back: list[tuple[int, str] | None] = [None] * (n + 1)
@@ -230,16 +144,15 @@ def _viterbi_seg_py(word: str, lp: dict[str, float], max_len: int) -> list[str]:
     return out
 
 
-def estep_counts_arrow(
+def estep_counts(
     words: DataFrame, lp: dict[str, float], max_len: int
 ) -> DataFrame:
     """(piece, c): one E-step recount over the word-frequency table as
     an Arrow kernel — each batch segments its distinct words in Python
     (dict lookups amortized across the batch) and emits PARTIAL piece
     counts, so the groupBy that follows shuffles ≤ vocab × partitions
-    rows instead of the exploded piece stream. Value-identical to the
-    ``viterbi_segment`` fold + explode + groupBy (the segmentation is
-    the same DP; the sum is exact integers)."""
+    rows instead of the exploded piece stream (the sum is exact
+    integers)."""
     import pandas as pd
 
     def kernel(batches):
@@ -256,7 +169,7 @@ def estep_counts_arrow(
     return partial.groupBy("piece").agg(F.sum("c").alias("c"))
 
 
-def unigram_encode_counts_arrow(
+def unigram_encode_counts(
     docs: DataFrame,
     lp: dict[str, float],
     id_col: str = "doc_id",
@@ -264,22 +177,22 @@ def unigram_encode_counts_arrow(
     max_len: int = 4,
     word_cap: int = 16,
 ) -> DataFrame:
-    """The ``unigram_encode_counts`` census as an Arrow kernel
-    (mapInPandas): one Python pass per document computes the EXACT
-    INTEGER statistics (word/char/token counts) with a per-task
-    word→token-count memo (Zipf makes most words repeats, so the DP
-    runs once per distinct word per task, not once per occurrence);
-    the division and rounding stay in the SAME Column tail as the fold
-    form, so kernel and codegen are value-identical by construction.
+    """(id_col, n_words, n_char_tokens, n_unigram_tokens, compression):
+    per-document token census under the trained unigram model ``lp``
+    (piece → log-prob), the tokenizer-application dual of
+    ``unigram_train`` (the ``bpe.encode_token_counts`` contract). Words
+    longer than ``word_cap`` are excluded from the census — the same
+    cap the trainer applies, so train and encode see one vocabulary
+    universe.
 
-    Rationale: the fold form's higher-order-function lambdas are
-    INTERPRETED per element — the same construct the Gopher-repetition
-    A/B measured at 15× slower than an Arrow kernel
-    (``textstats.gopher_repetition_arrow``); this is the measured
-    winner of the r9 A/B (the loser is kept as
-    ``unigram_encode_counts`` for the plan-shape tests and the A/B
-    reproduction). Same shuffle story: a pure per-row projection,
-    embarrassingly parallel, no Exchange before the per-doc stats."""
+    An Arrow kernel (mapInPandas): one Python pass per document
+    computes the EXACT INTEGER statistics with a per-task
+    word→token-count memo (Zipf makes most words repeats, so the DP
+    runs once per distinct word per task, not once per occurrence); the
+    division and rounding stay in a Column tail. A pure per-row
+    projection, no Exchange before the per-doc stats. Pinned
+    value-identical to ``unigram_encode_counts_fold`` in
+    ``tests/reference_folds.py``."""
     import pandas as pd
 
     id_dt = docs.schema[id_col].dataType.simpleString()
@@ -291,8 +204,8 @@ def unigram_encode_counts_arrow(
             rows = []
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 if not isinstance(text, str):
-                    # NULL text: split(NULL) nulls the whole census in
-                    # the fold form — emit the same
+                    # NULL text: the whole census is NULL (the
+                    # split(NULL) semantics of the Column form)
                     rows.append([did, None, None, None])
                     continue
                 ws = [
@@ -318,6 +231,8 @@ def unigram_encode_counts_arrow(
         "n_words",
         "n_char_tokens",
         "n_unigram_tokens",
+        # empty/whitespace-only doc: 0/0 is defined as 0.0 (the oracle's
+        # LEFT JOIN + CASE twin), not NULL
         F.when(
             F.col("n_char_tokens") > 0,
             F.round(F.col("n_unigram_tokens") * 1.0 / F.col("n_char_tokens"), 6),
@@ -327,7 +242,7 @@ def unigram_encode_counts_arrow(
     )
 
 
-def fertility_counts_arrow(
+def fertility_counts(
     docs: DataFrame,
     rules: list[tuple[int, str, str, str, int]],
     lp: dict[str, float],
@@ -340,19 +255,12 @@ def fertility_counts_arrow(
     head-to-head census (BPE char merges AND unigram Viterbi count per
     word) as ONE Arrow kernel pass with per-task word→count memos.
 
-    r12 optimization: q_tokenizer_fertility_trained previously encoded
-    every word occurrence through the nested greedy-merge folds plus
-    the Viterbi fold — higher-order-function lambdas are INTERPRETED
-    per element (the same construct the Gopher-repetition and
-    unigram-encode A/Bs measured at 10-15× slower than an Arrow
-    kernel), and the fold re-runs per OCCURRENCE where the memo runs
-    once per distinct word per task (Zipf). Semantics replicated
-    exactly: the BPE loop is the pinned-identical merge scan of
-    ``bpe.encode_token_counts_arrow`` (training-order, greedy
-    left-to-right merge-and-consume) and the unigram count is
-    ``_viterbi_count_py`` (pinned identical to the fold in tests);
-    word universe w != '' and len(w) <= word_cap, identical to the
-    fold projection. Pinned value-identical to the fold form by
+    The BPE count is ``bpe.encode_word_py`` (the merge scan of
+    ``bpe.encode_token_counts``) and the
+    unigram count is ``_viterbi_count_py``; the word universe is
+    w != '' and len(w) <= word_cap. The memos run each DP once per
+    distinct word per task (Zipf), not once per occurrence. Pinned
+    value-identical to the Column-fold projection by
     tests/test_llm_ops.py::test_fertility_arrow_matches_fold."""
     import pandas as pd
 
@@ -366,23 +274,9 @@ def fertility_counts_arrow(
 
         def bpe_n(word: str) -> int:
             hit = bmemo.get(word)
-            if hit is not None:
-                return hit
-            syms = list(word)
-            for a, b, m in pairs:
-                out = []
-                i = 0
-                n = len(syms)
-                while i < n:
-                    if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                        out.append(m)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            bmemo[word] = len(syms)
-            return len(syms)
+            if hit is None:
+                hit = bmemo[word] = len(encode_word_py(word, pairs))
+            return hit
 
         def uni_n(word: str) -> int:
             hit = umemo.get(word)
@@ -395,8 +289,8 @@ def fertility_counts_arrow(
             rows = []
             for g, text in zip(pdf[group_col], pdf[text_col]):
                 if not isinstance(text, str):
-                    # NULL text: split(NULL) nulls the whole census in
-                    # the fold form — emit the same
+                    # NULL text: the whole census is NULL (the
+                    # split(NULL) semantics of the Column form)
                     rows.append([g, None, None, None, None])
                     continue
                 ws = [
@@ -418,53 +312,6 @@ def fertility_counts_arrow(
     return docs.select(group_col, text_col).mapInPandas(kernel, schema=schema)
 
 
-def unigram_encode_counts(
-    docs: DataFrame,
-    lp: dict[str, float],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_len: int = 4,
-    word_cap: int = 16,
-) -> DataFrame:
-    """(id_col, n_words, n_char_tokens, n_unigram_tokens, compression):
-    per-document token census under the trained unigram model ``lp``
-    (piece → log-prob), the tokenizer-application dual of
-    ``unigram_train`` (the ``bpe.encode_token_counts`` contract). Words
-    longer than ``word_cap`` are excluded from the census — the same
-    cap the trainer applies, so train and encode see one vocabulary
-    universe. The whole encode is a PURE PROJECTION: the model is
-    inlined as a map literal, each word runs the slim Viterbi fold,
-    zero exchanges before the per-doc aggregate."""
-    pieces = sorted(lp)
-    # two array Literals, not CreateArray over 2*vocab literal nodes:
-    # the optimizer re-walks the whole tree per AQE re-optimization and
-    # the vocab runs to thousands of pieces (values identical)
-    vocab_map = F.map_from_arrays(
-        F.lit(list(pieces)), F.lit([lp[p] for p in pieces])
-    )
-    ws = F.filter(
-        F.split(F.col(text_col), " "),
-        lambda w: (w != "") & (F.length(w) <= word_cap),
-    )
-    per_word = F.transform(
-        ws, lambda w: viterbi_token_count(w, vocab_map, max_len)
-    )
-    chars = F.transform(ws, lambda w: F.length(w))
-    n_char = F.aggregate(chars, F.lit(0), lambda acc, v: acc + v)
-    n_uni = F.aggregate(per_word, F.lit(0), lambda acc, v: acc + v)
-    return docs.select(
-        id_col,
-        F.size(ws).cast("long").alias("n_words"),
-        n_char.cast("long").alias("n_char_tokens"),
-        n_uni.cast("long").alias("n_unigram_tokens"),
-        # empty/whitespace-only doc: 0/0 is defined as 0.0 (the oracle's
-        # LEFT JOIN + CASE twin), not NULL
-        F.when(n_char > 0, F.round(n_uni * 1.0 / n_char, 6))
-        .otherwise(F.lit(0.0))
-        .alias("compression"),
-    )
-
-
 def unigram_trained_lp(
     docs: DataFrame,
     text_col: str = "text",
@@ -473,12 +320,11 @@ def unigram_trained_lp(
     rounds: int = 3,
     dp: int = 6,
     word_cap: int = 16,
-    impl: str = "arrow",
 ) -> dict[str, float]:
     """Train and return the FINAL model (piece → log-prob re-estimated
     from the last E-step's counts) — what an encode pass applies."""
     pieces, counts, tt, vsz = unigram_train(
-        docs, text_col, max_len, n_seed, rounds, dp, word_cap, impl=impl
+        docs, text_col, max_len, n_seed, rounds, dp, word_cap
     )
     return {
         p: round_half_up(math.log((counts.get(p, 0) + 1) / (tt + vsz)), dp)
@@ -495,21 +341,13 @@ def unigram_train_encode(
     rounds: int = 3,
     dp: int = 6,
     word_cap: int = 16,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Train the unigram LM, then encode the corpus under the FINAL
     model (the probabilities re-estimated from the last E-step's
     counts — one Viterbi pass beyond training, exactly the oracle
-    chain extended one round). ``impl`` picks the Viterbi execution
-    path for BOTH phases: 'arrow' (mapInPandas kernels — the measured
-    r9 A/B winner) or 'fold' (the interpreted ``F.aggregate`` Column
-    form, kept for the A/B reproduction); the two are value-identical
-    by construction."""
-    lp = unigram_trained_lp(
-        docs, text_col, max_len, n_seed, rounds, dp, word_cap, impl=impl
-    )
-    enc = unigram_encode_counts_arrow if impl == "arrow" else unigram_encode_counts
-    return enc(docs, lp, id_col, text_col, max_len, word_cap)
+    chain extended one round)."""
+    lp = unigram_trained_lp(docs, text_col, max_len, n_seed, rounds, dp, word_cap)
+    return unigram_encode_counts(docs, lp, id_col, text_col, max_len, word_cap)
 
 
 def unigram_train(
@@ -520,7 +358,6 @@ def unigram_train(
     rounds: int = 3,
     dp: int = 6,
     word_cap: int = 16,
-    impl: str = "arrow",
     words: DataFrame | None = None,
 ) -> tuple[list[str], dict[str, int], int, int]:
     """Train the unigram LM; returns (vocab pieces, final E-step counts,
@@ -565,19 +402,7 @@ def unigram_train(
     counts: dict[str, int] = {}
     tt = 0
     for _ in range(rounds):
-        if impl == "arrow":
-            rows = estep_counts_arrow(words, lp, max_len).collect()
-        else:
-            vocab_map = F.map_from_arrays(
-                F.lit(list(pieces)), F.lit([lp[p] for p in pieces])
-            )
-            seg = viterbi_segment(F.col("w"), vocab_map, max_len)
-            rows = (
-                words.select("cnt", F.explode(seg).alias("piece"))
-                .groupBy("piece")
-                .agg(F.sum("cnt").alias("c"))
-                .collect()
-            )
+        rows = estep_counts(words, lp, max_len).collect()
         counts = {r["piece"]: int(r["c"]) for r in rows}
         tt = sum(counts.values())
         lp = {
@@ -596,7 +421,6 @@ def unigram_train_frame(
     k_out: int = 20,
     dp: int = 6,
     word_cap: int = 16,
-    impl: str = "arrow",
 ) -> DataFrame:
     """The trained vocabulary's top ``k_out`` pieces as a DataFrame
     (piece, cnt, prob) — cnt the final Viterbi-count, prob the smoothed
@@ -604,7 +428,7 @@ def unigram_train_frame(
     built from the bounded driver loop (the kcenter_frame pattern)."""
     spark = docs.sparkSession
     _, counts, tt, vsz = unigram_train(
-        docs, text_col, max_len, n_seed, rounds, dp, word_cap, impl=impl
+        docs, text_col, max_len, n_seed, rounds, dp, word_cap
     )
     top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:k_out]
     rows = [
@@ -622,11 +446,10 @@ def unigram_prune_report(
     dp: int = 6,
     word_cap: int = 16,
     prune_permille: int = 1,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Count-based vocabulary prune — the prune DIRECTION of Kudo
     2018 §3.2 (SentencePiece iterates train→prune until the target
-    vocab size), with the documented simplification that pieces are
+    vocab size), with the documented shortcut that pieces are
     dropped by final-model USAGE (Viterbi-count share of token mass
     < prune_permille/1000) instead of Kudo's per-piece likelihood
     loss: usage is already exact and cross-engine-replayable, while
@@ -637,15 +460,17 @@ def unigram_prune_report(
     Returns the before/after audit: (variant, vocab_size,
     total_tokens, tokens_per_word) for 'full' (segmentation under the
     final trained model) and 'pruned' (survivor model renormalized
-    from the same final counts, one more slim-fold segmentation).
+    from the same final counts, one more Viterbi-count kernel pass).
     Driver state stays <= V floats; the corpus is scanned once by the
     trainer, the prune itself is pure driver arithmetic on the final
     count table, and the pruned pass is one vocab-bounded job."""
+    import pandas as pd
+
     spark = docs.sparkSession
     # rounds+1: the extra round segments under the FINAL model, so the
     # 'full' row prices what an encode pass actually produces
     pieces, counts_full, tt_full, vsz = unigram_train(
-        docs, text_col, max_len, n_seed, rounds + 1, dp, word_cap, impl=impl
+        docs, text_col, max_len, n_seed, rounds + 1, dp, word_cap
     )
     surv = [
         p
@@ -662,37 +487,21 @@ def unigram_prune_report(
         for p in surv
     }
     words = word_vocab(docs, text_col).filter(F.length("w") <= word_cap)
-    if impl == "arrow":
-        import pandas as pd
 
-        def kernel(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "cnt": pdf["cnt"],
-                        "tc": [
-                            _viterbi_count_py(w, lp_p, max_len) for w in pdf["w"]
-                        ],
-                    }
-                )
+    def kernel(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "cnt": pdf["cnt"],
+                    "tc": [_viterbi_count_py(w, lp_p, max_len) for w in pdf["w"]],
+                }
+            )
 
-        per_word = words.select("w", "cnt").mapInPandas(
-            kernel, "cnt long, tc long"
-        )
-        tot = per_word.select(
-            F.sum(F.col("cnt") * F.col("tc")).alias("t"),
-            F.sum("cnt").alias("wocc"),
-        ).collect()[0]
-    else:
-        vocab_map = F.map_from_arrays(
-            F.lit(sorted(lp_p)), F.lit([lp_p[p] for p in sorted(lp_p)])
-        )
-        tot = words.select(
-            F.sum(
-                F.col("cnt") * viterbi_token_count(F.col("w"), vocab_map, max_len)
-            ).alias("t"),
-            F.sum("cnt").alias("wocc"),
-        ).collect()[0]
+    per_word = words.select("w", "cnt").mapInPandas(kernel, "cnt long, tc long")
+    tot = per_word.select(
+        F.sum(F.col("cnt") * F.col("tc")).alias("t"),
+        F.sum("cnt").alias("wocc"),
+    ).collect()[0]
     t_pruned, wocc = int(tot["t"]), int(tot["wocc"])
     rows = [
         ("full", vsz, tt_full, round_half_up(tt_full * 1.0 / wocc, dp)),

@@ -25,12 +25,15 @@ distributed part.
 
 from __future__ import annotations
 
+import logging
 import threading
 import time
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
+
+_log = logging.getLogger(__name__)
 
 DEFAULT_CRON = "*/15 * * * *"  # app/jobs/scheduler.py:10
 
@@ -204,7 +207,8 @@ class UniqueJobScheduler:
 
     def tick(self) -> list[str]:
         """Run every job whose next_run has passed; returns their ids.
-        Job exceptions are swallowed (the job's own state machine records
+        A job's exception is logged with its id and does not stop the
+        remaining due jobs (the job's own state machine records
         failures); the schedule always advances."""
         now = self._now()
         due: list[ScheduledJob] = []
@@ -218,7 +222,7 @@ class UniqueJobScheduler:
             try:
                 job.func(*job.args)
             except Exception:
-                pass
+                _log.exception("scheduled job %s raised", job.id)
             fired.append(job.id)
         return fired
 

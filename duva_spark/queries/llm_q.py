@@ -317,22 +317,16 @@ def _gopher_rep_oracle() -> str:
         "batch and the fractions/thresholds stay in shared Column "
         "expressions — the r8 A/B measured the kernel 15x faster than "
         "the pure-codegen HOF form (1.2 s vs 18.2 s at sf0.1; "
-        "interpreted lambda evaluation dominates), with the codegen "
-        "form retained in textstats.gopher_repetition and the two "
-        "equality-tested value-for-value. The oracle recomputes the "
+        "interpreted lambda evaluation dominates); the HOF form is "
+        "kept only as the test-side reference the kernel is "
+        "equality-tested against. The oracle recomputes the "
         "same values with per-doc GROUP BYs and the interval-merge "
         "CTEs."
     ),
 )
 def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r8 A/B: the Arrow kernel measured 1.2 s vs 18.2 s for the codegen
-    # HOF form at sf0.1 (15x — interpreted lambda evaluation dominates);
-    # both forms are value-identical by construction (shared Column
-    # tail over exact integer counts) and equality-tested. The codegen
-    # form remains in textstats.gopher_repetition, measured and
-    # documented in SCALE.md.
     docs = load_table(spark, sf_dir, "documents")
-    return textstats.gopher_repetition_arrow(docs)
+    return textstats.gopher_repetition(docs)
 
 
 @register(
@@ -4527,8 +4521,8 @@ def _unigram_encode_oracle() -> str:
         "word under the current 6-dp Laplace log-probs (an Arrow "
         "mapInPandas kernel emitting PARTIAL piece counts per batch — "
         "the r9 A/B winner over the interpreted F.aggregate fold, "
-        "28.6 s vs 2.1 s for the full chain at sf0.1; the fold form "
-        "ships as impl='fold', value-identical and test-pinned), "
+        "28.6 s vs 2.1 s for the full chain at sf0.1; the fold is "
+        "kept only as the test-side reference, value-identical), "
         "recount pieces, re-estimate. The corpus is scanned once (the "
         "word-frequency groupBy); every round is one vocab-bounded "
         "count shuffle and a ≤(48+alphabet)-row driver collect — the "
@@ -4565,8 +4559,8 @@ def q_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         "slim (score, n_pieces) Viterbi DP with a per-task word→count "
         "memo (Zipf makes most words repeats — the DP runs once per "
         "distinct word per task), the division/rounding staying in a "
-        "shared Column tail; the interpreted-fold form ships as "
-        "impl='fold', value-identical by construction and test-pinned "
+        "shared Column tail; the interpreted-fold form is kept only as "
+        "the test-side reference the kernel is pinned against "
         "(r9 A/B: 28.6 s fold vs 2.1 s arrow for the full chain at "
         "sf0.1). No vocabulary join, no shuffle before the per-doc "
         "aggregate — at 100 TB this runs embarrassingly parallel. Words "

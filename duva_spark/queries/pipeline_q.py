@@ -3417,11 +3417,13 @@ def q_dup_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "document is re-tokenized under the trained merges and the "
         "per-doc token census reported (char tokens vs BPE tokens vs "
         "the compression ratio — the statistic that prices a tokenizer "
-        "before it ships). The encode is a PURE PROJECTION: per-word "
-        "nested greedy folds with the 8 pairs inlined as codegen "
-        "literals — no UDF, no vocabulary lookup join, zero exchanges "
-        "before the per-doc aggregate, so at 100 TB encoding runs at "
-        "parquet-scan speed embarrassingly parallel. The oracle reuses "
+        "before it ships). The encode is a PURE PER-ROW PASS: an Arrow "
+        "mapInPandas kernel applies the 8 merges in training order "
+        "with a per-task word→count memo — no vocabulary lookup join, "
+        "zero exchanges before the per-doc aggregate, so at 100 TB "
+        "encoding runs embarrassingly parallel (30.7x over the "
+        "interpreted per-word greedy-fold chain at sf0.1, which is "
+        "kept only as the test-side reference). The oracle reuses "
         "the trainer's CTE chain through the final merged sequences "
         "(sq_9) and joins documents' words against it — vocabulary-"
         "table semantics and per-word-fold semantics provably agree."
@@ -3432,10 +3434,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     rules = bpe.bpe_train(docs, "text", n_merges=8)
-    # Arrow kernel (measured 30.7x over the interpreted fold chain at
-    # sf0.1, min-of-2 warm: 11.95 s vs 0.39 s); fold form pinned
-    # value-identical by test_bpe_encode_arrow_matches_fold
-    return bpe.encode_token_counts_arrow(docs, rules, "doc_id", "text")
+    return bpe.encode_token_counts(docs, rules, "doc_id", "text")
 
 
 def _fertility_oracle() -> str:
@@ -3493,7 +3492,7 @@ def _fertility_oracle() -> str:
         "merges; 3 unigram hard-EM rounds), then ONE Arrow-kernel scan "
         "encodes every word both ways (per-task word→count memos — "
         "Zipf makes most words repeats; pinned value-identical to the "
-        "interpreted-HOF fold form, no join) "
+        "test-side interpreted-HOF fold reference, no join) "
         "and a language groupBy sums exact token counts; "
         "restricted to the unigram trainer's 16-char word universe so "
         "the comparison is apples-to-apples. The oracle nests BOTH "
@@ -3514,11 +3513,7 @@ def q_tokenizer_fertility_trained(spark: SparkSession, sf_dir: str) -> DataFrame
         docs, "text", max_len=_UNI_L, n_seed=_UNI_SEED, rounds=_UNI_R,
         word_cap=_UNI_CAP,
     )
-    # Arrow kernel with per-task word->count memos instead of the
-    # per-occurrence interpreted HOF folds (r12 optimization; pinned
-    # value-identical to the fold form in tests) — the encode pass was
-    # ~23 s of this query's ~29 s at sf0.1.
-    per_doc = unigram.fertility_counts_arrow(
+    per_doc = unigram.fertility_counts(
         docs, rules, lp,
         group_col="lang", text_col="text", word_cap=_UNI_CAP, max_len=_UNI_L,
     )
@@ -4649,9 +4644,9 @@ def q_bpe_byte_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         "re-tokenized under the 8 trained byte merges, reporting the "
         "per-doc census (raw UTF-8 bytes vs BPE tokens vs compression "
         "— bytes-per-token is the actual capacity unit an LLM budget "
-        "is priced in). Pure projection like q_bpe_encode: per-word "
-        "nested greedy folds with hex-pair literals inlined in "
-        "codegen, zero exchanges before the per-doc aggregate."
+        "is priced in). Pure per-row pass like q_bpe_encode: the same "
+        "Arrow kernel over hex-pair byte symbols, zero exchanges "
+        "before the per-doc aggregate."
     ),
 )
 def q_bpe_byte_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4659,10 +4654,7 @@ def q_bpe_byte_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     rules = bpe.bpe_train(docs, "text", n_merges=8, alphabet="byte")
-    # Arrow kernel (measured 29.7x over the fold chain at sf0.1,
-    # min-of-2 warm: 12.44 s vs 0.42 s); fold form pinned
-    # value-identical by test_bpe_encode_arrow_matches_fold
-    return bpe.encode_token_counts_arrow(
+    return bpe.encode_token_counts(
         docs, rules, "doc_id", "text", alphabet="byte"
     ).select(
         "doc_id",

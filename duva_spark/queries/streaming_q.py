@@ -10,6 +10,7 @@ tests/test_streaming.py where a memory sink can be observed.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -573,11 +574,14 @@ def q_stream_true_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     # Degenerate-input guard (ADVICE r8): if no batch ever kept a
     # document the sink holds no schema-bearing part file and the read
-    # raises 'unable to infer schema' — fall back to an empty frame so
-    # the census reports all-zero keeps instead of crashing.
+    # raises UNABLE_TO_INFER_SCHEMA — fall back to an empty frame so
+    # the census reports all-zero keeps. Any other read error (a
+    # corrupt part file, a missing sink) raises.
     try:
         kept = spark.read.parquet(sink)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
         kept = spark.createDataFrame([], "doc_id long, p double, source string")
     dec = "decimal(38,0)"
     ks = kept.groupBy("source").agg(

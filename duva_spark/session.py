@@ -46,23 +46,12 @@ def get_spark(app_name: str = "duva_spark", extra_conf: dict | None = None) -> S
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
     )
-    # AQE fan-out posture — measured, r10 (r9 verdict item 1). r9 set
-    # initialPartitionNum = 16*cores globally off a dup-spans-only A/B;
-    # the r10 full-headline-set A/B at sf0.1 (tools/ab_ipn.py, fresh JVM
-    # per config, min-of-2; table in BASELINE.md) measured mult 0/4/16 at
-    # 56.7 / 62.8 / 61.6 s total — the global fan-out is a ~8% tax on the
-    # 36-query set and helps nothing at this SF; its real win (1M-doc
-    # dup-spans spill, 31.2->24.5 s) is re-scoped to those sweep cases
-    # via a runtime-scoped conf in tools/scale_sweep.py. Default is now
-    # Spark's own (initial = shuffle.partitions, AQE still coalesces);
-    # SPARK_GRAFT_IPN_MULT>0 re-enables the fan-out for A/Bs or
-    # spill-heavy deployments.
-    ipn_mult = int(os.environ.get("SPARK_GRAFT_IPN_MULT", "0"))
-    if ipn_mult > 0:
-        builder = builder.config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(ipn_mult * cores),
-        )
+    # AQE fan-out posture — measured, r10: a global
+    # initialPartitionNum = 16*cores cost ~8% on the sf0.1 headline set
+    # (table in BASELINE.md), so the default is Spark's own (initial =
+    # shuffle.partitions, AQE still coalesces); the spill-bound 1M-doc
+    # dup-spans sweep cases scope the fan-out themselves
+    # (tools/scale_sweep.py spill_fanout).
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -192,11 +192,7 @@ def native_merge_backend(spark) -> str | None:
     the session was built with the matching SQL extension AND (for
     Delta) the python bindings import, else None. Detection is config-
     based — no speculative jar loading on the hot path."""
-    ext = ""
-    try:
-        ext = spark.conf.get("spark.sql.extensions") or ""
-    except Exception:
-        pass
+    ext = spark.conf.get("spark.sql.extensions", "")
     if "io.delta.sql.DeltaSparkSessionExtension" in ext:
         try:
             import delta  # noqa: F401, PLC0415

@@ -1,0 +1,302 @@
+"""Column-fold reference implementations of the tokenizer and repetition
+kernels — the pin-test oracles for ``duva_spark.llm``.
+
+Each fold is a pure Column expression (``F.aggregate``/``F.transform``
+higher-order functions: no UDF, no join, no shuffle) that computes the
+same values as its production Arrow kernel by a different route. The
+folds are INTERPRETED per element — higher-order-function lambdas fall
+out of codegen, which is why production runs the kernels (the r8/r9
+A/Bs measured the folds 10-30× slower) — but they are independent
+replays of the spec, so tests assert kernel == fold value-for-value:
+
+- ``viterbi_segment_fold`` / ``viterbi_token_count_fold`` /
+  ``unigram_encode_counts_fold`` pin ``unigram._viterbi_seg_py``,
+  ``unigram._viterbi_count_py``, ``unigram.estep_counts``,
+  ``unigram.unigram_encode_counts`` and ``unigram.fertility_counts``;
+- ``encode_word_fold`` / ``encode_token_counts_fold`` pin
+  ``bpe.encode_token_counts`` and the BPE half of
+  ``unigram.fertility_counts``;
+- ``gopher_repetition_fold`` pins ``textstats.gopher_repetition`` (it
+  shares ``textstats._repetition_report``, the rounding/threshold tail,
+  so only the integer statistics are compared).
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Column, DataFrame, functions as F
+
+from duva_spark.llm.bpe import greedy_merge, symbolize
+from duva_spark.llm.textstats import (
+    GOPHER_DUP_NGRAM_MAX,
+    GOPHER_TOP_NGRAM_MAX,
+    _repetition_report,
+    words_of,
+)
+from duva_spark.llm.unigram import _SENTINEL
+
+
+def viterbi_segment_fold(word: Column, vocab_map: Column, max_len: int) -> Column:
+    """The word's max-likelihood segmentation under ``vocab_map``
+    (piece → 6-dp log-prob) as ``array<string>`` — a single pure fold
+    (``F.aggregate``) over character positions: state i carries
+    (best score, best segment) for the prefix w[1..i]; candidates scan
+    start positions j ascending and replace only when STRICTLY better,
+    so the smallest j attaining the max wins (the rule the oracle's
+    exact-equality backtrace reproduces)."""
+    n = F.length(word)
+    init = F.array(
+        F.struct(
+            F.lit(0.0).alias("s"), F.array().cast("array<string>").alias("seg")
+        )
+    )
+    sentinel = F.struct(
+        F.lit(_SENTINEL).alias("s"), F.array().cast("array<string>").alias("seg")
+    )
+
+    def step(acc: Column, i: Column) -> Column:
+        def cand(b: Column, j: Column) -> Column:
+            piece = word.substr(j + 1, i - j)
+            lpv = F.element_at(vocab_map, piece)
+            st = F.element_at(acc, j + 1)
+            cs = st["s"] + lpv
+            better = lpv.isNotNull() & (cs > b["s"])
+            return F.when(
+                better,
+                F.struct(
+                    cs.alias("s"),
+                    F.concat(st["seg"], F.array(piece)).alias("seg"),
+                ),
+            ).otherwise(b)
+
+        best = F.aggregate(
+            F.sequence(F.greatest(i - F.lit(max_len), F.lit(0)), i - 1),
+            sentinel,
+            cand,
+        )
+        return F.concat(acc, F.array(best))
+
+    states = F.aggregate(F.sequence(F.lit(1), n), init, step)
+    return F.element_at(states, n + 1)["seg"]
+
+
+def viterbi_token_count_fold(
+    word: Column, vocab_map: Column, max_len: int
+) -> Column:
+    """Number of pieces in the word's max-likelihood segmentation — the
+    ``viterbi_segment_fold`` DP with the state slimmed to
+    (score, n_pieces): the strictly-better replace rule picks the same
+    smallest-start predecessor chain, so the count equals
+    ``size(viterbi_segment_fold(...))``. Unsegmentable words yield 0."""
+    n = F.length(word)
+    init = F.array(F.struct(F.lit(0.0).alias("s"), F.lit(0).alias("np")))
+    sentinel = F.struct(F.lit(_SENTINEL).alias("s"), F.lit(0).alias("np"))
+
+    def step(acc: Column, i: Column) -> Column:
+        def cand(b: Column, j: Column) -> Column:
+            piece = word.substr(j + 1, i - j)
+            lpv = F.element_at(vocab_map, piece)
+            st = F.element_at(acc, j + 1)
+            cs = st["s"] + lpv
+            better = lpv.isNotNull() & (cs > b["s"])
+            return F.when(
+                better, F.struct(cs.alias("s"), (st["np"] + 1).alias("np"))
+            ).otherwise(b)
+
+        best = F.aggregate(
+            F.sequence(F.greatest(i - F.lit(max_len), F.lit(0)), i - 1),
+            sentinel,
+            cand,
+        )
+        return F.concat(acc, F.array(best))
+
+    states = F.aggregate(F.sequence(F.lit(1), n), init, step)
+    final = F.element_at(states, n + 1)
+    return F.when(final["s"] > _SENTINEL / 2, final["np"]).otherwise(F.lit(0))
+
+
+def vocab_map_of(lp: dict[str, float]) -> Column:
+    """The unigram model ``lp`` (piece → log-prob) as a map literal —
+    two array literals, not CreateArray over 2×vocab literal nodes."""
+    pieces = sorted(lp)
+    return F.map_from_arrays(F.lit(pieces), F.lit([lp[p] for p in pieces]))
+
+
+def unigram_encode_counts_fold(
+    docs: DataFrame,
+    lp: dict[str, float],
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_len: int = 4,
+    word_cap: int = 16,
+) -> DataFrame:
+    """(id_col, n_words, n_char_tokens, n_unigram_tokens, compression):
+    the per-document unigram census as one projection — the model
+    inlined as a map literal, each word through the slim Viterbi fold."""
+    vocab_map = vocab_map_of(lp)
+    ws = F.filter(
+        F.split(F.col(text_col), " "),
+        lambda w: (w != "") & (F.length(w) <= word_cap),
+    )
+    per_word = F.transform(
+        ws, lambda w: viterbi_token_count_fold(w, vocab_map, max_len)
+    )
+    chars = F.transform(ws, lambda w: F.length(w))
+    n_char = F.aggregate(chars, F.lit(0), lambda acc, v: acc + v)
+    n_uni = F.aggregate(per_word, F.lit(0), lambda acc, v: acc + v)
+    return docs.select(
+        id_col,
+        F.size(ws).cast("long").alias("n_words"),
+        n_char.cast("long").alias("n_char_tokens"),
+        n_uni.cast("long").alias("n_unigram_tokens"),
+        F.when(n_char > 0, F.round(n_uni * 1.0 / n_char, 6))
+        .otherwise(F.lit(0.0))
+        .alias("compression"),
+    )
+
+
+def encode_word_fold(
+    word: Column,
+    rules: list[tuple[int, str, str, str, int]],
+    alphabet: str = "char",
+) -> Column:
+    """A word's BPE symbol sequence after applying the trained merge
+    rules IN TRAINING ORDER: symbolize, then one ``bpe.greedy_merge``
+    fold per rule with the pair inlined as literals."""
+    syms = symbolize(word, alphabet)
+    for _, a, b, _, _ in rules:
+        syms = greedy_merge(syms, a, b)
+    return syms
+
+
+def encode_token_counts_fold(
+    docs: DataFrame,
+    rules: list[tuple[int, str, str, str, int]],
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    alphabet: str = "char",
+) -> DataFrame:
+    """(id_col, n_words, n_char_tokens, n_bpe_tokens, compression):
+    the per-document BPE census as one projection of per-word nested
+    greedy folds."""
+    ws = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+    per_word = F.transform(
+        ws, lambda w: F.size(encode_word_fold(w, rules, alphabet))
+    )
+    chars = F.transform(
+        ws,
+        (lambda w: F.octet_length(w)) if alphabet == "byte" else (lambda w: F.length(w)),
+    )
+    n_char = F.aggregate(chars, F.lit(0), lambda acc, v: acc + v)
+    n_bpe = F.aggregate(per_word, F.lit(0), lambda acc, v: acc + v)
+    return docs.select(
+        id_col,
+        F.size(ws).cast("long").alias("n_words"),
+        n_char.cast("long").alias("n_char_tokens"),
+        n_bpe.cast("long").alias("n_bpe_tokens"),
+        F.when(n_char > 0, F.round(n_bpe * 1.0 / n_char, 6))
+        .otherwise(F.lit(0.0))
+        .alias("compression"),
+    )
+
+
+def gopher_repetition_fold(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    dp: int = 6,
+) -> DataFrame:
+    """The Gopher repetition battery's integer statistics as array
+    expressions in one projection, through the shared
+    ``_repetition_report`` tail. Per n: sort the doc's gram array once —
+    the longest equal-adjacent run IS the top count (ascending sort
+    makes the first maximal run the lexicographic tie-winner),
+    adjacent-equal pairs ARE the duplicate-gram set, and coverage is a
+    width-n sliding OR over the dup flags."""
+    ws = words_of(F.col(text_col))
+    top_ns = sorted(GOPHER_TOP_NGRAM_MAX)
+    dup_ns = sorted(GOPHER_DUP_NGRAM_MAX)
+    base = df.select(F.col(id_col), ws.alias("ws"))
+    wc = F.length(F.concat_ws("", "ws"))
+    L = F.size("ws")
+
+    def grams_of(n: int):
+        # slot i (0-based) is the gram starting at word i; guarded so a
+        # doc shorter than n words yields an empty array
+        return F.when(
+            L >= n,
+            F.transform(
+                F.sequence(F.lit(0), L - n),
+                lambda i: F.concat_ws(" ", F.slice("ws", i + 1, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    def top_chars(n: int):
+        # longest equal-adjacent run in the SORTED gram array = the max
+        # occurrence count; strict '>' keeps the first (lexicographically
+        # smallest) maximal run's gram as the tie-winner
+        sg = F.array_sort(grams_of(n))
+        z = F.aggregate(
+            sg,
+            F.struct(
+                F.lit("").alias("prev"),
+                F.lit(0).alias("run"),
+                F.lit(0).alias("best"),
+                F.lit("").alias("bg"),
+            ),
+            lambda a, x: F.struct(
+                x.alias("prev"),
+                F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)).alias("run"),
+                F.greatest(
+                    a["best"],
+                    F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)),
+                ).alias("best"),
+                F.when(
+                    F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)) > a["best"],
+                    x,
+                )
+                .otherwise(a["bg"])
+                .alias("bg"),
+            ),
+        )
+        return z["best"].cast("long") * (F.length(z["bg"]) - (n - 1))
+
+    def dup_chars(n: int):
+        # duplicate grams = values with an equal neighbor in the sorted
+        # array; coverage = width-n sliding OR over per-gram dup flags,
+        # charged at each covered word's length (overlap-safe)
+        g = grams_of(n)
+        sg = F.array_sort(g)
+        eqs = F.zip_with(
+            sg,
+            F.slice(sg, 2, F.greatest(F.size(sg) - 1, F.lit(0))),
+            lambda a, b: F.when(a == b, a),
+        )
+        dups = F.array_distinct(F.filter(eqs, lambda x: x.isNotNull()))
+        flags = F.transform(g, lambda x: F.array_contains(dups, x))
+        covered = F.aggregate(
+            F.sequence(F.lit(0), L - 1),
+            F.lit(0).cast("long"),
+            lambda acc, j: acc
+            + F.when(
+                F.exists(
+                    F.sequence(
+                        F.greatest(j - (n - 1), F.lit(0)),
+                        F.least(j, F.size(g) - 1),
+                    ),
+                    lambda i: F.element_at(flags, i + 1),
+                ),
+                F.length(F.element_at(F.col("ws"), j + 1)),
+            ).otherwise(F.lit(0)),
+        )
+        return F.when((L >= n) & (F.size(dups) > 0), covered).otherwise(F.lit(0))
+
+    cols = [
+        F.col(id_col),
+        L.cast("long").alias("n_words"),
+        wc.cast("long").alias("word_chars"),
+    ]
+    for n in top_ns:
+        cols.append(top_chars(n).cast("long").alias(f"tc_{n}"))
+    for n in dup_ns:
+        cols.append(dup_chars(n).cast("long").alias(f"dc_{n}"))
+    return _repetition_report(base.select(*cols), id_col, dp)

@@ -1383,10 +1383,10 @@ def test_byte_bpe_multibyte_fallback(spark):
 
 
 def test_bpe_encode_arrow_matches_fold(spark, sf_dir):
-    """The Arrow encode kernel is pinned value-identical to the codegen
-    fold form on BOTH alphabets over real corpus text (the Gopher /
-    unigram-Viterbi A/B contract: measure, adopt the winner, keep the
-    loser pinned)."""
+    """The Arrow encode kernel is pinned value-identical to the Column
+    fold reference on BOTH alphabets over real corpus text."""
+    from reference_folds import encode_token_counts_fold
+
     from duva_spark.catalog import load_table
     from duva_spark.llm import bpe
 
@@ -1395,13 +1395,13 @@ def test_bpe_encode_arrow_matches_fold(spark, sf_dir):
         rules = bpe.bpe_train(docs, "text", n_merges=4, alphabet=alphabet)
         fold = {
             r["doc_id"]: r.asDict()
-            for r in bpe.encode_token_counts(
+            for r in encode_token_counts_fold(
                 docs, rules, "doc_id", "text", alphabet=alphabet
             ).collect()
         }
         arrow = {
             r["doc_id"]: r.asDict()
-            for r in bpe.encode_token_counts_arrow(
+            for r in bpe.encode_token_counts(
                 docs, rules, "doc_id", "text", alphabet=alphabet
             ).collect()
         }
@@ -1411,8 +1411,10 @@ def test_bpe_encode_arrow_matches_fold(spark, sf_dir):
 def test_fertility_arrow_matches_fold(spark, sf_dir):
     """The fused fertility Arrow kernel (BPE merges + unigram Viterbi
     counts in one pass, per-task word memos) is pinned value-identical
-    to the interpreted-HOF fold projection it replaced
-    (q_tokenizer_fertility_trained, r12 optimization)."""
+    to the interpreted-HOF fold projection built from the reference
+    folds."""
+    from reference_folds import encode_word_fold, viterbi_token_count_fold, vocab_map_of
+
     from duva_spark.catalog import load_table
     from duva_spark.llm import bpe, unigram
 
@@ -1422,11 +1424,7 @@ def test_fertility_arrow_matches_fold(spark, sf_dir):
     lp = unigram.unigram_trained_lp(
         docs, "text", max_len=max_len, n_seed=24, rounds=2, word_cap=cap
     )
-    pieces = sorted(lp)
-    vocab_map = F.map_from_arrays(
-        F.array(*[F.lit(p) for p in pieces]),
-        F.array(*[F.lit(lp[p]) for p in pieces]),
-    )
+    vocab_map = vocab_map_of(lp)
     ws = F.filter(
         F.split(F.col("text"), " "),
         lambda w: (w != "") & (F.length(w) <= cap),
@@ -1440,13 +1438,13 @@ def test_fertility_arrow_matches_fold(spark, sf_dir):
                 F.transform(ws, lambda w: F.length(w)), zero, lambda a, v: a + v
             ).alias("nc"),
             F.aggregate(
-                F.transform(ws, lambda w: F.size(bpe.encode_word(w, rules))),
+                F.transform(ws, lambda w: F.size(encode_word_fold(w, rules))),
                 zero,
                 lambda a, v: a + v,
             ).alias("nb"),
             F.aggregate(
                 F.transform(
-                    ws, lambda w: unigram.viterbi_token_count(w, vocab_map, max_len)
+                    ws, lambda w: viterbi_token_count_fold(w, vocab_map, max_len)
                 ),
                 zero,
                 lambda a, v: a + v,
@@ -1459,7 +1457,7 @@ def test_fertility_arrow_matches_fold(spark, sf_dir):
         )
     )
     arrow = (
-        unigram.fertility_counts_arrow(
+        unigram.fertility_counts(
             docs, rules, lp, group_col="lang", text_col="text",
             word_cap=cap, max_len=max_len,
         )
@@ -1566,45 +1564,57 @@ def test_unigram_train_matches_python_reference(spark):
 
 
 def test_unigram_viterbi_prefers_longest_on_equal_scores(spark):
-    """When two segmentations of a span score identically, the fold's
+    """When two segmentations of a span score identically, the
     strictly-greater update keeps the earliest start = the longest
-    final piece — pinned so both engines' tie rule stays explicit."""
+    final piece — pinned on the kernel DP and on the Column fold
+    reference so both engines' tie rule stays explicit."""
+    from reference_folds import viterbi_segment_fold, vocab_map_of
+
     from duva_spark.llm import unigram
 
     # lp('ab') == lp('a') + lp('b') exactly → 'ab' (earliest j) wins
+    lp = {"a": -1.0, "b": -2.0, "ab": -3.0}
+    assert unigram._viterbi_seg_py("ab", lp, 4) == ["ab"]
+    assert unigram._viterbi_count_py("ab", lp, 4) == 1
     docs = spark.createDataFrame([(0, "ab")], ["doc_id", "text"])
-    m = F.map_from_arrays(
-        F.array(F.lit("a"), F.lit("b"), F.lit("ab")),
-        F.array(F.lit(-1.0), F.lit(-2.0), F.lit(-3.0)),
-    )
     got = docs.select(
-        unigram.viterbi_segment(F.col("text"), m, 4).alias("seg")
+        viterbi_segment_fold(F.col("text"), vocab_map_of(lp), 4).alias("seg")
     ).collect()[0]["seg"]
     assert got == ["ab"]
 
 
 def test_unigram_token_count_matches_full_backtrace(spark):
-    """The slim (score, n_pieces) fold must count exactly what the full
-    piece-array fold backtraces, including across score ties (same
-    smallest-start rule), and return 0 for unsegmentable words."""
+    """The slim (score, n_pieces) DP must count exactly what the full
+    piece-array DP backtraces, including across score ties (same
+    smallest-start rule), and return 0 for unsegmentable words — on
+    the kernel's Python DP and on the Column fold reference alike,
+    with the two agreeing piece-for-piece."""
+    from reference_folds import (
+        viterbi_segment_fold,
+        viterbi_token_count_fold,
+        vocab_map_of,
+    )
+
     from duva_spark.llm import unigram
 
     words = ["ab", "abab", "aabba", "bbbb", "a", "abba", "xq"]
+    lp = {"a": -1.0, "b": -2.0, "ab": -3.0, "ba": -2.5, "abb": -4.0}
     docs = spark.createDataFrame([(w,) for w in words], ["text"])
-    m = F.map_from_arrays(
-        F.array(*[F.lit(p) for p in ["a", "b", "ab", "ba", "abb"]]),
-        F.array(*[F.lit(v) for v in [-1.0, -2.0, -3.0, -2.5, -4.0]]),
-    )
+    m = vocab_map_of(lp)
     rows = docs.select(
         "text",
-        F.size(unigram.viterbi_segment(F.col("text"), m, 4)).alias("full"),
-        unigram.viterbi_token_count(F.col("text"), m, 4).alias("slim"),
+        viterbi_segment_fold(F.col("text"), m, 4).alias("seg"),
+        viterbi_token_count_fold(F.col("text"), m, 4).alias("slim"),
     ).collect()
     for r in rows:
+        seg_py = unigram._viterbi_seg_py(r["text"], lp, 4)
+        count_py = unigram._viterbi_count_py(r["text"], lp, 4)
+        assert list(r["seg"]) == seg_py, r
+        assert r["slim"] == count_py == len(seg_py), r
         if r["text"] == "xq":  # 'x'/'q' not in vocab -> unsegmentable
-            assert r["slim"] == 0 and r["full"] == 0
+            assert r["slim"] == 0
         else:
-            assert r["slim"] == r["full"] > 0, r
+            assert r["slim"] > 0, r
 
 
 def test_unigram_encode_census_shape(spark):
@@ -1636,11 +1646,23 @@ def test_unigram_encode_census_shape(spark):
 
 @pytest.mark.slow
 def test_unigram_arrow_and_fold_paths_are_value_identical(spark):
-    """The Arrow kernels (the r9 A/B winner and default) must equal the
-    interpreted-fold Column form row-for-row across train, encode and
-    prune on a corpus with competing segmentations — the same
-    kernel-vs-codegen pinning contract as the Gopher repetition A/B."""
+    """The Arrow kernels must equal the interpreted Column-fold
+    references on a corpus with competing segmentations: the E-step
+    recount (``estep_counts`` vs fold + explode + groupBy), the encode
+    census, and the prune report's pruned pass. Training itself is
+    pinned by test_unigram_train_matches_python_reference."""
+    import math
+
+    from reference_folds import (
+        unigram_encode_counts_fold,
+        viterbi_segment_fold,
+        viterbi_token_count_fold,
+        vocab_map_of,
+    )
+
     from duva_spark.llm import unigram
+    from duva_spark.llm.bpe import word_vocab
+    from duva_spark.llm.hashed_lm import round_half_up
 
     docs = spark.createDataFrame(
         [
@@ -1652,20 +1674,50 @@ def test_unigram_arrow_and_fold_paths_are_value_identical(spark):
         ],
         ["doc_id", "text"],
     )
-    for maker in (
-        lambda impl: unigram.unigram_train_frame(
-            docs, max_len=4, n_seed=8, rounds=3, impl=impl
-        ),
-        lambda impl: unigram.unigram_train_encode(
-            docs, max_len=4, n_seed=8, rounds=2, impl=impl
-        ),
-        lambda impl: unigram.unigram_prune_report(
-            docs, max_len=4, n_seed=8, rounds=1, prune_permille=30, impl=impl
-        ),
-    ):
-        a = sorted(map(tuple, maker("arrow").collect()))
-        f = sorted(map(tuple, maker("fold").collect()))
-        assert a == f
+    words = word_vocab(docs, "text").filter(F.length("w") <= 16)
+    lp = unigram.unigram_trained_lp(docs, max_len=4, n_seed=8, rounds=2)
+
+    kernel = sorted(map(tuple, unigram.estep_counts(words, lp, 4).collect()))
+    fold = sorted(
+        map(
+            tuple,
+            words.select(
+                F.explode(viterbi_segment_fold(F.col("w"), vocab_map_of(lp), 4))
+                .alias("piece"),
+                "cnt",
+            )
+            .groupBy("piece")
+            .agg(F.sum("cnt").alias("c"))
+            .collect(),
+        )
+    )
+    assert kernel == fold
+
+    a = sorted(map(tuple, unigram.unigram_encode_counts(docs, lp).collect()))
+    f = sorted(map(tuple, unigram_encode_counts_fold(docs, lp).collect()))
+    assert a == f
+
+    # the prune report's pruned pass, replayed through the fold
+    pieces, counts, tt, _ = unigram.unigram_train(docs, max_len=4, n_seed=8, rounds=2)
+    surv = [p for p in pieces if len(p) == 1 or counts.get(p, 0) * 1000 >= tt * 30]
+    mass = sum(counts.get(p, 0) for p in surv)
+    lp_p = {
+        p: round_half_up(math.log((counts.get(p, 0) + 1) / (mass + len(surv))), 6)
+        for p in surv
+    }
+    want = words.select(
+        F.sum(
+            F.col("cnt") * viterbi_token_count_fold(F.col("w"), vocab_map_of(lp_p), 4)
+        ).alias("t")
+    ).collect()[0]["t"]
+    rows = {
+        r["variant"]: r
+        for r in unigram.unigram_prune_report(
+            docs, max_len=4, n_seed=8, rounds=1, prune_permille=30
+        ).collect()
+    }
+    assert rows["pruned"]["vocab_size"] == len(surv)
+    assert rows["pruned"]["total_tokens"] == want
 
 
 def test_sq8_decode_error_bounded_by_half_step(spark):
@@ -2336,9 +2388,12 @@ def test_logreg_degenerate_split_raises(spark):
 
 @pytest.mark.slow
 def test_gopher_repetition_arrow_equals_codegen(spark):
-    """The Arrow kernel and the codegen HOF form must be value-identical
-    on adversarial docs (ties between grams, overlapping duplicate
-    runs, short docs below every n, empty-ish docs)."""
+    """The Arrow kernel and the Column HOF fold reference must be
+    value-identical on adversarial docs (ties between grams,
+    overlapping duplicate runs, short docs below every n, empty-ish
+    docs)."""
+    from reference_folds import gopher_repetition_fold
+
     from duva_spark.llm import textstats
 
     docs = spark.createDataFrame(
@@ -2349,11 +2404,12 @@ def test_gopher_repetition_arrow_equals_codegen(spark):
             (4, "solo"),                                     # single word
             (5, "t t t t t t t t t t t t"),                  # degenerate runs
             (6, "aa bb aa bb cc aa bb aa bb cc dd ee ff gg"),  # tie candidates
+            (7, "zz y zz y a bbb a bbb"),  # count tie, different gram lengths
         ],
         ["doc_id", "text"],
     )
-    a = [r.asDict() for r in textstats.gopher_repetition(docs).orderBy("doc_id").collect()]
-    b = [r.asDict() for r in textstats.gopher_repetition_arrow(docs).orderBy("doc_id").collect()]
+    a = [r.asDict() for r in gopher_repetition_fold(docs).orderBy("doc_id").collect()]
+    b = [r.asDict() for r in textstats.gopher_repetition(docs).orderBy("doc_id").collect()]
     assert a == b
 
 

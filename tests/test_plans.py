@@ -713,10 +713,8 @@ def test_gopher_repetition_is_shuffle_free(spark, sf_dir):
     """The full Gopher repetition battery (top-{2,3,4}-gram fractions +
     duplicated-{5..10}-gram coverage) is a function of ONE document, so
     it must plan as a pure scan projection with no Exchange, no Join,
-    no Window. Since the r8 A/B the live impl is an Arrow kernel
-    (MapInPandas — batched, never the row-at-a-time BatchEvalPython);
-    the codegen HOF form keeps the same no-Exchange plan and is
-    asserted value-identical in test_llm_ops."""
+    no Window. The battery is an Arrow kernel (MapInPandas — batched,
+    never the row-at-a-time BatchEvalPython)."""
     q = load_all()["q_gopher_repetition"]
     df = q.fn(spark, sf_dir)
     plan = _plan(df)
@@ -726,12 +724,6 @@ def test_gopher_repetition_is_shuffle_free(spark, sf_dir):
     assert "BatchEvalPython" not in plan  # Arrow-batched, not row-at-a-time
     assert "MapInPandas" in plan
     assert df.count() > 0
-
-    from duva_spark.catalog import load_table
-    from duva_spark.llm import textstats
-
-    cg = _plan(textstats.gopher_repetition(load_table(spark, sf_dir, "documents")))
-    assert "Exchange" not in cg and "Join" not in cg and "Window" not in cg
 
 
 def test_round_avg_sites_are_audited():

@@ -6,6 +6,7 @@ app/utils/hyper_utils.py:254-263)."""
 
 from __future__ import annotations
 
+import logging
 from datetime import datetime
 
 import pytest
@@ -80,6 +81,27 @@ def test_tick_fires_due_jobs_and_advances():
     now[0] += 15 * 60
     sched.tick()
     assert runs == ["x", "x"]
+
+
+def test_tick_logs_a_raising_job_and_fires_the_rest(caplog, monkeypatch):
+    # the app's dictConfig (middleware) stops "duva_spark" propagating
+    # to the root logger caplog listens on
+    monkeypatch.setattr(logging.getLogger("duva_spark"), "propagate", True)
+    sched, now = _manual_scheduler()
+    runs = []
+
+    def boom():
+        raise RuntimeError("job exploded")
+
+    bad = sched.cron("*/15 * * * *", boom)
+    sched.cron("*/15 * * * *", runs.append, ("after",))
+    now[0] += 16 * 60
+    with caplog.at_level(logging.ERROR, logger="duva_spark.orchestration.scheduler"):
+        fired = sched.tick()
+    assert len(fired) == 2 and runs == ["after"]
+    (rec,) = caplog.records
+    assert bad.id in rec.getMessage()
+    assert rec.exc_info and "job exploded" in str(rec.exc_info[1])
 
 
 @pytest.fixture()

@@ -474,6 +474,46 @@ def test_stream_quality_filter_matches_batch_scoring(spark, sf_dir):
     assert sum(k for _, k, _ in got.values()) < sum(totals.values())
 
 
+def _quality_filter_with_sink_writer(spark, sf_dir, monkeypatch, write):
+    """Run q_stream_true_quality_filter with ``write(path)`` standing in
+    for the per-batch sink upsert."""
+    from duva_spark import sinks
+    from duva_spark.queries import load_all
+
+    monkeypatch.setattr(
+        sinks, "merge_upsert", lambda spark_, df, path, key: write(path)
+    )
+    return load_all()["q_stream_true_quality_filter"].fn(spark, sf_dir).collect()
+
+
+def test_stream_quality_filter_empty_sink_reports_zero_keeps(
+    spark, sf_dir, monkeypatch
+):
+    """A sink that never received a part file (no batch kept anything)
+    reads as UNABLE_TO_INFER_SCHEMA — the one case that falls back to
+    an all-zero census."""
+    import os
+
+    rows = _quality_filter_with_sink_writer(
+        spark, sf_dir, monkeypatch, lambda path: os.makedirs(path, exist_ok=True)
+    )
+    assert rows and all(r.n_kept == 0 and r.keep_rate == 0.0 for r in rows)
+
+
+def test_stream_quality_filter_corrupt_sink_raises(spark, sf_dir, monkeypatch):
+    """Any sink read error other than the empty-sink case must raise,
+    not be reported as zero keeps."""
+    import os
+
+    def write_corrupt(path):
+        os.makedirs(path, exist_ok=True)
+        with open(os.path.join(path, "part-00000-corrupt.parquet"), "wb") as fh:
+            fh.write(b"not a parquet file")
+
+    with pytest.raises(Exception, match="not a Parquet file"):
+        _quality_filter_with_sink_writer(spark, sf_dir, monkeypatch, write_corrupt)
+
+
 def test_checkpoint_fastpath_scheme_detection(spark, monkeypatch):
     """The local checkpoint fastpath must engage only for file-scheme
     checkpoint roots (r12 verdict item 7): an hdfs://-style location

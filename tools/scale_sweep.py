@@ -73,7 +73,7 @@ def sweep(spark, sizes_small, sizes_big, only=None):
         """Scoped 16x-cores AQE fan-out for the disk-spill-bound cases
         (dup-spans family, KN trigram): the r9 A/B measured the win at
         1M docs (dup_span_ratio 31.2 -> 24.5 s); the r10 full-headline
-        A/B (tools/ab_ipn.py, BASELINE.md) showed the same posture is a
+        A/B (BASELINE.md) showed the same posture is a
         ~8% tax on the sf0.1 headline set, so the fan-out now applies
         only here, via runtime conf, restored on exit."""
         key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
@@ -696,31 +696,15 @@ def sweep(spark, sizes_small, sizes_big, only=None):
     )
 
     def gopher_repetition_case(n):
-        # q_gopher_repetition's operator: the whole battery is doc-local
-        # array expressions inside the scan projection (sorted-gram
-        # runs + sliding-OR coverage) — ZERO shuffles, plan-asserted.
-        # Expect near-linear with no spill cliff; cost is per-doc
-        # interpreted higher-order-function evaluation, linear in
-        # doc length × n. (An earlier shuffle-based draft measured
-        # 13x/10x from single-host spill — kept out.)
+        # q_gopher_repetition's operator: exact integer counts per batch
+        # in a mapInPandas kernel, fractions in a Column tail — ZERO
+        # shuffles, plan-asserted. Expect linear in doc length × n with
+        # no spill cliff.
         from duva_spark.llm import textstats
 
         _force(textstats.gopher_repetition(_docs(spark, n)))
 
     cases.append(("gopher_repetition", sizes_big, gopher_repetition_case))
-
-    def gopher_repetition_arrow_case(n):
-        # the r8 Arrow-kernel winner of the repetition A/B: exact
-        # integer counts per batch in mapInPandas, fractions in the
-        # shared Column tail. Same zero-shuffle story; expect linear
-        # with a much lower constant than the interpreted-HOF form.
-        from duva_spark.llm import textstats
-
-        _force(textstats.gopher_repetition_arrow(_docs(spark, n)))
-
-    cases.append(
-        ("gopher_repetition_arrow", sizes_big, gopher_repetition_arrow_case)
-    )
 
     def curation_funnel_case(n):
         # q_pipeline_funnel's operator: quality flags (scan-only) +
@@ -750,24 +734,13 @@ def sweep(spark, sizes_small, sizes_big, only=None):
         # q_unigram_lm_train + q_unigram_encode: one word-frequency
         # groupBy, then (rounds+1) Viterbi passes — rounds over the
         # Zipf-bounded DISTINCT-word table, the final encode over word
-        # occurrences. Default = the Arrow kernels (r9 A/B winner:
-        # 28.6 s fold vs 2.1 s arrow at sf0.1), which is why this case
-        # now sweeps at sizes_big where the fold form could not.
+        # occurrences. The Arrow kernels (r9 A/B: 28.6 s for the
+        # interpreted fold vs 2.1 s at sf0.1) sweep at sizes_big.
         from duva_spark.llm import unigram
 
         _force(unigram.unigram_train_encode(_docs(spark, n)))
 
     cases.append(("unigram_train_encode", sizes_big, unigram_case))
-
-    def unigram_fold_case(n):
-        # The interpreted F.aggregate fold form, kept for the A/B
-        # record (the gopher_repetition precedent: measure, keep the
-        # winner, keep the loser measurable).
-        from duva_spark.llm import unigram
-
-        _force(unigram.unigram_train_encode(_docs(spark, n), impl="fold"))
-
-    cases.append(("unigram_train_encode_fold", sizes_small, unigram_fold_case))
 
     def sq8_case(n):
         # q_embed_sq8_recall's operator: one 128-col bounds aggregation,
