@@ -50,11 +50,12 @@ _R1_SUBSET = (
 )
 
 
-def _replay_reference(sf_dir: str) -> dict | None:
-    """Run the r4-HEAD bench in a gitignored worktree as a subprocess
-    (its own JVM, same host, same session) and return its parsed JSON
-    line. Self-healing: creates the worktree on first use; any failure
-    degrades to None rather than failing the bench."""
+def _replay_reference(sf_dir: str) -> tuple[dict | None, str | None]:
+    """Run the reference-HEAD bench in a gitignored worktree as a
+    subprocess (its own JVM, same host, same session) and return
+    ``(parsed JSON line, None)``. Self-healing: creates the worktree on
+    first use. A failed replay returns ``(None, reason)`` rather than
+    failing the bench; the reason lands in the JSON line."""
     import subprocess
 
     repo = Path(__file__).resolve().parent
@@ -63,7 +64,7 @@ def _replay_reference(sf_dir: str) -> dict | None:
         if not (ref_dir / "bench.py").exists():
             subprocess.run(
                 ["git", "worktree", "add", "--detach", str(ref_dir), _REF_COMMIT],
-                cwd=repo, check=True, capture_output=True, timeout=120,
+                cwd=repo, check=True, capture_output=True, text=True, timeout=120,
             )
         else:
             # an existing worktree may be pinned to a PREVIOUS round's
@@ -80,7 +81,7 @@ def _replay_reference(sf_dir: str) -> dict | None:
             if head != want:
                 subprocess.run(
                     ["git", "checkout", "--detach", _REF_COMMIT],
-                    cwd=ref_dir, check=True, capture_output=True, timeout=120,
+                    cwd=ref_dir, check=True, capture_output=True, text=True, timeout=120,
                 )
         # SAME estimator as the primary run (min-of-N with the same N —
         # a min-of-1 reference vs a min-of-2 primary systematically
@@ -100,10 +101,38 @@ def _replay_reference(sf_dir: str) -> dict | None:
         for line in reversed(out.stdout.strip().splitlines()):
             line = line.strip()
             if line.startswith("{"):
-                return json.loads(line)
-    except Exception:
-        return None
-    return None
+                return json.loads(line), None
+    except subprocess.CalledProcessError as e:
+        return None, f"{e} {e.stderr.strip()[-200:]}"
+    except (subprocess.TimeoutExpired, OSError, ValueError) as e:  # ValueError: bad JSON
+        return None, f"{type(e).__name__}: {e}"
+    tail = out.stderr.strip().splitlines()[-1:] or [""]
+    return None, f"no JSON line from the replay (exit {out.returncode}): {tail[0][:200]}"
+
+
+def _attach_ref(payload: dict, detail: dict, timings: dict, sf_dir: str) -> None:
+    """Add the same-session reference replay to `payload` as a ``ref``
+    block, or the reason it is missing as ``ref_skipped``."""
+    ref, reason = _replay_reference(sf_dir)
+    if ref is None:
+        payload["ref_skipped"] = reason
+        return
+    shared = {k: v for k, v in ref.get("queries", {}).items() if k in timings}
+    this_shared = round(sum(timings[k] for k in shared), 3)
+    ref_shared = round(sum(shared.values()), 3)
+    payload["ref"] = {
+        "head": _REF_COMMIT,
+        "shared_total_sec": ref_shared,
+        "this_shared_total_sec": this_shared,
+        "ratio": round(this_shared / ref_shared, 3) if ref_shared else None,
+    }
+    detail["ref_queries"] = ref.get("queries", {})
+    detail["ref_shared_queries"] = shared
+    detail["ref_total_sec"] = ref.get("value")
+    detail["ref_note"] = (
+        f"{_REF_COMMIT} (previous round HEAD) replayed same-session, "
+        "own JVM, parent stopped first; like-for-like shared-set ratio"
+    )
 
 
 def main() -> None:
@@ -156,31 +185,14 @@ def main() -> None:
         "value": total,
     }
     detail: dict = {"samples": samples, "queries": timings}
-    if not os.environ.get("SPARK_GRAFT_NO_REF"):
+    if os.environ.get("SPARK_GRAFT_NO_REF"):
+        payload["ref_skipped"] = "SPARK_GRAFT_NO_REF is set"
+    else:
         # stop our own JVM first: the replay must not run under memory/
         # CPU contention from the parent's resident executors, or the
         # "like-for-like" ratio is biased toward the new HEAD
         spark.stop()
-        ref = _replay_reference(sf_dir)
-        if ref:
-            shared = {
-                k: v for k, v in ref.get("queries", {}).items() if k in timings
-            }
-            this_shared = round(sum(timings[k] for k in shared), 3)
-            ref_shared = round(sum(shared.values()), 3)
-            payload["ref"] = {
-                "head": _REF_COMMIT,
-                "shared_total_sec": ref_shared,
-                "this_shared_total_sec": this_shared,
-                "ratio": round(this_shared / ref_shared, 3) if ref_shared else None,
-            }
-            detail["ref_queries"] = ref.get("queries", {})
-            detail["ref_shared_queries"] = shared
-            detail["ref_total_sec"] = ref.get("value")
-            detail["ref_note"] = (
-                f"{_REF_COMMIT} (previous round HEAD) replayed same-session, "
-                "own JVM, parent stopped first; like-for-like shared-set ratio"
-            )
+        _attach_ref(payload, detail, timings, sf_dir)
     # move "ref" before the summary scalars so truncation keeps them last
     for k in ("r1_subset_sec", "value"):
         payload[k] = payload.pop(k)
@@ -219,8 +231,8 @@ def main() -> None:
         while root.joinpath(f"bench_detail_c{cpus}_{n}.json").exists():
             n += 1
         root.joinpath(f"bench_detail_c{cpus}_{n}.json").write_text(blob)
-    except OSError:
-        pass
+    except OSError as e:
+        print(f"bench: detail file not written: {e}", file=sys.stderr)
     print(line)
 
 

@@ -2882,7 +2882,7 @@ def q_sql_unchanged(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from duva_spark.sinks import full_refresh
+    from duva_spark.sinks import full_refresh, read_dataset
 
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
@@ -2894,7 +2894,7 @@ def q_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         repo_root, "spark-warehouse", f"pq_orders_{os.path.basename(sf_dir.rstrip('/'))}"
     )
     full_refresh(orders, path, partition_by=["o_year"])
-    pruned = spark.read.parquet(path).filter(F.col("o_year") == 1996)
+    pruned = read_dataset(spark, path).filter(F.col("o_year") == 1996)
     return pruned.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_orders"),
         F.round(F.sum(F.col("o_totalprice").cast("decimal(18,6)")), 2)

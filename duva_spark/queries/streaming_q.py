@@ -406,7 +406,7 @@ def q_stream_true_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     from pyspark.sql import functions as F
 
     from duva_spark.llm import minhash
-    from duva_spark.sinks import merge_upsert
+    from duva_spark.sinks import merge_upsert, read_dataset
     from duva_spark.streaming.jobs import read_documents_stream
 
     h = minhash.md5_hash60(F.col("doc_id").cast("string"))
@@ -458,7 +458,7 @@ def q_stream_true_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(sink).select("new_id", "corpus_id", "jaccard")
+    return read_dataset(spark, sink).select("new_id", "corpus_id", "jaccard")
 
 
 # Bind the reused oracle now that llm_q's registry entry exists (the
@@ -514,7 +514,7 @@ def q_stream_true_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from duva_spark.llm import logreg, textstats
     from duva_spark.queries.llm_q import _LR_B, _LR_ETA, _LR_HOLD, _LR_ROUNDS
-    from duva_spark.sinks import merge_upsert
+    from duva_spark.sinks import merge_upsert, read_dataset
     from duva_spark.streaming.jobs import read_documents_stream
 
     docs = load_table(spark, sf_dir, "documents")
@@ -578,7 +578,7 @@ def q_stream_true_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the census reports all-zero keeps. Any other read error (a
     # corrupt part file, a missing sink) raises.
     try:
-        kept = spark.read.parquet(sink)
+        kept = read_dataset(spark, sink)
     except AnalysisException as e:
         if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
             raise

@@ -200,10 +200,11 @@ def stream_upsert_sink(
     """Exactly-once streaming sink via foreachBatch + idempotent upsert.
 
     Each micro-batch is merged into the Parquet dataset keyed on `key`
-    (duva_spark.sinks.merge_upsert): replays of a failed epoch re-merge
-    the same keys, so the sink is idempotent — the standard
-    exactly-once-to-storage recipe when the sink itself has no
-    transactional streaming support. Runs with Trigger.AvailableNow
+    (duva_spark.sinks.merge_upsert) and committed as a new version;
+    replays of a failed epoch re-merge the same keys, so the sink is
+    idempotent — the standard exactly-once-to-storage recipe when the
+    sink itself has no transactional streaming support. Read the result
+    with duva_spark.sinks.read_dataset. Runs with Trigger.AvailableNow
     (≙ the reference's sync tick) and returns the finished query.
     """
     from duva_spark.sinks import merge_upsert

@@ -11,6 +11,7 @@ import pytest
 
 from duva_spark.api import ControlPlane, serve
 from duva_spark.orchestration import FileStatus, MetadataStore, SyncJob
+from duva_spark.sinks import read_dataset
 
 CSV = "name,age\nalice,34\nbob,41\n"
 
@@ -48,7 +49,7 @@ def test_create_and_immediate_sync(api, spark, tmp_path):
     code, body = _req(base, "POST", "/api/v1/files/", {"form_id": 7, "sync_immediately": True})
     assert code == 201
     assert body["file_status"] == FileStatus.FILE_AVAILABLE.value
-    assert spark.read.parquet(str(tmp_path / "out" / "7")).count() == 2
+    assert read_dataset(spark, str(tmp_path / "out" / "7")).count() == 2
 
 
 def test_encrypted_form_rejected_400(api):

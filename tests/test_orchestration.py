@@ -267,3 +267,25 @@ def test_metadata_store_refuses_malformed_rows(tmp_path):
     p.write_text(json.dumps({"schema_version": SCHEMA_VERSION, "rows": [1, 2]}))
     with _pytest.raises(MetadataSchemaError, match="rows"):
         MetadataStore(p)
+
+
+def test_synced_extract_takes_upsert_delete_and_time_travel(spark, tmp_path):
+    """The extract a sync writes is the dataset the keyed upsert, the
+    versioned delete and time travel work on: every sinks writer commits
+    the same versioned ``_CURRENT`` pointer."""
+    from pyspark.sql import functions as F
+
+    from duva_spark import sinks
+
+    csv = tmp_path / "d9.csv"
+    csv.write_text("_id,name,age\n1,alice,34\n2,bob,41\n")
+    out = str(tmp_path / "out")
+    assert SyncJob(spark, _store(tmp_path), tmp_path, fetch=lambda _id: csv).run("d9", out) == 2
+    delta = spark.createDataFrame(
+        [(2, "bob", 42), (3, "carol", 19)], "`_id` long, name string, age long"
+    )
+    assert sinks.merge_upsert(spark, delta, out, "_id") == 3
+    assert sinks.delete_where(spark, out, F.col("name") == "alice") == 2
+    assert {r._id: r.age for r in sinks.read_dataset(spark, out).collect()} == {2: 42, 3: 19}
+    pre_delete = {r._id: r.age for r in sinks.read_version(spark, out, 1).collect()}
+    assert pre_delete == {1: 34, 2: 42, 3: 19}

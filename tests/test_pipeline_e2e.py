@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from duva_spark.llm import dedup, minhash, textstats
 from duva_spark.orchestration import MetadataStore, SyncJob
 from duva_spark.shaping import ExportSettings, apply_export_settings
-from duva_spark.sinks import full_refresh
+from duva_spark.sinks import full_refresh, read_dataset
 
 
 @pytest.fixture(scope="module")
@@ -54,7 +54,7 @@ def test_full_pipeline(spark, corpus_csv, tmp_path):
     n_ingested = job.run("corpus", str(tmp_path / "raw"))
     assert n_ingested == 6
 
-    raw = spark.read.parquet(str(tmp_path / "raw"))
+    raw = read_dataset(spark, str(tmp_path / "raw"))
     assert "lang" in raw.columns  # group prefix flattened (meta/lang → lang)
 
     # null-text rows dropped ("n/a" became NULL at ingest — duva semantics)
@@ -81,7 +81,7 @@ def test_full_pipeline(spark, corpus_csv, tmp_path):
     # partitioned publish with row-count contract
     n_out = full_refresh(kept, str(tmp_path / "training_set"), partition_by=["lang"])
     assert n_out == 2
-    back = spark.read.parquet(str(tmp_path / "training_set"))
+    back = read_dataset(spark, str(tmp_path / "training_set"))
     assert set(back.columns) >= {"_id", "text", "quality", "n_tokens", "lang"}
     assert sorted(r.lang for r in back.select("lang").collect()) == ["en", "fr"]
 

@@ -119,7 +119,7 @@ def test_delete_where_is_versioned_and_auditable(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"user{i % 3}", i * 1.0) for i in range(30)], "id long, owner string, v double"
     )
-    sinks.merge_upsert(spark, df, path, "id", commit="pointer", retain=3)
+    sinks.merge_upsert(spark, df, path, "id", retain=3)
     n = sinks.delete_where(spark, path, F.col("owner") == "user1", retain=3)
     assert n == 20
     cur = {r.id for r in sinks.read_dataset(spark, path).collect()}
@@ -142,7 +142,7 @@ def test_compact_merges_small_files_losslessly(spark, tmp_path):
     path = str(tmp_path / "ds")
     df = spark.createDataFrame([(i, f"p{i}") for i in range(1000)], "id long, p string")
     # simulate micro-batch ingest: 40 tiny files
-    sinks.merge_upsert(spark, df.repartition(40), path, "id", commit="pointer", retain=3)
+    sinks.merge_upsert(spark, df.repartition(40), path, "id", retain=3)
     before, after = sinks.compact(spark, path, target_file_bytes=10**9, retain=3)
     assert before >= 40 and after == 1
     got = sorted(r.id for r in sinks.read_dataset(spark, path).collect())
@@ -176,11 +176,8 @@ def test_delete_where_keeps_null_predicate_rows_and_history(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "user1"), (2, "user2"), (3, None)], "id long, owner string"
     )
-    sinks.merge_upsert(spark, df, path, "id", commit="pointer", retain=5)
-    sinks.merge_upsert(
-        spark, df.withColumn("owner", F.upper("owner")), path, "id",
-        commit="pointer", retain=5,
-    )
+    sinks.merge_upsert(spark, df, path, "id", retain=5)
+    sinks.merge_upsert(spark, df.withColumn("owner", F.upper("owner")), path, "id", retain=5)
     assert sinks.list_versions(path) == [0, 1]
     n = sinks.delete_where(spark, path, F.col("owner") == "USER1")
     assert n == 2  # NULL-owner row survives

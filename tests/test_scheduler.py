@@ -20,6 +20,7 @@ from duva_spark.orchestration import (
     SyncScheduler,
     UniqueJobScheduler,
 )
+from duva_spark.sinks import read_dataset
 
 
 def test_cron_next_after_quarter_hour():
@@ -127,7 +128,7 @@ def test_schedule_persists_job_id_and_runs(sync_world, spark, tmp_path):
     assert store.get("42").job_id == j.id
     now[0] += 16 * 60
     ss.scheduler.tick()
-    assert spark.read.parquet(str(tmp_path / "out" / "42")).count() == 1
+    assert read_dataset(spark, str(tmp_path / "out" / "42")).count() == 1
     assert ss.unschedule("42")
     assert store.get("42").job_id is None and ss.scheduler.get_jobs() == []
 

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from duva_spark.catalog import load_table
+from duva_spark.sinks import read_dataset
 from duva_spark.streaming import (
     read_events_stream,
     run_available_now,
@@ -139,9 +140,9 @@ def test_foreach_batch_upsert_sink(spark, sf_dir, tmp_path):
         )
 
     run("up1")
-    first = sorted(map(tuple, spark.read.parquet(out).collect()))
+    first = sorted(map(tuple, read_dataset(spark, out).collect()))
     run("up2")  # fresh checkpoint → same batches replayed → idempotent merge
-    second = sorted(map(tuple, spark.read.parquet(out).collect()))
+    second = sorted(map(tuple, read_dataset(spark, out).collect()))
     assert first == second
     batch = (
         _batch_events(spark, sf_dir)
@@ -318,7 +319,7 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
         q.awaitTermination()
     assert crash_flag.exists()
     # partial state on disk: epochs 0 and 1 merged (10 rows), epoch 2 not
-    assert spark.read.parquet(out).count() == 10
+    assert read_dataset(spark, out).count() == 10
 
     # restart from the SAME checkpoint via the shipped sink recipe —
     # epoch 1 replays (offset never committed), merge is idempotent
@@ -326,7 +327,7 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
         make_stream(), out, "k", query_name="restart_run2", checkpoint=ckpt
     )
 
-    got = sorted(map(tuple, spark.read.parquet(out).select("k", "payload").collect()))
+    got = sorted(map(tuple, read_dataset(spark, out).select("k", "payload").collect()))
     want = sorted(map(tuple, spark.read.parquet(src).select("k", "payload").collect()))
     assert got == want  # value-level equality, no dupes, no gaps
     assert len(got) == 15
@@ -406,7 +407,7 @@ def test_incremental_dedup_stream_crash_restore(spark, tmp_path):
     q2.awaitTermination()
 
     got = sorted(
-        map(tuple, spark.read.parquet(out).select("new_id", "corpus_id", "jaccard").collect())
+        map(tuple, read_dataset(spark, out).select("new_id", "corpus_id", "jaccard").collect())
     )
     arrivals = spark.createDataFrame(
         [r for b in batches for r in b], "doc_id long, text string"
