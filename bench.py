@@ -79,8 +79,10 @@ def _replay_reference(sf_dir: str) -> tuple[dict | None, str | None]:
                 cwd=repo, check=True, capture_output=True, text=True, timeout=60,
             ).stdout.strip()
             if head != want:
+                # --force: a dirty worktree (e.g. a detail file the
+                # child bench left behind) must not block the replay
                 subprocess.run(
-                    ["git", "checkout", "--detach", _REF_COMMIT],
+                    ["git", "checkout", "--detach", "--force", _REF_COMMIT],
                     cwd=ref_dir, check=True, capture_output=True, text=True, timeout=120,
                 )
         # SAME estimator as the primary run (min-of-N with the same N —
@@ -164,6 +166,7 @@ def main() -> None:
 
     timings = {name: min(ts) for name, ts in samples.items()}
     total = round(sum(timings.values()), 3)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 0))
     # Key order is load-bearing (r10 verdict item 1): the driver's
     # archive keeps only a bounded TAIL of stdout, and its parse buffer
     # is bounded too — r10's line grew past it ("parsed": null in
@@ -177,6 +180,10 @@ def main() -> None:
         "queries": timings,
         "method": f"min of {runs} runs per query (host noise mitigation)",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # what actually ran, read before the replay stops the session
+        "cpus": int(cpus) if cpus.isdigit() else cpus,
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
         "metric": "headline_queries_total_runtime",
         "unit": "sec",
         "r1_subset_sec": round(
@@ -226,7 +233,6 @@ def main() -> None:
         # clobbers the primary run's per-query replay map. Also write a
         # per-run file keyed by core count + a timestamp-free counter so
         # every run of a round stays auditable.
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 0))
         n = 0
         while root.joinpath(f"bench_detail_c{cpus}_{n}.json").exists():
             n += 1

@@ -5,7 +5,7 @@ quadratic per block: on a real corpus one (lang, source) block — or one
 IVF label bucket — holds billions of rows and the self-join explodes.
 These operators bound that: blocks at or under ``max_block_size`` take
 the exact pairwise path; oversized blocks are routed through an LSH
-sub-bucketing stage (MinHash bands for text, hyperplane bits for
+sub-bucketing stage (MinHash bands for text, sign-bit RP-LSH codes for
 embeddings) so the candidate join stays near-linear, then candidates are
 verified with the *same* exact metric as the small-block path.
 
@@ -293,19 +293,13 @@ def bounded_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _pair_cosine() -> F.Column:
-    # Norms are precomputed once per vector (_na/_nb) — the per-pair work
-    # is the dot product alone, a 3× cut over recomputing both norms
-    # inside every pair.
-    return F.round(similarity.dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb")), 6)
-
-
 def _exact_cosine_pairs(e: DataFrame, block_cols: list[str], threshold: float) -> DataFrame:
-    """All-pairs cosine within a block as ONE BLAS matmul per block
-    (applyInPandas): V·Vᵀ over the block's vector matrix, upper triangle
-    filtered by threshold. A bounded block (≤ max_block_size) caps the
-    matrix at cap² floats, so memory is fixed per task; this beats the
-    per-pair JVM fold ~10× because the inner loop is vectorized C.
+    """All-pairs cosine within a block (applyInPandas): every (i, j)
+    pair of the block's vector matrix scored at once by the shared
+    index-order kernel ``similarity._cosine6``, upper triangle filtered
+    by threshold. A bounded block (≤ max_block_size) caps the n×n
+    arrays, so memory is fixed per task, and the inner loop is
+    vectorized C instead of a per-pair JVM fold.
 
     The pandas side pre-filters with an epsilon margin and the exact
     ROUND(x, 6) >= threshold cut happens in Spark — rounding semantics
@@ -317,9 +311,8 @@ def _exact_cosine_pairs(e: DataFrame, block_cols: list[str], threshold: float) -
         import numpy as np
 
         ids = pdf["_id"].to_numpy()
-        v = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        norms = np.sqrt((v * v).sum(axis=1))
-        sims = (v @ v.T) / np.outer(norms, norms)
+        v = np.stack(pdf["_v"].to_numpy())
+        sims = similarity._cosine6(v[:, None, :], v[None, :, :])
         iu, ju = np.triu_indices(len(ids), k=1)
         # full-rounding-step margin: ROUND(x,6) >= t admits x down to
         # t - 5e-7, which a 1e-9 margin would drop (same grid-epsilon
@@ -357,23 +350,12 @@ def cosine_overflow_candidates(
     pairs sharing (block, table, code) become candidates (OR across
     tables for recall). Sub-bucket population ≈ block/2^n_bits per
     table, so the self-join is near-linear. Input: block cols +
-    (_id, _v); output: (id_a, id_b, va, vb) distinct pairs."""
-    coded = big.select(
-        *block_cols,
-        "_id",
-        "_v",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        similarity.hyperplane_code(F.col("_v"), dim, n_bits, seed=t).alias("code"),
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("hc"),
-    ).select(*block_cols, "_id", "_v", "hc.tbl", "hc.code")
+    (_id, _v); output: (id_a, id_b, va, vb) distinct pairs. Table t
+    codes with plane seed t (``similarity.rplsh_codes_arrow``)."""
+    coded = similarity.rplsh_codes_arrow(
+        big, dim, n_bits, n_tables, 0, "_id", "_v", out_id="_id", out_vec="_v",
+        keep=tuple(block_cols),
+    )
     key = [*block_cols, "tbl", "code"]
     a = coded.select(*key, F.col("_id").alias("id_a"), F.col("_v").alias("va"))
     b = coded.select(*key, F.col("_id").alias("id_b"), F.col("_v").alias("vb"))
@@ -407,12 +389,8 @@ def bounded_cosine_pairs(
         return _exact_cosine_pairs(e, block_cols, threshold)
     small, big = split
     exact = _exact_cosine_pairs(small, block_cols, threshold)
-    cand = cosine_overflow_candidates(big, block_cols, dim, n_bits, n_tables).withColumns(
-        {"_na": similarity.norm(F.col("va")), "_nb": similarity.norm(F.col("vb"))}
-    )
-    lsh = (
-        cand.withColumn("cosine_sim", _pair_cosine())
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cosine_sim")
-    )
+    lsh = similarity.cosine_pairs_arrow(
+        cosine_overflow_candidates(big, block_cols, dim, n_bits, n_tables),
+        keep=("id_a", "id_b"), q_col="va", c_col="vb",
+    ).filter(F.col("cosine_sim") >= threshold)
     return exact.unionByName(lsh)

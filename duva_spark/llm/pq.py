@@ -24,7 +24,7 @@ Scale design (the 100 TB question):
   from D floats to m small ints — the point of PQ at 100 TB.
 - ADC query: the per-(query, subspace, code) distance table is computed
   DRIVER-SIDE (|queries| × m × ksub scalars — bounded because a probe
-  set is small by definition, same guard as brute_force_topk_arrow) and
+  set is small by definition, same guard as brute_force_topk) and
   attaches via m broadcast hash joins; the only corpus-sized work is
   the scored scan plus the per-query top-k window, identical to the
   brute-force baseline's accepted shape.

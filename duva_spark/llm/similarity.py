@@ -1,17 +1,26 @@
-"""Embedding similarity search: brute-force cosine top-k baseline and an
-IVF-bucketed approximate path for scale.
+"""Embedding similarity search: brute-force cosine top-k baseline, an
+IVF-bucketed approximate path and random-projection (sign-bit) LSH.
 
-The embedding column is array<float>; all math is promoted to double and
-stays in JVM Column expressions (zip_with/aggregate fold → whole-stage
-codegen). No pandas UDF needed for cosine — Arrow batching only wins once
-you need BLAS-level matrix products, at which point the IVF path reduces
-the candidate set first anyway.
+Every production cosine goes through ONE numpy helper, ``_cosine6``,
+called from two Arrow kernels: ``cosine_pairs_arrow`` (row-aligned
+candidate pairs — the IVF, RP-LSH and rerank slivers) and
+``brute_force_topk`` (every corpus row against a broadcast probe
+matrix). The helper accumulates each dot product and both squared
+norms in INDEX ORDER — one IEEE double multiply and one add per
+element, ``((0+x0·y0)+x1·y1)+…`` — which is exactly the operation
+sequence of the DuckDB oracle's ``list_aggregate`` fold (and of the
+Column fold the tests keep as the pin, ``tests/reference_folds.py``),
+so the rounded 6-dp cosine is bit-exact by construction. A BLAS matmul
+would re-associate the sums and could move a value across a rounding
+boundary. Sign-bit codes have one kernel too, ``rplsh_codes_arrow``,
+with the same index-order discipline for the plane dot products.
 
 Scale design:
-- brute-force: queries are broadcast (a top-k probe set is small by
-  definition); the corpus is scanned once, partial top-k per partition
-  via window-rank is AQE-coalesced. Cost O(|corpus| · |queries| · dim)
-  but embarrassingly parallel with zero shuffle on the corpus side.
+- brute-force: probes are collected once and broadcast (a top-k probe
+  set is small by definition, guarded by ``max_probes``); the corpus is
+  scanned once with zero shuffle on its side, and each Arrow batch
+  pre-reduces to its local top-k, so the final window ranks
+  O(batches · probes · k) rows.
 - IVF: corpus is assigned once to nearest-centroid buckets (analogous
   to FAISS IVF lists) via a SHUFFLE-FREE broadcast Arrow argmax
   (`llm/assign.py`, shared with KMeans — no n×nlist exchange). A query
@@ -41,10 +50,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def _hyperplane(dim: int, bit: int, seed: int) -> list[float]:
     """Deterministic pseudo-random hyperplane in [-1, 1]^dim, derived from
     md5 so it is reproducible across processes with no RNG state."""
@@ -57,21 +62,50 @@ def _hyperplane(dim: int, bit: int, seed: int) -> list[float]:
     return coefs
 
 
-def hyperplane_code(vec: Column, dim: int, n_bits: int, seed: int = 0) -> Column:
-    """Sign-bit LSH code: bit i = [vec · plane_i >= 0]; collision
-    probability for angle θ is (1 - θ/π)^n_bits, so near-parallel vectors
-    share codes. Planes are md5-derived literals — the whole code is one
-    codegen expression, no UDF, no shuffle."""
-    code = F.lit(0).cast("long")
-    for i in range(n_bits):
-        # one array Literal, not CreateArray over dim literal nodes: the
-        # grid queries build tables*bits of these, and the optimizer
-        # re-walks every node on each AQE re-optimization — measured
-        # seconds of driver time on the 64-dim grids (values identical)
-        plane = F.lit(_hyperplane(dim, i, seed))
-        bit = F.when(dot(vec, plane) >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        code = code + F.shiftleft(bit, i)
-    return code
+def _cosine6(a, b):
+    """Rounded-6dp cosine of ``a`` and ``b`` along their last axis, with
+    the leading axes broadcast: (m, d) with (m, d) scores row-aligned
+    pairs, (n, 1, d) with (1, m, d) scores all n×m pairs. Non-finite
+    results (a zero-norm side) come back as NaN, which Arrow turns into
+    NULL.
+
+    The one place production code computes a cosine. Dot and squared norms
+    accumulate in index order, in place — one multiply and one add per
+    element — then ``dot / (sqrt(na) * sqrt(nb))`` and the 6-dp round
+    run on the same doubles as the oracle's fold (IEEE sqrt is
+    correctly rounded in numpy, the JVM and DuckDB alike)."""
+    import numpy as np
+
+    # dim-first contiguous copies: each step reads one contiguous slab
+    a = np.ascontiguousarray(np.moveaxis(np.asarray(a, dtype=np.float64), -1, 0))
+    b = np.ascontiguousarray(np.moveaxis(np.asarray(b, dtype=np.float64), -1, 0))
+    dot = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    na, nb = np.zeros(a.shape[1:]), np.zeros(b.shape[1:])
+    tmp, ta, tb = np.empty_like(dot), np.empty_like(na), np.empty_like(nb)
+    for aj, bj in zip(a, b):
+        dot += np.multiply(aj, bj, out=tmp)
+        na += np.multiply(aj, aj, out=ta)
+        nb += np.multiply(bj, bj, out=tb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        s = np.round(dot / (np.sqrt(na) * np.sqrt(nb)), 6)
+    s[~np.isfinite(s)] = np.nan
+    return s
+
+
+def _lengths(vecs):
+    """Per-row vector length, -1 for a NULL vector."""
+    import numpy as np
+
+    return np.array([-1 if v is None else len(v) for v in vecs], dtype=np.int64)
+
+
+def _rank(df: DataFrame, k: int | None = None, by: tuple[str, ...] = ("query_id",)) -> DataFrame:
+    """The top-k contract every similarity search shares: ``rank`` =
+    row_number over ``by`` ordered by (cosine_sim desc, neighbor_id
+    asc) — NULL cosines sort last — kept to ``rank <= k``."""
+    w = W.partitionBy(*by).orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    ranked = df.withColumn("rank", F.row_number().over(w).cast("long"))
+    return ranked if k is None else ranked.filter(F.col("rank") <= k)
 
 
 def rplsh_codes_arrow(
@@ -86,39 +120,37 @@ def rplsh_codes_arrow(
     out_vec: str = "c_vec",
     tbl_col: str = "tbl",
     code_col: str = "code",
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Exploded sign-bit codes — one row per (vector, table) with that
-    table's ``n_bits`` code — as an Arrow/numpy kernel: the vectorized
-    twin of the ``hyperplane_code`` projection + explode the RP-LSH
-    family used to build in JVM expressions.
+    table's ``n_bits`` code, bit i = [vec · plane_i >= 0] — as an
+    Arrow/numpy kernel. Table t uses planes ``_hyperplane(dim, i, seed
+    + t)``; collision probability for angle θ is (1 - θ/π)^n_bits, so
+    near-parallel vectors share codes. ``keep`` columns (e.g. block
+    keys) pass through unchanged.
 
     Why a kernel: ``n_tables × n_bits`` higher-order-function folds are
     CodegenFallback, so every ROW paid tables·bits·dim interpreted
-    lambda evaluations (~3k per row on the 8×6 grid — the per-row cost
-    that scales with corpus size), and the tables·bits fold trees made
-    first-run planning/codegen of the grid queries cost seconds of
-    driver time. One mapInPandas pass computes every bit of every table
-    as dim vectorized numpy ops per (table, bit) over the whole batch.
+    lambda evaluations (~3k per row on the 8×6 grid), and the
+    tables·bits fold trees made first-run planning of the grid queries
+    cost seconds of driver time. One mapInPandas pass computes every
+    bit of every table as dim vectorized numpy ops per (table, bit).
 
-    Bit-exact with the JVM fold BY CONSTRUCTION, not just pinned: each
-    dot product accumulates plane terms in index order — one IEEE
-    double multiply and one add per element, ``((0+x0·p0)+x1·p1)+…`` —
-    the same operation sequence as ``F.aggregate(zip_with(...))`` and
-    the DuckDB oracle's ``list_aggregate`` fold, so the ``>= 0`` sign
-    test sees the identical double. (A matmul would re-associate the
-    sum and could flip a near-zero sign.) A pin test asserts row-set
-    equality against the JVM path on real data anyway.
+    Bit-exact with the oracle BY CONSTRUCTION: each dot product
+    accumulates plane terms in index order, the same operation sequence
+    as the DuckDB oracle's ``list_aggregate`` fold (``_rplsh_code_sql``),
+    so the ``>= 0`` sign test sees the identical double. (A matmul would
+    re-associate the sum and could flip a near-zero sign.) A pin test
+    asserts equality against the Column fold in
+    ``tests/reference_folds.py`` on real data.
 
-    Only (id, vec) cross the Python boundary, and codes return as ONE
-    array column per row (the table explode stays in the JVM), so the
-    Arrow roundtrip carries no duplication.
+    Codes return as ONE array column per row (the table explode stays in
+    the JVM), so the Arrow roundtrip carries no duplication.
 
     Null and wrong-length (ragged) vectors code to 0 in every table —
-    the JVM fold's behavior (``zip_with`` pads with NULL, the aggregate
-    goes NULL, and every ``>= 0`` sign test then falls to the otherwise
-    branch), replicated here instead of letting ``np.stack`` raise on
-    the whole stage (r12 ADVICE). Vector ELEMENTS are assumed non-null
-    finite numerics, the embedding-table contract every caller scans.
+    the fold's NULL-propagation outcome (every ``>= 0`` sign test on a
+    NULL dot is false). Vector ELEMENTS are assumed non-null finite
+    numerics, the embedding-table contract every caller scans.
     """
     import numpy as np
     import pandas as pd
@@ -130,18 +162,17 @@ def rplsh_codes_arrow(
         ],
         dtype=np.float64,
     )  # (n_tables, n_bits, dim)
-    id_t = df.schema[id_col].dataType.simpleString()
-    vec_t = df.schema[vec_col].dataType.simpleString()
-    out_schema = f"{out_id} {id_t}, {out_vec} {vec_t}, _codes array<long>"
+    fields = [(out_id, id_col), (out_vec, vec_col)] + [(c, c) for c in keep]
+    schema = ", ".join(
+        f"{o} {df.schema[c].dataType.simpleString()}" for o, c in fields
+    )
 
     def gen(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             vecs = pdf[vec_col].to_numpy()
-            ok = np.array(
-                [v is not None and len(v) == dim for v in vecs], dtype=bool
-            )
+            ok = _lengths(vecs) == dim
             codes = np.zeros((len(vecs), n_tables), dtype=np.int64)
             if ok.any():
                 V = np.stack(vecs[ok]).astype(np.float64)
@@ -159,59 +190,46 @@ def rplsh_codes_arrow(
                 codes[ok] = sub
             # all columns positional (numpy / plain list): mixing in the
             # index-carrying Series pdf[vec_col] was only correct while
-            # batches arrived with a default RangeIndex (r12 ADVICE)
-            yield pd.DataFrame(
-                {
-                    out_id: pdf[id_col].to_numpy(),
-                    out_vec: vecs,
-                    "_codes": list(codes),
-                }
-            )
+            # batches arrived with a default RangeIndex
+            data = {o: pdf[c].to_numpy() for o, c in fields}
+            data["_codes"] = list(codes)
+            yield pd.DataFrame(data)
 
-    coded = df.select(id_col, vec_col).mapInPandas(gen, out_schema)
+    coded = df.select(id_col, vec_col, *keep).mapInPandas(
+        gen, f"{schema}, _codes array<long>"
+    )
     return coded.select(
-        out_id, out_vec, F.posexplode("_codes").alias(tbl_col, code_col)
+        out_id, out_vec, *keep, F.posexplode("_codes").alias(tbl_col, code_col)
     )
 
 
 def cosine_pairs_arrow(
     pairs: DataFrame,
-    dim: int,
     keep: tuple[str, ...] = ("query_id", "neighbor_id"),
     q_col: str = "q_vec",
     c_col: str = "c_vec",
     out: str = "cosine_sim",
 ) -> DataFrame:
-    """Rounded-6dp exact cosine over a candidate-pair sliver as an
-    Arrow/numpy kernel — the vectorized twin of the
-    ``F.round(cosine(q, c), 6)`` JVM fold projection (r12 verdict item
-    8: the sliver verification was the RP-LSH family's last interpreted
-    CodegenFallback fold, and the sliver grows linearly with corpus
-    size at fixed bits/tables, so its per-row interpreted cost is a
-    scale term, not a constant).
+    """Rounded-6dp exact cosine of each row's (``q_col``, ``c_col``)
+    vector pair as an Arrow/numpy kernel over ``_cosine6`` — the
+    verification step of every candidate sliver (IVF, RP-LSH, blocked
+    overflow, rerank features). The sliver grows with corpus size, so
+    its per-row cost is a scale term; one mapInPandas pass replaces the
+    per-element interpreted fold.
 
-    Bit-exact with the fold BY CONSTRUCTION (the rplsh_codes_arrow
-    discipline): dot and both norms accumulate per-element terms in
-    INDEX ORDER — one IEEE double multiply + add per element, the same
-    operation sequence as ``F.aggregate(zip_with(...))`` and the DuckDB
-    oracle's ``list_aggregate`` — then ``sqrt``/division/round run on
-    the identical doubles (IEEE sqrt is correctly rounded in numpy and
-    the JVM alike). Null / wrong-length vectors yield a NULL cosine
-    (the fold's NULL propagation). A zero-norm vector yields NULL too —
-    the JVM fold under Spark 4's default ANSI mode would RAISE on that
-    division by zero, so NULL is the kernel's graceful superset (no
-    embedding table here carries zero-norm rows).
-    A pin test asserts row-set equality against the fold on real data.
+    Declared edges: a NULL vector or a pair of different lengths
+    yields a NULL cosine (the fold's NULL propagation); a zero-norm
+    vector yields NULL too — where the fold's 0/0 would raise under
+    Spark's ANSI mode, NULL is the kernel's graceful superset. A pin
+    test asserts equality against the Column fold on real data.
 
-    Only ``keep`` + the two vector columns cross the boundary; callers
-    select the sliver down to those first (§4.1 column pruning).
+    Only ``keep`` + the two vector columns cross the boundary.
     """
     import numpy as np
     import pandas as pd
 
     keep_t = [(c, pairs.schema[c].dataType.simpleString()) for c in keep]
     schema = ", ".join([f"{c} {t}" for c, t in keep_t] + [f"{out} double"])
-    cols = list(keep) + [q_col, c_col]
 
     def gen(batches):
         for pdf in batches:
@@ -219,62 +237,16 @@ def cosine_pairs_arrow(
                 continue
             qv = pdf[q_col].to_numpy()
             cv = pdf[c_col].to_numpy()
-            n = len(pdf)
-            ok = np.array(
-                [
-                    q is not None and c is not None and len(q) == dim and len(c) == dim
-                    for q, c in zip(qv, cv)
-                ],
-                dtype=bool,
-            )
-            res = np.full(n, np.nan)
-            if ok.any():
-                Q = np.stack(qv[ok]).astype(np.float64)
-                C = np.stack(cv[ok]).astype(np.float64)
-                m = Q.shape[0]
-                dot = np.zeros(m, dtype=np.float64)
-                nq = np.zeros(m, dtype=np.float64)
-                nc = np.zeros(m, dtype=np.float64)
-                for j in range(dim):  # index-order folds
-                    dot = dot + Q[:, j] * C[:, j]
-                    nq = nq + Q[:, j] * Q[:, j]
-                    nc = nc + C[:, j] * C[:, j]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    s = dot / (np.sqrt(nq) * np.sqrt(nc))
-                res[ok] = np.round(s, 6)
+            lq, lc = _lengths(qv), _lengths(cv)
+            res = np.full(len(pdf), np.nan)
+            for d in np.unique(lq[(lq == lc) & (lq >= 0)]):
+                rows = (lq == d) & (lc == d)
+                res[rows] = _cosine6(np.stack(qv[rows]), np.stack(cv[rows]))
             data = {c: pdf[c].to_numpy() for c, _ in keep_t}
-            # non-finite -> NaN -> Arrow null, matching the fold's NULL
-            res[~np.isfinite(res)] = np.nan
             data[out] = res
             yield pd.DataFrame(data)
 
-    return pairs.select(*cols).mapInPandas(gen, schema)
-
-
-def probe_topk(
-    c: DataFrame, q: DataFrame, k: int, exclude: Column
-) -> DataFrame:
-    """Shared tail of every broadcast-probe cosine top-k: cross-join
-    the broadcast probe frame ``q`` (query_id, q_vec, extras...) against
-    the corpus frame ``c`` (neighbor_id, c_vec, extras...), drop pairs
-    where ``exclude`` is false, rank by (rounded-6dp cosine desc,
-    neighbor asc). One implementation carries the tie/rounding/rank
-    contract for the exact baseline AND its variants (self-match
-    exclusion for top-k, label exclusion for hard-negative mining) —
-    the r5 review flagged the copy in q_hard_negatives."""
-    sims = (
-        c.crossJoin(F.broadcast(q))
-        .filter(exclude)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
+    return pairs.select(*keep, q_col, c_col).mapInPandas(gen, schema)
 
 
 def brute_force_topk(
@@ -283,17 +255,101 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    exclude_same: str | None = None,
+    max_probes: int = 4096,
 ) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, cosine_sim, rank).
+    """Exact cosine top-k: (query_id, neighbor_id, cosine_sim, rank),
+    ids in ``id_col``'s type.
 
-    Self-matches (same id) are excluded. Ties break by neighbor id so
-    results are deterministic.
+    A (probe, corpus row) pair is dropped when the two rows are equal on
+    ``exclude_same`` (default ``id_col``: no self-matches; ``"label"``
+    mines hard negatives). Ranks follow ``_rank``: cosine desc, ties to
+    the lower neighbor id, NULL cosines (zero-norm or ragged rows) last.
+
+    The probe rows are collected once and broadcast; each corpus Arrow
+    batch scores every (row, probe) pair through ``_cosine6`` and emits
+    only its local top-k per probe, ordered on the ROUNDED cosine like
+    the final rank, so the window merges O(batches · probes · k) rows
+    instead of O(corpus · probes). Batches are scored in slabs of about
+    a million pairs, bounding executor memory at any probe count.
+
+    The probe collect is GUARDED by ``max_probes``: ``limit(max_probes +
+    1)`` bounds what can ever be pulled, and crossing the cap raises
+    instead of silently materializing a large frame on the driver.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    return probe_topk(c, q, k, F.col("neighbor_id") != F.col("query_id"))
+    import numpy as np
+    import pandas as pd
+
+    ex_col = exclude_same or id_col
+    cols = list(dict.fromkeys([id_col, vec_col, ex_col]))
+    id_t = corpus.schema[id_col].dataType.simpleString()
+    spark = corpus.sparkSession
+    q_rows = queries.select(*cols).limit(max_probes + 1).collect()
+    if len(q_rows) > max_probes:
+        raise ValueError(
+            f"brute_force_topk probe frame exceeds max_probes="
+            f"{max_probes}; a top-k probe set must be small (raise "
+            f"max_probes explicitly if this is intentional)"
+        )
+    out_schema = f"query_id {id_t}, neighbor_id {id_t}, cosine_sim double"
+    if not q_rows:  # empty probes -> empty result
+        return spark.createDataFrame([], f"{out_schema}, rank long")
+    q_ids = np.array([r[id_col] for r in q_rows])
+    q_ex = np.array([r[ex_col] for r in q_rows], dtype=object)
+    q_len = _lengths([r[vec_col] for r in q_rows])
+    # probes grouped by vector length: a pair scores only when both
+    # sides have the same length (anything else is NULL, as in the fold)
+    groups = {}
+    for d in np.unique(q_len[q_len >= 0]):
+        idx = np.nonzero(q_len == d)[0]
+        groups[d] = (idx, np.array([q_rows[i][vec_col] for i in idx], dtype=np.float64))
+    b_probes = spark.sparkContext.broadcast((q_ids, q_ex, groups))
+    step = max(1, (1 << 20) // len(q_rows))
+
+    def score(batches):
+        qi, qx, grp = b_probes.value
+        m = len(qi)
+        for pdf in batches:
+            for lo in range(0, len(pdf), step):
+                part = pdf.iloc[lo : lo + step]
+                nid = part[id_col].to_numpy()
+                cv = part[vec_col].to_numpy()
+                cx = part[ex_col].to_numpy()
+                lc = _lengths(cv)
+                sims = np.full((len(part), m), np.nan)
+                for d, (qcols, Q) in grp.items():
+                    rows = np.nonzero(lc == d)[0]
+                    if len(rows):
+                        sims[np.ix_(rows, qcols)] = _cosine6(
+                            np.stack(cv[rows])[:, None, :], Q[None, :, :]
+                        )
+                drop = (
+                    (cx[:, None] == qx[None, :])
+                    | pd.isna(cx)[:, None]
+                    | pd.isna(qx)[None, :]
+                )
+                # per probe column: kept pairs first, then cosine desc
+                # with NULL last, then neighbor id asc
+                id_key = np.unique(nid, return_inverse=True)[1][:, None]
+                order = np.lexsort(
+                    (
+                        np.broadcast_to(id_key, sims.shape),
+                        np.where(np.isnan(sims), np.inf, -sims),
+                        drop,
+                    ),
+                    axis=0,
+                )[:k]
+                qcol = np.broadcast_to(np.arange(m), order.shape)
+                kept = ~drop[order, qcol]
+                yield pd.DataFrame(
+                    {
+                        "query_id": qi[qcol[kept]],
+                        "neighbor_id": nid[order[kept]],
+                        "cosine_sim": sims[order, qcol][kept],
+                    }
+                )
+
+    return _rank(corpus.select(*cols).mapInPandas(score, out_schema), k)
 
 
 def label_centroids(
@@ -380,45 +436,11 @@ def ivf_topk(
 
     Same output shape as brute_force_topk; recall < 1 by design — the
     scale path when the corpus no longer fits a full scan per query.
+    The one-point ``ivf_topk_grid``.
     """
-    from duva_spark.llm import assign
-
-    # collect the centroid index ONCE; both the corpus assignment and the
-    # query probe ranking reuse the same rows through the shared
-    # shuffle-free Arrow arg-best (top-1 for assignment, top-nprobe for
-    # the probe) — the old form cross-joined the broadcast centroids
-    # twice and window-ranked n×nlist rows.
-    rows, id_type = _centroid_rows(centroids, label_col)
-    assigned = ivf_assign(
-        corpus, centroids, id_col, vec_col, label_col,
-        centroid_rows=rows, id_type=id_type,
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    probed = assign.assign_nearest(
-        q, rows, metric="cosine", round_dp=9, n=nprobe, vec_col="q_vec",
-        out_col="_buckets", id_field="bucket", cen_field="centroid",
-        id_type=id_type,
-    )
-    # n=1 returns a scalar bucket, n>1 an array — normalize to one row
-    # per probed bucket either way
-    bucket = F.explode("_buckets") if nprobe > 1 else F.col("_buckets")
-    qprobe = probed.select("query_id", "q_vec", bucket.alias("bucket"))
-    cand = assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), "bucket"
-    )
-    sims = (
-        cand.join(F.broadcast(qprobe), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
+    return ivf_topk_grid(
+        corpus, queries, centroids, k, (nprobe,), id_col, vec_col, label_col
+    ).drop("nprobe")
 
 
 def ivf_topk_grid(
@@ -472,27 +494,18 @@ def ivf_topk_grid(
     # each corpus vector lives in exactly one bucket and a query's probed
     # buckets are distinct, so (query, neighbor) appears at most once —
     # no dedup needed before the rank window
-    sims = (
-        cand.join(F.broadcast(qprobe), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "probe_rank",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
-        )
+    sims = cosine_pairs_arrow(
+        cand.join(F.broadcast(qprobe), "bucket").filter(
+            F.col("neighbor_id") != F.col("query_id")
+        ),
+        keep=("query_id", "neighbor_id", "probe_rank"),
     )
     ex = sims.select(
         "*",
         F.explode(F.array(*[F.lit(p).cast("int") for p in nprobes])).alias("nprobe"),
     ).filter(F.col("probe_rank") < F.col("nprobe"))
-    w = W.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        ex.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("nprobe", "query_id", "neighbor_id", "cosine_sim", "rank")
+    return _rank(ex, k, ("nprobe", "query_id")).select(
+        "nprobe", "query_id", "neighbor_id", "cosine_sim", "rank"
     )
 
 
@@ -539,99 +552,7 @@ def rplsh_topk(
         .select("query_id", "neighbor_id", "q_vec", "c_vec")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    sims = cosine_pairs_arrow(cand, dim)
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return sims.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
-
-
-def brute_force_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_probes: int = 4096,
-) -> DataFrame:
-    """Arrow/BLAS variant of ``brute_force_topk``: the query matrix is
-    collected once (a top-k probe set is small by definition — the same
-    assumption the JVM path's broadcast makes) and each corpus Arrow
-    batch computes ALL similarities as one numpy matmul, emitting only
-    each batch's local top-k per query; a final JVM window rank merges
-    partial top-ks.
-
-    Same contract and the same 6-dp rounding as the JVM path — an
-    equivalence test pins them to identical output. This is the
-    documented escape hatch for when per-element JVM folds lose to
-    BLAS-level matrix products (wide dims × many probes); per-partition
-    top-k pre-reduction keeps the shuffle at O(partitions × queries × k)
-    rows instead of O(corpus × queries).
-
-    The probe collect is GUARDED by ``max_probes`` (r3 verdict item
-    #4): the small-probe-set contract was previously documented but
-    unenforced, so a caller passing a large frame would silently OOM
-    the driver. ``limit(max_probes + 1)`` bounds what can ever be
-    pulled; crossing the cap raises instead of degrading.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(id_col, vec_col).limit(max_probes + 1).collect()
-    if len(q_rows) > max_probes:
-        raise ValueError(
-            f"brute_force_topk_arrow probe frame exceeds max_probes="
-            f"{max_probes}; a top-k probe set must be small (raise "
-            f"max_probes explicitly if this is intentional)"
-        )
-    if not q_rows:  # mirror the JVM path: empty probes -> empty result
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, rank long"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    spark = corpus.sparkSession
-    b_ids = spark.sparkContext.broadcast(q_ids)
-    b_mat = spark.sparkContext.broadcast(q_mat)
-    b_norm = spark.sparkContext.broadcast(q_norm)
-
-    out_schema = "query_id long, neighbor_id long, cosine_sim double"
-
-    def score(batches):
-        qi, qm, qn = b_ids.value, b_mat.value, b_norm.value
-        for pdf in batches:
-            if not len(pdf):  # empty partitions yield empty Arrow batches
-                continue
-            c = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cn = np.linalg.norm(c, axis=1)
-            sims = (c @ qm.T) / np.outer(cn, qn)  # |batch| × |queries|
-            nid = pdf[id_col].to_numpy().astype(np.int64)
-            for j, qid in enumerate(qi):
-                col = sims[:, j]
-                mask = nid != qid
-                cand_idx = np.nonzero(mask)[0]
-                if not len(cand_idx):
-                    continue
-                top = min(k, len(cand_idx))
-                # local top-k by (ROUNDED sim desc, id asc): the final rank
-                # and the JVM path order by the 6-dp value, so pre-reducing
-                # on the unrounded value could drop the true tie-winner
-                order = np.lexsort((nid[cand_idx], -np.round(col[cand_idx], 6)))[:top]
-                pick = cand_idx[order]
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "neighbor_id": nid[pick],
-                        "cosine_sim": np.round(col[pick], 6),
-                    }
-                )
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return partial.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
+    return _rank(cosine_pairs_arrow(cand), k)
 
 
 def rplsh_topk_grid(
@@ -690,8 +611,7 @@ def rplsh_topk_grid(
     sims = cosine_pairs_arrow(
         base.select("query_id", "neighbor_id", "q_vec", "c_vec").dropDuplicates(
             ["query_id", "neighbor_id"]
-        ),
-        dim,
+        )
     )
     spark = corpus.sparkSession
     grid_df = spark.createDataFrame(
@@ -711,17 +631,9 @@ def rplsh_topk_grid(
         .select("n_tables", "n_bits", "query_id", "neighbor_id")
         .distinct()
     )
-    w = W.partitionBy("n_tables", "n_bits", "query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.join(sims, ["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "n_tables", "n_bits", "query_id", "neighbor_id", "cosine_sim", "rank"
-        )
-    )
+    return _rank(
+        cand.join(sims, ["query_id", "neighbor_id"]), k, ("n_tables", "n_bits", "query_id")
+    ).select("n_tables", "n_bits", "query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def probe_masks(n_bits: int, max_radius: int) -> list[tuple[int, int]]:
@@ -809,15 +721,12 @@ def rplsh_multiprobe_cands(
             F.first("q_vec").alias("q_vec"),
             F.first("c_vec").alias("c_vec"),
         ),
-        dim,
         keep=("query_id", "neighbor_id", "min_r"),
     )
     spark = corpus.sparkSession
     lvl = spark.createDataFrame([(r,) for r in range(max_radius + 1)], "radius int")
     cand = pairs.crossJoin(F.broadcast(lvl)).filter(F.col("min_r") <= F.col("radius"))
-    w = W.partitionBy("radius", "query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
+    return _rank(
+        cand.select("radius", "query_id", "neighbor_id", "cosine_sim"),
+        by=("radius", "query_id"),
     )
-    return cand.select(
-        "radius", "query_id", "neighbor_id", "cosine_sim"
-    ).withColumn("rank", F.row_number().over(w).cast("long"))

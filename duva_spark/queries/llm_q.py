@@ -911,7 +911,11 @@ _COS_QC = (
     QUALIFY rank <= 5
     """,
     headline=True,
-    description="Similarity search baseline: brute-force cosine top-5 for 5 probe vectors (broadcast probes, zero corpus shuffle).",
+    description=(
+        "Similarity search baseline: brute-force cosine top-5 for 5 probe "
+        "vectors (broadcast probes, the shared index-order Arrow cosine "
+        "kernel, zero corpus shuffle)."
+    ),
 )
 def q_embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1368,8 +1372,10 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rplsh_code_sql(var: str, dim: int = 64, n_bits: int = 4, seed: int = 0) -> str:
-    """DuckDB replica of similarity.hyperplane_code, generated from the
-    same md5-derived plane constants (shared-constant oracle pattern)."""
+    """DuckDB replica of one table's sign-bit code from
+    similarity.rplsh_codes_arrow (plane seed ``seed``), generated from
+    the same md5-derived plane constants (shared-constant oracle
+    pattern) with the same index-order ``list_aggregate`` dot."""
     terms = []
     for i in range(n_bits):
         plane = "list_value(" + ", ".join(repr(c) for c in similarity._hyperplane(dim, i, seed)) + ")"
@@ -2043,22 +2049,20 @@ def q_embedding_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALIFY rank <= 5
     """,
     description=(
-        "Arrow/BLAS brute-force cosine top-5 for a 100-probe batch: each "
-        "corpus Arrow batch computes all similarities as ONE numpy "
-        "matmul against the broadcast query matrix and pre-reduces to "
-        "its local top-k, so the shuffle carries O(partitions × queries "
-        "× k) rows. Measured 6× faster than the per-element JVM fold at "
-        "100 probes on sf0.1 (0.8 s vs 4.7 s) — the documented crossover "
-        "where BLAS-level matrix products beat codegen folds; at 5 "
-        "probes the two are equal, which is why the JVM path stays the "
-        "default. Output is bit-identical to the JVM operator "
-        "(equivalence-tested) and hash-matches the same oracle shape."
+        "Brute-force cosine top-5 for a 100-probe batch — the same "
+        "operator as q_embed_cosine_topk at 20x the probe count: each "
+        "corpus Arrow batch scores every (row, probe) pair through the "
+        "shared index-order cosine kernel against the broadcast probe "
+        "matrix and pre-reduces to its local top-k, so the shuffle "
+        "carries O(batches × probes × k) rows. Bit-exact with the "
+        "oracle's fold by construction (same IEEE operation sequence) "
+        "and pinned against the Column fold in the tests."
     ),
 )
 def q_embed_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 100)
-    return similarity.brute_force_topk_arrow(emb, q, k=5)
+    return similarity.brute_force_topk(emb, q, k=5)
 
 
 @register(
@@ -2298,7 +2302,7 @@ def _trunc_topk_sql(d: int) -> str:
         "truncated (4-8x index shrink) before retrieval quality drops. "
         "Each truncated search is the same broadcast-probe top-k with a "
         "sliced vector (zero corpus shuffle, same tie/round contract via "
-        "the shared probe_topk); the oracle reuses the brute-force "
+        "the shared brute_force_topk); the oracle reuses the brute-force "
         "oracle text for the full-dim reference."
     ),
 )
@@ -2593,29 +2597,24 @@ def q_embed_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "flagged when its per-label z-score drops below -2. Scale "
         "shape: centroids via the narrow posexplode aggregation "
         "(label×dim rows), broadcast back on the label key (nlist "
-        "rows), cosine as a codegen fold — the corpus is scanned, "
-        "never shuffled; the per-label stats and the final census are "
-        "two tiny-key aggregations. Both the cosine and the z-score "
-        "round to the same 6-dp grid on both engines before the "
-        "threshold compare."
+        "rows), cosine through the shared index-order Arrow kernel — "
+        "the corpus is scanned, never shuffled; the per-label stats and "
+        "the final census are two tiny-key aggregations. Both the "
+        "cosine and the z-score round to the same 6-dp grid on both "
+        "engines before the threshold compare."
     ),
 )
 def q_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     cents = similarity.label_centroids(emb)
-    scored = (
+    scored = similarity.cosine_pairs_arrow(
         emb.join(F.broadcast(cents), "label")
         # zero-norm vectors would diverge across engines (Spark 0/0 →
         # NULL skipped by AVG; DuckDB → NaN poisoning mu/sigma) — drop
         # them EXPLICITLY on both sides so the semantics are pinned,
         # not an artifact of each engine's division rules
-        .filter(similarity.norm(F.col("embedding")) > 0)
-        .select(
-            "label",
-            F.round(
-                similarity.cosine(F.col("embedding"), F.col("centroid")), 6
-            ).alias("cos_own"),
-        )
+        .filter(similarity.norm(F.col("embedding")) > 0),
+        keep=("label",), q_col="embedding", c_col="centroid", out="cos_own",
     )
     stats = scored.groupBy("label").agg(
         F.avg("cos_own").alias("mu"), F.stddev_pop("cos_own").alias("sigma")
@@ -2661,27 +2660,19 @@ def q_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "anchor in embedding space but semantically distinct — the "
         "negatives that actually move a contrastive loss). Same scale "
         "shape as the brute-force top-k: probes broadcast, corpus "
-        "scanned once with zero shuffle, label exclusion fused into "
-        "the scan filter; at 100 TB the corpus side swaps to the IVF/"
-        "RP-LSH candidate stage with this exact ranking as the verify "
-        "step."
+        "scanned once with zero shuffle, label exclusion applied "
+        "inside the scoring kernel (brute_force_topk's exclude_same); "
+        "at 100 TB the corpus side swaps to the IVF/RP-LSH candidate "
+        "stage with this exact ranking as the verify step."
     ),
 )
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("label").alias("ql"),
+    # the shared brute-force top-k with label exclusion instead of the
+    # self-match one
+    return similarity.brute_force_topk(
+        emb, emb.filter(F.col("vec_id") < 5), k=3, exclude_same="label"
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_vec"),
-        F.col("label").alias("cl"),
-    )
-    # the shared broadcast-probe ranking (similarity.probe_topk) with a
-    # label-exclusion predicate instead of the self-match one
-    return similarity.probe_topk(c, q, 3, F.col("cl") != F.col("ql"))
 
 
 @register(
@@ -3137,7 +3128,7 @@ _VH100 = "CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) % 
         "KNN label-purity audit (Confident-Learning-style label-noise "
         "detection): a deterministic md5 sample of vectors is classified "
         "by the majority label of its 5 exact nearest neighbors "
-        "(cosine, the shared probe_topk tie contract; majority ties "
+        "(cosine, the shared brute_force_topk tie contract; majority ties "
         "break to the smallest label); per-label purity = share of "
         "probes whose vote agrees with their stored label. The probe "
         "set is BOUNDED (10% md5 rate inside a fixed id window), which "
@@ -3157,12 +3148,7 @@ def q_knn_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the id window bounds the probe count absolutely — the bounded
     # probe-set contract of the broadcast/collect probe paths
     probes = emb.filter((h < 10) & (F.col("vec_id") < 4096))
-    # Arrow/BLAS brute-force twin (pinned value-identical to the
-    # probe_topk fold): ~400 probes x corpus x dim through one numpy
-    # matmul per batch instead of the per-element interpreted fold —
-    # the fold leg was a single 5.0s job of this query's 6.4s at sf0.1
-    # (r12 optimization, guide §4.2).
-    top5 = similarity.brute_force_topk_arrow(emb, probes, k=5)
+    top5 = similarity.brute_force_topk(emb, probes, k=5)
     nlab = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("label").alias("nlabel")
     )

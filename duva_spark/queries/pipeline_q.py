@@ -5640,17 +5640,20 @@ def q_crossencoder_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(F.broadcast(cand), "doc_id")
     emb = load_table(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    withcos = feat.join(
-        emb.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("cv")),
-        "doc_id",
-    ).crossJoin(F.broadcast(qv))
-    cos = F.round(similarity.cosine(F.col("qv"), F.col("cv")), 6)
+    withcos = similarity.cosine_pairs_arrow(
+        feat.join(
+            emb.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("cv")),
+            "doc_id",
+        ).crossJoin(F.broadcast(qv)),
+        keep=("doc_id", "rrf_score", "n_tok", "tf0", "tf1", "tf2"),
+        q_col="qv", c_col="cv", out="cos",
+    )
     nz = sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0) for i in range(3))
     tfsum = sum(F.col(f"tf{i}") for i in range(3))
     z = (
         F.lit(2.0) * (nz / F.lit(3.0))
         + F.lit(8.0) * (tfsum * F.lit(1.0) / F.col("n_tok"))
-        + F.lit(3.0) * cos
+        + F.lit(3.0) * F.col("cos")
         + F.lit(50.0) * F.col("rrf_score")
     )
     ce = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)

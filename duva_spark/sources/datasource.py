@@ -29,10 +29,12 @@ Options:
 - ``export_url``: async-export start URL (polled, then downloaded);
 - ``url``: direct CSV URL (downloaded with retries, no polling);
 - ``path``: local CSV path (no network at all);
-- ``partitions``: target partition count (default 8);
-- ``pushdown``: use the filter-pushdown reader (default ``true``;
-  requires ``spark.sql.python.filterPushdown.enabled`` on the session
-  — set ``false`` to read under a session without that conf).
+- ``partitions``: target partition count (default 8).
+
+Simple comparison/null filters push down into the task's parse loop;
+that needs ``spark.sql.python.filterPushdown.enabled`` on the session,
+which ``duva_spark.session.get_spark`` sets (a session without it fails
+the read with Spark's enable-the-conf error).
 """
 
 from __future__ import annotations
@@ -101,6 +103,13 @@ def _infer_type(values: list[str]):
         return StringType()
 
 
+def _casts(schema: StructType) -> list:
+    """Per-column parser for duva's 3-type universe: BIGINT → int,
+    DOUBLE → float, anything else → str."""
+    by_type = {LongType: int, DoubleType: float}
+    return [by_type.get(type(f.dataType), str) for f in schema.fields]
+
+
 def _parse_row(row: list[str], casts: list, n_cols: int) -> tuple:
     """Permissive row conversion: short/ragged rows pad with NULL (the
     schema is fixed; truncated tuples would fail Spark's row
@@ -158,14 +167,7 @@ class OnaDataReader(DataSourceReader):
         ]
 
     def read(self, partition: _LineRange):
-        casts = []
-        for f in self._schema.fields:
-            if isinstance(f.dataType, LongType):
-                casts.append(int)
-            elif isinstance(f.dataType, DoubleType):
-                casts.append(float)
-            else:
-                casts.append(str)
+        casts = _casts(self._schema)
         pushed = [(i, _PUSHABLE[kind], val) for i, kind, val in self._pushed]
         n_cols = len(casts)
         with open(partition.path, newline="") as fh:
@@ -179,14 +181,6 @@ class OnaDataReader(DataSourceReader):
                 vals = _parse_row(row, casts, n_cols)
                 if all(pred(vals[ci], x) for ci, pred, x in pushed):
                     yield vals
-
-
-class PushdownOnaDataReader(OnaDataReader):
-    """OnaDataReader + Spark 4 filter pushdown. Kept as a subclass:
-    merely DEFINING pushFilters makes Spark fail the read when
-    ``spark.sql.python.filterPushdown.enabled`` is false, so the plain
-    reader must stay method-free and the DataSource picks the variant
-    from the session conf."""
 
     def pushFilters(self, filters):
         """Source-level filter pushdown: simple comparison/null
@@ -278,18 +272,7 @@ class OnaDataSource(DataSource):
         path = self._ensure_local()
         if self._n_rows is None:
             self._header_and_count()
-        # Gate on the READER OPTION, not the session conf: reader() runs
-        # inside the datasource planning worker (pyspark/sql/worker/
-        # plan_data_source_read.py) where getActiveSession() is None, so
-        # a conf-based gate silently always picked the plain reader and
-        # pushdown was inert in real reads (ADVICE r3, medium). Options
-        # DO reach the worker. Default on — duva_spark.session enables
-        # spark.sql.python.filterPushdown.enabled; a session without
-        # that conf fails loudly with Spark's enable-the-conf message,
-        # and .option("pushdown", "false") opts back out.
-        enabled = str(self.options.get("pushdown", "true")).lower() == "true"
-        cls = PushdownOnaDataReader if enabled else OnaDataReader
-        return cls(
+        return OnaDataReader(
             schema, path, self._n_rows, int(self.options.get("partitions", 8))
         )
 
@@ -396,14 +379,7 @@ class OnaDataStreamReader(SimpleDataSourceStreamReader):
         status, body = _http_bytes(self._url)
         if status != 200:
             return []
-        casts = []
-        for f in self._schema.fields:
-            if isinstance(f.dataType, LongType):
-                casts.append(int)
-            elif isinstance(f.dataType, DoubleType):
-                casts.append(float)
-            else:
-                casts.append(str)
+        casts = _casts(self._schema)
         lines = body.decode().splitlines()
         return [
             _parse_row(row, casts, len(casts))

@@ -18,14 +18,19 @@ replays of the spec, so tests assert kernel == fold value-for-value:
   ``unigram.fertility_counts``;
 - ``gopher_repetition_fold`` pins ``textstats.gopher_repetition`` (it
   shares ``textstats._repetition_report``, the rounding/threshold tail,
-  so only the integer statistics are compared).
+  so only the integer statistics are compared);
+- ``cosine_fold`` / ``hyperplane_code_fold`` / ``brute_force_topk_fold``
+  pin ``similarity.cosine_pairs_arrow``, ``similarity.rplsh_codes_arrow``
+  and ``similarity.brute_force_topk`` (the crossJoin + window form the
+  brute-force top-k used to plan as).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from duva_spark.llm.bpe import greedy_merge, symbolize
+from duva_spark.llm.similarity import _hyperplane, dot, norm
 from duva_spark.llm.textstats import (
     GOPHER_DUP_NGRAM_MAX,
     GOPHER_TOP_NGRAM_MAX,
@@ -300,3 +305,57 @@ def gopher_repetition_fold(
     for n in dup_ns:
         cols.append(dup_chars(n).cast("long").alias(f"dc_{n}"))
     return _repetition_report(base.select(*cols), id_col, dp)
+
+
+def cosine_fold(a: Column, b: Column) -> Column:
+    """Cosine as interpreted index-order folds: the oracle's
+    ``list_aggregate`` sequence, unrounded."""
+    return dot(a, b) / (norm(a) * norm(b))
+
+
+def hyperplane_code_fold(vec: Column, dim: int, n_bits: int, seed: int = 0) -> Column:
+    """Sign-bit code of one table: bit i = [vec · plane_i >= 0], with
+    the md5-derived planes of seed ``seed``; a NULL dot (NULL or ragged
+    vector) leaves every bit 0."""
+    code = F.lit(0).cast("long")
+    for i in range(n_bits):
+        plane = F.lit(_hyperplane(dim, i, seed))
+        bit = F.when(dot(vec, plane) >= 0, F.lit(1).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+        code = code + F.shiftleft(bit, i)
+    return code
+
+
+def brute_force_topk_fold(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    exclude_same: str | None = None,
+) -> DataFrame:
+    """Exact cosine top-k as a broadcast crossJoin of the probes against
+    the corpus: pairs equal on ``exclude_same`` (default ``id_col``)
+    dropped, rounded-6dp ``cosine_fold``, row_number over (cosine desc,
+    neighbor id asc) per probe."""
+    ex = exclude_same or id_col
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"), F.col(ex).alias("_qx")
+    )
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), F.col(ex).alias("_cx")
+    )
+    sims = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("_cx") != F.col("_qx"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine_fold(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
+        )
+    )
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    return sims.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )

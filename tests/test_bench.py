@@ -30,3 +30,28 @@ def test_failed_replay_reason_reaches_the_payload(monkeypatch, error, expected):
     bench._attach_ref(payload, detail, {"q01_pricing_summary": 1.0}, "/data/sf0.1")
     assert "ref" not in payload and detail == {}
     assert expected in payload["ref_skipped"]
+
+
+def test_stale_reference_worktree_is_force_checked_out(monkeypatch, tmp_path):
+    """An existing `.bench_ref` pinned to another commit is re-checked out
+    with --force, so uncommitted files there cannot block the replay,
+    and the replay's JSON line comes back."""
+    (tmp_path / ".bench_ref").mkdir()
+    (tmp_path / ".bench_ref" / "bench.py").write_text("")
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    calls: list[list[str]] = []
+
+    def fake_run(argv, **kwargs):
+        calls.append(list(argv))
+        if argv[:2] == ["git", "rev-parse"]:
+            out = "old\n" if argv[2] == "HEAD" else "new\n"
+        elif argv[1:] == ["bench.py"]:
+            out = '{"value": 1.0, "queries": {}}\n'
+        else:
+            out = ""
+        return subprocess.CompletedProcess(argv, 0, stdout=out, stderr="")
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    ref, reason = bench._replay_reference("/data/sf0.1")
+    assert reason is None and ref == {"value": 1.0, "queries": {}}
+    assert ["git", "checkout", "--detach", "--force", bench._REF_COMMIT] in calls

@@ -435,51 +435,89 @@ def _hot_block_vectors(spark, n=200, n_planted=5, dim=16):
 
 def test_bounded_cosine_overflow_is_subquadratic(spark):
     """An oversized label bucket sub-buckets via hyperplane-LSH: the
-    candidate join is bounded and near-parallel planted pairs survive."""
+    candidate join is bounded and near-parallel planted pairs survive.
+    Candidates equal those of fold-built codes (table t at plane seed
+    t), and the verified pairs carry the fold's rounded cosine."""
+    from reference_folds import cosine_fold, hyperplane_code_fold
+
     from duva_spark.llm import blocked
 
     n, n_planted, dim = 200, 5, 16
     df = _hot_block_vectors(spark, n, n_planted, dim)
     total = n + 2 * n_planted
     e = df.select("label", F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
-    n_cand = blocked.cosine_overflow_candidates(e, ["label"], dim=dim).count()
-    assert n_cand < total * (total - 1) / 2 * 0.25  # bounded, not all-pairs
+    cand = blocked.cosine_overflow_candidates(e, ["label"], dim=dim)
+    got = {(r.id_a, r.id_b) for r in cand.collect()}
+    assert len(got) < total * (total - 1) / 2 * 0.25  # bounded, not all-pairs
+    coded = e.select(
+        "label",
+        "_id",
+        "_v",
+        F.posexplode(
+            F.array(*[hyperplane_code_fold(F.col("_v"), dim, 8, seed=t) for t in range(4)])
+        ).alias("tbl", "code"),
+    )
+    key = ["label", "tbl", "code"]
+    fold_pairs = (
+        coded.select(*key, F.col("_id").alias("id_a"), F.col("_v").alias("va"))
+        .join(coded.select(*key, F.col("_id").alias("id_b"), F.col("_v").alias("vb")), key)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    assert {(r.id_a, r.id_b) for r in fold_pairs.collect()} == got
     out = blocked.bounded_cosine_pairs(
         df, "vec_id", "embedding", ["label"], threshold=0.95, dim=dim, max_block_size=50
     )
-    pairs = {(r.id_a, r.id_b) for r in out.collect()}
+    want = {
+        tuple(r)
+        for r in fold_pairs.select(
+            "id_a", "id_b", F.round(cosine_fold(F.col("va"), F.col("vb")), 6).alias("c")
+        )
+        .filter(F.col("c") >= 0.95)
+        .collect()
+    }
+    rows = {tuple(r) for r in out.select("id_a", "id_b", "cosine_sim").collect()}
+    assert rows == want
     planted = {(n + 2 * i, n + 2 * i + 1) for i in range(n_planted)}
-    assert planted <= pairs
+    assert planted <= {(a, b) for a, b, _ in rows}
 
 
 def test_hyperplane_code_deterministic_and_bounded(spark):
+    """Codes are reproducible across runs, stay within n_bits, and table
+    t equals the fold at plane seed t."""
+    from reference_folds import hyperplane_code_fold
+
     from duva_spark.llm import similarity as sim
 
-    df = spark.createDataFrame([(1, [0.5, -0.25, 0.75, 1.0])], "id long, v array<double>")
-    c1 = df.select(sim.hyperplane_code(F.col("v"), 4, 6, seed=0).alias("c")).collect()[0].c
-    c2 = df.select(sim.hyperplane_code(F.col("v"), 4, 6, seed=0).alias("c")).collect()[0].c
-    c3 = df.select(sim.hyperplane_code(F.col("v"), 4, 6, seed=1).alias("c")).collect()[0].c
-    assert c1 == c2
-    assert 0 <= c1 < 64
-    assert 0 <= c3 < 64
+    df = spark.createDataFrame([(1, [0.5, -0.25, 0.75, 1.0])], "vec_id long, embedding array<double>")
+    c1, c2 = (
+        {r.tbl: r.code for r in sim.rplsh_codes_arrow(df, 4, 6, 2).collect()}
+        for _ in range(2)
+    )
+    fold = df.select(
+        *[hyperplane_code_fold(F.col("embedding"), 4, 6, seed=t).alias(f"c{t}") for t in range(2)]
+    ).collect()[0]
+    assert c1 == c2 == {0: fold.c0, 1: fold.c1}
+    assert all(0 <= c < 64 for c in c1.values())
 
 
 @pytest.mark.slow
 def test_rplsh_codes_arrow_matches_jvm_fold(spark, sf_dir):
     """The Arrow/numpy RP-LSH coding kernel must be bit-identical to the
-    JVM hyperplane_code fold on real embeddings (the oracle replays the
+    hyperplane_code_fold on real embeddings (the oracle replays the
     fold, so a single flipped sign bit is an oracle failure). The kernel
     accumulates plane terms in index order — the same IEEE op sequence
     as the fold — so equality is by construction; this pins it on data
     at every grid shape the registered queries use."""
+    from reference_folds import hyperplane_code_fold
+
     from duva_spark.catalog import load_table
     from duva_spark.llm import similarity as sim
 
     emb = load_table(spark, sf_dir, "embeddings")
     # (n_tables, n_bits, base_seed): the three registered grid shapes at
     # seed 0 plus one nonzero base seed, so the seed-offset plumbing
-    # (seed + t inside the kernel vs hyperplane_code(seed + t)) is
-    # pinned too (r12 ADVICE)
+    # (seed + t inside the kernel vs the fold at seed + t) is pinned too
     for n_tables, n_bits, seed in ((8, 6, 0), (8, 4, 0), (2, 6, 0), (2, 4, 7)):
         jvm = emb.select(
             F.col("vec_id").alias("neighbor_id"),
@@ -488,7 +526,7 @@ def test_rplsh_codes_arrow_matches_jvm_fold(spark, sf_dir):
                     *[
                         F.struct(
                             F.lit(t).alias("tbl"),
-                            sim.hyperplane_code(
+                            hyperplane_code_fold(
                                 F.col("embedding"), 64, n_bits, seed=seed + t
                             ).alias("code"),
                         )
@@ -507,9 +545,11 @@ def test_rplsh_codes_arrow_matches_jvm_fold(spark, sf_dir):
 @pytest.mark.slow
 def test_cosine_pairs_arrow_matches_jvm_fold(spark, sf_dir):
     """The Arrow sliver-cosine kernel must be bit-identical to the
-    ``F.round(cosine(q, c), 6)`` JVM fold on real embeddings (the
+    ``F.round(cosine_fold(q, c), 6)`` fold on real embeddings (the
     oracle replays the fold) — index-order accumulation, same sqrt,
     same division, same rounding grid."""
+    from reference_folds import cosine_fold
+
     from duva_spark.catalog import load_table
     from duva_spark.llm import similarity as sim
 
@@ -524,9 +564,9 @@ def test_cosine_pairs_arrow_matches_jvm_fold(spark, sf_dir):
     jvm = pairs.select(
         "query_id",
         "neighbor_id",
-        F.round(sim.cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
+        F.round(cosine_fold(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
     )
-    ker = sim.cosine_pairs_arrow(pairs, 64)
+    ker = sim.cosine_pairs_arrow(pairs)
     assert jvm.exceptAll(ker).count() == 0
     assert ker.exceptAll(jvm).count() == 0
 
@@ -538,6 +578,8 @@ def test_cosine_pairs_arrow_null_and_ragged_yield_null(spark):
     division by zero (no embedding table here carries zero-norm rows),
     so NULL is the kernel's graceful superset of the fold's behavior —
     asserted kernel-side only."""
+    from reference_folds import cosine_fold
+
     from duva_spark.llm import similarity as sim
 
     rows = [
@@ -554,12 +596,12 @@ def test_cosine_pairs_arrow_null_and_ragged_yield_null(spark):
         for r in pairs.select(
             "query_id",
             "neighbor_id",
-            F.round(sim.cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cs"),
+            F.round(cosine_fold(F.col("q_vec"), F.col("c_vec")), 6).alias("cs"),
         ).collect()
     }
     ker = {
         (r.query_id, r.neighbor_id): r.cosine_sim
-        for r in sim.cosine_pairs_arrow(pairs, 4).collect()
+        for r in sim.cosine_pairs_arrow(pairs).collect()
     }
     assert ker == jvm
     assert ker[(2, 20)] is None and ker[(3, 30)] is None
@@ -567,7 +609,7 @@ def test_cosine_pairs_arrow_null_and_ragged_yield_null(spark):
         [(4, 40, [1.0, 2.0, 3.0, 4.0], [0.0, 0.0, 0.0, 0.0])],
         "query_id long, neighbor_id long, q_vec array<double>, c_vec array<double>",
     )
-    zk = sim.cosine_pairs_arrow(zpairs, 4).collect()
+    zk = sim.cosine_pairs_arrow(zpairs).collect()
     assert len(zk) == 1 and zk[0].cosine_sim is None
 
 
@@ -575,6 +617,8 @@ def test_rplsh_codes_arrow_null_and_ragged_code_to_zero(spark):
     """Null and wrong-length vectors must code to 0 in every table —
     the JVM fold's NULL-propagation outcome — rather than crashing the
     Arrow kernel's np.stack (r12 ADVICE)."""
+    from reference_folds import hyperplane_code_fold
+
     from duva_spark.llm import similarity as sim
 
     df = spark.createDataFrame(
@@ -592,7 +636,7 @@ def test_rplsh_codes_arrow_null_and_ragged_code_to_zero(spark):
     got = {(r.nid, r.tbl): r.code for r in ker.collect()}
     jvm_ok = df.filter("vec_id = 1").select(
         *[
-            sim.hyperplane_code(F.col("embedding"), 4, 6, seed=t).alias(f"c{t}")
+            hyperplane_code_fold(F.col("embedding"), 4, 6, seed=t).alias(f"c{t}")
             for t in range(2)
         ]
     ).collect()[0]
@@ -877,15 +921,65 @@ def test_incremental_pairs_equal_cross_split_subset(spark, sf_dir):
 
 
 def test_arrow_topk_equals_jvm_topk(spark, sf_dir):
-    """The BLAS matmul path must return bit-identical rows to the JVM
-    fold path — same rounding, same tie-breaks, same top-k."""
+    """brute_force_topk must return the fold's rows exactly — same
+    rounding, same tie-breaks, same top-k — at 7, 100 and 400 probes
+    (400 slabs each batch into several scoring chunks) and with the
+    label exclusion of hard-negative mining."""
+    from reference_folds import brute_force_topk_fold
+
     from duva_spark.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 7)
-    a = sorted(map(tuple, similarity.brute_force_topk(emb, q, 4).collect()))
-    b = sorted(map(tuple, similarity.brute_force_topk_arrow(emb, q, 4).collect()))
-    assert a == b and len(a) > 0
+    for n_probes in (7, 100, 400):
+        q = emb.filter(F.col("vec_id") < n_probes)
+        a = sorted(map(tuple, brute_force_topk_fold(emb, q, 4).collect()))
+        b = sorted(map(tuple, similarity.brute_force_topk(emb, q, 4).collect()))
+        assert a == b and len(a) == 4 * n_probes
+    q = emb.filter(F.col("vec_id") < 5)
+    a = sorted(map(tuple, brute_force_topk_fold(emb, q, 3, exclude_same="label").collect()))
+    b = sorted(map(tuple, similarity.brute_force_topk(emb, q, 3, exclude_same="label").collect()))
+    assert a == b and len(a) == 15
+
+
+def test_topk_null_cosine_never_outranks_a_finite_one(spark):
+    """A zero-norm or ragged corpus row scores a NULL cosine (the edge
+    cosine_pairs_arrow declares) and ranks after every finite cosine,
+    even one below zero."""
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0]),
+            (2, [0.0, 0.0, 0.0]),  # zero norm
+            (3, [1.0, 0.0]),  # ragged
+            (4, [-1.0, 0.1, 0.0]),  # finite, negative
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    got = [
+        (r.rank, r.neighbor_id, r.cosine_sim)
+        for r in similarity.brute_force_topk(df, df.filter("vec_id = 1"), k=3)
+        .orderBy("rank")
+        .collect()
+    ]
+    assert got[0] == (1, 4, round(-1 / (1.01**0.5), 6))
+    assert got[1:] == [(2, 2, None), (3, 3, None)]
+
+
+def test_topk_six_dp_tie_goes_to_the_lower_id(spark):
+    """k=1: two neighbors round to the same 6-dp cosine; the lower id
+    wins even though its unrounded cosine is the smaller one."""
+    import math
+
+    hi = math.cos(1e-4)  # 0.999999995 -> rounds to 1.0
+    df = spark.createDataFrame(
+        [
+            (10, [1.0, 0.0]),
+            (20, [math.cos(2e-4), math.sin(2e-4)]),  # 0.99999998 -> 1.0
+            (30, [hi, math.sin(1e-4)]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    top = similarity.brute_force_topk(df, df.filter("vec_id = 10"), k=1).collect()
+    assert [(r.neighbor_id, r.cosine_sim, r.rank) for r in top] == [(20, 1.0, 1)]
 
 
 def test_star_components_handle_high_diameter_paths(spark):
@@ -990,8 +1084,8 @@ def test_arrow_topk_probe_guard_raises_on_oversized_probe_set(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     with _pytest.raises(ValueError, match="max_probes"):
-        similarity.brute_force_topk_arrow(emb, emb, 3, max_probes=10)
-    ok = similarity.brute_force_topk_arrow(emb, emb.filter(F.col("vec_id") < 3), 3)
+        similarity.brute_force_topk(emb, emb, 3, max_probes=10)
+    ok = similarity.brute_force_topk(emb, emb.filter(F.col("vec_id") < 3), 3)
     assert ok.count() == 9
 
 

@@ -659,14 +659,13 @@ _BNLJ_SITES = [
     ("q_tfidf_top_terms", 1),
     ("q_temperature_mixture", 1),
     # r5 additions: perplexity-tercile thresholds (two 1-row broadcasts)
-    # and the hard-negative probe broadcast (a 5-row probe frame)
     ("q_perplexity_buckets", 2),
-    ("q_hard_negatives", 1),
     ("q_decayed_engagement", 1),
     # review catch: sites missed by the first enumeration — the int8
-    # min/max broadcast and the two brute-force probe broadcasts
+    # min/max broadcast and the L2 brute-force probe broadcast (the
+    # cosine top-k and hard-negative probe broadcasts left with the
+    # crossJoin fold; the Arrow brute-force top-k plans no join)
     ("q_embed_quantize_error", 1),
-    ("q_embed_cosine_topk", 1),
     ("q_embed_l2_topk", 1),
     ("q_epoch_capped_mixture", 1),
     # r5 late addition (r12: q_knn_label_purity's probe leg moved to the

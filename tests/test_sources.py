@@ -406,7 +406,7 @@ def test_onadata_datasource_filter_pushdown(spark, tmp_path):
     from pyspark.sql.datasource import EqualNullSafe, EqualTo, GreaterThanOrEqual
     from pyspark.sql.types import StructType
 
-    from duva_spark.sources.datasource import OnaDataSource, PushdownOnaDataReader
+    from duva_spark.sources.datasource import OnaDataReader, OnaDataSource
 
     p = tmp_path / "f.csv"
     p.write_text("k,v\n" + "".join(f"{i},x{i % 3}\n" for i in range(100)))
@@ -433,21 +433,8 @@ def test_onadata_datasource_filter_pushdown(spark, tmp_path):
     plan = buf.getvalue()
     assert not re.search(r"\(\d+\) Filter", plan), plan
 
-    # .option("pushdown", "false") opts out: the plain reader leaves the
-    # Filter in the plan (and the session conf no longer matters).
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        (
-            spark.read.format("onadata")
-            .option("path", str(p))
-            .option("pushdown", "false")
-            .load()
-            .filter("k >= 90 and v = 'x0'")
-        ).explain("formatted")
-    assert re.search(r"\(\d+\) Filter", buf.getvalue())
-
     schema = StructType.fromDDL("k long, v string")
-    reader = PushdownOnaDataReader(schema, str(p), 100, 2)
+    reader = OnaDataReader(schema, str(p), 100, 2)
     remainder = reader.pushFilters(
         [
             GreaterThanOrEqual(("k",), 90),

@@ -607,8 +607,8 @@ def sweep(spark, sizes_small, sizes_big, only=None):
             sizes_small,
             lambda n: _force(
                 __import__(
-                    "duva_spark.llm.similarity", fromlist=["brute_force_topk_arrow"]
-                ).brute_force_topk_arrow(
+                    "duva_spark.llm.similarity", fromlist=["brute_force_topk"]
+                ).brute_force_topk(
                     _embeddings(spark, n),
                     _embeddings(spark, 20),
                     k=5,
