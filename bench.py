@@ -30,7 +30,8 @@ from duva_spark.session import get_spark  # noqa: E402
 # r11: bumped to the r10 code HEAD.
 # r12: bumped to the r11 code HEAD.
 # r13: bumped to the r12 final HEAD (code identical to 3ddfd6b).
-_REF_COMMIT = "dfc6c5c"
+# r14: bumped to the r13 code HEAD.
+_REF_COMMIT = "57a1964"
 
 # The round-1 10-query headline set: the driver's self-baseline
 # (BASELINE.md, 10.639 s at sf0.1). Its subtotal is emitted as its own

@@ -455,12 +455,14 @@ class ControlPlane:
         """Dependency probe: every check OK → 200, any failing → 500,
         with the reference's exact {"Database": "OK"/"FAILING", ...}
         body (a check that raises counts as failing, like the
-        redis.ping() try/except)."""
+        redis.ping() try/except; the check name and exception class go
+        to the log, the body stays the reference's)."""
         status = {}
         for name, check in self.health_checks.items():
             try:
                 ok = bool(check())
-            except Exception:
+            except Exception as exc:
+                self.log.warning("health check %s failed: %s", name, type(exc).__name__)
                 ok = False
             status[name] = "OK" if ok else "FAILING"
         code = 200 if all(v == "OK" for v in status.values()) else 500

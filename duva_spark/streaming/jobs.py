@@ -10,17 +10,18 @@ strictly stronger than duva's drop-and-recreate (app/core/importer.py:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from duva_spark.catalog import normalize_events_ts, table_path, table_schema
+
 
 def _require_single_file(path: str) -> None:
     """The file-stream sources below glob-filter on a LEAF FILE name
     inside sf_dir; a directory-style parquet dataset (part-*.parquet
     inside <table>.parquet/) would silently match zero files and the
     stream would return empty instead of failing (r7 ADVICE item)."""
-    import os
-
     if not os.path.isfile(path):
         raise FileNotFoundError(
             f"stream source expects a single parquet FILE at {path}; "
@@ -28,50 +29,27 @@ def _require_single_file(path: str) -> None:
         )
 
 
-def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
-    """Stream-source schema with the on-disk ts type (nanos-as-long or a
-    native timestamp — see catalog.load_table for the two generations)."""
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str, watermark: str = "1 hour") -> DataFrame:
     """File-source stream over the events parquet with a watermark.
 
     In production this is Kafka/Kinesis; the file source exercises the
-    identical logical plan.
+    identical logical plan. The stream-source schema is the table's
+    driver-read footer schema, so ts arrives as the on-disk generation
+    (long nanos or a native timestamp) and is normalized exactly as the
+    batch ``catalog.load_table`` does.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Peek at the batch-read footer to learn which ts generation is on
-    # disk (long nanos vs native timestamp), then declare the matching
-    # stream-source schema and normalize to session-UTC TimestampType.
-    import os
-
-    _require_single_file(os.path.join(sf_dir, "events.parquet"))
-    ts_on_disk = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema["ts"].dataType
-    )
+    path = table_path(sf_dir, "events")
+    _require_single_file(path)
+    schema = table_schema(path)
     # the file stream source wants a directory; glob-filter to the events
     # table inside the sf_dir layout
     stream = (
-        spark.readStream.schema(_events_stream_schema(ts_on_disk))
+        spark.readStream.schema(schema)
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    if isinstance(ts_on_disk, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return stream.withWatermark("ts", watermark)
+    return normalize_events_ts(stream, schema["ts"].dataType).withWatermark("ts", watermark)
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,12 +57,10 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     leg of the streaming ingest-dedup pipeline). Documents carry no
     event time, so no watermark: the per-batch dedup join is stateless
     — all state lives in the persisted corpus index."""
-    import os
-
-    _require_single_file(os.path.join(sf_dir, "documents.parquet"))
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    path = table_path(sf_dir, "documents")
+    _require_single_file(path)
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(table_schema(path))
         .format("parquet")
         .option("pathGlobFilter", "documents.parquet")
         .load(sf_dir)
@@ -139,8 +115,6 @@ def _local_checkpoint_fastpath(
     its checkpoint checksums. SPARK_GRAFT_STREAM_CKPT_FASTPATH=0/1
     still forces it off/on explicitly. Values are unaffected either
     way: both managers implement the same atomic-rename contract."""
-    import os
-
     force = os.environ.get("SPARK_GRAFT_STREAM_CKPT_FASTPATH", "")
     if force == "0":
         on = False

@@ -5,6 +5,7 @@ already-syncing 202)."""
 from __future__ import annotations
 
 import json
+import logging
 import urllib.request
 
 import pytest
@@ -376,7 +377,7 @@ def test_home_scheme_follows_session_config(api, spark, tmp_path):
         server.shutdown()
 
 
-def test_health_ok_and_failing(spark, tmp_path):
+def test_health_ok_and_failing(spark, tmp_path, caplog):
     from duva_spark.api import ControlPlane, serve
     from duva_spark.orchestration import MetadataStore, SyncJob
 
@@ -391,8 +392,16 @@ def test_health_ok_and_failing(spark, tmp_path):
         # a probe that raises counts as failing -> 500, like the
         # reference's redis.ping() try/except (app/main.py:86-89)
         cp.health_checks["Cache"] = lambda: (_ for _ in ()).throw(RuntimeError())
-        code, body = _req(base, "GET", "/health")
+        with caplog.at_level(logging.WARNING, logger="duva_spark.api"):
+            code, body = _req(base, "GET", "/health")
         assert code == 500 and body["Cache"] == "FAILING" and body["Database"] == "OK"
+        # the failure is not silent: the check name and exception class
+        # are logged, while the body keeps the reference's shape
+        failed = [
+            r.getMessage() for r in caplog.records
+            if r.name == "duva_spark.api" and r.levelno == logging.WARNING
+        ]
+        assert failed == ["health check Cache failed: RuntimeError"]
     finally:
         server.shutdown()
 
