@@ -493,6 +493,7 @@ class ControlPlane:
             "file_status": s.file_status,
             "is_active": s.is_active,
             "sync_failures": s.sync_failures,
+            "failure_reason": s.failure_reason,
             "last_updated": s.last_updated,
             # inject_urls parity (reference file.py:25-39)
             "configuration_id": cid,

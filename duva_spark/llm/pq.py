@@ -43,9 +43,12 @@ baseline).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from duva_spark.llm import assign, kmeans
+from duva_spark.operators.parallel import run_parallel
 
 
 def pq_train(
@@ -74,16 +77,10 @@ def pq_train(
         )
         return sorted(cen.collect(), key=lambda r: r["cluster"])
 
-    # The m subspace Lloyd chains are INDEPENDENT (each trains on its
-    # own slice; no chain reads another's output), so their per-round
-    # driver round-trips overlap via a small thread pool — guide §2.6:
-    # Spark schedules concurrent jobs FIFO and back-fills idle cores.
-    # Per-subspace values are untouched (same jobs, same arithmetic,
-    # just submitted concurrently); pool.map preserves subspace order.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
-        return list(pool.map(train_one, range(m)))
+    # the m subspace chains are independent: each trains on its own slice
+    return run_parallel(
+        emb.sparkSession, [functools.partial(train_one, s) for s in range(m)]
+    )
 
 
 def pq_encode(

@@ -16,6 +16,7 @@ committed Parquet write.
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import ExitStack
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,28 +49,30 @@ class SyncJob:
     def run(self, dataset_id: str, out_path: str) -> int:
         """Run one sync; returns rows loaded. Raises on failure after
         recording it (caller decides on retry/cancel, as the reference's
-        worker does)."""
-        from contextlib import nullcontext
-
+        worker does). Every failure is recorded, including one to take
+        the lock, except ``LockHeld``: a concurrent sync is in flight,
+        so state is left untouched (the reference returns 202 Already
+        Syncing, file.py:163-201)."""
         state = self.store.get(dataset_id)
         if not state.is_active:
             raise RuntimeError(f"dataset {dataset_id} is deactivated after repeated failures")
-        try:
-            with DatasetLock(self.lock_dir, dataset_id):
+        # The stack closes after the handlers run, so a failure inside
+        # the lock is recorded while the lock is still held.
+        with ExitStack() as held:
+            try:
+                held.enter_context(DatasetLock(self.lock_dir, dataset_id))
                 # Gauge/counters wrap the actual import only — a LockHeld
                 # bounce (202) is not an import attempt.
-                with self.metrics.track_sync() if self.metrics else nullcontext():
-                    self.store.update_status(dataset_id, FileStatus.SYNCING)
-                    try:
-                        csv_path = self.fetch(dataset_id)
-                        df = self.shape(read_csv_duva(self.spark, str(csv_path)))
-                        n = full_refresh(df, out_path)
-                    except Exception as exc:
-                        self.store.record_failure(dataset_id, repr(exc))
-                        raise
-                    self.store.record_success(dataset_id)
-                    return n
-        except LockHeld:
-            # concurrent sync in flight — leave state untouched (the
-            # reference returns 202 Already Syncing, file.py:163-201)
-            raise
+                if self.metrics:
+                    held.enter_context(self.metrics.track_sync())
+                self.store.update_status(dataset_id, FileStatus.SYNCING)
+                csv_path = self.fetch(dataset_id)
+                df = self.shape(read_csv_duva(self.spark, str(csv_path)))
+                n = full_refresh(df, out_path)
+            except LockHeld:
+                raise
+            except Exception as exc:
+                self.store.record_failure(dataset_id, repr(exc))
+                raise
+            self.store.record_success(dataset_id)
+            return n

@@ -9,11 +9,14 @@ the full pipeline, not a toy subset.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duva_spark.catalog import load_table
 from duva_spark.llm import blocked, dedup, minhash, multimodal, similarity, simhash, textstats
+from duva_spark.operators.parallel import run_parallel
 from duva_spark.queries import exact_avg, register
 
 # ---------------------------------------------------------------------------
@@ -2324,8 +2327,6 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("neighbor_id").alias("n2"),
             )
         )
-    import functools
-
     tr = functools.reduce(lambda a, b: a.unionByName(b), parts)
     bfg = full.select(
         "*", F.explode(F.array(*[F.lit(d).cast("int") for d in dims])).alias("dims")
@@ -5032,9 +5033,7 @@ def q_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat = logreg.features_for_training(lab, "doc_id", "y", "text", n_buckets=_LR_B)
     from duva_spark.llm.logreg import P_CLAMP
 
-    # LR and NB legs are independent until the final union — overlap
-    # their driver round-trips via two threads (guide §2.6; same jobs,
-    # same arithmetic, concurrent scheduling only).
+    # the LR and NB legs are independent until the final union
     def lr_leg():
         _, w = logreg.logreg_train(
             lab, "doc_id", "y", "text",
@@ -5068,13 +5067,10 @@ def q_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return nbp.join(lab.select("doc_id", "y"), "doc_id")
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_lr, f_nb = pool.submit(lr_leg), pool.submit(nb_leg)
-        lr_cal = evals.calibration_bins(f_lr.result(), "lr")
-        nb_cal = evals.calibration_bins(f_nb.result(), "nb")
-    return lr_cal.unionByName(nb_cal)
+    lr_scored, nb_scored = run_parallel(spark, [lr_leg, nb_leg])
+    return evals.calibration_bins(lr_scored, "lr").unionByName(
+        evals.calibration_bins(nb_scored, "nb")
+    )
 
 
 def _calibration_ece_oracle() -> str:
@@ -5169,10 +5165,8 @@ def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
     feat = logreg.features_for_training(lab, "doc_id", "y", "text", n_buckets=_LR_B)
 
-    # The LR GD chain and the NB counting chain are INDEPENDENT until
-    # the final union; overlap their driver round-trips (LR's per-round
-    # collects, NB's stats collect) via two threads — guide §2.6. Same
-    # jobs, same arithmetic, concurrent scheduling only.
+    # the LR GD chain and the NB counting chain are independent until
+    # the final union
     def lr_leg():
         _, w = logreg.logreg_train(
             lab, "doc_id", "y", "text",
@@ -5205,11 +5199,7 @@ def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return nbp.join(lab.select("doc_id", "y"), "doc_id")
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_lr, f_nb = pool.submit(lr_leg), pool.submit(nb_leg)
-        lr_scored, nb_scored = f_lr.result(), f_nb.result()
+    lr_scored, nb_scored = run_parallel(spark, [lr_leg, nb_leg])
     return evals.calibration_summary(lr_scored, "lr").unionByName(
         evals.calibration_summary(nb_scored, "nb")
     )
@@ -6038,15 +6028,9 @@ def q_lr_data_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     h100 = hashed_lm.md5_hash60(F.col("doc_id").cast("string")) % 100
 
-    # The three budget chains are INDEPENDENT (each trains on its own
-    # hash window of the shared checkpointed feature table; none reads
-    # another's output), so their per-round driver round-trips overlap
-    # via a small thread pool — guide §2.6: Spark schedules concurrent
-    # jobs FIFO and back-fills idle cores. Per-budget values are
-    # untouched (same jobs, same arithmetic, concurrent scheduling
-    # only); pool.map preserves budget order.
-    def run_budget(frac_hi):
-        frac, hi = frac_hi
+    # the budget chains are independent: each trains on its own hash
+    # window of the shared feature table
+    def run_budget(frac, hi):
         sub = feat.filter(F.col("h") < hi)
         curve, wts = logreg.logreg_train(
             lab, "doc_id", "y", "text",
@@ -6060,10 +6044,9 @@ def q_lr_data_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         auc = evals.auc_frame(scored).collect()[0]["auc"]
         return (float(frac), n_train, float(curve[-1][2]), auc)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(_LR_CURVE)) as pool:
-        out = list(pool.map(run_budget, _LR_CURVE))
+    out = run_parallel(
+        spark, [functools.partial(run_budget, *fh) for fh in _LR_CURVE]
+    )
     return spark.createDataFrame(
         out, "train_frac double, n_train long, holdout_acc double, auc double"
     )
@@ -6182,11 +6165,9 @@ def q_embed_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash.md5_hash60(F.col("vec_id").cast("string")) % 5 < 1
     )
 
-    # r13 (r12 verdict item 1): the trained chain (Lloyd rounds + the
-    # trained-centroid collect) and the label chain (label_centroids
-    # collect) are independent until the final union — overlap their
-    # bounded driver round-trips in two threads (guide §2.6; same jobs,
-    # same arithmetic, concurrent scheduling only).
+    # the trained chain (Lloyd rounds + the trained-centroid collect)
+    # and the label chain (label_centroids collect) are independent
+    # until the final union
     def trained_leg() -> DataFrame:
         cen, _ = kmeans.lloyd(
             emb, k=_IVF_TR_K, iters=_KM_ITERS, dim=_KM_DIM, dp=_KM_DP,
@@ -6203,11 +6184,7 @@ def q_embed_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, queries, cent_l, k=5, nprobe=_IVF_TR_NPROBE
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_t, f_l = pool.submit(trained_leg), pool.submit(label_leg)
-        ivf_t, ivf_l = f_t.result(), f_l.result()
+    ivf_t, ivf_l = run_parallel(spark, [trained_leg, label_leg])
 
     def recall(appx: DataFrame, variant: str) -> DataFrame:
         a2 = appx.select(
@@ -6306,18 +6283,12 @@ def q_embed_compression_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_PARETO_BYTES["fp32"]).alias("bytes_per_vector"),
         F.round(F.lit(1.0), 4).alias("mean_recall_at_5"),
     )
-    # The four component chains are independent and their fn() calls
-    # run training jobs (PQ/IVF Lloyd collects) at CONSTRUCTION time —
-    # build them in a small thread pool so those driver round-trips
-    # overlap (guide §2.6); each component's values are exactly the
-    # registered query's own (same fn, same arithmetic), and the union
-    # order below is fixed by the comps dict order as before.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(comps)) as pool:
-        frames = dict(
-            zip(comps, pool.map(lambda fn: fn(spark, sf_dir), comps.values()))
-        )
+    # The component chains are independent, and their fn() calls run
+    # training jobs (PQ/IVF Lloyd collects) at construction time; each
+    # component's values are exactly the registered query's own.
+    frames = dict(zip(comps, run_parallel(
+        spark, [functools.partial(fn, spark, sf_dir) for fn in comps.values()]
+    )))
     for v in comps:
         out = out.unionByName(
             frames[v].agg(
@@ -6388,13 +6359,8 @@ def q_unigram_vocab_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duva_spark.llm.hashed_lm import round_half_up
 
     docs = load_table(spark, sf_dir, "documents")
-    # r13 (r12 verdict item 5): ONE corpus word-count pass shared by the
-    # wocc denominator and all three seed chains (each previously
-    # rebuilt word_vocab + the substring seed pass from docs), and the
-    # three independent EM chains run in a thread pool so their bounded
-    # per-round collects overlap (guide §2.6 — the pareto pattern).
-    # Values identical: each chain's arithmetic is untouched and the
-    # output rows assemble in _UNI_SEEDS order as before.
+    # ONE corpus word-count pass shared by the wocc denominator and the
+    # independent EM chains, one chain per seed count.
     words = (
         word_vocab(docs, "text")
         .filter(F.length("w") <= _UNI_CAP)
@@ -6409,10 +6375,7 @@ def q_unigram_vocab_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return ns, vsz, int(tt), round_half_up(tt * 1.0 / wocc, 6)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(_UNI_SEEDS)) as pool:
-        rows = list(pool.map(chain, _UNI_SEEDS))
+    rows = run_parallel(spark, [functools.partial(chain, ns) for ns in _UNI_SEEDS])
     return spark.createDataFrame(
         rows,
         "n_seed int, vocab_size long, total_tokens long, tokens_per_word double",
@@ -6513,11 +6476,9 @@ def q_dedup_cluster_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "_hs", *[f"mh_{i}" for i in range(minhash.N_HASHES)]
     ).localCheckpoint()
 
-    # The LSH leg and the exact prefix-filter leg are fully independent
-    # up to the contingency join — each builds its own pair set and runs
-    # its own bounded component loop. Overlap the two legs' driver
-    # round-trips (per-iteration checkpoints/convergence checks) via two
-    # threads — guide §2.6; same jobs, same arithmetic.
+    # The LSH leg and the exact prefix-filter leg are independent up to
+    # the contingency join: each builds its own pair set and runs its
+    # own bounded component loop.
     def lsh_leg():
         lsh = minhash.near_duplicates(
             docs, "doc_id", "text", threshold=0.5, sig=sig
@@ -6533,11 +6494,7 @@ def q_dedup_cluster_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return connected_components(exact.select("id_a", "id_b"))
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_l, f_x = pool.submit(lsh_leg), pool.submit(exact_leg)
-        cc_l, cc_x = f_l.result(), f_x.result()
+    cc_l, cc_x = run_parallel(spark, [lsh_leg, exact_leg])
     lab = (
         docs.select("doc_id")
         .join(cc_l.withColumnRenamed("id", "doc_id").withColumnRenamed("comp", "ca"), "doc_id", "left")

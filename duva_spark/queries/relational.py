@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from duva_spark.catalog import load_table
 from duva_spark.operators.quantile import quantile_cont_row
-from duva_spark.queries import exact_avg, exact_sum_round, money_cents, register
+from duva_spark.queries import exact_avg, exact_sum_round, exact_sum_round_sql, money_cents, register
 
 # ---------------------------------------------------------------------------
 # Aggregation spine
@@ -126,9 +126,9 @@ def q02_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q03_shipping_priority",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey,
-           CAST((SUM(CAST(FLOOR((l_extendedprice * (1 - l_discount)) * 1e6 + 0.5) AS HUGEINT)) + 5000) // 10000 AS DOUBLE) / 1e2 AS revenue,
+           {exact_sum_round_sql("l_extendedprice * (1 - l_discount)")} AS revenue,
            strftime(o_orderdate, '%Y-%m-%d') AS orderdate
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -164,8 +164,8 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q05_local_supplier_volume",
-    oracle="""
-    SELECT n_name, CAST((SUM(CAST(FLOOR((l_extendedprice * (1 - l_discount)) * 1e6 + 0.5) AS HUGEINT)) + 5000) // 10000 AS DOUBLE) / 1e2 AS revenue
+    oracle=f"""
+    SELECT n_name, {exact_sum_round_sql("l_extendedprice * (1 - l_discount)")} AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -203,9 +203,9 @@ def q05_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q10_returned_items",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey, c_name,
-           CAST((SUM(CAST(FLOOR((l_extendedprice * (1 - l_discount)) * 1e6 + 0.5) AS HUGEINT)) + 5000) // 10000 AS DOUBLE) / 1e2 AS revenue,
+           {exact_sum_round_sql("l_extendedprice * (1 - l_discount)")} AS revenue,
            n_name
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -1396,8 +1396,8 @@ def q_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q06_forecast_revenue",
-    oracle="""
-    SELECT CAST((SUM(CAST(FLOOR((l_extendedprice * l_discount) * 1e6 + 0.5) AS HUGEINT)) + 5000) // 10000 AS DOUBLE) / 1e2 AS revenue,
+    oracle=f"""
+    SELECT {exact_sum_round_sql("l_extendedprice * l_discount")} AS revenue,
            COUNT(*) AS n_lines
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01'

@@ -88,6 +88,33 @@ def test_forced_sync_and_already_syncing_202(api):
     assert code == 200 and body["file_status"] == FileStatus.FILE_AVAILABLE.value
 
 
+def _unreachable_export(_id):
+    raise ConnectionError("export unreachable")
+
+
+@pytest.mark.parametrize(
+    "lock_dir, fetch, reason",
+    [
+        (".", _unreachable_export, "ConnectionError('export unreachable')"),
+        ("missing-locks", lambda _id: None, "FileNotFoundError"),
+    ],
+    ids=["failing-fetch", "missing-lock-dir"],
+)
+def test_forced_sync_failure_is_recorded_in_the_view(spark, tmp_path, lock_dir, fetch, reason):
+    """A failure anywhere in SyncJob.run, taking the lock included,
+    reaches the view that POST /sync answers with."""
+    store = MetadataStore(tmp_path / "catalog.json")
+    job = SyncJob(spark, store, tmp_path / lock_dir, fetch=fetch)
+    cp = ControlPlane(store, job, str(tmp_path / "out"))
+    cp.create_file({"form_id": 5})
+    store.record_success("5")  # available, so a forced sync runs
+    code, body = cp.sync_file("5")
+    assert code == 200
+    assert body["file_status"] == FileStatus.LATEST_SYNC_FAILED.value
+    assert body["sync_failures"] == 1
+    assert body["failure_reason"].startswith(reason)
+
+
 def test_sync_unknown_dataset_404(api):
     base, _ = api
     code, _ = _req(base, "POST", "/api/v1/files/nope/sync")

@@ -5,13 +5,21 @@ operators' equivalence to their inline query forms."""
 from __future__ import annotations
 
 import contextlib
+import functools
 import io
+import threading
+import time
+import uuid
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
+import duva_spark
 from duva_spark.catalog import load_table
 from duva_spark.layout import read_table, write_bucketed, write_partitioned_by_day
 from duva_spark.operators import asof_join, salted_join, top_k_per_group
+from duva_spark.operators.parallel import run_parallel
 
 
 def _explain(df, mode="formatted") -> str:
@@ -241,3 +249,96 @@ def test_scd2_apply_dedupes_update_batch_last_wins(spark):
         (1, "a", "2024-01-01", "2024-02-01", 0),
         (1, "last", "2024-02-01", OPEN_END, 1),
     }
+
+
+# ---------------------------------------------------------------------------
+# run_parallel: the one driver-side fan-out
+# ---------------------------------------------------------------------------
+
+
+@contextlib.contextmanager
+def _job_group(sc, interrupt_on_cancel=False):
+    group = f"run-parallel-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "run_parallel test", interruptOnCancel=interrupt_on_cancel)
+    try:
+        yield group
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_run_parallel_jobs_land_in_the_callers_group(spark):
+    """Jobs launched on the fan-out threads, and on the threads of a
+    nested fan-out (a pareto leg that trains PQ), carry the caller's job
+    group; none runs without a group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def leg(n):
+        return spark.range(n).count()
+
+    def nested():
+        return run_parallel(spark, [functools.partial(leg, 5), functools.partial(leg, 6)])
+
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    with _job_group(sc) as group:
+        assert run_parallel(spark, [functools.partial(leg, 3), nested]) == [3, [5, 6]]
+    assert len(tracker.getJobIdsForGroup(group)) >= 3
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
+def test_run_parallel_legs_stop_on_cancel_job_group(spark):
+    """cancelJobGroup from another thread stops every running leg, and
+    the caller sees the error well before the legs' own 30 s."""
+    sc = spark.sparkContext
+
+    def slow_leg():
+        return sc.parallelize([0], 1).map(lambda x: time.sleep(30) or x).collect()
+
+    with _job_group(sc, interrupt_on_cancel=True) as group:
+
+        def cancel_when_both_run():
+            deadline = time.monotonic() + 20
+            while time.monotonic() < deadline:
+                if len(sc.statusTracker().getJobIdsForGroup(group)) >= 2:
+                    break
+                time.sleep(0.05)
+            sc.cancelJobGroup(group)
+
+        timer = threading.Thread(target=cancel_when_both_run)
+        t0 = time.monotonic()
+        timer.start()
+        with pytest.raises(Exception, match="(?i)cancel"):
+            run_parallel(spark, [slow_leg, slow_leg])
+        timer.join(timeout=30)
+    assert not timer.is_alive()
+    assert time.monotonic() - t0 < 25
+
+
+def test_run_parallel_keeps_input_order_and_reraises(spark):
+    def after(delay, value):
+        time.sleep(delay)
+        return value
+
+    # later inputs finish first; results still come back in input order
+    legs = [functools.partial(after, 0.05 * (3 - i), i) for i in range(4)]
+    assert run_parallel(spark, legs) == [0, 1, 2, 3]
+
+    def boom():
+        raise ValueError("leg failed")
+
+    with pytest.raises(ValueError, match="leg failed"):
+        run_parallel(spark, [functools.partial(after, 0.05, 1), boom])
+
+
+def test_thread_pools_only_in_the_fan_out_helper():
+    """Every driver-side fan-out goes through run_parallel, so no other
+    module in the package builds a thread pool of its own."""
+    root = Path(duva_spark.__file__).parent
+    users = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "ThreadPoolExecutor" in p.read_text()
+    )
+    assert users == ["operators/parallel.py"]

@@ -515,17 +515,15 @@ def test_stream_quality_filter_corrupt_sink_raises(spark, sf_dir, monkeypatch):
         _quality_filter_with_sink_writer(spark, sf_dir, monkeypatch, write_corrupt)
 
 
-def test_checkpoint_fastpath_scheme_detection(spark, monkeypatch):
+def test_checkpoint_fastpath_scheme_detection(spark):
     """The local checkpoint fastpath must engage only for file-scheme
     checkpoint roots (r12 verdict item 7): an hdfs://-style location
-    keeps Spark's default manager + checksums, a local path (or the
-    temp-dir fallback) switches to the fork-free local managers, and
-    the env var still forces either polarity."""
+    keeps Spark's default manager + checksums, and a local path (or the
+    temp-dir fallback) switches to the fork-free local managers."""
     from duva_spark.streaming import jobs
 
     mgr_key = "spark.sql.streaming.checkpointFileManagerClass"
     sum_key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT_FASTPATH", raising=False)
 
     jobs._local_checkpoint_fastpath(spark, "hdfs://nn:8020/ckpt/q1")
     assert spark.conf.get(mgr_key, None) is None  # Spark defaults kept
@@ -540,15 +538,3 @@ def test_checkpoint_fastpath_scheme_detection(spark, monkeypatch):
     # no explicit location and no session default -> temp-dir fallback
     jobs._local_checkpoint_fastpath(spark, None)
     assert "FileSystemBasedCheckpointFileManager" in spark.conf.get(mgr_key)
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_FASTPATH", "0")
-    jobs._local_checkpoint_fastpath(spark, "/tmp/ckpt/q1")
-    assert spark.conf.get(mgr_key, None) is None
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_FASTPATH", "1")
-    jobs._local_checkpoint_fastpath(spark, "s3a://bucket/ckpt")
-    assert "FileSystemBasedCheckpointFileManager" in spark.conf.get(mgr_key)
-
-    # leave the session in the local-default state for later tests
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT_FASTPATH", raising=False)
-    jobs._local_checkpoint_fastpath(spark, None)

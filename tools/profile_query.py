@@ -1,8 +1,8 @@
 """Per-job/stage wall-clock profile of one or more registered queries.
 
-Runs each named query with the Spark event log enabled, then parses the
-event log to print every job (submit->complete wall time, description)
-and the heaviest stages. This substitutes for the Spark UI (disabled in
+Runs each named query with the Spark event log enabled, then reads the
+event log (through perfbench's reader) to print every job
+(submit->complete wall time, description) and its stages. This substitutes for the Spark UI (disabled in
 this sandbox) when deciding WHERE a query's seconds go — job-count
 overhead vs one slow stage vs Python boundary.
 
@@ -12,16 +12,17 @@ overhead vs one slow stage vs Python boundary.
 from __future__ import annotations
 
 import argparse
-import json
 import sys
 import tempfile
 import time
 from pathlib import Path
 
 sys.path.insert(0, ".")
+sys.path.insert(0, "perfbench")  # the benchmark's event-log reader, used read-only
 
 from duva_spark.queries import load_all  # noqa: E402
 from duva_spark.session import get_spark  # noqa: E402
+from eventlog import read_events  # noqa: E402
 
 
 def main() -> int:
@@ -63,26 +64,9 @@ def main() -> int:
 
     spark.stop()
 
-    # parse the event log: jobs with submit/complete timestamps
-    logs = sorted(Path(evdir).glob("*"), key=lambda p: p.stat().st_mtime)
-    if not logs:
-        print("no event log found", file=sys.stderr)
-        return 1
-    target = logs[-1]
-    # Spark 4 writes a rolling event-log DIRECTORY (eventlog_v2_*)
-    files = (
-        sorted(p for p in target.iterdir() if p.name.startswith("events_"))
-        if target.is_dir()
-        else [target]
-    )
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
-    lines = (ln for f in files for ln in f.open())
-    for line in lines:
-        try:
-            ev = json.loads(line)
-        except ValueError:
-            continue
+    for ev in read_events(Path(evdir)):
         e = ev.get("Event")
         if e == "SparkListenerJobStart":
             jobs[ev["Job ID"]] = {
@@ -101,6 +85,9 @@ def main() -> int:
                 if si.get("Submission Time")
                 else None,
             }
+    if not jobs:
+        print(f"no jobs in the event log under {evdir}", file=sys.stderr)
+        return 1
     print("\njob_id  wall_ms  description")
     for jid in sorted(jobs):
         j = jobs[jid]
@@ -112,7 +99,7 @@ def main() -> int:
             s = stages.get(sid)
             if s and s["ms"] is not None:
                 print(f"        stage {sid}: {s['ms']} ms, {s['tasks']} tasks  {s['name']}")
-    print(f"\nevent log: {logs[-1]}")
+    print(f"\nevent log: {evdir}")
     return 0
 
 
