@@ -20,6 +20,9 @@ on S3/GCS the pointer replace is a single-object PUT, which is atomic;
 version directory, overwritten by the next commit; the live dataset is
 never absent. Read a dataset through `read_dataset` (or `read_version`
 for time travel), never with a bare ``spark.read.parquet`` on its root.
+Every read here declares the schema from one parquet footer
+(`catalog.table_schema`), so it launches no schema-inference job;
+partition columns are still discovered from the ``key=value`` dirs.
 `partition_by` gives hive-style partitioning inside each version, so a
 100 TB dataset prunes on read.
 """
@@ -30,7 +33,10 @@ import os
 import shutil
 import tempfile
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from duva_spark.catalog import table_schema
 
 CURRENT_POINTER = "_CURRENT"
 
@@ -98,7 +104,7 @@ def read_dataset(spark, path: str) -> DataFrame:
     """Read the current version of a dataset written by this module. A
     `path` with no ``_CURRENT`` is read as a plain parquet dir."""
     current = _current_version(path)
-    return spark.read.parquet(path if current is None else _version_dir(path, current))
+    return _read(spark, path if current is None else _version_dir(path, current))
 
 
 def list_versions(path: str) -> list[int]:
@@ -121,7 +127,18 @@ def read_version(spark, path: str, version: int) -> DataFrame:
         raise FileNotFoundError(
             f"version {version} not on disk (retained: {list_versions(path)})"
         )
-    return spark.read.parquet(full)
+    return _read(spark, full)
+
+
+def _read(spark, directory: str) -> DataFrame:
+    """One version directory, its schema read from a parquet footer. With
+    no readable footer (a missing or empty dir, a corrupt file) Spark's
+    own reader is left to raise its error, e.g. UNABLE_TO_INFER_SCHEMA."""
+    try:
+        schema = table_schema(directory)
+    except (FileNotFoundError, pa.ArrowInvalid):
+        return spark.read.parquet(directory)
+    return spark.read.schema(schema).parquet(directory)
 
 
 def vacuum(path: str, retain: int = 1) -> list[int]:
@@ -162,7 +179,7 @@ def merge_upsert(spark, new_df: DataFrame, path: str, key: str, retain: int = 1)
                 "full_refresh it before upserting"
             )
         return _commit(new_df, path, retain=retain)
-    existing = spark.read.parquet(_version_dir(path, current))
+    existing = _read(spark, _version_dir(path, current))
     keep = existing.join(new_df.select(key), on=key, how="left_anti")
     merged = keep.unionByName(new_df, allowMissingColumns=True)
     return _commit(merged, path, retain=retain)
@@ -205,7 +222,7 @@ def delete_where(
     # SQL DELETE semantics: only rows where the predicate is TRUE go;
     # a NULL-evaluating predicate must KEEP the row (a bare ~condition
     # would silently over-delete NULL rows — fatal in a GDPR helper).
-    remaining = spark.read.parquet(current).filter(~F.coalesce(condition, F.lit(False)))
+    remaining = _read(spark, current).filter(~F.coalesce(condition, F.lit(False)))
     return _commit(remaining, path, retain=_retain_all(path, retain))
 
 
@@ -230,7 +247,7 @@ def compact(
     # coalesce, not repartition: merging small files needs NO shuffle
     # (coalesce only narrows partitioning); at 100 TB a repartition
     # would double the IO of the OPTIMIZE pass for nothing.
-    df = spark.read.parquet(current).coalesce(n_target)
+    df = _read(spark, current).coalesce(n_target)
     _commit(df, path, retain=_retain_all(path, retain))
     new_current = _require_current(path)
     files_after = len([f for f in os.listdir(new_current) if f.endswith(".parquet")])

@@ -22,7 +22,12 @@ replays of the spec, so tests assert kernel == fold value-for-value:
 - ``cosine_fold`` / ``hyperplane_code_fold`` / ``brute_force_topk_fold``
   pin ``similarity.cosine_pairs_arrow``, ``similarity.rplsh_codes_arrow``
   and ``similarity.brute_force_topk`` (the crossJoin + window form the
-  brute-force top-k used to plan as).
+  brute-force top-k used to plan as);
+- ``apply_export_settings_fold`` pins ``shaping.ops.apply_export_settings``
+  (and through it ``split_select_multiple``, ``flatten_group_names`` and
+  ``rename_to_labels``): the ``withColumn``-per-choice and
+  ``withColumnsRenamed`` chain the export shaping used to build, one
+  DataFrame call per step, against production's single projection.
 """
 
 from __future__ import annotations
@@ -359,3 +364,74 @@ def brute_force_topk_fold(
     return sims.withColumn("rank", F.row_number().over(w).cast("long")).filter(
         F.col("rank") <= k
     )
+
+
+def _ident_col(name: str) -> Column:
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _split_select_multiple_fold(
+    df: DataFrame,
+    question: str,
+    choices: list[str],
+    value_select_multiples: bool,
+    binary_select_multiples: bool,
+    choice_labels: dict[str, str] | None,
+    sep: str = "/",
+) -> DataFrame:
+    arr = F.split(_ident_col(question), " ")
+    selected = lambda choice: F.array_contains(arr, choice) & _ident_col(question).isNotNull()  # noqa: E731
+    out = df
+    for choice in choices:
+        col_name = f"{question}{sep}{choice}"
+        if binary_select_multiples:
+            expr = selected(choice).cast("int")
+        elif value_select_multiples:
+            shown = (choice_labels or {}).get(choice, choice)
+            expr = F.when(selected(choice), F.lit(shown))
+        else:
+            expr = selected(choice)
+        out = out.withColumn(col_name, expr)
+    return out
+
+
+def _flatten_group_names_fold(df: DataFrame, sep: str = "/") -> DataFrame:
+    seen: set[str] = set()
+    mapping: dict[str, str] = {}
+    for c in df.columns:
+        short = c.rsplit(sep, 1)[-1]
+        if short in seen:
+            short = c
+        seen.add(short)
+        mapping[c] = short
+    return df.withColumnsRenamed(mapping)
+
+
+def apply_export_settings_fold(
+    df: DataFrame,
+    settings,
+    question_labels: dict[str, str] | None = None,
+    select_multiples: dict[str, list[str]] | None = None,
+    choice_labels: dict[str, dict[str, str]] | None = None,
+    reviews: DataFrame | None = None,
+) -> DataFrame:
+    """select-multiple split → group flatten → review join → label
+    rename, one ``withColumn`` per split column."""
+    out = df
+    if not settings.do_not_split_select_multiple:
+        for q, choices in (select_multiples or {}).items():
+            out = _split_select_multiple_fold(
+                out,
+                q,
+                choices,
+                settings.value_select_multiples,
+                settings.binary_select_multiples,
+                (choice_labels or {}).get(q) if settings.show_choice_labels else None,
+            )
+    if settings.remove_group_name:
+        out = _flatten_group_names_fold(out)
+    if settings.include_reviews and reviews is not None:
+        out = out.join(F.broadcast(reviews), on="_id", how="left")
+    if settings.include_labels_only and question_labels:
+        out = out.withColumnsRenamed({c: question_labels[c] for c in out.columns if c in question_labels})
+    return out

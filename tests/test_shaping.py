@@ -15,6 +15,7 @@ from duva_spark.shaping import (
     unsplit_select_multiple,
 )
 from duva_spark.shaping.ops import join_reviews, show_choice_labels, unflatten_groups
+from reference_folds import apply_export_settings_fold
 
 
 @pytest.fixture(scope="module")
@@ -138,3 +139,136 @@ def test_labels_metadata_roundtrip(spark, submissions, tmp_path):
     out.write.parquet(p)
     back = spark.read.parquet(p)
     assert labels_of(back) == {"respondent": "What is your name?"}
+
+
+# --- dotted question names: identifiers are quoted, never parsed as struct access
+
+
+@pytest.fixture(scope="module")
+def dotted(spark):
+    return spark.createDataFrame(
+        [(1, "a b", "f"), (2, None, "m")], "id long, `grp/svc.v2` string, `who.sex` string"
+    )
+
+
+def test_split_dotted_question_name(dotted):
+    out = split_select_multiple(dotted, "grp/svc.v2", ["a", "b", "c"], binary_select_multiples=True)
+    r = {row.id: row for row in out.collect()}
+    assert (r[1]["grp/svc.v2/a"], r[1]["grp/svc.v2/b"], r[1]["grp/svc.v2/c"]) == (1, 1, 0)
+    assert r[2]["grp/svc.v2/a"] == 0
+
+
+def test_unsplit_dotted_question_name(dotted):
+    split = split_select_multiple(dotted, "grp/svc.v2", ["a", "b", "c"], binary_select_multiples=True)
+    back = unsplit_select_multiple(split.drop("grp/svc.v2"), "grp/svc.v2", ["a", "b", "c"])
+    assert {row.id: row["grp/svc.v2"] for row in back.collect()} == {1: ["a", "b"], 2: []}
+
+
+def test_show_choice_labels_dotted_question_name(dotted):
+    out = show_choice_labels(dotted, "who.sex", {"f": "Female"})
+    assert {row.id: row["who.sex"] for row in out.collect()} == {1: "Female", 2: "m"}
+
+
+# --- production (one projection) == the withColumn-chain fold
+
+ODD_CHOICES = ["water", "health", "edu", "o'k", "naïve"]
+ODD_LABELS = {
+    "water": "Eau d'été",
+    "health": "back\\slash",
+    "edu": "tick`mark",
+    "naïve": "наивный \\' mix",
+}
+
+
+@pytest.fixture(scope="module")
+def wide(spark):
+    """Groups with a colliding child (g1/x, g2/x), a pre-existing column
+    named like a split column (grp/services/water), and a null answer."""
+    return spark.createDataFrame(
+        [
+            (1, "alice", "water health o'k", "old-1", "f", "a", "b"),
+            (2, "bob", "edu naïve", "old-2", "m", "c", None),
+            (3, "carol", None, None, "f", None, "d"),
+        ],
+        "`_id` long, respondent string, `grp/services` string, `grp/services/water` string, "
+        "`demographics/gender` string, `g1/x` string, `g2/x` string",
+    )
+
+
+def _same_frame(got, want):
+    assert got.schema == want.schema  # names, order, types, nullability, metadata
+    i = got.columns.index("_id")
+    assert sorted(got.collect(), key=lambda r: r[i]) == sorted(want.collect(), key=lambda r: r[i])
+
+
+@pytest.mark.parametrize(
+    "settings",
+    [
+        ExportSettings(),  # binary split, flatten, labels
+        ExportSettings(binary_select_multiples=False),  # value mode + choice labels
+        ExportSettings(binary_select_multiples=False, show_choice_labels=False),
+        ExportSettings(binary_select_multiples=False, value_select_multiples=False),  # boolean
+        ExportSettings(remove_group_name=False, include_labels_only=False),
+        ExportSettings(binary_select_multiples=False, include_reviews=True),
+        ExportSettings(do_not_split_select_multiple=True),
+    ],
+    ids=["binary", "value-labels", "value", "boolean", "no-flatten", "reviews-labels", "no-split"],
+)
+def test_apply_export_settings_equals_fold(spark, wide, settings):
+    reviews = spark.createDataFrame(
+        [(1, "approved"), (3, "rejected")], "`_id` long, review_status string"
+    )
+    kwargs = dict(
+        question_labels={"respondent": "Name", "gender": "Sex", "review_status": "Review", "x": "X?"},
+        select_multiples={"grp/services": ODD_CHOICES},
+        choice_labels={"grp/services": ODD_LABELS},
+        reviews=reviews,
+    )
+    _same_frame(
+        apply_export_settings(wide, settings, **kwargs),
+        apply_export_settings_fold(wide, settings, **kwargs),
+    )
+
+
+def _plan_chain(df) -> list[str]:
+    """Node names of the analyzed plan, root first; every node has at
+    most one child."""
+    plan, names = df._jdf.queryExecution().analyzed(), []
+    while True:
+        names.append(plan.nodeName())
+        children = plan.children()
+        if children.size() == 0:
+            return names
+        assert children.size() == 1, names
+        plan = children.apply(0)
+
+
+def test_export_shaping_is_one_projection(spark, tmp_path):
+    """A wide form (12 select-multiples x 8 choices) shapes as ONE Project
+    over the scan, not a withColumn per choice."""
+    questions = {f"grp{k % 3}/sm{k:02d}": [f"c{j}" for j in range(8)] for k in range(12)}
+    schema = "`_id` long, respondent string, " + ", ".join(f"`{q}` string" for q in questions)
+    path = str(tmp_path / "wide")
+    spark.createDataFrame([(1, "alice", *["c0 c3"] * len(questions))], schema).write.parquet(path)
+    src = spark.read.parquet(path)
+    out = apply_export_settings(
+        src,
+        ExportSettings(),
+        question_labels={"respondent": "Name"},
+        select_multiples=questions,
+    )
+    chain = _plan_chain(out)
+    assert chain[0] == "Project" and len(chain) == 2, chain
+    assert len(out.columns) == 2 + 12 * 9
+    row = out.collect()[0]  # sm00 keeps the short names, later collisions the qualified ones
+    assert (row["c3"], row["c4"], row["grp1/sm01/c3"]) == (1, 0, 1)
+
+
+def test_labels_metadata_is_one_projection(submissions):
+    from duva_spark.shaping.ops import attach_labels_metadata, labels_of
+
+    labels = {"respondent": "Name", "demographics/gender": "Sex", "absent": "ignored"}
+    out = attach_labels_metadata(submissions, labels)
+    assert out.columns == submissions.columns
+    assert labels_of(out) == {"respondent": "Name", "demographics/gender": "Sex"}
+    assert _plan_chain(out).count("Project") == _plan_chain(submissions).count("Project") + 1

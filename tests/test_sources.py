@@ -101,6 +101,52 @@ def test_full_refresh_overwrites_with_schema_drift(spark, tmp_path):
     assert back.count() == 1
 
 
+def _jobs_in_group(spark, fn):
+    """Run ``fn`` in a fresh job group; return its result and the ids of
+    the Spark jobs it launched."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"sinks-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "sinks read")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_dataset_launches_no_spark_job(spark, tmp_path):
+    """The read declares the footer schema: no schema-inference job."""
+    from duva_spark.sinks import _version_dir, full_refresh, read_dataset
+
+    out = str(tmp_path / "ds")
+    full_refresh(spark.createDataFrame([(1, "a", 2.5)], "`_id` long, name string, score double"), out)
+    back, jobs = _jobs_in_group(spark, lambda: read_dataset(spark, out))
+    assert jobs == []
+    assert back.schema == spark.read.parquet(_version_dir(out, 0)).schema
+    assert [tuple(r) for r in back.collect()] == [(1, "a", 2.5)]
+
+
+def test_read_dataset_discovers_partition_columns(spark, tmp_path):
+    """A partition_by dataset: the footer holds only the data columns and
+    Spark's partition discovery still appends the partition column."""
+    from duva_spark.sinks import _version_dir, full_refresh, read_dataset
+
+    out = str(tmp_path / "parted")
+    rows = [(1, "en", "a"), (2, "fr", "b"), (3, "en", "c")]
+    full_refresh(
+        spark.createDataFrame(rows, "`_id` long, lang string, name string"), out, partition_by=["lang"]
+    )
+    back, jobs = _jobs_in_group(spark, lambda: read_dataset(spark, out))
+    assert jobs == []
+    assert back.columns == ["_id", "name", "lang"]
+    assert back.schema == spark.read.parquet(_version_dir(out, 0)).schema
+    assert sorted(tuple(r) for r in back.collect()) == [(1, "a", "en"), (2, "b", "fr"), (3, "c", "en")]
+    assert {r._id for r in back.filter("lang = 'en'").collect()} == {1, 3}
+
+
 def test_json_source_with_schema(spark, tmp_path):
     """JSON source (SURVEY §2b scans row): explicit schema, no inference."""
     p = tmp_path / "data.jsonl"
