@@ -10,11 +10,15 @@ as one ``(sql_expr, output_name)`` pair per output column and issued as
 ONE ``selectExpr``: one DataFrame call and one plan analysis per
 shaping, however wide the form. A ``withColumn`` per choice cost ~6
 Column calls each (every pyspark Column call is several py4j round
-trips) and re-analysed an ever deeper plan.
+trips) and re-analysed an ever deeper plan; a ``withColumns`` of
+``F.expr`` columns, which lets Spark resolve the names, measured ~4x
+the single ``selectExpr`` (traced ``sync`` benchmark, 4 cores).
 `_Projection` replays ``withColumn`` semantics (an existing column,
 matched by Spark's resolver, is replaced in place; a new one is
 appended) and ``withColumnsRenamed`` semantics (renames applied in map
-order). `split_select_multiple`, `flatten_group_names`,
+order). Names match exactly under ``spark.sql.caseSensitive=true``,
+else by `_fold_case`, the key of Java's ``equalsIgnoreCase`` that the
+resolver uses. `split_select_multiple`, `flatten_group_names`,
 `rename_to_labels` and `apply_export_settings` all build through it;
 the optional review join is the only step outside it.
 
@@ -22,7 +26,16 @@ Quoting rule: every identifier in generated SQL goes through
 `quote_ident` (backticks, an inner backtick doubled), so a dotted or
 slashed question name is never parsed as struct access, and every
 string literal goes through `quote_str` (single quotes, ``\\`` and
-``'`` backslash-escaped).
+``'`` backslash-escaped, ``$`` written ``\\u0024``). Spark's SQL parser
+first replaces ``${...}`` in the text with a conf or environment value
+(``spark.sql.variable.substitute``, on by default) and decodes the
+escape only after that, so a label such as ``How old is ${name}?``
+stays as written. A backticked name has no such escape, and SQL text
+cannot tell apart two columns whose names resolve alike: a frame with
+either is read through positional stand-in names, and output names
+holding ``${`` (a ``${...}`` choice, a label-renamed column) are set
+after the ``selectExpr``; both renames are ``toDF`` calls, which parse
+nothing.
 """
 
 from __future__ import annotations
@@ -38,8 +51,18 @@ def quote_ident(name: str) -> str:
 
 def quote_str(value: str) -> str:
     """``value`` as a SQL string literal under Spark's default (escaping)
-    string-literal parser."""
-    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    string-literal parser, kept from ``${...}`` variable substitution."""
+    escaped = value.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return "'" + escaped + "'"
+
+
+def _fold_case(name: str) -> str:
+    """``name``'s key under Spark's case-insensitive resolver, Java's
+    ``equalsIgnoreCase``: per character the lower case of its upper case,
+    each a one-character mapping as Java's are (Python's ``ß`` → ``SS``
+    is not, so ``ß`` stays; ``İ`` lowers to ``i`` plus a combining dot,
+    of which Java keeps the ``i``)."""
+    return "".join((u if len(u := c.upper()) == 1 else c).lower()[0] for c in name)
 
 
 class _Projection:
@@ -50,14 +73,22 @@ class _Projection:
     def __init__(self, df: DataFrame):
         self._df = df
         self.names = df.columns
-        self._identity = [quote_ident(c) for c in self.names]
-        self.exprs = list(self._identity)
+        self._in_names = list(self.names)
         sensitive = df.sparkSession.conf.get("spark.sql.caseSensitive") == "true"
-        self._key = str if sensitive else str.lower
+        self._key = str if sensitive else _fold_case
         # resolver key → output positions bearing that name
         self._at: dict[str, list[int]] = {}
         for i, c in enumerate(self.names):
             self._at.setdefault(self._key(c), []).append(i)
+        # SQL text cannot name a column holding ``${``, nor one of two
+        # that resolve alike: such a frame is read through stand-ins
+        self._stand_ins = (
+            [f"_c{i}" for i in range(len(self.names))]
+            if len(self._at) < len(self.names) or _unquotable(self.names)
+            else None
+        )
+        self._identity = [quote_ident(c) for c in self._stand_ins or self.names]
+        self.exprs = list(self._identity)
 
     def ref(self, name: str) -> str:
         """An expression over ``df`` for the column currently called
@@ -115,11 +146,24 @@ class _Projection:
 
     def select(self) -> DataFrame:
         """The one ``selectExpr``; ``df`` itself when nothing changed."""
-        items = [
-            e if e == quote_ident(n) else f"{e} AS {quote_ident(n)}"
-            for e, n in zip(self.exprs, self.names)
-        ]
-        return self._df if items == self._identity else self._df.selectExpr(items)
+        if self.exprs == self._identity and self.names == self._in_names:
+            return self._df
+        src = self._df.toDF(*self._stand_ins) if self._stand_ins else self._df
+        if _unquotable(self.names):
+            return src.selectExpr(
+                [f"{e} AS `_o{i}`" for i, e in enumerate(self.exprs)]
+            ).toDF(*self.names)
+        return src.selectExpr(
+            [
+                e if e == quote_ident(n) else f"{e} AS {quote_ident(n)}"
+                for e, n in zip(self.exprs, self.names)
+            ]
+        )
+
+
+def _unquotable(names: list[str]) -> bool:
+    """Whether a name holds ``${``, which SQL text cannot carry."""
+    return any("${" in n for n in names)
 
 
 def flatten_group_names(df: DataFrame, sep: str = "/") -> DataFrame:

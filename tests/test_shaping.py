@@ -171,13 +171,18 @@ def test_show_choice_labels_dotted_question_name(dotted):
 
 # --- production (one projection) == the withColumn-chain fold
 
-ODD_CHOICES = ["water", "health", "edu", "o'k", "naïve"]
+# ``${...}`` is Spark SQL variable-substitution syntax and ordinary XLSForm
+# label syntax: it must reach the output as written, never as a conf or
+# environment value
+ODD_CHOICES = ["water", "health", "edu", "o'k", "naïve", "$5"]
 ODD_LABELS = {
     "water": "Eau d'été",
     "health": "back\\slash",
-    "edu": "tick`mark",
+    "edu": "tick`mark ${env:HOME}",
     "naïve": "наивный \\' mix",
+    "$5": "How old is ${name}?",
 }
+QUESTION_LABELS = {"respondent": "Name", "gender": "Sex", "review_status": "Review", "x": "X?"}
 
 
 @pytest.fixture(scope="module")
@@ -186,13 +191,29 @@ def wide(spark):
     named like a split column (grp/services/water), and a null answer."""
     return spark.createDataFrame(
         [
-            (1, "alice", "water health o'k", "old-1", "f", "a", "b"),
-            (2, "bob", "edu naïve", "old-2", "m", "c", None),
+            (1, "alice", "water health o'k $5", "old-1", "f", "a", "b"),
+            (2, "bob", "edu naïve ${v}", "old-2", "m", "c", None),
             (3, "carol", None, None, "f", None, "d"),
         ],
         "`_id` long, respondent string, `grp/services` string, `grp/services/water` string, "
         "`demographics/gender` string, `g1/x` string, `g2/x` string",
     )
+
+
+def _variant(wide, name: str):
+    """(frame, choices, choice labels, question labels) per variant:
+    ``names-with-${`` puts ``${`` in an input name, a choice and a
+    question label (so in output names too); ``duplicate-name`` carries
+    two distinct ``respondent`` columns."""
+    if name == "names-with-${":
+        return (
+            wide.withColumn("note ${x}", F.lit("n")),
+            [*ODD_CHOICES, "${v}"],
+            {**ODD_LABELS, "${v}": "home ${env:HOME}"},
+            {**QUESTION_LABELS, "gender": "Sex ${who}"},
+        )
+    frame = wide.select("*", F.lit("dup").alias("respondent")) if name == "duplicate-name" else wide
+    return frame, ODD_CHOICES, ODD_LABELS, QUESTION_LABELS
 
 
 def _same_frame(got, want):
@@ -201,6 +222,7 @@ def _same_frame(got, want):
     assert sorted(got.collect(), key=lambda r: r[i]) == sorted(want.collect(), key=lambda r: r[i])
 
 
+@pytest.mark.parametrize("variant", ["plain", "names-with-${", "duplicate-name"])
 @pytest.mark.parametrize(
     "settings",
     [
@@ -214,20 +236,78 @@ def _same_frame(got, want):
     ],
     ids=["binary", "value-labels", "value", "boolean", "no-flatten", "reviews-labels", "no-split"],
 )
-def test_apply_export_settings_equals_fold(spark, wide, settings):
+def test_apply_export_settings_equals_fold(spark, wide, settings, variant):
+    frame, choices, labels, question_labels = _variant(wide, variant)
     reviews = spark.createDataFrame(
         [(1, "approved"), (3, "rejected")], "`_id` long, review_status string"
     )
     kwargs = dict(
-        question_labels={"respondent": "Name", "gender": "Sex", "review_status": "Review", "x": "X?"},
-        select_multiples={"grp/services": ODD_CHOICES},
-        choice_labels={"grp/services": ODD_LABELS},
+        question_labels=question_labels,
+        select_multiples={"grp/services": choices},
+        choice_labels={"grp/services": labels},
         reviews=reviews,
     )
     _same_frame(
-        apply_export_settings(wide, settings, **kwargs),
-        apply_export_settings_fold(wide, settings, **kwargs),
+        apply_export_settings(frame, settings, **kwargs),
+        apply_export_settings_fold(frame, settings, **kwargs),
     )
+
+
+def test_split_keeps_dollar_brace_text_as_written(spark, wide):
+    frame, choices, labels, _ = _variant(wide, "names-with-${")
+    out = split_select_multiple(frame, "grp/services", choices, choice_labels=labels)
+    r = {row._id: row for row in out.collect()}
+    assert r[1]["grp/services/$5"] == "How old is ${name}?"
+    assert r[2]["grp/services/edu"] == "tick`mark ${env:HOME}"
+    assert r[2]["grp/services/${v}"] == "home ${env:HOME}"
+    assert r[1]["note ${x}"] == "n"
+    plain = split_select_multiple(wide, "grp/services", ["${v}"])
+    assert {row._id: row["grp/services/${v}"] for row in plain.collect()} == {1: None, 2: "${v}", 3: None}
+    labelled = rename_to_labels(wide, {"respondent": "Name ${who}"})
+    assert labelled.columns[1] == "Name ${who}"
+
+
+@pytest.mark.parametrize("case_sensitive", ["false", "true"])
+def test_apply_export_settings_equals_fold_under_case_sensitivity(spark, case_sensitive):
+    """``grp/SVC/WATER`` and ``grp/SVC/x`` replace ``grp/SVC/water`` and
+    ``grp/svc/X`` in place only when names resolve case-insensitively;
+    otherwise they are appended."""
+    df = spark.createDataFrame(
+        [(1, "WATER x", "old", "X"), (2, None, "old", None)],
+        "`_id` long, `grp/SVC` string, `grp/SVC/water` string, `grp/svc/X` string",
+    )
+    kwargs = dict(
+        question_labels={"grp/SVC/x": "X?"},
+        select_multiples={"grp/SVC": ["WATER", "x"]},
+    )
+    settings = ExportSettings(binary_select_multiples=False, remove_group_name=False)
+    before = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", case_sensitive)
+    try:
+        got = apply_export_settings(df, settings, **kwargs)
+        _same_frame(got, apply_export_settings_fold(df, settings, **kwargs))
+        want_names = {
+            "false": ["_id", "grp/SVC", "grp/SVC/WATER", "X?"],
+            "true": ["_id", "grp/SVC", "grp/SVC/water", "grp/svc/X", "grp/SVC/WATER", "X?"],
+        }
+        assert got.columns == want_names[case_sensitive]
+    finally:
+        spark.conf.set("spark.sql.caseSensitive", before)
+
+
+def test_fold_case_matches_sparks_resolver(spark):
+    """The case-insensitive key agrees with Spark's own resolver on names
+    whose Python and Java case mappings differ."""
+    from duva_spark.shaping.ops import _fold_case
+
+    resolver = spark._jsparkSession.sessionState().analyzer().resolver()
+    pairs = [
+        ("Water", "WATER"), ("ς", "σ"), ("İ", "i"), ("ı", "I"), ("ß", "ss"), ("ß", "ẞ"),
+        ("ᾀ", "ᾈ"), ("K", "k"), ("ǅ", "ǆ"), ("ﬀ", "FF"), ("ϑ", "θ"), ("ſ", "s"),
+        ("𐐀", "𐐨"), ("Straße", "STRASSE"), ("a", "b"),
+    ]
+    for a, b in pairs:
+        assert (_fold_case(a) == _fold_case(b)) == resolver.apply(a, b), (a, b)
 
 
 def _plan_chain(df) -> list[str]:
