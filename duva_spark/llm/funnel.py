@@ -80,15 +80,7 @@ def funnel_features(
     from duva_spark.llm import minhash, textstats
 
     qual = textstats.gopher_flags(docs, text_col=text_col).select(
-        id_col,
-        # structural subset: the per-language stopword rule is excluded
-        # (it zeroes a multilingual corpus; production gates it per lang)
-        (
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha")
-        ).alias("pass_gopher"),
+        id_col, textstats.structural_pass().alias("pass_gopher")
     )
     rep = textstats.gopher_repetition(
         docs, id_col=id_col, text_col=text_col

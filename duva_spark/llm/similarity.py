@@ -92,6 +92,14 @@ def _cosine6(a, b):
     return s
 
 
+def index_sum_sql(n: int, term: str) -> str:
+    """DuckDB SQL for the sum of ``term`` over the 1-based index ``i`` in
+    1..n, folded in index order: the oracle twin of `_cosine6`'s
+    accumulation, and the one spelling of every oracle dot, norm and
+    squared distance."""
+    return f"list_aggregate(list_transform(range(1, {n + 1}), i -> {term}), 'sum')"
+
+
 def _lengths(vecs):
     """Per-row vector length, -1 for a NULL vector."""
     import numpy as np

@@ -167,6 +167,19 @@ def gopher_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def structural_pass() -> Column:
+    """The language-agnostic STRUCTURAL subset of the Gopher battery over
+    `gopher_flags` output: every rule but the per-language stopword rule
+    (it zeroes a multilingual corpus; production gates it per lang). The
+    funnel's quality stage and the classifiers' distillation label."""
+    return (
+        F.col("pass_word_count")
+        & F.col("pass_mean_len")
+        & F.col("pass_symbol_ratio")
+        & F.col("pass_alpha")
+    )
+
+
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     t = F.col(text_col)
     return df.select(

@@ -15,7 +15,19 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duva_spark.catalog import load_table
-from duva_spark.llm import blocked, dedup, minhash, multimodal, similarity, simhash, textstats
+from duva_spark.llm import (
+    blocked,
+    dedup,
+    evals,
+    hashed_lm,
+    logreg,
+    minhash,
+    multimodal,
+    similarity,
+    simhash,
+    textstats,
+)
+from duva_spark.llm.similarity import index_sum_sql
 from duva_spark.operators.parallel import run_parallel
 from duva_spark.queries import exact_avg, register
 
@@ -168,6 +180,14 @@ _PASS_STRUCT = (
     f" AND ({_N_SYM} * 1.0 / {_NTOK} <= 0.1)"
     f" AND ({_ALPHA} >= 0.8))"
 )
+
+
+def _lab(docs: DataFrame) -> DataFrame:
+    """``(doc_id, text, y)`` with y = the structural pass: the Spark twin
+    of the ``lab`` CTE's label, which the trained classifiers distill."""
+    return textstats.gopher_flags(docs).select(
+        "doc_id", "text", textstats.structural_pass().alias("y")
+    )
 
 
 @register(
@@ -881,14 +901,8 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding similarity
 # ---------------------------------------------------------------------------
 
-_DOT = (
-    "list_aggregate(list_transform(range(1, 65), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), 'sum')"
-)
-_NORM = (
-    "sqrt(list_aggregate(list_transform(range(1, 65), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE)), 'sum'))"
-)
+_DOT = index_sum_sql(64, "CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)")
+_NORM = "sqrt(" + index_sum_sql(64, "CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE)") + ")"
 _COS_QC = (
     _DOT.format(a="qv", b="cv")
     + " / ("
@@ -1001,9 +1015,13 @@ def q_multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _L2 = (
-    "sqrt(list_aggregate(list_transform(range(1, 65), "
-    "i -> (CAST(qv[i] AS DOUBLE) - CAST(cv[i] AS DOUBLE)) * "
-    "(CAST(qv[i] AS DOUBLE) - CAST(cv[i] AS DOUBLE))), 'sum'))"
+    "sqrt("
+    + index_sum_sql(
+        64,
+        "(CAST(qv[i] AS DOUBLE) - CAST(cv[i] AS DOUBLE)) * "
+        "(CAST(qv[i] AS DOUBLE) - CAST(cv[i] AS DOUBLE))",
+    )
+    + ")"
 )
 
 
@@ -1382,10 +1400,7 @@ def _rplsh_code_sql(var: str, dim: int = 64, n_bits: int = 4, seed: int = 0) -> 
     terms = []
     for i in range(n_bits):
         plane = "list_value(" + ", ".join(repr(c) for c in similarity._hyperplane(dim, i, seed)) + ")"
-        dotexpr = (
-            f"list_aggregate(list_transform(range(1, {dim + 1}), "
-            f"i -> CAST({var}[i] AS DOUBLE) * ({plane})[i]), 'sum')"
-        )
+        dotexpr = index_sum_sql(dim, f"CAST({var}[i] AS DOUBLE) * ({plane})[i]")
         terms.append(f"(CASE WHEN {dotexpr} >= 0 THEN 1 ELSE 0 END << {i})")
     return "(" + " | ".join(terms) + ")"
 
@@ -1538,8 +1553,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(pairs.select("id_a", "id_b"))
 
 
-_DOT8 = "list_aggregate(list_transform(range(1, 9), i -> {a}[i] * {b}[i]), 'sum')"
-_NORM8 = "sqrt(list_aggregate(list_transform(range(1, 9), i -> {a}[i] * {a}[i]), 'sum'))"
+_DOT8 = index_sum_sql(8, "{a}[i] * {b}[i]")
+_NORM8 = "sqrt(" + index_sum_sql(8, "{a}[i] * {a}[i]") + ")"
 
 
 @register(
@@ -1657,6 +1672,8 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _KM_K, _KM_ITERS, _KM_DIM, _KM_DP = 8, 3, 64, 6
+# squared distance term between point p.e and centroid c.cen
+_PC_D2 = "(p.e[i] - c.cen[i]) * (p.e[i] - c.cen[i])"
 
 
 def _kmeans_ctes(k: int, iters: int, dim: int, dp: int, train_pred: str | None = None) -> str:
@@ -1680,8 +1697,7 @@ def _kmeans_ctes(k: int, iters: int, dim: int, dp: int, train_pred: str | None =
     for it in range(iters):
         ctes.append(
             f"d{it} AS (SELECT p.vec_id, p.e, c.cluster,"
-            f" list_aggregate(list_transform(range(1, {dim + 1}),"
-            f" i -> (p.e[i] - c.cen[i]) * (p.e[i] - c.cen[i])), 'sum') AS dist"
+            f" {index_sum_sql(dim, _PC_D2)} AS dist"
             f" FROM {src} p CROSS JOIN c{it} c)"
         )
         ctes.append(
@@ -1761,8 +1777,7 @@ _KM_TRAIN_PRED = (
         + _kmeans_ctes(_KM_K, _KM_ITERS, _KM_DIM, _KM_DP, train_pred=_KM_TRAIN_PRED)
         + f""",
     df_f AS (SELECT p.vec_id, p.e, c.cluster,
-                    list_aggregate(list_transform(range(1, {_KM_DIM + 1}),
-                      i -> (p.e[i] - c.cen[i]) * (p.e[i] - c.cen[i])), 'sum') AS dist
+                    {index_sum_sql(_KM_DIM, _PC_D2)} AS dist
              FROM p CROSS JOIN c{_KM_ITERS - 1} c),
     af AS (SELECT vec_id, e, cluster FROM df_f
            QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1953,8 +1968,7 @@ _CLF_W = _clf_weights(64)
     oracle=f"""
     WITH w AS (SELECT [{", ".join(repr(x) for x in _CLF_W)}] AS wv),
     z AS (SELECT label,
-                 list_aggregate(list_transform(range(1, 65),
-                   i -> CAST(embedding[i] AS DOUBLE) * wv[i]), 'sum') AS logit
+                 {index_sum_sql(64, "CAST(embedding[i] AS DOUBLE) * wv[i]")} AS logit
           FROM embeddings CROSS JOIN w)
     SELECT label,
            COUNT(*) AS n,
@@ -2073,8 +2087,7 @@ def q_embed_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH w AS (SELECT [{", ".join(repr(x) for x in _CLF_W)}] AS wv),
     z AS (SELECT label,
-                 1.0 / (1.0 + exp(-list_aggregate(list_transform(range(1, 65),
-                   i -> CAST(embedding[i] AS DOUBLE) * wv[i]), 'sum'))) AS score
+                 1.0 / (1.0 + exp(-{index_sum_sql(64, "CAST(embedding[i] AS DOUBLE) * wv[i]")})) AS score
           FROM embeddings CROSS JOIN w),
     t AS (SELECT unnest([0.3, 0.4, 0.5, 0.6, 0.7]) AS threshold)
     SELECT t.threshold,
@@ -2259,18 +2272,9 @@ def _trunc_topk_sql(d: int) -> str:
     """Brute-force cosine top-5 over the FIRST ``d`` embedding dims —
     the same rank/round/tie contract as q_embed_cosine_topk's oracle,
     with the sums bounded to range(1, d+1)."""
-    dot = (
-        f"list_aggregate(list_transform(range(1, {d + 1}), "
-        "i -> CAST(qv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE)), 'sum')"
-    )
-    nq = (
-        f"sqrt(list_aggregate(list_transform(range(1, {d + 1}), "
-        "i -> CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)), 'sum'))"
-    )
-    nc = (
-        f"sqrt(list_aggregate(list_transform(range(1, {d + 1}), "
-        "i -> CAST(cv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE)), 'sum'))"
-    )
+    dot = index_sum_sql(d, "CAST(qv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE)")
+    nq = f"sqrt({index_sum_sql(d, 'CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)')})"
+    nc = f"sqrt({index_sum_sql(d, 'CAST(cv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE)')})"
     return f"""
       SELECT CAST({d} AS INT) AS dims, query_id, neighbor_id FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -3299,11 +3303,8 @@ def _kcenter_sql(k: int) -> str:
     winner is the arg-max (over the corpus) of the ROUNDED min distance
     to the i-1 already-selected rows, ties to the smallest id — the
     identical round-then-rank contract the Spark operator applies."""
-    l2 = (
-        "sqrt(list_aggregate(list_transform(range(1, 65), "
-        "i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(s.embedding[i] AS DOUBLE)) * "
-        "(CAST(e.embedding[i] AS DOUBLE) - CAST(s.embedding[i] AS DOUBLE))), 'sum'))"
-    )
+    diff = "(CAST(e.embedding[i] AS DOUBLE) - CAST(s.embedding[i] AS DOUBLE))"
+    l2 = f"sqrt({index_sum_sql(64, f'{diff} * {diff}')})"
     ctes = [
         "sel1 AS (SELECT 1 AS sel_rank, vec_id, embedding, 0.0 AS sel_dist "
         "FROM embeddings WHERE vec_id = (SELECT MIN(vec_id) FROM embeddings))"
@@ -3359,6 +3360,9 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _PQ_M, _PQ_KSUB, _PQ_ITERS, _PQ_DIM, _PQ_DP = 4, 8, 2, 64, 6
+# squared L2 of corpus vector e.embedding to bucket centroid c.centroid
+_EC = "(CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])"
+_PQ_D2C = index_sum_sql(_PQ_DIM, f"{_EC} * {_EC}")
 
 
 def _pq_train_chains(base: str, elem: str) -> list[list[str]]:
@@ -3375,10 +3379,7 @@ def _pq_train_chains(base: str, elem: str) -> list[list[str]]:
     chains = []
     for s in range(m):
         off = s * dsub
-        d2 = (
-            f"list_aggregate(list_transform(range(1, {dsub + 1}),"
-            f" i -> (p.e[i] - c.cen[i]) * (p.e[i] - c.cen[i])), 'sum')"
-        )
+        d2 = index_sum_sql(dsub, _PC_D2)
         ctes = []
         ctes.append(
             f"s{s}p AS MATERIALIZED (SELECT vec_id,"
@@ -3428,15 +3429,12 @@ def _pq_subspace_ctes() -> list[str]:
     chains = _pq_train_chains("embeddings", "CAST(embedding[i] AS DOUBLE)")
     ctes = []
     for s in range(m):
-        off = s * dsub
+        qd = f"(CAST(q.embedding[{s * dsub} + i] AS DOUBLE) - c.cen[i])"
         ctes.extend(chains[s])
         ctes.append(
             f"qd{s} AS MATERIALIZED (SELECT q.vec_id AS query_id,"
             f" c.cluster AS code_{s},"
-            f" list_aggregate(list_transform(range(1, {dsub + 1}),"
-            f" i -> (CAST(q.embedding[{off} + i] AS DOUBLE) - c.cen[i])"
-            f" * (CAST(q.embedding[{off} + i] AS DOUBLE) - c.cen[i])), 'sum')"
-            f" AS d2_{s}"
+            f" {index_sum_sql(dsub, f'{qd} * {qd}')} AS d2_{s}"
             f" FROM embeddings q CROSS JOIN s{s}c{iters} c WHERE q.vec_id < 5)"
         )
     return ctes
@@ -3545,11 +3543,8 @@ def _sq8_oracle() -> str:
         " * 255.0 / sps[i], 6) + 0.5))) * sps[i] / 255.0"
         " ELSE mns[i] END"
     )
-    l2 = (
-        f"sqrt(list_aggregate(list_transform(range(1, {dim + 1}),"
-        " i -> (CAST(qv[i] AS DOUBLE) - cv[i])"
-        " * (CAST(qv[i] AS DOUBLE) - cv[i])), 'sum'))"
-    )
+    diff = "(CAST(qv[i] AS DOUBLE) - cv[i])"
+    l2 = f"sqrt({index_sum_sql(dim, f'{diff} * {diff}')})"
     return f"""
     WITH bounds AS MATERIALIZED (
       SELECT i, MIN(CAST(embedding[i] AS DOUBLE)) AS mn,
@@ -3866,11 +3861,6 @@ def _ivfpq_oracle() -> str:
     contract), nprobe=2 query probes, ADC ranking restricted to probed
     buckets, recall vs the verified exact-L2 oracle."""
     m, dp, dim = _PQ_M, _PQ_DP, _PQ_DIM
-    d2c = (
-        f"list_aggregate(list_transform(range(1, {dim + 1}),"
-        f" i -> (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])"
-        f" * (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])), 'sum')"
-    )
     ctes = _pq_subspace_ctes()
     ctes.append(_pq_codes_cte(m))
     ctes.append(
@@ -3884,14 +3874,14 @@ def _ivfpq_oracle() -> str:
         f"assigned AS MATERIALIZED (SELECT vec_id, bucket FROM ("
         f"SELECT e.vec_id, c.bucket,"
         f" ROW_NUMBER() OVER (PARTITION BY e.vec_id"
-        f" ORDER BY ROUND({d2c}, {dp}), c.bucket) AS rn"
+        f" ORDER BY ROUND({_PQ_D2C}, {dp}), c.bucket) AS rn"
         f" FROM embeddings e CROSS JOIN cent c) WHERE rn = 1)"
     )
     ctes.append(
         f"qprobe AS MATERIALIZED (SELECT query_id, bucket FROM ("
         f"SELECT e.vec_id AS query_id, c.bucket,"
         f" ROW_NUMBER() OVER (PARTITION BY e.vec_id"
-        f" ORDER BY ROUND({d2c}, {dp}), c.bucket) AS rn"
+        f" ORDER BY ROUND({_PQ_D2C}, {dp}), c.bucket) AS rn"
         f" FROM embeddings e CROSS JOIN cent c WHERE e.vec_id < 5)"
         f" WHERE rn <= {_IVFPQ_NPROBE})"
     )
@@ -3987,11 +3977,6 @@ def _ivfpq_residual_oracle() -> str:
     probed-bucket ADC ranking, recall vs the verified exact-L2 bf."""
     m, dp, dim, iters = _PQ_M, _PQ_DP, _PQ_DIM, _PQ_ITERS
     dsub = dim // m
-    d2c = (
-        f"list_aggregate(list_transform(range(1, {dim + 1}),"
-        f" i -> (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])"
-        f" * (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])), 'sum')"
-    )
     ctes = [
         f"cent AS MATERIALIZED (SELECT bucket, list(avgv ORDER BY i) AS centroid"
         f" FROM (SELECT label AS bucket, i,"
@@ -4002,7 +3987,7 @@ def _ivfpq_residual_oracle() -> str:
         f"assigned AS MATERIALIZED (SELECT vec_id, bucket FROM ("
         f"SELECT e.vec_id, c.bucket,"
         f" ROW_NUMBER() OVER (PARTITION BY e.vec_id"
-        f" ORDER BY ROUND({d2c}, {dp}), c.bucket) AS rn"
+        f" ORDER BY ROUND({_PQ_D2C}, {dp}), c.bucket) AS rn"
         f" FROM embeddings e CROSS JOIN cent c) WHERE rn = 1)",
         f"resid AS MATERIALIZED (SELECT e.vec_id, a.bucket,"
         f" list_transform(range(1, {dim + 1}),"
@@ -4012,7 +3997,7 @@ def _ivfpq_residual_oracle() -> str:
         f"qprobe AS MATERIALIZED (SELECT query_id, bucket FROM ("
         f"SELECT e.vec_id AS query_id, c.bucket,"
         f" ROW_NUMBER() OVER (PARTITION BY e.vec_id"
-        f" ORDER BY ROUND({d2c}, {dp}), c.bucket) AS rn"
+        f" ORDER BY ROUND({_PQ_D2C}, {dp}), c.bucket) AS rn"
         f" FROM embeddings e CROSS JOIN cent c WHERE e.vec_id < 5)"
         f" WHERE rn <= {_IVFPQ_NPROBE})",
     ]
@@ -4024,8 +4009,7 @@ def _ivfpq_residual_oracle() -> str:
         ctes.append(
             f"qd{s} AS MATERIALIZED (SELECT qp.query_id, qp.bucket,"
             f" c.cluster AS code_{s},"
-            f" list_aggregate(list_transform(range(1, {dsub + 1}),"
-            f" i -> ({qres}) * ({qres})), 'sum') AS d2_{s}"
+            f" {index_sum_sql(dsub, f'({qres}) * ({qres})')} AS d2_{s}"
             f" FROM qprobe qp JOIN embeddings q ON q.vec_id = qp.query_id"
             f" JOIN cent ct ON ct.bucket = qp.bucket"
             f" CROSS JOIN s{s}c{iters} c)"
@@ -4135,10 +4119,14 @@ def _lr_ctes(
     """The shared unrolled gradient-descent CTE chain: the feature CTE
     mirrors _features (tf buckets + bias at -1 + scaled length at -2),
     then per round a 6-dp-rounded margin/probability pass, a metrics
-    row, a mean-gradient CTE, and the 9-dp weight update. Shared by
-    q_lr_quality_distill, q_lr_quality_auc and q_classifier_calibration
-    so the training replay cannot drift — the last p{t} CTE is the
-    final-weight scoring pass the evaluation oracles read.
+    row, a mean-gradient CTE, and the 9-dp weight update. Every LR
+    oracle builds on it, so the training replay cannot drift:
+    q_lr_quality_distill, q_lr_quality_auc, q_lr_threshold_curve,
+    q_lr_auc_cv, q_classifier_calibration, q_calibration_ece,
+    q_lr_data_curve, q_quality_drift_monitor and
+    q_stream_true_quality_filter (q_platt_scaling takes only its
+    ``lab`` CTE). The last p{t} CTE is the final-weight scoring pass
+    the evaluation oracles read; `_lr_holdout` is its Spark twin.
 
     ``prefix``/``train_hi`` parametrize the data-size learning curve
     (q_lr_data_curve): the train split narrows to h in [hold, train_hi)
@@ -4216,6 +4204,36 @@ def _lr_ctes(
     return ctes
 
 
+def _lr_features(lab: DataFrame) -> DataFrame:
+    """The persisted LR feature table of a `_lab` frame."""
+    return logreg.features_for_training(lab, "doc_id", "y", "text", n_buckets=_LR_B)
+
+
+def _lr_train(lab: DataFrame, feat: DataFrame) -> tuple[list, dict[int, float]]:
+    """(learning curve, final weights) of the distilled LR on ``feat``:
+    the Spark twin of `_lr_ctes`' rounds."""
+    return logreg.logreg_train(
+        lab, "doc_id", "y", "text",
+        n_buckets=_LR_B, eta=_LR_ETA, rounds=_LR_ROUNDS, holdout_pct=_LR_HOLD,
+        features=feat,
+    )
+
+
+def _lr_scored(lab: DataFrame, feat: DataFrame) -> tuple[list, DataFrame]:
+    """(learning curve, every doc scored under the final weights): the
+    twin of the chain's last ``p`` CTE."""
+    curve, w = _lr_train(lab, feat)
+    return curve, logreg.logreg_score(
+        lab, "doc_id", "y", "text", w, n_buckets=_LR_B, features=feat
+    )
+
+
+def _lr_holdout(lab: DataFrame, feat: DataFrame) -> tuple[list, DataFrame]:
+    """`_lr_scored` restricted to the holdout (h < _LR_HOLD)."""
+    curve, scored = _lr_scored(lab, feat)
+    return curve, scored.filter(F.col("h") < _LR_HOLD)
+
+
 def _lr_oracle() -> str:
     """The learning curve: the shared GD chain's per-round metric rows
     (round 0 = the zero-weight baseline)."""
@@ -4249,21 +4267,8 @@ def _lr_oracle() -> str:
     ),
 )
 def q_lr_quality_distill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duva_spark.llm import logreg
-
-    docs = load_table(spark, sf_dir, "documents")
-    lab = textstats.gopher_flags(docs).select(
-        "doc_id",
-        "text",
-        (
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha")
-        ).alias("y"),
-    )
     return logreg.logreg_frame(
-        lab,
+        _lab(load_table(spark, sf_dir, "documents")),
         "doc_id",
         "y",
         "text",
@@ -4574,28 +4579,32 @@ def q_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _lr_auc_ctes(p: str = "") -> list[str]:
+    """The grouped tie-averaged Mann-Whitney sums over the holdout of
+    the LR chain whose round CTEs carry prefix ``p``: ``hold{p}`` →
+    per-score counts ``gsc{p}`` → rank offsets ``osc{p}`` → ``ssc{p}``
+    (rank sum s2, np, nn). Counts exact, rank sums in HUGEINT (the
+    decimal(38,0) twin)."""
+    T, hold = _LR_ROUNDS - 1, _LR_HOLD
+    return [
+        f"hold{p} AS (SELECT p, y FROM p{p}{T} WHERE h < {hold})",
+        f"gsc{p} AS (SELECT p, COUNT(*) AS m,"
+        f" SUM(CASE WHEN y THEN 1 ELSE 0 END) AS mp FROM hold{p} GROUP BY p)",
+        f"osc{p} AS (SELECT p, m, mp,"
+        f" SUM(m) OVER (ORDER BY p) - m AS offs FROM gsc{p})",
+        f"ssc{p} AS (SELECT SUM(CAST(mp AS HUGEINT)"
+        f" * (2 * CAST(offs AS HUGEINT) + m + 1)) AS s2,"
+        f" CAST(SUM(mp) AS HUGEINT) AS np,"
+        f" CAST(SUM(m - mp) AS HUGEINT) AS nn FROM osc{p})",
+    ]
+
+
 def _lr_auc_oracle() -> str:
     """Holdout AUC under the final GD weights: the shared LR chain's
     last scoring pass (p{rounds-1}) feeds the grouped tie-averaged
-    Mann-Whitney rank statistic — counts exact, rank sums in HUGEINT
-    (the decimal(38,0) twin), ONE double division rounded at the end."""
-    T, hold = _LR_ROUNDS - 1, _LR_HOLD
-    ctes = _lr_ctes()
-    ctes.append(f"hold AS (SELECT p, y FROM p{T} WHERE h < {hold})")
-    ctes.append(
-        "gsc AS (SELECT p, COUNT(*) AS m,"
-        " SUM(CASE WHEN y THEN 1 ELSE 0 END) AS mp FROM hold GROUP BY p)"
-    )
-    ctes.append(
-        "osc AS (SELECT p, m, mp,"
-        " SUM(m) OVER (ORDER BY p) - m AS offs FROM gsc)"
-    )
-    ctes.append(
-        "ssc AS (SELECT SUM(CAST(mp AS HUGEINT)"
-        " * (2 * CAST(offs AS HUGEINT) + m + 1)) AS s2,"
-        " CAST(SUM(mp) AS HUGEINT) AS np,"
-        " CAST(SUM(m - mp) AS HUGEINT) AS nn FROM osc)"
-    )
+    Mann-Whitney rank statistic, ONE double division rounded at the
+    end."""
+    ctes = _lr_ctes() + _lr_auc_ctes()
     return (
         "WITH " + ",\n    ".join(ctes)
         + """
@@ -4629,29 +4638,8 @@ def _lr_auc_oracle() -> str:
     ),
 )
 def q_lr_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duva_spark.llm import evals, logreg
-
-    docs = load_table(spark, sf_dir, "documents")
-    lab = textstats.gopher_flags(docs).select(
-        "doc_id",
-        "text",
-        (
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha")
-        ).alias("y"),
-    )
-    feat = logreg.features_for_training(lab, "doc_id", "y", "text", n_buckets=_LR_B)
-    _, w = logreg.logreg_train(
-        lab, "doc_id", "y", "text",
-        n_buckets=_LR_B, eta=_LR_ETA, rounds=_LR_ROUNDS, holdout_pct=_LR_HOLD,
-        features=feat,
-    )
-    scored = logreg.logreg_score(
-        lab, "doc_id", "y", "text", w, n_buckets=_LR_B, features=feat
-    )
-    return evals.auc_frame(scored.filter(F.col("h") < _LR_HOLD))
+    lab = _lab(load_table(spark, sf_dir, "documents"))
+    return evals.auc_frame(_lr_holdout(lab, _lr_features(lab))[1])
 
 
 _LR_THRESHOLDS = (0.2, 0.35, 0.5, 0.65, 0.8)
@@ -4725,28 +4713,8 @@ def _lr_threshold_oracle() -> str:
     ),
 )
 def q_lr_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duva_spark.llm import logreg
-
-    docs = load_table(spark, sf_dir, "documents")
-    lab = textstats.gopher_flags(docs).select(
-        "doc_id",
-        "text",
-        (
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha")
-        ).alias("y"),
-    )
-    feat = logreg.features_for_training(lab, "doc_id", "y", "text", n_buckets=_LR_B)
-    _, w = logreg.logreg_train(
-        lab, "doc_id", "y", "text",
-        n_buckets=_LR_B, eta=_LR_ETA, rounds=_LR_ROUNDS, holdout_pct=_LR_HOLD,
-        features=feat,
-    )
-    scored = logreg.logreg_score(
-        lab, "doc_id", "y", "text", w, n_buckets=_LR_B, features=feat
-    ).filter(F.col("h") < _LR_HOLD)
+    lab = _lab(load_table(spark, sf_dir, "documents"))
+    _, scored = _lr_holdout(lab, _lr_features(lab))
     aggs = []
     for i, t in enumerate(_LR_THRESHOLDS):
         aggs.append(
@@ -4870,29 +4838,9 @@ def _lr_auc_cv_oracle() -> str:
     ),
 )
 def q_lr_auc_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duva_spark.llm import evals, logreg
-
-    docs = load_table(spark, sf_dir, "documents")
-    lab = textstats.gopher_flags(docs).select(
-        "doc_id",
-        "text",
-        (
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha")
-        ).alias("y"),
-    )
-    feat = logreg.features_for_training(lab, "doc_id", "y", "text", n_buckets=_LR_B)
-    _, w = logreg.logreg_train(
-        lab, "doc_id", "y", "text",
-        n_buckets=_LR_B, eta=_LR_ETA, rounds=_LR_ROUNDS, holdout_pct=_LR_HOLD,
-        features=feat,
-    )
-    scored = (
-        logreg.logreg_score(lab, "doc_id", "y", "text", w, n_buckets=_LR_B, features=feat)
-        .filter(F.col("h") < _LR_HOLD)
-        .withColumn("fold", (F.col("h") % _LR_CV_FOLDS).cast("long"))
+    lab = _lab(load_table(spark, sf_dir, "documents"))
+    scored = _lr_holdout(lab, _lr_features(lab))[1].withColumn(
+        "fold", (F.col("h") % _LR_CV_FOLDS).cast("long")
     )
     folds = evals.auc_by_group(scored, "fold").localCheckpoint()
     summary = folds.agg(
@@ -4962,17 +4910,49 @@ def _nb_cal_ctes() -> list[str]:
     return ctes
 
 
-def _calibration_oracle() -> str:
-    """10-bin reliability tables for the LR (shared GD chain, final
-    weights) and a count-trained NB on the SAME structural-quality
-    label and hash split; NB posterior p = sigmoid(score_true −
-    score_false) clamped and 6-dp rounded like the LR probability."""
+def _nb_holdout_scores(lab: DataFrame) -> DataFrame:
+    """(doc_id, st, sf): a count-trained NB on the train split, its
+    true/false class scores for every holdout doc of a `_lab` frame —
+    the twin of `_nb_cal_ctes`' tt/ff join."""
+    h100 = minhash.md5_hash60(F.col("doc_id").cast("string")) % 100
+    train = lab.filter(h100 >= _LR_HOLD)
+    test = lab.filter(h100 < _LR_HOLD)
+    lik, stats = hashed_lm.nb_train(train, "y", "text", n_buckets=_NB_CAL_B)
+    sc = hashed_lm.nb_score(test, "doc_id", "text", lik, stats, n_buckets=_NB_CAL_B)
+    tt = sc.filter(F.col("label")).select("doc_id", F.col("score").alias("st"))
+    ff = sc.filter(~F.col("label")).select("doc_id", F.col("score").alias("sf"))
+    return tt.join(ff, "doc_id")
+
+
+def _nb_holdout(lab: DataFrame) -> DataFrame:
+    """(doc_id, p, y): the NB posterior sigmoid(st - sf), clamped and
+    6-dp rounded like the LR probability (the ``nbp`` CTE), with its
+    label."""
+    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(F.col("sf") - F.col("st"))), 6)
+    nbp = _nb_holdout_scores(lab).select(
+        "doc_id",
+        F.least(F.greatest(p, F.lit(logreg.P_CLAMP)), F.lit(1.0 - logreg.P_CLAMP)).alias("p"),
+    )
+    return nbp.join(lab.select("doc_id", "y"), "doc_id")
+
+
+def _calibration_legs(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    """The LR and NB holdout legs (each (p, y, ...)) both calibration
+    audits reduce. The label battery is materialized once: without it
+    the NB leg re-ran the per-word rule battery three more times in the
+    final action (train filter, test filter, label join).
+    ``localCheckpoint`` rather than ``persist``, so the blocks free with
+    the RDD. The two legs are independent until the caller's union."""
+    lab = _lab(load_table(spark, sf_dir, "documents")).localCheckpoint()
+    feat = _lr_features(lab)
+    return run_parallel(spark, [lambda: _lr_holdout(lab, feat)[1], lambda: _nb_holdout(lab)])
+
+
+def _calibration_bins_sql() -> str:
+    """The LR and NB 10-bin reliability rows over the holdout, one
+    UNION ALL body both calibration oracles select from."""
     T, hold = _LR_ROUNDS - 1, _LR_HOLD
-    ctes = _lr_ctes() + _nb_cal_ctes()
-    return (
-        "WITH " + ",\n    ".join(ctes)
-        + f"""
-    SELECT * FROM (
+    return f"""
       SELECT 'lr' AS model, LEAST(CAST(FLOOR(p * 10) AS INT), 9) AS bin,
              CAST(COUNT(*) AS BIGINT) AS n,
              ROUND(CAST(SUM(CAST(FLOOR(p * 1000000 + 0.5) AS HUGEINT)) AS DOUBLE)
@@ -4985,9 +4965,18 @@ def _calibration_oracle() -> str:
              ROUND(CAST(SUM(CAST(FLOOR(p.p * 1000000 + 0.5) AS HUGEINT)) AS DOUBLE)
                    / (CAST(COUNT(*) AS DOUBLE) * 1000000.0), 6) AS mean_p,
              ROUND(AVG(CASE WHEN l.y THEN 1.0 ELSE 0.0 END), 6) AS frac_pos
-      FROM nbp p JOIN lab l ON l.doc_id = p.doc_id GROUP BY bin
-    )
-    """
+      FROM nbp p JOIN lab l ON l.doc_id = p.doc_id GROUP BY bin"""
+
+
+def _calibration_oracle() -> str:
+    """10-bin reliability tables for the LR (shared GD chain, final
+    weights) and a count-trained NB on the SAME structural-quality
+    label and hash split; NB posterior p = sigmoid(score_true −
+    score_false) clamped and 6-dp rounded like the LR probability."""
+    ctes = _lr_ctes() + _nb_cal_ctes()
+    return (
+        "WITH " + ",\n    ".join(ctes)
+        + "\n    SELECT * FROM (" + _calibration_bins_sql() + "\n    )\n    "
     )
 
 
@@ -5011,63 +5000,7 @@ def _calibration_oracle() -> str:
     ),
 )
 def q_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duva_spark.llm import evals, hashed_lm, logreg
-
-    docs = load_table(spark, sf_dir, "documents")
-    # r13 (r12 verdict item 4): materialize the gopher label battery
-    # ONCE — without this the NB leg re-ran the whole rule battery
-    # (per-word rlike over the corpus) three more times in the final
-    # action (train filter, test filter, label join). localCheckpoint
-    # rather than persist so the blocks free with the RDD (r3 ADVICE
-    # pattern); one battery pass at any corpus size instead of four.
-    lab = textstats.gopher_flags(docs).select(
-        "doc_id",
-        "text",
-        (
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha")
-        ).alias("y"),
-    ).localCheckpoint()
-    feat = logreg.features_for_training(lab, "doc_id", "y", "text", n_buckets=_LR_B)
-    from duva_spark.llm.logreg import P_CLAMP
-
-    # the LR and NB legs are independent until the final union
-    def lr_leg():
-        _, w = logreg.logreg_train(
-            lab, "doc_id", "y", "text",
-            n_buckets=_LR_B, eta=_LR_ETA, rounds=_LR_ROUNDS, holdout_pct=_LR_HOLD,
-            features=feat,
-        )
-        return logreg.logreg_score(
-            lab, "doc_id", "y", "text", w, n_buckets=_LR_B, features=feat
-        ).filter(F.col("h") < _LR_HOLD)
-
-    def nb_leg():
-        h100 = hashed_lm.md5_hash60(F.col("doc_id").cast("string")) % 100
-        train = lab.filter(h100 >= _LR_HOLD)
-        test = lab.filter(h100 < _LR_HOLD)
-        lik, stats = hashed_lm.nb_train(train, "y", "text", n_buckets=_NB_CAL_B)
-        sc = hashed_lm.nb_score(test, "doc_id", "text", lik, stats, n_buckets=_NB_CAL_B)
-        tt = sc.filter(F.col("label")).select("doc_id", F.col("score").alias("st"))
-        ff = sc.filter(~F.col("label")).select("doc_id", F.col("score").alias("sf"))
-        nbp = tt.join(ff, "doc_id").select(
-            "doc_id",
-            F.least(
-                F.greatest(
-                    F.round(
-                        F.lit(1.0) / (F.lit(1.0) + F.exp(F.col("sf") - F.col("st"))),
-                        6,
-                    ),
-                    F.lit(P_CLAMP),
-                ),
-                F.lit(1.0 - P_CLAMP),
-            ).alias("p"),
-        )
-        return nbp.join(lab.select("doc_id", "y"), "doc_id")
-
-    lr_scored, nb_scored = run_parallel(spark, [lr_leg, nb_leg])
+    lr_scored, nb_scored = _calibration_legs(spark, sf_dir)
     return evals.calibration_bins(lr_scored, "lr").unionByName(
         evals.calibration_bins(nb_scored, "nb")
     )
@@ -5081,21 +5014,7 @@ def _calibration_ece_oracle() -> str:
     grid, since p is 6-dp-rounded and y is 0/1)."""
     T, hold = _LR_ROUNDS - 1, _LR_HOLD
     ctes = _lr_ctes() + _nb_cal_ctes()
-    cal = f"""cal AS (
-      SELECT 'lr' AS model, LEAST(CAST(FLOOR(p * 10) AS INT), 9) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             ROUND(CAST(SUM(CAST(FLOOR(p * 1000000 + 0.5) AS HUGEINT)) AS DOUBLE)
-                   / (CAST(COUNT(*) AS DOUBLE) * 1000000.0), 6) AS mean_p,
-             ROUND(AVG(CASE WHEN y THEN 1.0 ELSE 0.0 END), 6) AS frac_pos
-      FROM p{T} WHERE h < {hold} GROUP BY bin
-      UNION ALL
-      SELECT 'nb' AS model, LEAST(CAST(FLOOR(p.p * 10) AS INT), 9) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             ROUND(CAST(SUM(CAST(FLOOR(p.p * 1000000 + 0.5) AS HUGEINT)) AS DOUBLE)
-                   / (CAST(COUNT(*) AS DOUBLE) * 1000000.0), 6) AS mean_p,
-             ROUND(AVG(CASE WHEN l.y THEN 1.0 ELSE 0.0 END), 6) AS frac_pos
-      FROM nbp p JOIN lab l ON l.doc_id = p.doc_id GROUP BY bin
-    )"""
+    cal = "cal AS (" + _calibration_bins_sql() + "\n    )"
     br = f"""br AS (
       SELECT 'lr' AS model,
              ROUND(CAST(SUM(CAST(FLOOR((p - CASE WHEN y THEN 1.0 ELSE 0.0 END)
@@ -5147,59 +5066,7 @@ def _calibration_ece_oracle() -> str:
     ),
 )
 def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duva_spark.llm import evals, hashed_lm, logreg
-    from duva_spark.llm.logreg import P_CLAMP
-
-    docs = load_table(spark, sf_dir, "documents")
-    # One materialized gopher label pass instead of four — see
-    # q_classifier_calibration (r12 verdict item 4).
-    lab = textstats.gopher_flags(docs).select(
-        "doc_id",
-        "text",
-        (
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha")
-        ).alias("y"),
-    ).localCheckpoint()
-    feat = logreg.features_for_training(lab, "doc_id", "y", "text", n_buckets=_LR_B)
-
-    # the LR GD chain and the NB counting chain are independent until
-    # the final union
-    def lr_leg():
-        _, w = logreg.logreg_train(
-            lab, "doc_id", "y", "text",
-            n_buckets=_LR_B, eta=_LR_ETA, rounds=_LR_ROUNDS, holdout_pct=_LR_HOLD,
-            features=feat,
-        )
-        return logreg.logreg_score(
-            lab, "doc_id", "y", "text", w, n_buckets=_LR_B, features=feat
-        ).filter(F.col("h") < _LR_HOLD)
-
-    def nb_leg():
-        h100 = hashed_lm.md5_hash60(F.col("doc_id").cast("string")) % 100
-        train = lab.filter(h100 >= _LR_HOLD)
-        test = lab.filter(h100 < _LR_HOLD)
-        lik, stats = hashed_lm.nb_train(train, "y", "text", n_buckets=_NB_CAL_B)
-        sc = hashed_lm.nb_score(test, "doc_id", "text", lik, stats, n_buckets=_NB_CAL_B)
-        tt = sc.filter(F.col("label")).select("doc_id", F.col("score").alias("st"))
-        ff = sc.filter(~F.col("label")).select("doc_id", F.col("score").alias("sf"))
-        nbp = tt.join(ff, "doc_id").select(
-            "doc_id",
-            F.least(
-                F.greatest(
-                    F.round(
-                        F.lit(1.0) / (F.lit(1.0) + F.exp(F.col("sf") - F.col("st"))), 6
-                    ),
-                    F.lit(P_CLAMP),
-                ),
-                F.lit(1.0 - P_CLAMP),
-            ).alias("p"),
-        )
-        return nbp.join(lab.select("doc_id", "y"), "doc_id")
-
-    lr_scored, nb_scored = run_parallel(spark, [lr_leg, nb_leg])
+    lr_scored, nb_scored = _calibration_legs(spark, sf_dir)
     return evals.calibration_summary(lr_scored, "lr").unionByName(
         evals.calibration_summary(nb_scored, "nb")
     )
@@ -5284,8 +5151,6 @@ def _spearman_oracle() -> str:
     ),
 )
 def q_quality_signal_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duva_spark.llm import evals
-
     docs = load_table(spark, sf_dir, "documents")
     ws = F.split("text", " ")
     n = F.size(ws)
@@ -5361,8 +5226,6 @@ def _domain_divergence_oracle() -> str:
     ),
 )
 def q_domain_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duva_spark.llm import hashed_lm
-
     b = _DIV_B
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -5800,28 +5663,11 @@ def _platt_oracle() -> str:
     ),
 )
 def q_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duva_spark.llm import hashed_lm
     from duva_spark.llm.hashed_lm import round_half_up
 
-    docs = load_table(spark, sf_dir, "documents")
-    lab = textstats.gopher_flags(docs).select(
-        "doc_id",
-        "text",
-        (
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha")
-        ).alias("y"),
-    )
-    h100 = hashed_lm.md5_hash60(F.col("doc_id").cast("string")) % 100
-    train = lab.filter(h100 >= _LR_HOLD)
-    test = lab.filter(h100 < _LR_HOLD)
-    lik, stats = hashed_lm.nb_train(train, "y", "text", n_buckets=_NB_CAL_B)
-    sc = hashed_lm.nb_score(test, "doc_id", "text", lik, stats, n_buckets=_NB_CAL_B)
-    tt = sc.filter(F.col("label")).select("doc_id", F.col("score").alias("st"))
-    ff = sc.filter(~F.col("label")).select("doc_id", F.col("score").alias("sf"))
-    plz = tt.join(ff, "doc_id").select(
+    lab = _lab(load_table(spark, sf_dir, "documents"))
+    h100 = minhash.md5_hash60(F.col("doc_id").cast("string")) % 100
+    plz = _nb_holdout_scores(lab).select(
         "doc_id", F.round(F.col("st") - F.col("sf"), 6).alias("z")
     )
     pl0 = (
@@ -5961,21 +5807,7 @@ def _lr_data_curve_oracle() -> str:
     for i, (frac, hi) in enumerate(_LR_CURVE):
         p = f"s{i}_"
         ctes += _lr_ctes(prefix=p, train_hi=hi, include_base=(i == 0))
-        ctes.append(f"hold{p} AS (SELECT p, y FROM p{p}{T} WHERE h < {hold})")
-        ctes.append(
-            f"gsc{p} AS (SELECT p, COUNT(*) AS m,"
-            f" SUM(CASE WHEN y THEN 1 ELSE 0 END) AS mp FROM hold{p} GROUP BY p)"
-        )
-        ctes.append(
-            f"osc{p} AS (SELECT p, m, mp,"
-            f" SUM(m) OVER (ORDER BY p) - m AS offs FROM gsc{p})"
-        )
-        ctes.append(
-            f"ssc{p} AS (SELECT SUM(CAST(mp AS HUGEINT)"
-            f" * (2 * CAST(offs AS HUGEINT) + m + 1)) AS s2,"
-            f" CAST(SUM(mp) AS HUGEINT) AS np,"
-            f" CAST(SUM(m - mp) AS HUGEINT) AS nn FROM osc{p})"
-        )
+        ctes += _lr_auc_ctes(p)
         selects.append(
             f"""SELECT CAST({frac} AS DOUBLE) AS train_frac,
         (SELECT CAST(COUNT(*) AS BIGINT) FROM lab
@@ -6010,37 +5842,15 @@ def _lr_data_curve_oracle() -> str:
     ),
 )
 def q_lr_data_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duva_spark.llm import evals, logreg
-
-    docs = load_table(spark, sf_dir, "documents")
-    lab = textstats.gopher_flags(docs).select(
-        "doc_id",
-        "text",
-        (
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha")
-        ).alias("y"),
-    )
-    feat = logreg.features_for_training(lab, "doc_id", "y", "text", n_buckets=_LR_B)
-    from duva_spark.llm import hashed_lm
-
-    h100 = hashed_lm.md5_hash60(F.col("doc_id").cast("string")) % 100
+    lab = _lab(load_table(spark, sf_dir, "documents"))
+    feat = _lr_features(lab)
+    h100 = minhash.md5_hash60(F.col("doc_id").cast("string")) % 100
 
     # the budget chains are independent: each trains on its own hash
     # window of the shared feature table
     def run_budget(frac, hi):
-        sub = feat.filter(F.col("h") < hi)
-        curve, wts = logreg.logreg_train(
-            lab, "doc_id", "y", "text",
-            n_buckets=_LR_B, eta=_LR_ETA, rounds=_LR_ROUNDS,
-            holdout_pct=_LR_HOLD, features=sub,
-        )
+        curve, scored = _lr_holdout(lab, feat.filter(F.col("h") < hi))
         n_train = lab.filter((h100 >= _LR_HOLD) & (h100 < hi)).count()
-        scored = logreg.logreg_score(
-            lab, "doc_id", "y", "text", wts, n_buckets=_LR_B, features=sub
-        ).filter(F.col("h") < _LR_HOLD)
         auc = evals.auc_frame(scored).collect()[0]["auc"]
         return (float(frac), n_train, float(curve[-1][2]), auc)
 
@@ -6077,8 +5887,7 @@ def _ivf_trained_oracle() -> str:
     return f"""
     WITH {km},
     df_f AS (SELECT p.vec_id, p.e, c.cluster,
-                    list_aggregate(list_transform(range(1, {dim + 1}),
-                      i -> (p.e[i] - c.cen[i]) * (p.e[i] - c.cen[i])), 'sum') AS dist
+                    {index_sum_sql(dim, _PC_D2)} AS dist
              FROM p CROSS JOIN c{iters - 1} c),
     af AS (SELECT vec_id, e, cluster FROM df_f
            QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -6550,10 +6359,11 @@ def q_dedup_cluster_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _cms_oracle() -> str:
+def _cms_ctes() -> list[str]:
     """SQL mirror of llm/cms.py: same md5 base hash, same affine
     constants (inlined from minhash.hash_params), same D×W sketch as a
-    (row, bucket, COUNT(*)) table, MIN across rows per probed word."""
+    (row, bucket, COUNT(*)) table ``sk``, the exact heavy hitters
+    (> n/32) ``hh`` and their MIN-across-rows estimates ``est``."""
     from duva_spark.llm.cms import CMS_D, CMS_W
 
     params = minhash.hash_params(CMS_D)
@@ -6567,31 +6377,43 @@ def _cms_oracle() -> str:
         f" AS bucket FROM hh"
         for i, (a, b) in enumerate(params)
     )
-    return f"""
-    WITH w AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
-    t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM w),
-    hh AS (
+    return [
+        "w AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents)",
+        "t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM w)",
+        """hh AS (
       SELECT word, CAST(COUNT(*) AS BIGINT) AS exact_cnt
       FROM w, t
       GROUP BY word
       HAVING COUNT(*) > MAX(n) / 32.0
-    ),
-    sk AS (
+    )""",
+        f"""sk AS (
       SELECT row, z % 2147483647 % {CMS_W} AS bucket, CAST(COUNT(*) AS BIGINT) AS c
       FROM ({rows})
       GROUP BY row, bucket
-    ),
-    est AS (
+    )""",
+        f"""est AS (
       SELECT p.word, CAST(MIN(sk.c) AS BIGINT) AS cms_est
       FROM ({probes}) p
       JOIN sk ON sk.row = p.row AND sk.bucket = p.bucket
       GROUP BY p.word
-    )
+    )""",
+    ]
+
+
+def _cms_oracle() -> str:
+    """The shared sketch CTEs, each heavy hitter's overestimate and the
+    3N/W bound check."""
+    from duva_spark.llm.cms import CMS_W
+
+    return (
+        "\n    WITH " + ",\n    ".join(_cms_ctes())
+        + f"""
     SELECT hh.word AS word, hh.exact_cnt AS exact_cnt, est.cms_est AS cms_est,
            est.cms_est - hh.exact_cnt AS overestimate,
            (est.cms_est - hh.exact_cnt) * {CMS_W} <= 3 * t.n AS within_3n_w
     FROM hh JOIN est USING (word) CROSS JOIN t
     """
+    )
 
 
 @register(

@@ -15,8 +15,17 @@ from pyspark.sql import functions as F
 
 from duva_spark.catalog import load_table
 from duva_spark.llm import dedup, minhash, textstats
+from duva_spark.llm.similarity import index_sum_sql
 from duva_spark.queries import exact_avg, exact_avg_sql, register
-from duva_spark.queries.llm_q import _LANG_PRED, _NTOK, _QUALITY, _sql_in_list
+from duva_spark.queries.llm_q import (
+    _LANG_PRED,
+    _NTOK,
+    _QUALITY,
+    _lab,
+    _lr_features,
+    _lr_scored,
+    _sql_in_list,
+)
 
 # ---------------------------------------------------------------------------
 # Deterministic hash sampling
@@ -287,8 +296,7 @@ _EMB_D = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
     SELECT vec_id,
            qv[1]  AS q_first,
            qv[64] AS q_last,
-           ROUND(list_aggregate(list_transform(range(1, 65),
-                     i -> ABS(qv[i] * sc + mn - v[i])), 'sum') / 64, 6) AS mae
+           ROUND({index_sum_sql(64, "ABS(qv[i] * sc + mn - v[i])")} / 64, 6) AS mae
     FROM q
     """,
     description=(
@@ -1910,29 +1918,8 @@ def _quality_drift_oracle() -> str:
 def q_quality_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from duva_spark.llm import logreg
-    from duva_spark.queries.llm_q import _LR_B, _LR_ETA, _LR_HOLD, _LR_ROUNDS
-
-    docs = load_table(spark, sf_dir, "documents")
-    lab = textstats.gopher_flags(docs).select(
-        "doc_id",
-        "text",
-        (
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha")
-        ).alias("y"),
-    )
-    feat = logreg.features_for_training(lab, "doc_id", "y", "text", n_buckets=_LR_B)
-    _, w = logreg.logreg_train(
-        lab, "doc_id", "y", "text",
-        n_buckets=_LR_B, eta=_LR_ETA, rounds=_LR_ROUNDS, holdout_pct=_LR_HOLD,
-        features=feat,
-    )
-    scored = logreg.logreg_score(
-        lab, "doc_id", "y", "text", w, n_buckets=_LR_B, features=feat
-    )
+    lab = _lab(load_table(spark, sf_dir, "documents"))
+    _, scored = _lr_scored(lab, _lr_features(lab))
     sb = scored.select(
         F.least(F.floor(F.col("p") * 10).cast("int"), F.lit(9)).alias("bin"),
         F.when(F.col("_id") % 2 == 0, 1).otherwise(0).alias("in_a"),
@@ -3810,15 +3797,7 @@ def q_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.md5("text").alias("ch"),
         F.col("n_words").alias("n"),
-        F.when(
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha"),
-            1.0,
-        )
-        .otherwise(0.0)
-        .alias("q"),
+        F.when(textstats.structural_pass(), 1.0).otherwise(0.0).alias("q"),
     )
     lc = b.groupBy("source", "lang").agg(F.count("*").alias("c"))
     w = Window.partitionBy("source").orderBy(F.desc("c"), F.asc("lang"))

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duva_spark.catalog import load_table
-from duva_spark.queries import money_cents, register
+from duva_spark.queries import REGISTRY, llm_q, money_cents, register
 from duva_spark.streaming import windows
 
 _EPOCH = "CAST(floor(epoch({x})) AS BIGINT)"
@@ -373,15 +373,13 @@ def q_stream_true_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TRUE streaming incremental fuzzy dedup (the production ingest pipeline)
 # ---------------------------------------------------------------------------
 
-from duva_spark.queries import REGISTRY as _REG  # noqa: E402 — llm_q loads first
-
 
 @register(
     "q_stream_true_incremental_dedup",
     # identical semantics to the batch operator by construction — reuse
     # its verified oracle text verbatim (the q_ann_recall composition
     # pattern): all-pairs LSH, keep exactly the cross-split pairs
-    oracle=None,  # bound right below, after llm_q's registration resolves
+    oracle=REGISTRY["q_incremental_dedup"].oracle,
     description=(
         "TRUE streaming incremental fuzzy dedup under the value-hash "
         "gate — the composition a production ingest pipeline runs: the "
@@ -461,27 +459,42 @@ def q_stream_true_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     return read_dataset(spark, sink).select("new_id", "corpus_id", "jaccard")
 
 
-# Bind the reused oracle now that llm_q's registry entry exists (the
-# top-of-module `from duva_spark.queries.llm_q import ...` below makes
-# the ordering explicit rather than relying on load_all's import order).
-import dataclasses as _dc  # noqa: E402
-
-from duva_spark.queries import llm_q as _llm_q  # noqa: E402, F401 — registers q_incremental_dedup
-
-_REG["q_stream_true_incremental_dedup"] = _dc.replace(
-    _REG["q_stream_true_incremental_dedup"],
-    oracle=_REG["q_incremental_dedup"].oracle,
-)
-
-
 # ---------------------------------------------------------------------------
 # TRUE streaming model-in-the-loop quality filter
 # ---------------------------------------------------------------------------
 
 
+def _quality_stream_oracle() -> str:
+    """The shared unrolled-GD chain's final scoring pass, thresholded
+    and censused per source — the batch twin the streaming filter must
+    equal value-for-value."""
+    t = llm_q._LR_ROUNDS - 1
+    ctes = llm_q._lr_ctes()
+    ctes.append(f"kept AS (SELECT doc_id, p FROM p{t} WHERE p >= 0.5)")
+    ctes.append(
+        "tot AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_total"
+        " FROM documents GROUP BY source)"
+    )
+    ctes.append(
+        "ks AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_kept,"
+        " ROUND(CAST(SUM(CAST(FLOOR(k.p * 1e6 + 0.5) AS HUGEINT)) AS DOUBLE)"
+        " / (CAST(COUNT(*) AS DOUBLE) * 1e6), 6) AS mean_p_kept"
+        " FROM kept k JOIN documents d USING (doc_id) GROUP BY d.source)"
+    )
+    return (
+        "WITH " + ",\n    ".join(ctes)
+        + """
+    SELECT tot.source, tot.n_total, COALESCE(ks.n_kept, 0) AS n_kept,
+           ROUND(COALESCE(ks.n_kept, 0) * 1.0 / tot.n_total, 6) AS keep_rate,
+           ks.mean_p_kept
+    FROM tot LEFT JOIN ks USING (source)
+    """
+    )
+
+
 @register(
     "q_stream_true_quality_filter",
-    oracle=None,  # bound below from llm_q's shared GD chain
+    oracle=_quality_stream_oracle(),
     description=(
         "TRUE streaming quality filter with a trained model in the "
         "loop — the online half of the FineWeb/DCLM recipe: the LR "
@@ -512,28 +525,13 @@ def q_stream_true_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from duva_spark.llm import logreg, textstats
-    from duva_spark.queries.llm_q import _LR_B, _LR_ETA, _LR_HOLD, _LR_ROUNDS
+    from duva_spark.llm import logreg
     from duva_spark.sinks import merge_upsert, read_dataset
     from duva_spark.streaming.jobs import read_documents_stream
 
     docs = load_table(spark, sf_dir, "documents")
-    lab = textstats.gopher_flags(docs).select(
-        "doc_id",
-        "text",
-        (
-            F.col("pass_word_count")
-            & F.col("pass_mean_len")
-            & F.col("pass_symbol_ratio")
-            & F.col("pass_alpha")
-        ).alias("y"),
-    )
-    feat = logreg.features_for_training(lab, "doc_id", "y", "text", n_buckets=_LR_B)
-    _, w = logreg.logreg_train(
-        lab, "doc_id", "y", "text",
-        n_buckets=_LR_B, eta=_LR_ETA, rounds=_LR_ROUNDS, holdout_pct=_LR_HOLD,
-        features=feat,
-    )
+    lab = llm_q._lab(docs)
+    _, w = llm_q._lr_train(lab, llm_q._lr_features(lab))
 
     stream = read_documents_stream(spark, sf_dir)
     suffix = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
@@ -552,7 +550,7 @@ def q_stream_true_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def write_batch(bdf: DataFrame, epoch_id: int) -> None:
         blab = bdf.select("doc_id", "source", "text", F.lit(False).alias("y"))
-        scored = logreg.logreg_score(blab, "doc_id", "y", "text", w, n_buckets=_LR_B)
+        scored = logreg.logreg_score(blab, "doc_id", "y", "text", w, n_buckets=llm_q._LR_B)
         kept = (
             scored.filter(F.col("p") >= 0.5)
             .select(F.col("_id").alias("doc_id"), "p")
@@ -602,41 +600,6 @@ def q_stream_true_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("keep_rate"),
         "mean_p_kept",
     )
-
-
-def _quality_stream_oracle() -> str:
-    """The shared unrolled-GD chain's final scoring pass, thresholded
-    and censused per source — the batch twin the streaming filter must
-    equal value-for-value."""
-    from duva_spark.queries.llm_q import _LR_ROUNDS, _lr_ctes
-
-    t = _LR_ROUNDS - 1
-    ctes = _lr_ctes()
-    ctes.append(f"kept AS (SELECT doc_id, p FROM p{t} WHERE p >= 0.5)")
-    ctes.append(
-        "tot AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_total"
-        " FROM documents GROUP BY source)"
-    )
-    ctes.append(
-        "ks AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_kept,"
-        " ROUND(CAST(SUM(CAST(FLOOR(k.p * 1e6 + 0.5) AS HUGEINT)) AS DOUBLE)"
-        " / (CAST(COUNT(*) AS DOUBLE) * 1e6), 6) AS mean_p_kept"
-        " FROM kept k JOIN documents d USING (doc_id) GROUP BY d.source)"
-    )
-    return (
-        "WITH " + ",\n    ".join(ctes)
-        + """
-    SELECT tot.source, tot.n_total, COALESCE(ks.n_kept, 0) AS n_kept,
-           ROUND(COALESCE(ks.n_kept, 0) * 1.0 / tot.n_total, 6) AS keep_rate,
-           ks.mean_p_kept
-    FROM tot LEFT JOIN ks USING (source)
-    """
-    )
-
-
-_REG["q_stream_true_quality_filter"] = _dc.replace(
-    _REG["q_stream_true_quality_filter"], oracle=_quality_stream_oracle()
-)
 
 
 # ---------------------------------------------------------------------------
@@ -733,60 +696,29 @@ def q_stream_true_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_cms_oracle() -> str:
-    """DuckDB twin: the batch D×W sketch (same md5 base hash, same
-    affine constants as llm/cms.py), the heavy-hitter point-query audit
-    over it, and the register-identity leg. The Spark side compares the
-    STREAM-built sketch bucket-by-bucket against the batch sketch; the
-    oracle's identity leg compares the batch sketch against itself — so
-    any stream/batch divergence shows up as a nonzero
+    """DuckDB twin: the batch D×W sketch and heavy-hitter point queries
+    of q_cms_frequency_audit plus a register-identity leg. The Spark side
+    compares the STREAM-built sketch bucket-by-bucket against the batch
+    sketch; the oracle's identity leg compares the batch sketch against
+    itself — so any stream/batch divergence shows up as a nonzero
     n_bucket_mismatch on the Spark side and fails the value-hash gate.
     """
-    from duva_spark.llm import minhash
-    from duva_spark.llm.cms import CMS_D, CMS_W
-
-    params = minhash.hash_params(CMS_D)
-    bh = "CAST('0x' || substr(md5(word), 1, 15) AS BIGINT) % 2147483647"
-    rows = " UNION ALL ".join(
-        f"SELECT ({bh}) * {a} + {b} AS z, {i} AS row FROM w"
-        for i, (a, b) in enumerate(params)
-    )
-    probes = " UNION ALL ".join(
-        f"SELECT word, {i} AS row, (({bh}) * {a} + {b}) % 2147483647 % {CMS_W}"
-        f" AS bucket FROM hh"
-        for i, (a, b) in enumerate(params)
-    )
-    return f"""
-    WITH w AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
-    t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM w),
-    hh AS (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS exact_cnt
-      FROM w, t
-      GROUP BY word
-      HAVING COUNT(*) > MAX(n) / 32.0
-    ),
-    sk AS (
-      SELECT row, z % 2147483647 % {CMS_W} AS bucket, CAST(COUNT(*) AS BIGINT) AS c
-      FROM ({rows})
-      GROUP BY row, bucket
-    ),
-    ident AS (
+    ident = """ident AS (
       SELECT CAST(SUM(CASE WHEN a.c IS DISTINCT FROM b.c THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_bucket_mismatch
       FROM sk a FULL OUTER JOIN sk b
         ON a.row = b.row AND a.bucket = b.bucket
-    ),
-    est AS (
-      SELECT p.word, CAST(MIN(sk.c) AS BIGINT) AS cms_est
-      FROM ({probes}) p
-      JOIN sk ON sk.row = p.row AND sk.bucket = p.bucket
-      GROUP BY p.word
-    )
+    )"""
+    return (
+        "\n    WITH " + ",\n    ".join([*llm_q._cms_ctes(), ident])
+        + """
     SELECT hh.word AS word, hh.exact_cnt AS exact_cnt, est.cms_est AS cms_est,
            est.cms_est - hh.exact_cnt AS overestimate,
            ident.n_bucket_mismatch AS n_bucket_mismatch,
            ident.n_bucket_mismatch = 0 AS sketch_identical
     FROM hh JOIN est USING (word) CROSS JOIN ident
     """
+    )
 
 
 @register(

@@ -15,8 +15,10 @@ trips) and re-analysed an ever deeper plan; a ``withColumns`` of
 the single ``selectExpr`` (traced ``sync`` benchmark, 4 cores).
 `_Projection` replays ``withColumn`` semantics (an existing column,
 matched by Spark's resolver, is replaced in place; a new one is
-appended) and ``withColumnsRenamed`` semantics (renames applied in map
-order). Names match exactly under ``spark.sql.caseSensitive=true``,
+appended). A rename (group flattening, labels) is positional, one step
+over the pre-rename names, and never gives two output columns one
+name: a column whose target another output column resolves to keeps
+its name. Names match exactly under ``spark.sql.caseSensitive=true``,
 else by `_fold_case`, the key of Java's ``equalsIgnoreCase`` that the
 resolver uses. `split_select_multiple`, `flatten_group_names`,
 `rename_to_labels` and `apply_export_settings` all build through it;
@@ -66,8 +68,8 @@ def _fold_case(name: str) -> str:
 
 
 class _Projection:
-    """The output of a chain of ``withColumn``/``withColumnsRenamed``
-    steps over ``df``, kept as one SQL expression over ``df``'s own
+    """The output of a chain of ``withColumn`` steps and positional renames
+    over ``df``, kept as one SQL expression over ``df``'s own
     columns per output column and issued as a single ``selectExpr``."""
 
     def __init__(self, df: DataFrame):
@@ -76,10 +78,7 @@ class _Projection:
         self._in_names = list(self.names)
         sensitive = df.sparkSession.conf.get("spark.sql.caseSensitive") == "true"
         self._key = str if sensitive else _fold_case
-        # resolver key → output positions bearing that name
-        self._at: dict[str, list[int]] = {}
-        for i, c in enumerate(self.names):
-            self._at.setdefault(self._key(c), []).append(i)
+        self._reindex()
         # SQL text cannot name a column holding ``${``, nor one of two
         # that resolve alike: such a frame is read through stand-ins
         self._stand_ins = (
@@ -111,15 +110,35 @@ class _Projection:
             self.exprs.append(expr)
             self.names.append(name)
 
-    def rename(self, mapping: dict[str, str]) -> None:
-        """``withColumnsRenamed(mapping)``: each pair renames every column
-        its key matches, in order, so a later key sees earlier renames."""
-        for old, new in mapping.items():
-            hits = self._at.pop(self._key(old), [])
-            for i in hits:
-                self.names[i] = new
-            if hits:
-                self._at.setdefault(self._key(new), []).extend(hits)
+    def rename(self, target_of) -> None:
+        """Rename every output column to ``target_of(name)`` in one step
+        over the pre-rename names, so renames never cascade. A column
+        whose target key is held by another output column keeps its
+        pre-rename name: columns that keep their names hold their keys
+        first, then renamed columns in order, until no target is
+        contested."""
+        old = self.names
+        targets = [target_of(c) for c in old]
+        moving = {i for i, (c, t) in enumerate(zip(old, targets)) if t != c}
+        while True:
+            taken = {self._key(c) for i, c in enumerate(old) if i not in moving}
+            kept = set()
+            for i in sorted(moving):
+                key = self._key(targets[i])
+                if key in taken:
+                    kept.add(i)
+                taken.add(key)
+            if not kept:
+                break
+            moving -= kept
+        self.names = [targets[i] if i in moving else c for i, c in enumerate(old)]
+        self._reindex()
+
+    def _reindex(self) -> None:
+        # resolver key → output positions bearing that name
+        self._at: dict[str, list[int]] = {}
+        for i, c in enumerate(self.names):
+            self._at.setdefault(self._key(c), []).append(i)
 
     def split(
         self,
@@ -170,24 +189,13 @@ def flatten_group_names(df: DataFrame, sep: str = "/") -> DataFrame:
     """remove_group_name=True: strip XLSForm group prefixes
     (``demographics/gender`` → ``gender``; app/schemas/configuration.py:9).
 
-    On collision (two groups with a same-named child) the prefix is kept
-    for the later duplicates so the result stays unambiguous.
+    A column whose short name another output column already resolves to
+    (a plain column of that name, or an earlier group's child) keeps its
+    qualified name, so the result stays unambiguous.
     """
     proj = _Projection(df)
-    proj.rename(_flatten_mapping(proj.names, sep))
+    proj.rename(lambda c: c.rsplit(sep, 1)[-1])
     return proj.select()
-
-
-def _flatten_mapping(columns: list[str], sep: str) -> dict[str, str]:
-    seen: set[str] = set()
-    mapping: dict[str, str] = {}
-    for c in columns:
-        short = c.rsplit(sep, 1)[-1]
-        if short in seen:
-            short = c  # keep qualified name on collision
-        seen.add(short)
-        mapping[c] = short
-    return mapping
 
 
 def unflatten_groups(df: DataFrame, sep: str = "/") -> DataFrame:
@@ -214,14 +222,11 @@ def unflatten_groups(df: DataFrame, sep: str = "/") -> DataFrame:
 def rename_to_labels(df: DataFrame, labels: dict[str, str]) -> DataFrame:
     """include_labels_only=True: replace column names with question labels
     entirely (app/schemas/configuration.py:8; release note v0.0.5
-    "Include question labels as headers")."""
+    "Include question labels as headers"). A column whose label another
+    output column already resolves to keeps its name."""
     proj = _Projection(df)
-    proj.rename(_label_mapping(proj.names, labels))
+    proj.rename(lambda c: labels.get(c, c))
     return proj.select()
-
-
-def _label_mapping(columns: list[str], labels: dict[str, str]) -> dict[str, str]:
-    return {c: labels[c] for c in columns if c in labels}
 
 
 def split_select_multiple(
@@ -315,13 +320,13 @@ def apply_export_settings(
                 "/",
             )
     if settings.remove_group_name:
-        proj.rename(_flatten_mapping(proj.names, "/"))
+        proj.rename(lambda c: c.rsplit("/", 1)[-1])
     labels = question_labels if settings.include_labels_only else None
     if settings.include_reviews and reviews is not None:
         out = join_reviews(proj.select(), reviews)
         return rename_to_labels(out, labels) if labels else out
     if labels:
-        proj.rename(_label_mapping(proj.names, labels))
+        proj.rename(lambda c: labels.get(c, c))
     return proj.select()
 
 

@@ -82,6 +82,23 @@ def _http_json(url: str) -> tuple[int, dict]:
     return status, json.loads(body) if body else {}
 
 
+def _strict(parse):
+    """``parse`` (int or float) without PEP 515 digit separators: Python
+    reads ``1_000`` as 1000, but a CSV reader (Spark's, pandas') reads it
+    as text, so the value raises ``ValueError`` like any non-number."""
+
+    def parse_strict(v: str):
+        if "_" in v:
+            raise ValueError(f"not a number: {v!r}")
+        return parse(v)
+
+    return parse_strict
+
+
+# the one number parse both inference and row conversion use
+_PARSERS = {LongType: _strict(int), DoubleType: _strict(float)}
+
+
 def _infer_type(values: list[str]):
     """duva's 3-type universe (S5): every non-null sample parses as int →
     BIGINT; as float → DOUBLE; else STRING. All-null columns are STRING
@@ -89,25 +106,20 @@ def _infer_type(values: list[str]):
     non_null = [v for v in values if v.lower() not in NULL_TOKENS]
     if not non_null:
         return StringType()
-    try:
-        for v in non_null:
-            int(v)
-        return LongType()
-    except ValueError:
-        pass
-    try:
-        for v in non_null:
-            float(v)
-        return DoubleType()
-    except ValueError:
-        return StringType()
+    for dtype, parse in _PARSERS.items():
+        try:
+            for v in non_null:
+                parse(v)
+            return dtype()
+        except ValueError:
+            pass
+    return StringType()
 
 
 def _casts(schema: StructType) -> list:
     """Per-column parser for duva's 3-type universe: BIGINT → int,
     DOUBLE → float, anything else → str."""
-    by_type = {LongType: int, DoubleType: float}
-    return [by_type.get(type(f.dataType), str) for f in schema.fields]
+    return [_PARSERS.get(type(f.dataType), str) for f in schema.fields]
 
 
 def _parse_row(row: list[str], casts: list, n_cols: int) -> tuple:

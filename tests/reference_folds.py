@@ -26,8 +26,9 @@ replays of the spec, so tests assert kernel == fold value-for-value:
 - ``apply_export_settings_fold`` pins ``shaping.ops.apply_export_settings``
   (and through it ``split_select_multiple``, ``flatten_group_names`` and
   ``rename_to_labels``): the ``withColumn``-per-choice and
-  ``withColumnsRenamed`` chain the export shaping used to build, one
-  DataFrame call per step, against production's single projection.
+  rename chain the export shaping used to build, one DataFrame call per
+  step, against production's single projection. Renames are positional
+  (``toDF``) and keep a column's old name when its target is taken.
 """
 
 from __future__ import annotations
@@ -395,16 +396,27 @@ def _split_select_multiple_fold(
     return out
 
 
+def _rename_fold(df: DataFrame, target_of) -> DataFrame:
+    """Positional rename over the pre-rename names, set by ``toDF``: until
+    none is left, the first renamed column whose target another column
+    already resolves to (one that keeps its name, or an earlier renamed
+    one) goes back to its old name."""
+    sensitive = df.sparkSession.conf.get("spark.sql.caseSensitive") == "true"
+    key = (lambda c: c) if sensitive else str.lower
+    old = df.columns
+    new = [target_of(c) for c in old]
+
+    def clashes(i: int) -> bool:
+        held = [new[j] for j in range(len(old)) if j != i and (j < i or new[j] == old[j])]
+        return new[i] != old[i] and key(new[i]) in {key(c) for c in held}
+
+    while (i := next((k for k in range(len(old)) if clashes(k)), None)) is not None:
+        new[i] = old[i]
+    return df.toDF(*new)
+
+
 def _flatten_group_names_fold(df: DataFrame, sep: str = "/") -> DataFrame:
-    seen: set[str] = set()
-    mapping: dict[str, str] = {}
-    for c in df.columns:
-        short = c.rsplit(sep, 1)[-1]
-        if short in seen:
-            short = c
-        seen.add(short)
-        mapping[c] = short
-    return df.withColumnsRenamed(mapping)
+    return _rename_fold(df, lambda c: c.rsplit(sep, 1)[-1])
 
 
 def apply_export_settings_fold(
@@ -433,5 +445,5 @@ def apply_export_settings_fold(
     if settings.include_reviews and reviews is not None:
         out = out.join(F.broadcast(reviews), on="_id", how="left")
     if settings.include_labels_only and question_labels:
-        out = out.withColumnsRenamed({c: question_labels[c] for c in out.columns if c in question_labels})
+        out = _rename_fold(out, lambda c: question_labels.get(c, c))
     return out

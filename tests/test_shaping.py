@@ -86,6 +86,47 @@ def test_flatten_collision_keeps_qualified_name(spark):
     assert "x" in out.columns and "g2/x" in out.columns  # second keeps prefix
 
 
+@pytest.mark.parametrize(
+    "schema, shape, want",
+    [
+        ("`a/b` string, b string", flatten_group_names, ["_id", "a/b", "b"]),
+        ("`g/X` string, x string", flatten_group_names, ["_id", "g/X", "x"]),
+        (
+            "x string, b string",
+            lambda df: rename_to_labels(df, {"x": "b", "b": "q"}),
+            ["_id", "b", "q"],
+        ),
+        (
+            "a string, b string",
+            lambda df: rename_to_labels(df, {"a": "Q", "b": "Q"}),
+            ["_id", "Q", "b"],
+        ),
+        (
+            "`g/x` string, y string",
+            lambda df: apply_export_settings(
+                df, ExportSettings(do_not_split_select_multiple=True), question_labels={"x": "Y"}
+            ),
+            ["_id", "x", "y"],
+        ),
+    ],
+    ids=["child-then-plain", "child-differs-in-case", "label-is-a-name", "shared-label", "bundle"],
+)
+def test_renames_keep_names_unique_and_sync(spark, tmp_path, schema, shape, want):
+    """A rename whose target another output column already resolves to
+    keeps the old name, so the extract has no two columns one name and
+    the sync's write succeeds."""
+    from duva_spark.sinks import full_refresh, read_dataset
+
+    df = spark.createDataFrame([(1, "v1", "v2")], "`_id` long, " + schema)
+    out = shape(df)
+    assert out.columns == want
+    assert len({c.lower() for c in out.columns}) == len(out.columns)
+    path = str(tmp_path / "extract")
+    assert full_refresh(out, path) == 1
+    back = read_dataset(spark, path)
+    assert back.columns == want and [tuple(r) for r in back.collect()] == [(1, "v1", "v2")]
+
+
 def test_unflatten_groups(submissions):
     out = unflatten_groups(submissions)
     assert "demographics" in out.columns

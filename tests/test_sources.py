@@ -513,3 +513,26 @@ def test_onadata_datasource_permissive_parse(spark, tmp_path):
     assert rows[1] == ("x", 1)
     assert rows[249] == ("y", None)  # ragged row padded
     assert rows[250] == ("z", None)  # late non-integer degrades to NULL
+
+
+def test_digit_separators_read_as_text_in_both_sources(spark, tmp_path):
+    """``1_000`` is text to a CSV reader, not the number Python's int()
+    makes of it: format('onadata') infers the column as STRING like
+    read_csv_duva, and a late ``1_000`` in a BIGINT column degrades to
+    NULL instead of parsing."""
+    from duva_spark.sources.datasource import OnaDataSource
+
+    p = tmp_path / "sep.csv"
+    # w is inferred BIGINT from the 200-row sample; its row-250 value
+    # lies past it and must not parse as 1000
+    rows = [f"{i},{'1_000' if i % 2 else '2_5'},{i}" for i in range(250)]
+    p.write_text("k,n,w\n" + "\n".join(rows) + "\n250,7,1_000\n")
+    spark.dataSource.register(OnaDataSource)
+    ona = spark.read.format("onadata").option("path", str(p)).load()
+    csv = read_csv_duva(spark, str(p))
+    assert ona.schema["n"].dataType == csv.schema["n"].dataType == T.StringType()
+    assert ona.schema["w"].dataType.simpleString() == "bigint"
+    got = {r.k: (r.n, r.w) for r in ona.collect()}
+    assert got[1] == ("1_000", 1) and got[2] == ("2_5", 2)
+    assert got[250] == ("7", None)
+    assert {r.k: r.n for r in csv.collect()}[1] == "1_000"
