@@ -1,10 +1,9 @@
-"""Physical data layout utilities for scale: partitioned datasets with
-pruning, and bucketed tables for shuffle-free joins.
+"""Physical data layout for scale: bucketed tables for shuffle-free joins.
 
-These are the knobs that matter at 100 TB:
+Two knobs matter at 100 TB:
 - hive-style partitioning on a low-cardinality column (e.g. event date)
   lets Catalyst prune entire directories at plan time (PartitionFilters
-  in the scan node);
+  in the scan node) — ``sinks.full_refresh(partition_by=)`` writes it;
 - bucketing co-locates join keys at write time so repeated joins/aggs on
   that key skip the shuffle entirely (both sides read pre-hashed
   buckets).
@@ -12,17 +11,7 @@ These are the knobs that matter at 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def write_partitioned_by_day(
-    df: DataFrame, path: str, ts_col: str = "ts", mode: str = "overwrite"
-) -> None:
-    """Materialize with a derived `dt` date partition column."""
-    df.withColumn("dt", F.to_date(F.col(ts_col))).write.mode(mode).partitionBy(
-        "dt"
-    ).parquet(path)
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -54,7 +43,3 @@ def write_bucketed(
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.format("parquet").saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

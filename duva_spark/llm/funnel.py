@@ -14,9 +14,9 @@ The funnel is DECLARATIVE: ``compile_funnel`` takes a stage list as
 data (predicate / keeper / probe stages over a precomputed feature
 frame) and generates the one-pass nested-boolean plan — a production
 curation tool's pipeline is a config, not code. The canonical 7-stage
-pipeline is ``STANDARD_STAGES``; ``curation_funnel_handwritten``
-preserves the original hand-built plan as the property-test reference
-(the compiler must reproduce it row-for-row).
+pipeline is ``STANDARD_STAGES``; the original hand-built plan lives in
+``tests/reference_folds.py`` as ``curation_funnel_handwritten``, the
+reference the compiler must reproduce row-for-row.
 
 Scale design: one pass — stage booleans nest (b_k = b_{k-1} & pred_k),
 the keepers are conditional-MIN windows hash-partitioned by content
@@ -215,72 +215,8 @@ def curation_funnel(
 
     Returns (stage_ord, stage, docs_in, docs_out, dropped, retention,
     cum_retention) — one row per stage, retention rounded to 6 dp.
-    Property-tested equal to ``curation_funnel_handwritten``."""
+    Property-tested equal to the hand-built plan in
+    ``tests/reference_folds.py``."""
     return compile_funnel(
         funnel_features(docs, id_col, text_col), STANDARD_STAGES, id_col
-    )
-
-
-def curation_funnel_handwritten(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """The original hand-built plan of the canonical funnel, kept as
-    the compiler's property-test reference (must match row-for-row)."""
-    from pyspark.sql import Window
-
-    feats = funnel_features(docs, id_col, text_col)
-    b2 = F.col("h") >= 10
-    b3 = b2 & F.col("pass_gopher")
-    b4 = b3 & F.col("pass_repetition")
-    flags = feats.select(
-        id_col,
-        "ch",
-        "fp",
-        b2.alias("b2"),
-        b3.alias("b3"),
-        b4.alias("b4"),
-        F.col("cont"),
-    )
-    w_ch, w_fp = Window.partitionBy("ch"), Window.partitionBy("fp")
-    flags = (
-        flags.withColumn(
-            "b5",
-            F.col("b4")
-            & (F.col(id_col) == F.min(F.when(F.col("b4"), F.col(id_col))).over(w_ch)),
-        )
-        .withColumn(
-            "b6",
-            F.col("b5")
-            & (F.col(id_col) == F.min(F.when(F.col("b5"), F.col(id_col))).over(w_fp)),
-        )
-        .withColumn("b7", F.col("b6") & ~F.col("cont"))
-    )
-    agg = flags.agg(
-        F.count("*").alias("n1"),
-        *[
-            F.coalesce(F.sum(F.col(f"b{k}").cast("long")), F.lit(0)).alias(f"n{k}")
-            for k in range(2, 8)
-        ],
-    )
-    stages = []
-    for k, stage in enumerate(FUNNEL_STAGES, start=1):
-        src = F.col(f"n{k - 1}" if k > 1 else "n1")
-        out = F.col(f"n{k}")
-        stages.append(
-            F.struct(
-                F.lit(k).cast("long").alias("stage_ord"),
-                F.lit(stage).alias("stage"),
-                src.alias("docs_in"),
-                out.alias("docs_out"),
-                (src - out).alias("dropped"),
-                F.when(src > 0, F.round(out / src, 6)).otherwise(F.lit(0.0)).alias("retention"),
-                F.when(F.col("n1") > 0, F.round(out / F.col("n1"), 6))
-                .otherwise(F.lit(0.0))
-                .alias("cum_retention"),
-            )
-        )
-    return (
-        agg.select(F.explode(F.array(*stages)).alias("s"))
-        .select("s.*")
-        .orderBy("stage_ord")
     )

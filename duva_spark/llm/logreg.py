@@ -39,8 +39,6 @@ construction.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -339,7 +337,3 @@ def logreg_frame(
         [(int(t), float(l), float(a)) for t, l, a in rows],
         "round bigint, train_loss double, holdout_acc double",
     )
-
-
-def sigmoid(z: float) -> float:
-    return 1.0 / (1.0 + math.exp(-z))

@@ -45,7 +45,7 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from duva_spark.llm import assign, kmeans
 from duva_spark.operators.parallel import run_parallel
@@ -148,16 +148,8 @@ def pq_adc_topk(
     tables attach as broadcast hash joins keyed on (query, code); the
     ADC sum is one fixed left-to-right addition; ranking mirrors
     q_embed_l2_topk (round 6 dp, neighbor-id tie-break)."""
-    from pyspark.sql import Window as W
-
     spark = codes.sparkSession
-    qrows = queries.select(id_col, vec_col).limit(max_probes + 1).collect()
-    if len(qrows) > max_probes:
-        raise ValueError(
-            f"probe set exceeds max_probes={max_probes}; ADC tables are "
-            "driver-built and must stay bounded"
-        )
-    m = len(codebooks)
+    qrows = _probe_rows(queries, id_col, vec_col, max_probes)
     scored = codes
     for s, rows in enumerate(_adc_tables(qrows, codebooks, dim, vec_col, id_col)):
         qd = spark.createDataFrame(
@@ -165,14 +157,70 @@ def pq_adc_topk(
         )
         on = ["code_" + str(s)] if s == 0 else ["query_id", f"code_{s}"]
         scored = scored.join(F.broadcast(qd), on)
-    adc = F.round(_ordered_sum(m), dp)
+    return _adc_topk(scored, len(codebooks), k, id_col, dp)
+
+
+def _probe_rows(queries: DataFrame, id_col: str, vec_col: str, max_probes: int) -> list:
+    """The probe set collected to the driver, which builds the ADC
+    tables from it: more than ``max_probes`` probes raise."""
+    qrows = queries.select(id_col, vec_col).limit(max_probes + 1).collect()
+    if len(qrows) > max_probes:
+        raise ValueError(
+            f"probe set exceeds max_probes={max_probes}; ADC tables are "
+            "driver-built and must stay bounded"
+        )
+    return qrows
+
+
+def _probed_buckets(
+    queries: DataFrame,
+    centroid_rows: list,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    dp: int,
+    max_probes: int,
+) -> tuple[list, DataFrame]:
+    """(probe rows, (query_id, bucket)): the probe set and one row per
+    probe and each of its ``nprobe`` nearest IVF buckets, by the same
+    ``dp``-rounded assignment as the corpus."""
+    qrows = _probe_rows(queries, id_col, vec_col, max_probes)
+    qdf = queries.sparkSession.createDataFrame(
+        [(r[id_col], list(map(float, r[vec_col]))) for r in qrows],
+        f"query_id long, {vec_col} array<double>",
+    )
+    qprobe = assign.assign_nearest(
+        qdf,
+        centroid_rows,
+        metric="euclidean",
+        n=nprobe,
+        vec_col=vec_col,
+        out_col="buckets",
+        id_field="bucket",
+        cen_field="centroid",
+        round_dp=dp,
+        id_type="int",
+    ).select(
+        "query_id",
+        # n=1 returns a scalar bucket, n>1 an array — normalize to
+        # one row per probed bucket either way (the ivf_topk rule)
+        (F.explode("buckets") if nprobe > 1 else F.col("buckets")).alias("bucket"),
+    )
+    return qrows, qprobe
+
+
+def _adc_topk(scored: DataFrame, m: int, k: int, id_col: str, dp: int) -> DataFrame:
+    """(query_id, neighbor_id, adc_dist, rank), rank <= k: the ranking
+    tail of every ADC top-k. Self-matches drop, the m-term ADC sum
+    rounds to ``dp``, and ties on the rounded distance break by
+    neighbor id."""
     w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
     return (
         scored.filter(F.col(id_col) != F.col("query_id"))
         .select(
             "query_id",
             F.col(id_col).alias("neighbor_id"),
-            adc.alias("adc_dist"),
+            F.round(_ordered_sum(m), dp).alias("adc_dist"),
         )
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
@@ -298,8 +346,6 @@ def ivfpq_residual_topk(
     persisted index artifact; training/encoding inherit the audited
     Lloyd/projection shapes; query-time joins are all broadcasts keyed
     (query, bucket, code), so the corpus never shuffles."""
-    from pyspark.sql import Window as W
-
     spark = emb.sparkSession
     # the residual frame is read m×(iters+1)+1 times (training rounds +
     # encoding); checkpoint so the Arrow assignment runs once — this is
@@ -310,35 +356,8 @@ def ivfpq_residual_topk(
     books = pq_train(res, m=m, ksub=ksub, iters=iters, dim=dim,
                      id_col=id_col, vec_col="resid", dp=dp)
     codes = pq_encode(res, books, dim=dim, id_col=id_col, vec_col="resid")
-    qrows = queries.select(id_col, vec_col).limit(max_probes + 1).collect()
-    if len(qrows) > max_probes:
-        raise ValueError(
-            f"probe set exceeds max_probes={max_probes}; ADC tables are "
-            "driver-built and must stay bounded"
-        )
-    qdf = spark.createDataFrame(
-        [(r[id_col], list(map(float, r[vec_col]))) for r in qrows],
-        f"query_id long, {vec_col} array<double>",
-    )
-    qprobe = (
-        assign.assign_nearest(
-            qdf,
-            centroid_rows,
-            metric="euclidean",
-            n=nprobe,
-            vec_col=vec_col,
-            out_col="buckets",
-            id_field="bucket",
-            cen_field="centroid",
-            round_dp=dp,
-            id_type="int",
-        )
-        .select(
-            "query_id",
-            (F.explode("buckets") if nprobe > 1 else F.col("buckets")).alias(
-                "bucket"
-            ),
-        )
+    qrows, qprobe = _probed_buckets(
+        queries, centroid_rows, nprobe, id_col, vec_col, dp, max_probes
     )
     # the probe pairs are driver-bounded (|q| × nprobe) and are needed
     # to key the per-bucket residual ADC tables
@@ -361,14 +380,7 @@ def ivfpq_residual_topk(
         scored = scored.join(
             F.broadcast(qd), ["query_id", "bucket", f"code_{s}"]
         )
-    adc = F.round(_ordered_sum(m), dp)
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return (
-        scored.filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col).alias("neighbor_id"), adc.alias("adc_dist"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _adc_topk(scored, m, k, id_col, dp)
 
 
 def ivfpq_topk(
@@ -397,10 +409,6 @@ def ivfpq_topk(
     before the neighbor-id-tie-broken rank — both mirrored by the
     oracle.
     """
-    from pyspark.sql import Window as W
-
-    from duva_spark.llm import assign
-
     spark = emb.sparkSession
     assigned = assign.assign_nearest(
         emb,
@@ -414,51 +422,15 @@ def ivfpq_topk(
         id_type="int",
     )
     codes = pq_encode(assigned, codebooks, dim, id_col, vec_col)
-    qrows = queries.select(id_col, vec_col).limit(max_probes + 1).collect()
-    if len(qrows) > max_probes:
-        raise ValueError(
-            f"probe set exceeds max_probes={max_probes}; ADC tables are "
-            "driver-built and must stay bounded"
-        )
-    qdf = spark.createDataFrame(
-        [(r[id_col], list(map(float, r[vec_col]))) for r in qrows],
-        f"query_id long, {vec_col} array<double>",
-    )
-    qprobe = (
-        assign.assign_nearest(
-            qdf,
-            centroid_rows,
-            metric="euclidean",
-            n=nprobe,
-            vec_col=vec_col,
-            out_col="buckets",
-            id_field="bucket",
-            cen_field="centroid",
-            round_dp=dp,
-            id_type="int",
-        )
-        .select(
-            "query_id",
-            # n=1 returns a scalar bucket, n>1 an array — normalize to
-            # one row per probed bucket either way (the ivf_topk rule)
-            (F.explode("buckets") if nprobe > 1 else F.col("buckets")).alias(
-                "bucket"
-            ),
-        )
+    qrows, qprobe = _probed_buckets(
+        queries, centroid_rows, nprobe, id_col, vec_col, dp, max_probes
     )
     scored = codes.join(F.broadcast(qprobe), "bucket")
     m = len(codebooks)
     for s, rows in enumerate(_adc_tables(qrows, codebooks, dim, vec_col, id_col)):
         qd = spark.createDataFrame(rows, f"query_id long, code_{s} int, d2_{s} double")
         scored = scored.join(F.broadcast(qd), ["query_id", f"code_{s}"])
-    adc = F.round(_ordered_sum(m), dp)
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return (
-        scored.filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col).alias("neighbor_id"), adc.alias("adc_dist"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _adc_topk(scored, m, k, id_col, dp)
 
 
 # ---------------------------------------------------------------------------
@@ -538,8 +510,6 @@ def sq8_topk(
     Plan = the q_embed_l2_topk shape with the dequantize folded into
     the scan projection: broadcast probe attach, zero corpus shuffle
     before the per-query rank window."""
-    from pyspark.sql import Window as W
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )

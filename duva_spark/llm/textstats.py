@@ -56,11 +56,6 @@ def punct_ratio(text: Column) -> Column:
     return (F.length(text) - F.length(stripped)) / F.length(text)
 
 
-def mean_word_len(text: Column) -> Column:
-    ws = words_of(text)
-    return (F.length(text) - F.size(ws) + 1) / F.size(ws)
-
-
 def quality_score(text: Column) -> Column:
     """Heuristic [0,1] quality score: favors mid-length documents with
     low punctuation density and a sane stopword ratio (C4-style filters)."""

@@ -1,19 +1,17 @@
 """Arrow-batched Python operators (the sanctioned slow path).
 
-Demonstrates the two grouped pandas-UDF surfaces on a real statistic —
-per-group ordinary-least-squares slope — so the pattern is load-bearing
-and oracle-checkable (DuckDB's regr_slope), not a toy:
+``slope_grouped_agg`` computes a real statistic — per-group ordinary
+least-squares slope — as a grouped-agg pandas_udf usable inside
+``.agg(...)``, so the pattern is load-bearing and oracle-checkable
+(DuckDB's regr_slope), not a toy. Its ``groupBy().applyInPandas`` twin,
+``group_ols_slope``, is the test-side reference in
+``tests/reference_folds.py``.
 
-- ``group_ols_slope``: groupBy().applyInPandas — full pandas DataFrame
-  per group in, one row out;
-- ``slope_grouped_agg``: a grouped-agg pandas_udf usable inside
-  ``.agg(...)`` alongside JVM aggregates.
-
-Scale notes: both shuffle once on the group key and stream each group
+Scale notes: it shuffles once on the group key and streams each group
 through Arrow; memory is bounded by the largest single group (salting or
 pre-aggregation applies if one group dominates). For statistics Spark
-already has natively (covar/var/corr) prefer the JVM aggregate — these
-exist for the semantics Spark lacks.
+already has natively (covar/var/corr) prefer the JVM aggregate — this
+exists for the semantics Spark lacks.
 """
 
 from __future__ import annotations
@@ -21,25 +19,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def group_ols_slope(
-    df: DataFrame, group_cols: list[str], x_col: str, y_col: str
-) -> DataFrame:
-    """OLS slope of y on x per group via applyInPandas."""
-    out_schema = (
-        ", ".join(f"{c} string" for c in group_cols) + ", slope double, n bigint"
-    )
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        x, y = pdf[x_col].astype(float), pdf[y_col].astype(float)
-        dx = x - x.mean()
-        denom = float((dx * dx).sum())
-        slope = float((dx * (y - y.mean())).sum() / denom) if denom else float("nan")
-        head = {c: [pdf[c].iloc[0]] for c in group_cols}
-        return pd.DataFrame({**head, "slope": [slope], "n": [len(pdf)]})
-
-    return df.groupBy(*group_cols).applyInPandas(fit, out_schema)
 
 
 @F.pandas_udf("double")

@@ -12,13 +12,10 @@ from pyspark.sql import functions as F
 
 
 def top_k_per_group(
-    df: DataFrame,
-    group_cols: list[str],
-    order_by: list[Column],
-    k: int,
-    rank_col: str = "rn",
-    keep_rank: bool = False,
+    df: DataFrame, group_cols: list[str], order_by: list[Column], k: int
 ) -> DataFrame:
+    """The first ``k`` rows of each group under ``order_by``
+    (``row_number``, so exactly ``min(k, group size)`` rows per group;
+    ties are broken only as far as ``order_by`` breaks them)."""
     w = W.partitionBy(*group_cols).orderBy(*order_by)
-    out = df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
-    return out if keep_rank else out.drop(rank_col)
+    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k).drop("_rn")

@@ -326,25 +326,19 @@ def _gopher_rep_oracle() -> str:
     # round's most compute-dense per-doc operator
     oracle=_gopher_rep_oracle(),
     description=(
-        "Gopher REPETITION battery (Rae et al. 2021 A1.1, table A1) — "
-        "the second half of the rule set, complementing "
-        "q_gopher_quality_flags: per doc, the fraction of word "
-        "characters in the single most frequent {2,3,4}-gram (ties on "
-        "count to the lexicographically smallest gram), the fraction "
-        "of word characters COVERED by any duplicated {5..10}-gram — "
-        "overlap-safe position coverage (the DataTrove/NeMo-Curator "
-        "accounting) — and the nine-threshold conjunction. Every "
-        "statistic is a function of ONE document, so the battery runs "
-        "with ZERO shuffles (plan-asserted no-Exchange): an Arrow "
-        "kernel (mapInPandas) computes the EXACT INTEGER counts per "
-        "batch and the fractions/thresholds stay in shared Column "
-        "expressions — the r8 A/B measured the kernel 15x faster than "
-        "the pure-codegen HOF form (1.2 s vs 18.2 s at sf0.1; "
-        "interpreted lambda evaluation dominates); the HOF form is "
-        "kept only as the test-side reference the kernel is "
-        "equality-tested against. The oracle recomputes the "
-        "same values with per-doc GROUP BYs and the interval-merge "
-        "CTEs."
+        "Gopher repetition battery (Rae et al. 2021 A1.1, table A1), the "
+        "second half of the rule set next to q_gopher_quality_flags. Per "
+        "doc: the fraction of word characters in the single most frequent "
+        "{2,3,4}-gram (ties on count to the lexicographically smallest "
+        "gram), the fraction of word characters covered by any duplicated "
+        "{5..10}-gram (overlap-safe position coverage, the "
+        "DataTrove/NeMo-Curator accounting), and the nine-threshold "
+        "conjunction. Every statistic is a function of one document, so "
+        "the battery runs with zero shuffles (plan-asserted no Exchange): "
+        "an Arrow kernel (mapInPandas) computes the exact integer counts "
+        "per batch, and the fractions and thresholds stay in shared "
+        "Column expressions. The oracle recomputes the same values with "
+        "per-doc GROUP BYs and the interval-merge CTEs."
     ),
 )
 def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1730,16 +1724,16 @@ def _kmeans_sql(k: int, iters: int, dim: int, dp: int) -> str:
     oracle=_kmeans_sql(_KM_K, _KM_ITERS, _KM_DIM, _KM_DP),
     description=(
         "KMeans centroid training (3 Lloyd rounds, k=8, dim=64): the "
-        "training step behind the IVF index. Assignment is a shuffle-"
-        "free Arrow projection — the k collected centroids ride in a "
-        "pandas-UDF closure and each batch computes its argmin as "
-        "chunked numpy matrix ops (no join, no window, zero rows "
-        "moved; r3 verdict item #2); the update is one hash shuffle "
-        "with 64 AVGs built as a single parsed expression (no explode "
-        "of the n×dim matrix, no per-dimension py4j cost); per-round "
-        "rounding to a 1e-6 grid makes the fixpoint order-independent "
-        "so the unrolled DuckDB oracle matches value-for-value. "
-        "Lineage is cut per round with localCheckpoint like PageRank."
+        "training step behind the IVF index. Assignment is a shuffle-free "
+        "Arrow projection — the k collected centroids ride in a "
+        "pandas-UDF closure and each batch computes its argmin as chunked "
+        "numpy matrix ops (no join, no window, zero rows moved); the "
+        "update is one hash shuffle with 64 AVGs built as a single parsed "
+        "expression (no explode of the n×dim matrix, no per-dimension "
+        "py4j cost); per-round rounding to a 1e-6 grid makes the fixpoint "
+        "order-independent so the unrolled DuckDB oracle matches "
+        "value-for-value. Lineage is cut per round with localCheckpoint "
+        "like PageRank."
     ),
 )
 def q_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1803,28 +1797,27 @@ _KM_TRAIN_PRED = (
     ),
     headline=True,
     description=(
-        "SemDeDup-style semantic dedup (Abbas et al. 2023): kmeans-"
-        "cluster the embedding space (the same shuffle-free-assignment "
-        "Lloyd operator as q_kmeans_centroids, shared oracle CTE "
-        "chain), then prune within each cluster every vector whose "
-        "cosine to a lower-id clustermate exceeds tau. Pairwise "
-        "similarity is computed only inside clusters AND the per-"
-        "cluster join is capped (llm/semdedup.py, r3 verdict item #1): "
-        "clusters above max_cluster_size route through the hyperplane-"
-        "LSH overflow shared with blocked.py, so no all-pairs cliff "
-        "survives even when cluster population grows linearly with the "
-        "corpus. The cap (20k) exceeds every cluster at test SFs, so "
-        "the capped plan is value-identical to the exact oracle; a "
-        "dedicated test forces a tiny cap to prove the overflow "
-        "engages. Library callers scale k with semdedup.choose_k "
-        "(k ~ n/avg_cluster); the query pins k=8 because the unrolled "
-        "oracle CTE chain hard-codes it. Lloyd TRAINING rounds run on "
-        "a deterministic md5 20% sample (the 100 TB recipe: centroid "
-        "quality converges on a sample, so the corpus is scanned once "
-        "for the final assignment instead of once per round — "
-        "iters·f+1 passes instead of iters); the oracle draws the "
-        "identical sample. Vectors are L2-normalized once per row so "
-        "the pairwise check is a dot product."
+        "SemDeDup-style semantic dedup (Abbas et al. 2023): "
+        "kmeans-cluster the embedding space (the same "
+        "shuffle-free-assignment Lloyd operator as q_kmeans_centroids, "
+        "shared oracle CTE chain), then prune within each cluster every "
+        "vector whose cosine to a lower-id clustermate exceeds tau. "
+        "Pairwise similarity is computed only inside clusters AND the "
+        "per-cluster join is capped (llm/semdedup.py): clusters above "
+        "max_cluster_size route through the hyperplane-LSH overflow "
+        "shared with blocked.py, so no all-pairs cliff survives even when "
+        "cluster population grows linearly with the corpus. The cap (20k) "
+        "exceeds every cluster at test SFs, so the capped plan is "
+        "value-identical to the exact oracle; a dedicated test forces a "
+        "tiny cap to prove the overflow engages. Library callers scale k "
+        "with semdedup.choose_k (k ~ n/avg_cluster); the query pins k=8 "
+        "because the unrolled oracle CTE chain hard-codes it. Lloyd "
+        "TRAINING rounds run on a deterministic md5 20% sample (the 100 "
+        "TB recipe: centroid quality converges on a sample, so the corpus "
+        "is scanned once for the final assignment instead of once per "
+        "round — iters·f+1 passes instead of iters); the oracle draws the "
+        "identical sample. Vectors are L2-normalized once per row so the "
+        "pairwise check is a dot product."
     ),
 )
 def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2508,12 +2501,12 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         "row fan-out of 8-byte pairs, one agg shuffle on pos), collapse "
         "to ONE 2x64-array row broadcast back to the corpus, and the "
         "normalization itself is a codegen transform() — the corpus is "
-        "scanned once and never shuffled. The output vector is emitted "
-        "as a fixed-format CSV string ('%.6f' per element, +0.0 to kill "
-        "negative zero) because the driver's pandas canonicalizer "
-        "cannot hash raw array cells (r2 verdict item #2); the in-repo "
-        "array-native operator lives in llm/similarity.py — this query "
-        "is the oracle-checkable projection of it."
+        "scanned once and never shuffled. The output vector is emitted as "
+        "a fixed-format CSV string ('%.6f' per element, +0.0 to kill "
+        "negative zero) because the driver's pandas canonicalizer cannot "
+        "hash raw array cells; the in-repo array-native operator lives in "
+        "llm/similarity.py — this query is the oracle-checkable "
+        "projection of it."
     ),
 )
 def q_embed_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2948,19 +2941,18 @@ def q_cross_source_dup_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 LEAST(len(a.sh), len(b.sh)), 6) >= 0.6
     """,
     description=(
-        "Asymmetric containment pairs (Broder): |A∩B| / min(|A|,|B|) "
-        "over hashed 3-gram shingle sets — catches a short doc quoted "
-        "whole inside a long one, which symmetric Jaccard dilutes below "
-        "any usable threshold (both metrics reported to show the gap). "
-        "Runs on blocked.bounded_jaccard_pairs(metric='containment') — "
-        "the bounded machinery, not a demo crossJoin (r4 verdict item "
-        "3): a single global block (contained copies CROSS source "
-        "boundaries in this corpus, see q_cross_source_dup_leakage) "
-        "whose exact path engages because the id-bounded corpus sits "
-        "under the cap, keeping the oracle value-identical; above the "
-        "cap the same call routes through MinHash-band LSH with exact "
-        "containment as the verify step (forced-overflow test in "
-        "test_llm_ops)."
+        "Asymmetric containment pairs (Broder): |A∩B| / min(|A|,|B|) over "
+        "hashed 3-gram shingle sets — catches a short doc quoted whole "
+        "inside a long one, which symmetric Jaccard dilutes below any "
+        "usable threshold (both metrics reported to show the gap). Runs "
+        "on blocked.bounded_jaccard_pairs(metric='containment') — the "
+        "bounded machinery, not a crossJoin: a single global block "
+        "(contained copies CROSS source boundaries in this corpus, see "
+        "q_cross_source_dup_leakage) whose exact path engages because the "
+        "id-bounded corpus sits under the cap, keeping the oracle "
+        "value-identical; above the cap the same call routes through "
+        "MinHash-band LSH with exact containment as the verify step "
+        "(forced-overflow test in test_llm_ops)."
     ),
 )
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4056,25 +4048,24 @@ def _ivfpq_residual_oracle() -> str:
     "q_embed_ivfpq_residual_recall",
     oracle=_ivfpq_residual_oracle(),
     description=(
-        "RESIDUAL IVF-PQ recall audit (Jégou et al. 2011 §V — the "
-        "FAISS IndexIVFPQ default, upgrading r7's non-residual "
+        "Residual IVF-PQ recall audit (Jégou et al. 2011 §V, the FAISS "
+        "IndexIVFPQ default; q_embed_ivfpq_recall is the non-residual "
         "variant): PQ codebooks are trained on and applied to the "
-        "residuals vec − coarse_centroid, which concentrate around 0 "
-        "so the same 4-codebook budget buys better recall; a query's "
-        "ADC tables are built per probed bucket from the query's own "
-        "residual against that bucket's centroid. Composes three "
-        "verified operators (assign_nearest coarse+code assignment, "
-        "subvector Lloyd, broadcast-ADC scoring) and re-bases the "
-        "SHARED per-subspace oracle training chains onto the residual "
-        "table (same generator as q_embed_pq_recall — the replays "
-        "cannot drift). Centroids round to 6 dp so the residual VALUES "
-        "are bit-identical across engines. Zero corpus shuffle: the "
-        "residual table is one Arrow projection + one broadcast join "
-        "(checkpointed — at 100 TB it IS the persisted index "
-        "artifact); all query-time joins are broadcasts keyed "
-        "(query, bucket, code). Measured against the verified exact-L2 "
-        "top-5 baseline at the same nprobe/code budget as the "
-        "non-residual q_embed_ivfpq_recall."
+        "residuals vec − coarse_centroid, which concentrate around 0 so "
+        "the same 4-codebook budget buys better recall; a query's ADC "
+        "tables are built per probed bucket from the query's own residual "
+        "against that bucket's centroid. Composes three verified "
+        "operators (assign_nearest coarse+code assignment, subvector "
+        "Lloyd, broadcast-ADC scoring) and re-bases the SHARED "
+        "per-subspace oracle training chains onto the residual table "
+        "(same generator as q_embed_pq_recall — the replays cannot "
+        "drift). Centroids round to 6 dp so the residual VALUES are "
+        "bit-identical across engines. Zero corpus shuffle: the residual "
+        "table is one Arrow projection + one broadcast join (checkpointed "
+        "— at 100 TB it IS the persisted index artifact); all query-time "
+        "joins are broadcasts keyed (query, bucket, code). Measured "
+        "against the verified exact-L2 top-5 baseline at the same "
+        "nprobe/code budget as the non-residual q_embed_ivfpq_recall."
     ),
 )
 def q_embed_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4509,21 +4500,18 @@ def _unigram_encode_oracle() -> str:
         "production tokenizer family next to the BPE trainer: seed a "
         "candidate vocabulary from weighted substring counts (top-48 "
         "multi-char pieces + every single character, so words always "
-        "segment), then 3 EM rounds — Viterbi-segment every DISTINCT "
-        "word under the current 6-dp Laplace log-probs (an Arrow "
-        "mapInPandas kernel emitting PARTIAL piece counts per batch — "
-        "the r9 A/B winner over the interpreted F.aggregate fold, "
-        "28.6 s vs 2.1 s for the full chain at sf0.1; the fold is "
-        "kept only as the test-side reference, value-identical), "
-        "recount pieces, re-estimate. The corpus is scanned once (the "
-        "word-frequency groupBy); every round is one vocab-bounded "
-        "count shuffle and a ≤(48+alphabet)-row driver collect — the "
-        "kmeans/doremi/BPE bounded-iteration contract. Ties: Viterbi "
-        "picks the smallest start attaining the max (identical "
-        "left-to-right double sums on both engines make the oracle's "
-        "exact-equality backtrace pick the same path); output is the "
-        "top-20 pieces by (count DESC, piece ASC) with smoothed "
-        "probabilities. Returns (piece, cnt, prob)."
+        "segment), then 3 EM rounds — Viterbi-segment every DISTINCT word "
+        "under the current 6-dp Laplace log-probs (an Arrow mapInPandas "
+        "kernel emitting partial piece counts per batch, pinned "
+        "value-identical to a test-side fold), recount pieces, "
+        "re-estimate. The corpus is scanned once (the word-frequency "
+        "groupBy); every round is one vocab-bounded count shuffle and a "
+        "≤(48+alphabet)-row driver collect — the kmeans/doremi/BPE "
+        "bounded-iteration contract. Ties: Viterbi picks the smallest "
+        "start attaining the max (identical left-to-right double sums on "
+        "both engines make the oracle's exact-equality backtrace pick the "
+        "same path); output is the top-20 pieces by (count DESC, piece "
+        "ASC) with smoothed probabilities. Returns (piece, cnt, prob)."
     ),
 )
 def q_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4541,26 +4529,23 @@ def q_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,  # r9: the Arrow re-base thesis — benched + plan-reported
     description=(
         "Unigram-LM tokenizer APPLICATION — the encode half of the "
-        "train/encode loop (q_unigram_lm_train trains this same "
-        "model), completing the tokenizer inventory's second family "
-        "next to q_bpe_encode: every document is segmented under the "
-        "FINAL trained piece probabilities and the per-doc token "
-        "census reported (char tokens vs unigram tokens vs the "
-        "compression ratio that prices the tokenizer). The encode is "
-        "a pure per-row pass: an Arrow mapInPandas kernel runs the "
-        "slim (score, n_pieces) Viterbi DP with a per-task word→count "
-        "memo (Zipf makes most words repeats — the DP runs once per "
-        "distinct word per task), the division/rounding staying in a "
-        "shared Column tail; the interpreted-fold form is kept only as "
-        "the test-side reference the kernel is pinned against "
-        "(r9 A/B: 28.6 s fold vs 2.1 s arrow for the full chain at "
-        "sf0.1). No vocabulary join, no shuffle before the per-doc "
-        "aggregate — at 100 TB this runs embarrassingly parallel. Words "
-        "over 16 chars are outside the trained universe (the "
-        "trainer's cap) and excluded from the census on both engines. "
-        "The oracle extends the trainer's CTE chain one round — "
-        "encoding under the final model IS one more E-step "
-        "segmentation — and joins document words against the "
+        "train/encode loop (q_unigram_lm_train trains this same model), "
+        "completing the tokenizer inventory's second family next to "
+        "q_bpe_encode: every document is segmented under the FINAL "
+        "trained piece probabilities and the per-doc token census "
+        "reported (char tokens vs unigram tokens vs the compression ratio "
+        "that prices the tokenizer). The encode is a pure per-row pass: "
+        "an Arrow mapInPandas kernel runs the slim (score, n_pieces) "
+        "Viterbi DP with a per-task word→count memo (Zipf makes most "
+        "words repeats — the DP runs once per distinct word per task), "
+        "the division/rounding staying in a shared Column tail; a "
+        "test-side fold pins the kernel value for value. No vocabulary "
+        "join, no shuffle before the per-doc aggregate — at 100 TB this "
+        "runs embarrassingly parallel. Words over 16 chars are outside "
+        "the trained universe (the trainer's cap) and excluded from the "
+        "census on both engines. The oracle extends the trainer's CTE "
+        "chain one round — encoding under the final model IS one more "
+        "E-step segmentation — and joins document words against the "
         "backtraced per-word piece lists. Returns (doc_id, n_words, "
         "n_char_tokens, n_unigram_tokens, compression)."
     ),
@@ -5448,25 +5433,24 @@ def _unigram_prune_oracle() -> str:
     "q_unigram_prune",
     oracle=_unigram_prune_oracle(),
     description=(
-        "Unigram-LM vocabulary prune — the prune direction of the "
-        "Kudo 2018 / SentencePiece train->prune loop the r7 trainer "
-        "left open: multi-char pieces whose FINAL-model Viterbi usage "
-        "falls below 0.1% of token mass are dropped (usage-based "
-        "rather than Kudo's per-piece likelihood loss — documented "
-        "simplification: usage is exact-integer and replayable; "
-        "single-char pieces are never pruned so every word stays "
-        "segmentable), survivor probabilities renormalize from the "
-        "same final counts, and ONE more segmentation pass prices "
-        "what the smaller vocab costs in fertility. Returns the "
-        "before/after audit (variant, vocab_size, total_tokens, "
-        "tokens_per_word) — the vocab-size/compression trade a "
-        "tokenizer budget decision reads. The prune itself is driver "
-        "arithmetic on the bounded count table (exact integer mass "
+        "Unigram-LM vocabulary prune — the prune direction of the Kudo "
+        "2018 / SentencePiece train->prune loop after q_unigram_lm_train: "
+        "multi-char pieces whose FINAL-model Viterbi usage falls below "
+        "0.1% of token mass are dropped (usage-based rather than Kudo's "
+        "per-piece likelihood loss — documented simplification: usage is "
+        "exact-integer and replayable; single-char pieces are never "
+        "pruned so every word stays segmentable), survivor probabilities "
+        "renormalize from the same final counts, and ONE more "
+        "segmentation pass prices what the smaller vocab costs in "
+        "fertility. Returns the before/after audit (variant, vocab_size, "
+        "total_tokens, tokens_per_word) — the vocab-size/compression "
+        "trade a tokenizer budget decision reads. The prune itself is "
+        "driver arithmetic on the bounded count table (exact integer mass "
         "compare, no float threshold); the pruned pass is one "
-        "vocab-bounded slim-fold job; the corpus never re-scans. "
-        "Oracle: the shared unrolled hard-EM chain extended one "
-        "round, then the prune replay and one more emitted E-step "
-        "under the pruned model (tag P) — one trajectory, no drift."
+        "vocab-bounded slim-fold job; the corpus never re-scans. Oracle: "
+        "the shared unrolled hard-EM chain extended one round, then the "
+        "prune replay and one more emitted E-step under the pruned model "
+        "(tag P) — one trajectory, no drift."
     ),
 )
 def q_unigram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5941,24 +5925,22 @@ def _ivf_trained_oracle() -> str:
     oracle=_ivf_trained_oracle(),
     headline=True,  # r9: the trained-coarse-quantizer thesis — benched + plan-reported
     description=(
-        "IVF with a TRAINED coarse quantizer — FAISS's actual "
-        "IndexIVF construction (k-means on a sample trains nlist "
-        "centroids; a real 100 TB corpus has no label column), closing "
-        "the fidelity gap the r8 verdict named: every prior IVF-family "
-        "index derived its buckets from label_centroids. The audited "
-        "Lloyd operator (shuffle-free Arrow assignment, sampled "
-        "training rounds on the deterministic md5 20% sample, one "
-        "full-corpus assignment + update at the end — iters*f+1 "
-        "passes) trains k=10 centroids (= the label cardinality, so "
-        "the comparison runs at EQUAL nlist/nprobe), which feed the "
-        "same ivf_topk probe path as q_embed_ivf_topk. Reports "
-        "per-query recall@5 of BOTH bucket sources against the "
-        "verified brute-force oracle: (variant, query_id, n_hits, "
-        "recall_at_5) — the trained rows are the production path, the "
-        "label rows the baseline it must match or beat. The oracle "
-        "replays the sampled-Lloyd fixpoint through the shared "
-        "_kmeans_ctes chain plus the full-corpus update, then the IVF "
-        "probe verbatim; component oracle texts are reused so the "
+        "IVF with a TRAINED coarse quantizer — FAISS's actual IndexIVF "
+        "construction (k-means on a sample trains nlist centroids; a real "
+        "100 TB corpus has no label column), where the other IVF-family "
+        "queries derive their buckets from label_centroids. The audited "
+        "Lloyd operator (shuffle-free Arrow assignment, sampled training "
+        "rounds on the deterministic md5 20% sample, one full-corpus "
+        "assignment + update at the end — iters*f+1 passes) trains k=10 "
+        "centroids (= the label cardinality, so the comparison runs at "
+        "EQUAL nlist/nprobe), which feed the same ivf_topk probe path as "
+        "q_embed_ivf_topk. Reports per-query recall@5 of BOTH bucket "
+        "sources against the verified brute-force oracle: (variant, "
+        "query_id, n_hits, recall_at_5) — the trained rows are the "
+        "production path, the label rows the baseline it must match or "
+        "beat. The oracle replays the sampled-Lloyd fixpoint through the "
+        "shared _kmeans_ctes chain plus the full-corpus update, then the "
+        "IVF probe verbatim; component oracle texts are reused so the "
         "eval is pinned to already-verified semantics."
     ),
 )
@@ -7109,24 +7091,23 @@ def _hll_merge_oracle() -> str:
     "q_hll_merge_rollup",
     oracle=_hll_merge_oracle(),
     description=(
-        "Mergeable-sketch union semantics (r10 verdict item 4): the "
-        "cross-day rollup a 100 TB pipeline actually runs. Per-source "
-        "HLL sketches (m=256, same hash/rho construction as "
-        "q_hll_distinct_audit) are built INDEPENDENTLY per day shard "
-        "(day = doc_id % 7 — each shard sees only its own rows, the "
-        "way daily ingest partitions would), then merged by "
-        "register-wise MAX across shards; the merged sketch is "
+        "Mergeable-sketch union semantics: the cross-day rollup a 100 TB "
+        "pipeline actually runs. Per-source HLL sketches (m=256, same "
+        "hash/rho construction as q_hll_distinct_audit) are built "
+        "INDEPENDENTLY per day shard (day = doc_id % 7 — each shard sees "
+        "only its own rows, the way daily ingest partitions would), then "
+        "merged by register-wise MAX across shards; the merged sketch is "
         "compared REGISTER BY REGISTER (null-safe full-outer join) "
-        "against the single-pass whole-corpus sketch and both "
-        "estimates computed from the same exact-integer register sums. "
-        "MAX is associative and idempotent, so the rollup is "
-        "bit-identical to the single pass by construction — this query "
-        "PROVES it on real data (n_reg_mismatch = 0, est_equal = true "
-        "per source) rather than asserting it. 100 TB shape: shard "
-        "sketches are 256 x sources rows each; the merge exchange is "
-        "bounded by 256 x sources x days regardless of corpus size, "
-        "so a year of daily sketches rolls up in a broadcast-sized "
-        "aggregation — the whole point of a mergeable sketch."
+        "against the single-pass whole-corpus sketch and both estimates "
+        "computed from the same exact-integer register sums. MAX is "
+        "associative and idempotent, so the rollup is bit-identical to "
+        "the single pass by construction — this query PROVES it on real "
+        "data (n_reg_mismatch = 0, est_equal = true per source) rather "
+        "than asserting it. 100 TB shape: shard sketches are 256 x "
+        "sources rows each; the merge exchange is bounded by 256 x "
+        "sources x days regardless of corpus size, so a year of daily "
+        "sketches rolls up in a broadcast-sized aggregation — the whole "
+        "point of a mergeable sketch."
     ),
 )
 def q_hll_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7249,30 +7230,29 @@ def _image_ahash_pairs_sql(
     "q_image_phash_near_dup",
     oracle=_image_ahash_pairs_sql(),
     description=(
-        "Perceptual-hash image near-dup (r10 verdict item 3) — "
-        "completes the dedup modality symmetry (text MinHash/SimHash, "
-        "embedding cosine, now image): payloads flow through the Arrow "
-        "decode path (to_media_table -> mapInPandas aHash kernel in "
-        "llm/multimodal.py — real pillow 8x8 grayscale when the lib is "
-        "importable, deterministic bigram-histogram grid as the fake "
-        "so the DuckDB oracle can replay it), pack to a 63-bit average "
-        "hash, then banded LSH on 9 x 7-bit hash chunks exactly like "
-        "q_simhash_near_dup. Pigeonhole makes the banding "
-        "EXACT-COMPLETE here: max_hamming=8 < n_chunks=9 guarantees "
-        "every qualifying pair shares a clean chunk, so the LSH loses "
-        "nothing vs all-pairs. Measured on sf0.01: near-dup pairs land "
-        "at hamming 0-1, the unrelated-pair floor starts at 9 — the "
-        "threshold sits in an empty gap. 100 TB shape: signatures are "
-        "one Arrow pass over the payload column (no shuffle), "
-        "candidates one equi-join on (chunk_idx, chunk_val) — the "
-        "same linear band-join as MinHash-LSH, never all-pairs; "
+        "Perceptual-hash image near-dup; completes the dedup modality "
+        "symmetry (text MinHash/SimHash, embedding cosine, now image): "
+        "payloads flow through the Arrow decode path (to_media_table -> "
+        "mapInPandas aHash kernel in llm/multimodal.py — real pillow 8x8 "
+        "grayscale when the lib is importable, deterministic "
+        "bigram-histogram grid as the fake so the DuckDB oracle can "
+        "replay it), pack to a 63-bit average hash, then banded LSH on 9 "
+        "x 7-bit hash chunks exactly like q_simhash_near_dup. Pigeonhole "
+        "makes the banding EXACT-COMPLETE here: max_hamming=8 < "
+        "n_chunks=9 guarantees every qualifying pair shares a clean "
+        "chunk, so the LSH loses nothing vs all-pairs. Measured on "
+        "sf0.01: near-dup pairs land at hamming 0-1, the unrelated-pair "
+        "floor starts at 9 — the threshold sits in an empty gap. 100 TB "
+        "shape: signatures are one Arrow pass over the payload column (no "
+        "shuffle), candidates one equi-join on (chunk_idx, chunk_val) — "
+        "the same linear band-join as MinHash-LSH, never all-pairs; "
         "real-decoder deployments swap the loader, nothing else. The "
-        "chunk width is the scale dial: 7-bit chunks (128 bucket "
-        "values per band) are the tight-threshold DEMO config for this "
-        "SF; at millions of docs the bands widen (e.g. 3 x 21-bit, 2M "
-        "values per band, exact-complete for hamming <= 2) so band "
-        "buckets stay small — that config is what the 1M/10M sweep "
-        "row measures (tools/scale_sweep.py image_phash_pairs)."
+        "chunk width is the scale dial: 7-bit chunks (128 bucket values "
+        "per band) are the tight-threshold DEMO config for this SF; at "
+        "millions of docs the bands widen (e.g. 3 x 21-bit, 2M values per "
+        "band, exact-complete for hamming <= 2) so band buckets stay "
+        "small — that config is what the 1M/10M sweep row measures "
+        "(tools/scale_sweep.py image_phash_pairs)."
     ),
 )
 def q_image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7369,25 +7349,24 @@ def _neardup_explain_oracle() -> str:
     "q_neardup_explain",
     oracle=_neardup_explain_oracle(),
     description=(
-        "Near-dup EXPLANATION query (r11 verdict item 8c) — the audit "
-        "surface a production dedup pipeline exposes so a human "
-        "reviewer (or an appeals process) can see WHY two items were "
-        "merged, not just that they were: for every qualifying "
-        "near-dup pair in BOTH modalities (text SimHash 16-bit/4-chunk "
-        "at hamming <= 2, image aHash 63-bit/9-chunk at hamming <= 8 — "
-        "the exact configs of q_simhash_near_dup and "
+        "Near-dup explanation query: the audit surface a production dedup "
+        "pipeline exposes so a human reviewer (or an appeals process) can "
+        "see WHY two items were merged, not just that they were: for "
+        "every qualifying near-dup pair in BOTH modalities (text SimHash "
+        "16-bit/4-chunk at hamming <= 2, image aHash 63-bit/9-chunk at "
+        "hamming <= 8 — the exact configs of q_simhash_near_dup and "
         "q_image_phash_near_dup, shared machinery in "
-        "simhash.banded_pair_explain so the explanation can never "
-        "drift from the dedup decision), emit which LSH chunks/bands "
-        "agreed (n_chunks_matched + matched_chunk_mask bitmap: bit i "
-        "set = band i produced or corroborated the candidate), the "
-        "exact popcount hamming, and the margin to the decision "
-        "threshold (margin 0 = borderline merge, the rows a reviewer "
-        "looks at first). 100 TB: candidates still come from the "
-        "linear band equi-join; the explanation legs join the "
-        "PAIR table (dup-volume-bounded) back to the signature table "
-        "on the id key — nothing all-pairs, nothing corpus-shuffled "
-        "beyond the signature scan both dedup queries already do."
+        "simhash.banded_pair_explain so the explanation can never drift "
+        "from the dedup decision), emit which LSH chunks/bands agreed "
+        "(n_chunks_matched + matched_chunk_mask bitmap: bit i set = band "
+        "i produced or corroborated the candidate), the exact popcount "
+        "hamming, and the margin to the decision threshold (margin 0 = "
+        "borderline merge, the rows a reviewer looks at first). 100 TB: "
+        "candidates still come from the linear band equi-join; the "
+        "explanation legs join the PAIR table (dup-volume-bounded) back "
+        "to the signature table on the id key — nothing all-pairs, "
+        "nothing corpus-shuffled beyond the signature scan both dedup "
+        "queries already do."
     ),
 )
 def q_neardup_explain(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -74,22 +74,21 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 100
     """,
     description=(
-        "Fixed-k uniform reservoir sample (r11 verdict item 8b) — the "
-        "EXACT-SIZE companion to q_hash_sample's fixed-rate sample: "
-        "each row gets a salt-keyed 60-bit hash rank and the k=100 "
-        "smallest ranks are the sample. Distributionally identical to "
-        "Vitter's reservoir algorithm (any k-subset is equally likely "
-        "under the uniform hash) but deterministic, engine-independent "
-        "and MERGEABLE: top-k of a union is the top-k of per-partition "
-        "top-k's, which is exactly what Spark's TakeOrderedAndProject "
-        "physical operator computes — each task keeps a k-row heap, "
-        "the driver merges #partitions * k rows, and NO global sort or "
-        "single-partition stage ever exists (plan-asserted in "
-        "tests/test_plans.py). Re-salting draws a fresh independent "
-        "sample; rank_h is emitted so downstream stages can verify "
-        "membership without re-hashing. 100 TB: the scan is "
-        "embarrassingly parallel and the only cross-task traffic is "
-        "k rows per task — the canonical bounded-driver sample at any "
+        "Fixed-k uniform reservoir sample: the exact-size companion to "
+        "q_hash_sample's fixed-rate sample: each row gets a salt-keyed "
+        "60-bit hash rank and the k=100 smallest ranks are the sample. "
+        "Distributionally identical to Vitter's reservoir algorithm (any "
+        "k-subset is equally likely under the uniform hash) but "
+        "deterministic, engine-independent and MERGEABLE: top-k of a "
+        "union is the top-k of per-partition top-k's, which is exactly "
+        "what Spark's TakeOrderedAndProject physical operator computes — "
+        "each task keeps a k-row heap, the driver merges #partitions * k "
+        "rows, and NO global sort or single-partition stage ever exists "
+        "(plan-asserted in tests/test_plans.py). Re-salting draws a fresh "
+        "independent sample; rank_h is emitted so downstream stages can "
+        "verify membership without re-hashing. 100 TB: the scan is "
+        "embarrassingly parallel and the only cross-task traffic is k "
+        "rows per task — the canonical bounded-driver sample at any "
         "corpus size."
     ),
 )
@@ -364,9 +363,9 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "avg_quality accumulates the 6-dp per-doc scores as EXACT scaled "
         "integers (the money_cents/calibration trick): a float AVG's "
         "partial-sum order varies with shuffle fetch order, and a value "
-        "on a 5e-7 rounding boundary flipped its last digit between two "
-        "otherwise-identical r9 runs — exact accumulation makes the "
-        "result order-independent on both engines."
+        "on a 5e-7 rounding boundary can flip its last digit between "
+        "otherwise-identical runs — exact accumulation makes the result "
+        "order-independent on both engines."
     ),
 )
 def q_corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1888,31 +1887,30 @@ def _quality_drift_oracle() -> str:
     "q_quality_drift_monitor",
     oracle=_quality_drift_oracle(),
     description=(
-        "Quality-classifier drift monitor (r11 verdict item 8a) — the "
-        "deploy-time gate a production filter pipeline runs before "
-        "trusting yesterday's classifier on today's crawl: the "
-        "distilled LR (shared unrolled-GD oracle chain, final-round "
-        "weights — the SAME chain as q_lr_quality_distill so the "
-        "monitor audits the model the pipeline actually serves) scores "
-        "the whole corpus, the score distribution is decile-bucketed "
-        "per corpus half (doc_id parity = the stand-in for "
-        "yesterday-vs-today ingest windows), and the monitor reports "
-        "BOTH standard drift statistics per bin: Laplace-smoothed PSI "
-        "terms (q_psi_drift's exact form, totalled on the 1e-8 integer "
-        "grid so the sum is order-free) and the Kolmogorov-Smirnov "
-        "statistic kept in the exact integer domain "
-        "(ks_num = |cum_a*tot_b - cum_b*tot_a|; divide by "
-        "tot_a*tot_b off-engine to read the classic D statistic). "
-        "drift_alert fires at the standard PSI > 0.2 retrain trigger. "
-        "Differs from q_psi_drift in WHAT it monitors: not a raw "
-        "feature but the model's own output distribution — the signal "
-        "that catches feature drift, label drift and serving skew at "
-        "once. The windows run on the 10-row decile frame (bounded by "
-        "the statistic's definition, exemption-listed); everything "
-        "corpus-sized is the one scoring pass. 100 TB: score deciles "
-        "are map-side-combined, the monitor itself never shuffles the "
-        "corpus; at 1e12 docs swap the bigint KS cross-product to "
-        "decimal(38,0) — the query's only N-dependent arithmetic."
+        "Quality-classifier drift monitor: the deploy-time gate a "
+        "production filter pipeline runs before trusting yesterday's "
+        "classifier on today's crawl: the distilled LR (shared "
+        "unrolled-GD oracle chain, final-round weights — the SAME chain "
+        "as q_lr_quality_distill so the monitor audits the model the "
+        "pipeline actually serves) scores the whole corpus, the score "
+        "distribution is decile-bucketed per corpus half (doc_id parity = "
+        "the stand-in for yesterday-vs-today ingest windows), and the "
+        "monitor reports BOTH standard drift statistics per bin: "
+        "Laplace-smoothed PSI terms (q_psi_drift's exact form, totalled "
+        "on the 1e-8 integer grid so the sum is order-free) and the "
+        "Kolmogorov-Smirnov statistic kept in the exact integer domain "
+        "(ks_num = |cum_a*tot_b - cum_b*tot_a|; divide by tot_a*tot_b "
+        "off-engine to read the classic D statistic). drift_alert fires "
+        "at the standard PSI > 0.2 retrain trigger. Differs from "
+        "q_psi_drift in WHAT it monitors: not a raw feature but the "
+        "model's own output distribution — the signal that catches "
+        "feature drift, label drift and serving skew at once. The windows "
+        "run on the 10-row decile frame (bounded by the statistic's "
+        "definition, exemption-listed); everything corpus-sized is the "
+        "one scoring pass. 100 TB: score deciles are map-side-combined, "
+        "the monitor itself never shuffles the corpus; at 1e12 docs swap "
+        "the bigint KS cross-product to decimal(38,0) — the query's only "
+        "N-dependent arithmetic."
     ),
 )
 def q_quality_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3216,16 +3214,16 @@ def _doremi_sensitivity_oracle() -> str:
     "q_doremi_sensitivity",
     oracle=_doremi_sensitivity_oracle(),
     description=(
-        "DoReMi round-budget sensitivity: the mixture weights after "
-        "2, 4 and 8 exponentiated-gradient rounds — does the mixture "
-        "converge on this corpus, and how much does the default "
-        "4-round budget leave on the table? Round-k weights are a "
-        "PREFIX of the round-8 trajectory, so the whole table costs "
-        "ONE corpus scan (the shared domain×bucket count) plus 8 "
-        "bounded rounds — not one run per budget — and the oracle "
-        "reuses q_doremi_weights' unrolled-CTE chain verbatim, just "
-        "extended to 8 rounds with a snapshot union (the two replays "
-        "cannot drift). Returns (rounds, domain, weight)."
+        "DoReMi round-budget sensitivity: the mixture weights after 2, 4 "
+        "and 8 exponentiated-gradient rounds — does the mixture converge "
+        "on this corpus, and how much does the default 4-round budget "
+        "leave on the table? The weights after k rounds are a prefix of "
+        "the 8-round trajectory, so the whole table costs ONE corpus scan "
+        "(the shared domain×bucket count) plus 8 bounded rounds — not one "
+        "run per budget — and the oracle reuses q_doremi_weights' "
+        "unrolled-CTE chain verbatim, just extended to 8 rounds with a "
+        "snapshot union (the two replays cannot drift). Returns (rounds, "
+        "domain, weight)."
     ),
 )
 def q_doremi_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3249,20 +3247,20 @@ def q_doremi_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_doremi_oracle(),
     description=(
         "DoReMi-style mixture reweighting (Xie et al. 2023): 4 "
-        "multiplicative-weights rounds over per-domain EXCESS NLL — "
-        "each domain's NLL under the current mixture hashed-unigram LM "
-        "minus its NLL under its own LM (the perfectly-fit reference), "
+        "multiplicative-weights rounds over per-domain EXCESS NLL — each "
+        "domain's NLL under the current mixture hashed-unigram LM minus "
+        "its NLL under its own LM (the perfectly-fit reference), "
         "exponentiated-gradient update with uniform smoothing. The "
         "iterative upgrade of the static mixture planners "
-        "(q_mixture_sampling family): weights move toward the domains "
-        "the mixture models worst. The corpus is scanned ONCE for the "
+        "(q_mixture_sampling family): weights move toward the domains the "
+        "mixture models worst. The corpus is scanned ONCE for the "
         "domain×bucket count table (≤ D×512 rows, broadcast-sized by "
         "construction); every round is one aggregation over that table "
-        "with the current weights attached as a D-row broadcast, and "
-        "the driver holds D floats — the kcenter/kmeans bounded-"
-        "iteration contract. Per-round 6-dp rounding truncates cross-"
-        "engine summation drift; the oracle replays all rounds as an "
-        "unrolled MATERIALIZED-CTE chain."
+        "with the current weights attached as a D-row broadcast, and the "
+        "driver holds D floats — the kcenter/kmeans bounded-iteration "
+        "contract. Every round rounds the weights to 6 dp, which "
+        "truncates cross-engine summation drift; the oracle replays all "
+        "rounds as an unrolled MATERIALIZED-CTE chain."
     ),
 )
 def q_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4223,30 +4221,28 @@ def _kn3_oracle(min_count: int = 1) -> str:
     oracle=_kn3_oracle(),
     description=(
         "RECURSIVE interpolated Kneser-Ney trigram LM (Chen & Goodman "
-        "1998 eq. 4.28 at order 3) — the full KenLM production shape "
-        "the bigram query (q_kneser_ney_nll) introduces one level of: "
-        "the trigram level discounts actual counts and re-spends the "
-        "mass on the BIGRAM-level KN distribution, which itself is "
-        "built from CONTINUATION type counts (N1+(.w2w3) over "
-        "N1+(.w2.)) and recurses into the continuation unigram with "
-        "the same add-one floor as the bigram query (the documented "
-        "finite-NLL deviation). Fallback chain for unseen contexts: "
-        "trigram-context miss -> bigram-KN level -> continuation "
-        "unigram. The bigram-level interpolation weight is D·N1+(w2*) "
-        "with N1+(w2*) = |{w3 : N1+(.w2w3) > 0}| derived from the "
-        "trigram middle table — exactly the discounted mass the level "
-        "frees, so each level renormalizes (Chen-Goodman eq. 4.25 "
-        "proper; r9 fix of the r8 bcnt-derived weight). All SIX model "
-        "tables (trigram counts + its two marginals, the type-count "
-        "table N1+(.w2w3), its w2 marginal, continuation counts) are "
-        "Zipf-bounded marginals of "
-        "the same two count tables — hash-key joins broadcastable "
-        "after a frequency cut, two aggregations, zero driver state; "
-        "the 100 TB shape is unchanged from the bigram sibling, plus "
-        "one wider explode. Reports per-language held-out NLL and the "
-        "unseen-trigram / unseen-trigram-context rates (the trigram "
-        "level saturates coverage far sooner — visibly higher unseen "
-        "rates than the bigram query on the same split)."
+        "1998 eq. 4.28 at order 3) — the full KenLM production shape the "
+        "bigram query (q_kneser_ney_nll) introduces one level of: the "
+        "trigram level discounts actual counts and re-spends the mass on "
+        "the BIGRAM-level KN distribution, which itself is built from "
+        "CONTINUATION type counts (N1+(.w2w3) over N1+(.w2.)) and "
+        "recurses into the continuation unigram with the same add-one "
+        "floor as the bigram query (the documented finite-NLL deviation). "
+        "Fallback chain for unseen contexts: trigram-context miss -> "
+        "bigram-KN level -> continuation unigram. The bigram-level "
+        "interpolation weight is D·N1+(w2*) with N1+(w2*) = |{w3 : "
+        "N1+(.w2w3) > 0}| derived from the trigram middle table — exactly "
+        "the discounted mass the level frees, so each level renormalizes "
+        "(Chen-Goodman eq. 4.25). All SIX model tables (trigram counts + "
+        "its two marginals, the type-count table N1+(.w2w3), its w2 "
+        "marginal, continuation counts) are Zipf-bounded marginals of the "
+        "same two count tables — hash-key joins broadcastable after a "
+        "frequency cut, two aggregations, zero driver state; the 100 TB "
+        "shape is unchanged from the bigram sibling, plus one wider "
+        "explode. Reports per-language held-out NLL and the "
+        "unseen-trigram / unseen-trigram-context rates (the trigram level "
+        "saturates coverage far sooner — visibly higher unseen rates than "
+        "the bigram query on the same split)."
     ),
 )
 def q_kneser_ney_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4432,26 +4428,24 @@ def _kn3_frame(spark: SparkSession, sf_dir: str, min_count: int) -> DataFrame:
     headline=True,  # r9: the count-pruning thesis — benched + plan-reported
     description=(
         "Singleton-pruned recursive KN trigram LM — the count-table "
-        "pruning KenLM actually ships (its default prune drops "
-        "singleton n-grams at the higher orders): trigram types with "
-        "count 1 are dropped BEFORE any marginal is taken, so all four "
-        "trigram-level model tables (counts, context marginal, the "
-        "N1+(.w2w3) type table and its w2 marginal) shrink together "
-        "and the level renormalizes over the survivors; the pruned "
-        "mass re-routes through the existing unseen-trigram / "
-        "unseen-context interpolation chain into the bigram-KN level "
-        "(documented deviation from KenLM's adjusted-count "
-        "redistribution: the interpolation weight absorbs the freed "
-        "mass structurally, no count rewrite needed). This is the r8 "
-        "verdict's scale fix for the trigram family: singletons are "
-        "the bulk of the trigram TYPE table on any corpus (uniform- "
-        "random synthetic vocab AND Zipf text), so the held-out "
-        "scoring joins stop carrying a table that grows like the "
-        "corpus — the sweep lands the pruned variant in the bigram's "
-        "ratio class (SCALE.md r9 row) where the full trigram ran "
-        "9.6x/10x. Same output shape as q_kneser_ney_trigram; the "
-        "visibly higher unseen_trigram_rate IS the pruning, the "
-        "near-identical NLL is why KenLM defaults to it."
+        "pruning KenLM actually ships (its default prune drops singleton "
+        "n-grams at the higher orders): trigram types with count 1 are "
+        "dropped BEFORE any marginal is taken, so all four trigram-level "
+        "model tables (counts, context marginal, the N1+(.w2w3) type "
+        "table and its w2 marginal) shrink together and the level "
+        "renormalizes over the survivors; the pruned mass re-routes "
+        "through the existing unseen-trigram / unseen-context "
+        "interpolation chain into the bigram-KN level (documented "
+        "deviation from KenLM's adjusted-count redistribution: the "
+        "interpolation weight absorbs the freed mass structurally, no "
+        "count rewrite needed). Singletons are the bulk of the trigram "
+        "TYPE table on any corpus (uniform- random synthetic vocab AND "
+        "Zipf text), so the held-out scoring joins stop carrying a table "
+        "that grows like the corpus — the pruned variant scales like the "
+        "bigram query where the full trigram does not (SCALE.md). Same "
+        "output shape as q_kneser_ney_trigram; the visibly higher "
+        "unseen_trigram_rate IS the pruning, the near-identical NLL is "
+        "why KenLM defaults to it."
     ),
 )
 def q_kneser_ney_trigram_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4796,26 +4790,25 @@ _MARKED_TEXT_SQL = (
     FROM (SELECT * FROM u UNION ALL SELECT * FROM tot)
     """,
     description=(
-        "Likelihood-sensitive language-ID eval — the r9 verdict's "
-        "successor to q_nb_langid_confusion, whose head-to-head could "
-        "only measure class priors because the synthetic corpus draws "
-        "every language from ONE shared vocabulary. This query derives "
-        "a SYNTHETIC LEXICAL SIGNAL inside its prep stage, documented "
-        "as such: each token is deterministically re-keyed to "
-        "'<lang>_<token>' when md5(token|lang) % 5 == 0 — a per-"
-        "language ~20% sub-vocabulary simulating loanwords/function "
-        "words, derived only from columns the row already carries and "
-        "applied identically on both engines and both splits. Three "
-        "predictors run on the SAME deterministic 30% held-out slice: "
-        "the count-trained NB (verified q_nb_lang_classifier oracle "
-        "text reused verbatim over the marked docs), the stopword "
-        "heuristic, and the train-split majority class (the prior "
-        "ceiling both baselines degenerate to on unmarked text). With "
-        "the lexical signal present the NB's per-language likelihoods "
-        "separate and its accuracy clears the prior ceiling decisively "
-        "(~0.99 vs ~0.44 at sf0.01) — the eval now exercises the "
-        "classifier, not the class skew. Cost shape unchanged: one "
-        "codegen token-transform projection + two training "
+        "Likelihood-sensitive language-ID eval, the successor to "
+        "q_nb_langid_confusion, whose head-to-head can only measure class "
+        "priors because the synthetic corpus draws every language from "
+        "ONE shared vocabulary. This query derives a SYNTHETIC LEXICAL "
+        "SIGNAL inside its prep stage, documented as such: each token is "
+        "deterministically re-keyed to '<lang>_<token>' when "
+        "md5(token|lang) % 5 == 0 — a per-language ~20% sub-vocabulary "
+        "simulating loanwords/function words, derived only from columns "
+        "the row already carries and applied identically on both engines "
+        "and both splits. Three predictors run on the SAME deterministic "
+        "30% held-out slice: the count-trained NB (verified "
+        "q_nb_lang_classifier oracle text reused verbatim over the marked "
+        "docs), the stopword heuristic, and the train-split majority "
+        "class (the prior ceiling both baselines degenerate to on "
+        "unmarked text). With the lexical signal present the NB's "
+        "per-language likelihoods separate and its accuracy clears the "
+        "prior ceiling decisively (~0.99 vs ~0.44 at sf0.01) — the eval "
+        "now exercises the classifier, not the class skew. Cost shape "
+        "unchanged: one codegen token-transform projection + two training "
         "aggregations + a broadcast-model scoring join."
     ),
 )
@@ -5384,26 +5377,25 @@ def q_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ver
     """,
     description=(
-        "Exact-string verify leg for the duplicated-span family (r10 "
-        "verdict item 5, hash-collision honesty): the span queries key "
-        "word 8-grams by 60-bit md5-derived hashes, so two DIFFERENT "
-        "grams colliding on a key would be falsely counted as "
-        "duplicates. This audit re-attaches the gram TEXT to exactly "
-        "the CANDIDATE keys (doc-frequency >= 2 — the only keys the "
-        "span pass ever acts on) via a semi-join hash probe, and "
-        "counts distinct strings per key: n_collision_keys = 0 proves "
-        "the span family's dup marks are string-exact on this corpus. "
-        "Cost shape at 100 TB: the verify leg shuffles only the "
-        "DUPLICATED gram subset's strings (bounded by dup volume, not "
-        "the corpus — unique grams never re-attach), so it runs as an "
-        "occasional audit next to the hash-keyed production pass. The "
-        "quantified bound it certifies: with n distinct grams and "
-        "60-bit keys, expected colliding keys ~ n^2/2^61 — at the "
-        "100 TB scale of ~1e12 grams that is ~4e5 keys (0.4 ppm of "
-        "grams falsely marked); an ISOLATED false mark yields an "
-        "8-word extent, below the min_span=16 floor, so it can only "
-        "perturb span output when adjacent to a true span (extending "
-        "it by < 8 words) — see SCALE.md for the full adjudication."
+        "Exact-string verify leg for the duplicated-span family "
+        "(hash-collision honesty): the span queries key word 8-grams by "
+        "60-bit md5-derived hashes, so two DIFFERENT grams colliding on a "
+        "key would be falsely counted as duplicates. This audit "
+        "re-attaches the gram TEXT to exactly the CANDIDATE keys "
+        "(doc-frequency >= 2 — the only keys the span pass ever acts on) "
+        "via a semi-join hash probe, and counts distinct strings per key: "
+        "n_collision_keys = 0 proves the span family's dup marks are "
+        "string-exact on this corpus. Cost shape at 100 TB: the verify "
+        "leg shuffles only the DUPLICATED gram subset's strings (bounded "
+        "by dup volume, not the corpus — unique grams never re-attach), "
+        "so it runs as an occasional audit next to the hash-keyed "
+        "production pass. The quantified bound it certifies: with n "
+        "distinct grams and 60-bit keys, expected colliding keys ~ "
+        "n^2/2^61 — at the 100 TB scale of ~1e12 grams that is ~4e5 keys "
+        "(0.4 ppm of grams falsely marked); an ISOLATED false mark yields "
+        "an 8-word extent, below the min_span=16 floor, so it can only "
+        "perturb span output when adjacent to a true span (extending it "
+        "by < 8 words) — see SCALE.md for the full adjudication."
     ),
 )
 def q_span_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5578,24 +5570,23 @@ def _ce_rerank_sql() -> str:
     "q_crossencoder_rerank",
     oracle=_ce_rerank_sql(),
     description=(
-        "Cross-encoder rerank over the RRF top-k (r10 verdict item 8c "
-        "— completes the retrieval story: lexical leg + vector leg -> "
-        "RRF fusion -> pairwise rerank): the fused top-10 candidates "
-        "are re-scored by a deterministic cross-encoder stand-in that "
-        "sees the (query, document) PAIR jointly — logistic of a fixed "
-        "linear head over pair features (query-term coverage, "
-        "query-term density, query-candidate embedding cosine, and the "
-        "retriever prior), i.e. exactly the late-interaction shape a "
-        "real cross-encoder distills into, with the learned weights "
-        "replaced by pinned constants so the DuckDB oracle replays it "
-        "bit-for-bit (all feature inputs integer or pre-rounded; the "
-        "one exp() is pinned by the 6-dp round like every other libm "
-        "site). Reports old rank, new rank, and the rank delta per "
-        "candidate. The 100 TB shape is the POINT of the two-stage "
-        "pattern: the corpus-scale work is the retriever legs (scan-"
-        "level scoring + TakeOrderedAndProject); the expensive pairwise "
-        "scorer touches exactly k=10 rows — windows, joins, and the "
-        "feature projection all run on a broadcast-sized frame, which "
+        "Cross-encoder rerank over the RRF top-k (completes the retrieval "
+        "story: lexical leg + vector leg -> RRF fusion -> pairwise "
+        "rerank): the fused top-10 candidates are re-scored by a "
+        "deterministic cross-encoder stand-in that sees the (query, "
+        "document) PAIR jointly — logistic of a fixed linear head over "
+        "pair features (query-term coverage, query-term density, "
+        "query-candidate embedding cosine, and the retriever prior), i.e. "
+        "exactly the late-interaction shape a real cross-encoder distills "
+        "into, with the learned weights replaced by pinned constants so "
+        "the DuckDB oracle replays it bit-for-bit (all feature inputs "
+        "integer or pre-rounded; the one exp() is pinned by the 6-dp "
+        "round like every other libm site). Reports old rank, new rank, "
+        "and the rank delta per candidate. The 100 TB shape is the POINT "
+        "of the two-stage pattern: the corpus-scale work is the retriever "
+        "legs (scan-level scoring + TakeOrderedAndProject); the expensive "
+        "pairwise scorer touches exactly k=10 rows — windows, joins, and "
+        "the feature projection all run on a broadcast-sized frame, which "
         "is why production rerankers can afford a transformer there."
     ),
 )
@@ -5695,22 +5686,21 @@ def _curriculum_sql() -> str:
     oracle=_curriculum_sql(),
     description=(
         "Competence-based curriculum ordering (Platanios et al. 2019 "
-        "shape, r10 verdict item 8b): per-doc DIFFICULTY is the mean "
-        "token surprisal ln(N/count(w)) under the corpus's own unigram "
-        "statistics (the signal perplexity curricula actually sort by, "
-        "computed with the registry's exact_avg gridding so the "
-        "bucket-boundary floor decides identically on both engines), "
-        "docs land in 10 equal-width difficulty buckets between the "
-        "observed min/max, and the deterministic schedule grows the "
-        "served prefix per epoch (epoch e of 4 serves buckets < "
-        "ceil(10e/4): 3, 5, 8, then all 10 — easy-to-hard). Reports "
-        "per (epoch, bucket): inclusion, doc/token mass, and the "
-        "epoch's total served tokens — the loader-side table that "
-        "turns a difficulty signal into a batch schedule. Scale shape: "
-        "one word-count pass, one doc-keyed surprisal aggregation, "
-        "1-row min/max broadcast, enum-sized epoch grid — no window "
-        "over the corpus, no sort; the bucketing is a codegen "
-        "projection."
+        "shape): per-doc DIFFICULTY is the mean token surprisal "
+        "ln(N/count(w)) under the corpus's own unigram statistics (the "
+        "signal perplexity curricula actually sort by, computed with the "
+        "registry's exact_avg gridding so the bucket-boundary floor "
+        "decides identically on both engines), docs land in 10 "
+        "equal-width difficulty buckets between the observed min/max, and "
+        "the deterministic schedule grows the served prefix per epoch "
+        "(epoch e of 4 serves buckets < ceil(10e/4): 3, 5, 8, then all 10 "
+        "— easy-to-hard). Reports per (epoch, bucket): inclusion, "
+        "doc/token mass, and the epoch's total served tokens — the "
+        "loader-side table that turns a difficulty signal into a batch "
+        "schedule. Scale shape: one word-count pass, one doc-keyed "
+        "surprisal aggregation, 1-row min/max broadcast, enum-sized epoch "
+        "grid — no window over the corpus, no sort; the bucketing is a "
+        "codegen projection."
     ),
 )
 def q_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5813,30 +5803,28 @@ _SHUFFLE_SHARD_TOKENS = 1024
     FROM man JOIN mix USING (shard_id)
     """,
     description=(
-        "Deterministic training-order shuffle + shard manifest (r11 "
-        "verdict item 4) — the loader-side step between "
-        "q_token_shard_packing and an actual training run: every "
-        "document gets a seed-keyed 60-bit hash rank "
-        "(md5('seed:' || doc_id) — re-seeding is a one-string change "
-        "and reshuffles the whole corpus deterministically), the hash "
-        "order interleaves sources uniformly by construction (no "
-        "source-run clumping, the thing a sequential-by-source scan "
-        "would cause), and documents pack into fixed-token-budget "
-        "shards along the exact distributed prefix sum "
-        "(operators/prefix_sum.running_sum: range partition -> "
-        "per-range window + broadcast offsets — NO single-partition "
-        "stage and NO global sort; the hash rank IS the order, so the "
-        "range exchange on (h, doc_id) is the only corpus-wide "
-        "movement). Emits the shard manifest a loader consumes: "
-        "shard_id, n_docs, n_tokens, source mix (n_sources + "
+        "Deterministic training-order shuffle + shard manifest: the "
+        "loader-side step between q_token_shard_packing and an actual "
+        "training run: every document gets a seed-keyed 60-bit hash rank "
+        "(md5('seed:' || doc_id) — re-seeding is a one-string change and "
+        "reshuffles the whole corpus deterministically), the hash order "
+        "interleaves sources uniformly by construction (no source-run "
+        "clumping, the thing a sequential-by-source scan would cause), "
+        "and documents pack into fixed-token-budget shards along the "
+        "exact distributed prefix sum (operators/prefix_sum.running_sum: "
+        "range partition -> per-range window + broadcast offsets — NO "
+        "single-partition stage and NO global sort; the hash rank IS the "
+        "order, so the range exchange on (h, doc_id) is the only "
+        "corpus-wide movement). Emits the shard manifest a loader "
+        "consumes: shard_id, n_docs, n_tokens, source mix (n_sources + "
         "max_source_docs, exact integers — no float ratio to drift "
-        "cross-engine), and first_h (the resume cursor: a loader "
-        "seeking shard k starts at its first hash rank). Upstream "
-        "mixture weighting composes: run the epoch-capped mixture "
-        "query first and feed its kept set through this order. "
-        "100 TB: the seed-keyed hash is embarrassingly parallel, the "
-        "prefix sum is two bounded exchanges, and the manifest agg is "
-        "shard-keyed — nothing scales worse than a word count."
+        "cross-engine), and first_h (the resume cursor: a loader seeking "
+        "shard k starts at its first hash rank). Upstream mixture "
+        "weighting composes: run the epoch-capped mixture query first and "
+        "feed its kept set through this order. 100 TB: the seed-keyed "
+        "hash is embarrassingly parallel, the prefix sum is two bounded "
+        "exchanges, and the manifest agg is shard-keyed — nothing scales "
+        "worse than a word count."
     ),
 )
 def q_training_order_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,7 +34,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from duva_spark.catalog import load_table
+from duva_spark.operators.asof import asof_join
 from duva_spark.operators.quantile import quantile_cont_row
+from duva_spark.operators.topk import top_k_per_group
 from duva_spark.queries import exact_avg, exact_sum_round, exact_sum_round_sql, money_cents, register
 
 # ---------------------------------------------------------------------------
@@ -60,15 +62,14 @@ from duva_spark.queries import exact_avg, exact_sum_round, exact_sum_round_sql, 
     """,
     headline=True,
     description=(
-        "TPC-H Q1-shaped pricing summary: filter → hash agg (8 aggregates) "
-        "over lineitem. Currency sums use scaled-integer (cents) LONG "
-        "arithmetic: the 2/4/6-dp money values scale to exact integers, so "
-        "the sum is associative (identical under any partial-agg order — "
-        "double sums drift at sf0.1) at long-sum speed, faster than "
-        "decimal aggregation on this agg-dominated scan. The conversion is "
-        "money_cents (floor, codegen) — the r2 F.round(double) path "
-        "allocated a BigDecimal per row and cost 1.5× of the whole query "
-        "(the r2→r1 q01 bench regression, A/B'd same-host this round)."
+        "TPC-H Q1-shaped pricing summary: filter → hash agg (8 "
+        "aggregates) over lineitem. Currency sums use scaled-integer "
+        "(cents) LONG arithmetic: the 2/4/6-dp money values scale to "
+        "exact integers, so the sum is associative (identical under any "
+        "partial-agg order — double sums drift at sf0.1) at long-sum "
+        "speed, faster than decimal aggregation on this agg-dominated "
+        "scan. The conversion is money_cents (floor, codegen), where "
+        "F.round on a double allocates a BigDecimal per row."
     ),
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -414,48 +415,29 @@ def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed as-of join via the union-sort-fill pattern.
+    purchases, views = _purchases_and_views(spark, sf_dir)
+    return asof_join(purchases, views, "user_id", "ts").select(
+        "purchase_id",
+        "user_id",
+        F.col("asof_view_id").alias("last_view_id"),
+        F.round("purchase_value", 4).alias("purchase_value"),
+    )
 
-    Both sides are unioned with a side tag, hash-partitioned by the join
-    key, sorted by (ts, side) within the key, and the right side's payload
-    is carried forward with last(..., ignoreNulls) — one shuffle total,
-    linear in |L|+|R|, robust to 100 TB (vs. a range join which is
-    quadratic per key). Right rows sort before left rows at equal ts so
-    `>=` (inclusive) as-of semantics hold.
-    """
+
+def _purchases_and_views(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The two as-of join sides over events: purchases ``(user_id, ts,
+    purchase_id, purchase_value)`` and views ``(user_id, ts, view_id)``."""
     ev = load_table(spark, sf_dir, "events")
-    left = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id"),
-        F.col("ts"),
-        F.lit(1).alias("side"),
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        "ts",
         F.col("event_id").alias("purchase_id"),
         F.col("value").alias("purchase_value"),
-        F.lit(None).cast("long").alias("view_id"),
     )
-    right = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id"),
-        F.col("ts"),
-        F.lit(0).alias("side"),
-        F.lit(None).cast("long").alias("purchase_id"),
-        F.lit(None).cast("double").alias("purchase_value"),
-        F.col("event_id").alias("view_id"),
+    views = ev.filter(F.col("event_type") == "view").select(
+        "user_id", "ts", F.col("event_id").alias("view_id")
     )
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "side", "view_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        left.unionByName(right)
-        .withColumn("last_view_id", F.last("view_id", ignorenulls=True).over(w))
-        .filter(F.col("side") == 1)
-        .select(
-            "purchase_id",
-            "user_id",
-            "last_view_id",
-            F.round("purchase_value", 4).alias("purchase_value"),
-        )
-    )
+    return purchases, views
 
 
 # ---------------------------------------------------------------------------
@@ -908,12 +890,9 @@ def q_window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    w = W.partitionBy("o_orderpriority").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("o_orderpriority", "o_orderkey", "o_totalprice")
-    )
+    return top_k_per_group(
+        orders, ["o_orderpriority"], [F.desc("o_totalprice"), F.asc("o_orderkey")], 3
+    ).select("o_orderpriority", "o_orderkey", "o_totalprice")
 
 
 @register(
@@ -1862,9 +1841,8 @@ def q_heavy_hitter_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     description=(
         "Collection aggregates: collect_set (sorted for determinism) + "
         "cardinality. The set is emitted CSV-joined to a string — the "
-        "driver's pandas canonicalizer cannot hash raw array cells "
-        "(r2 verdict item #2); the array-native form is one concat_ws "
-        "away."
+        "driver's pandas canonicalizer cannot hash raw array cells; the "
+        "array-native form is one concat_ws away."
     ),
 )
 def q_agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2798,10 +2776,10 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "a shuffle strategy (AQE skew split vs operators/skew.salted_join "
         "vs broadcast). Per-key counts, then distribution stats over the "
         "count frame; the second pass sees |keys| rows, not data. The "
-        "p50/p99 come from operators/quantile.quantile_cont_row (prefix-"
-        "sum rank lookup) rather than a single-group exact percentile, "
-        "so no reducer buffers the O(keys) count vector (r2 verdict "
-        "scale item #4 — at 100 TB |l_partkey| is billions)."
+        "p50/p99 come from operators/quantile.quantile_cont_row "
+        "(prefix-sum rank lookup) rather than a single-group exact "
+        "percentile, so no reducer buffers the O(keys) count vector (at "
+        "100 TB |l_partkey| is billions)."
     ),
 )
 def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3445,40 +3423,12 @@ def q_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    left = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id"),
-        F.col("ts"),
-        F.lit(0).alias("side"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-        F.lit(None).cast("long").alias("view_id"),
-    )
-    right = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id"),
-        F.col("ts"),
-        F.lit(1).alias("side"),
-        F.lit(None).cast("long").alias("purchase_id"),
-        F.lit(None).cast("double").alias("purchase_value"),
-        F.col("event_id").alias("view_id"),
-    )
-    # left sorts BEFORE right at equal ts (side 0 < 1) so the FOLLOWING
-    # frame includes same-timestamp views; view_id pins right-side ties.
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "side", "view_id")
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    return (
-        left.unionByName(right)
-        .withColumn("next_view_id", F.first("view_id", ignorenulls=True).over(w))
-        .filter(F.col("side") == 0)
-        .select(
-            "purchase_id",
-            "user_id",
-            "next_view_id",
-            F.round("purchase_value", 4).alias("purchase_value"),
-        )
+    purchases, views = _purchases_and_views(spark, sf_dir)
+    return asof_join(purchases, views, "user_id", "ts", direction="forward").select(
+        "purchase_id",
+        "user_id",
+        F.col("asof_view_id").alias("next_view_id"),
+        F.round("purchase_value", 4).alias("purchase_value"),
     )
 
 
@@ -4183,14 +4133,13 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Rate-limit / abuse census: per-user hourly event counts, "
         "reporting peak rate and how many hours exceeded the hourly "
         "quota. The quota (1/hour) is deliberately low relative to the "
-        "synthetic corpus's event rate so the HAVING/breach path "
-        "returns rows — and is value-checked — at EVERY test SF (with "
-        "the original 10/hour nothing breaches below sf1 and the gate "
-        "was vacuous, r3 advice). Two aggregations, both keyed by "
-        "user_id — Catalyst collapses them onto one exchange; the "
-        "hourly frame is users x active-hours regardless of corpus "
-        "size. The batch audit twin of a streaming quota enforcer "
-        "(tumbling window + filter on the same keys)."
+        "synthetic corpus's event rate so the HAVING/breach path returns "
+        "rows — and is value-checked — at EVERY test SF (at 10/hour "
+        "nothing breaches below sf1). Two aggregations, both keyed by "
+        "user_id — Catalyst collapses them onto one exchange; the hourly "
+        "frame is users x active-hours regardless of corpus size. The "
+        "batch audit twin of a streaming quota enforcer (tumbling window "
+        "+ filter on the same keys)."
     ),
 )
 def q_rate_limit_breaches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4233,17 +4182,15 @@ def q_rate_limit_breaches(spark: SparkSession, sf_dir: str) -> DataFrame:
     description=(
         "Time-to-convert: per-user first view -> first purchase latency "
         "in exact integer microseconds, summarized as p50/p90 across "
-        "converting users. The firsts come from ONE conditional-MIN "
-        "pass keyed by user (no join between event types, no window "
-        "over raw events). Both engines FLOOR the interpolated quantile "
-        "before the integer cast — floor is the one rounding op with "
-        "identical semantics in Spark and DuckDB (r2 verdict: Spark "
-        "cast-long truncates where DuckDB CAST rounds, a 1 µs p90 "
-        "mismatch at sf0.01). The quantiles come from "
+        "converting users. The firsts come from ONE conditional-MIN pass "
+        "keyed by user (no join between event types, no window over raw "
+        "events). Both engines FLOOR the interpolated quantile before the "
+        "integer cast — floor is the one rounding op with identical "
+        "semantics in Spark and DuckDB (Spark's cast to long truncates "
+        "where DuckDB's CAST rounds). The quantiles come from "
         "operators/quantile.quantile_cont_row — per-value counts + "
         "distributed prefix sum + broadcast rank lookup — so no single "
-        "reducer ever buffers the O(users) latency vector (r2 verdict "
-        "scale item #4)."
+        "reducer ever buffers the O(users) latency vector."
     ),
 )
 def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -725,25 +725,24 @@ def _stream_cms_oracle() -> str:
     "q_stream_true_cms_sketch",
     oracle=_stream_cms_oracle(),
     description=(
-        "TRUE streaming Count-Min Sketch build under the value-hash "
-        "gate (r11 verdict item 3) — completes the streaming-sketch "
-        "symmetry next to q_stream_true_hll_sketch: documents arrive "
-        "through a real readStream file source, the token stream "
-        "explodes onto the FIXED D=4 x W=1024 bucket universe, and the "
-        "per-(row, bucket) COUNT runs as a streaming complete-mode "
-        "aggregation — SUMs are mergeable exactly like the HLL MAX, so "
-        "state is bounded by D*W = 4096 rows at ANY stream length — "
-        "through Trigger.AvailableNow into a memory sink. The "
-        "stream-built sketch is then (1) compared BUCKET BY BUCKET "
-        "(null-safe full-outer join) against the batch sketch "
-        "(n_bucket_mismatch = 0 proven on data, not asserted — "
-        "count addition is associative/commutative so micro-batch "
-        "replay is bit-identical by construction) and (2) point-queried "
-        "for every exact heavy hitter (> n/32), reporting the one-sided "
-        "CMS overestimate from the STREAM sketch. 100 TB: this is how "
-        "a continuous pipeline maintains token-frequency telemetry "
-        "without a word count's near-unique-tail shuffle — bounded "
-        "state, bounded exchange, estimates on demand."
+        "True streaming Count-Min Sketch build under the value-hash gate; "
+        "completes the streaming-sketch symmetry next to "
+        "q_stream_true_hll_sketch: documents arrive through a real "
+        "readStream file source, the token stream explodes onto the FIXED "
+        "D=4 x W=1024 bucket universe, and the per-(row, bucket) COUNT "
+        "runs as a streaming complete-mode aggregation — SUMs are "
+        "mergeable exactly like the HLL MAX, so state is bounded by D*W = "
+        "4096 rows at ANY stream length — through Trigger.AvailableNow "
+        "into a memory sink. The stream-built sketch is then (1) compared "
+        "BUCKET BY BUCKET (null-safe full-outer join) against the batch "
+        "sketch (n_bucket_mismatch = 0 proven on data, not asserted — "
+        "count addition is associative/commutative so micro-batch replay "
+        "is bit-identical by construction) and (2) point-queried for "
+        "every exact heavy hitter (> n/32), reporting the one-sided CMS "
+        "overestimate from the STREAM sketch. 100 TB: this is how a "
+        "continuous pipeline maintains token-frequency telemetry without "
+        "a word count's near-unique-tail shuffle — bounded state, bounded "
+        "exchange, estimates on demand."
     ),
 )
 def q_stream_true_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -163,11 +163,16 @@ class _Projection:
                 expr = selected
             self.with_column(f"{question}{sep}{choice}", expr)
 
+    def source(self) -> DataFrame:
+        """``df`` as the generated SQL reads it: under its stand-in names
+        when it has them."""
+        return self._df.toDF(*self._stand_ins) if self._stand_ins else self._df
+
     def select(self) -> DataFrame:
         """The one ``selectExpr``; ``df`` itself when nothing changed."""
         if self.exprs == self._identity and self.names == self._in_names:
             return self._df
-        src = self._df.toDF(*self._stand_ins) if self._stand_ins else self._df
+        src = self.source()
         if _unquotable(self.names):
             return src.selectExpr(
                 [f"{e} AS `_o{i}`" for i, e in enumerate(self.exprs)]
@@ -305,9 +310,12 @@ def apply_export_settings(
     reviews: DataFrame | None = None,
 ) -> DataFrame:
     """Apply the full settings bundle in the reference's effective order:
-    select-multiple split → group flatten → review join → label rename.
+    select-multiple split → group flatten → review join → labels.
     Everything but the review join is one projection; with a join, the
-    label rename is a second one over the joined frame."""
+    label rename is a second one over the joined frame. Labels replace
+    the names (``include_labels_only``) or, with ``include_labels``
+    alone, ride along as column metadata (`attach_labels_metadata`);
+    either way they are keyed by the names after flattening."""
     proj = _Projection(df)
     if not settings.do_not_split_select_multiple:
         for q, choices in (select_multiples or {}).items():
@@ -324,10 +332,14 @@ def apply_export_settings(
     labels = question_labels if settings.include_labels_only else None
     if settings.include_reviews and reviews is not None:
         out = join_reviews(proj.select(), reviews)
-        return rename_to_labels(out, labels) if labels else out
-    if labels:
-        proj.rename(lambda c: labels.get(c, c))
-    return proj.select()
+        out = rename_to_labels(out, labels) if labels else out
+    else:
+        if labels:
+            proj.rename(lambda c: labels.get(c, c))
+        out = proj.select()
+    if settings.include_labels and not settings.include_labels_only and question_labels:
+        out = attach_labels_metadata(out, question_labels)
+    return out
 
 
 def attach_labels_metadata(df: DataFrame, labels: dict[str, str]) -> DataFrame:
@@ -335,18 +347,19 @@ def attach_labels_metadata(df: DataFrame, labels: dict[str, str]) -> DataFrame:
     names as column names and carry the labels alongside
     (app/schemas/configuration.py:7-8 — the CSV export emits labels as an
     extra header row; the DataFrame-native equivalent is column
-    metadata, which survives Parquet round-trips). One projection: a
-    labelled column is re-aliased with ``{"label": ...}`` as its
-    metadata, the rest pass through."""
+    metadata, which survives Parquet round-trips). One projection: every
+    column named by a key of ``labels`` is re-aliased with
+    ``{"label": ...}`` as its metadata, the rest pass through. Columns
+    are taken by position, through `_Projection`'s stand-in names when
+    two of them resolve alike, so each duplicate is labelled too."""
     columns = df.columns
     if not any(c in labels for c in columns):
         return df
-    return df.select(
+    proj = _Projection(df)
+    return proj.source().select(
         *[
-            F.col(quote_ident(c)).alias(c, metadata={"label": labels[c]})
-            if c in labels
-            else quote_ident(c)
-            for c in columns
+            F.col(ident).alias(c, metadata={"label": labels[c]} if c in labels else None)
+            for ident, c in zip(proj.exprs, columns)
         ]
     )
 

@@ -1,14 +1,12 @@
 """Sinks: versioned Parquet datasets with one commit protocol, mirroring
-duva's drop-and-recreate semantics, and the S3 artifact layout.
+duva's drop-and-recreate semantics.
 
 Reference behavior reproduced:
 - full refresh: CREATE_AND_REPLACE drop-and-recreate per sync — schema
   drift between syncs is tolerated (app/core/importer.py:242-249) →
   full_refresh commits the new frame as the next version;
 - COPY returns the loaded row count, the only metric duva reports
-  (app/core/importer.py:251-256) → returned by every writer;
-- artifact key layout ``{server_id}/{username}/{form_id}_{filename}``
-  (app/crud/crud_hyperfile.py:84-85) → dataset_path.
+  (app/core/importer.py:251-256) → returned by every writer.
 
 Commit protocol: every writer here (full_refresh, merge_upsert,
 delete_where, compact) goes through `_commit`. It writes a NEW immutable
@@ -39,10 +37,6 @@ from pyspark.sql import DataFrame
 from duva_spark.catalog import table_schema
 
 CURRENT_POINTER = "_CURRENT"
-
-
-def dataset_path(root: str, server_id: str | int, username: str, form_id: str | int) -> str:
-    return f"{root.rstrip('/')}/{server_id}/{username}/{form_id}"
 
 
 def _current_version(path: str) -> int | None:

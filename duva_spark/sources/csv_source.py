@@ -15,9 +15,7 @@ Differences by design (Spark-first, not a port):
 - no triple materialization (duva: CSV → pandas → rewritten CSV → COPY;
   here: one distributed read, importer.py:61-73 vs df = read.csv);
 - inference runs on Spark's distributed sampler, not a driver-side pandas
-  load of the whole file;
-- `widen_types=True` additionally infers boolean/date/timestamp (types
-  Hyper supports but duva's mapping collapses to TEXT).
+  load of the whole file.
 """
 
 from __future__ import annotations
@@ -61,9 +59,7 @@ def _collapse_to_duva_types(schema: T.StructType) -> T.StructType:
     return T.StructType(fields)
 
 
-def infer_csv_schema(
-    spark: SparkSession, path: str, widen_types: bool = False
-) -> T.StructType:
+def infer_csv_schema(spark: SparkSession, path: str) -> T.StructType:
     inferred = (
         spark.read.option("header", True)
         .option("inferSchema", True)
@@ -72,14 +68,11 @@ def infer_csv_schema(
         .csv(path)
         .schema
     )
-    return inferred if widen_types else _collapse_to_duva_types(inferred)
+    return _collapse_to_duva_types(inferred)
 
 
 def read_csv_duva(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    widen_types: bool = False,
+    spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
     """Read a CSV the way duva ingests an OnaData export.
 
@@ -90,7 +83,7 @@ def read_csv_duva(
     - empty input (no data rows) raises EmptyInputError.
     """
     if schema is None:
-        schema = infer_csv_schema(spark, path, widen_types)
+        schema = infer_csv_schema(spark, path)
     df = (
         spark.read.option("header", True)
         .option("nullValue", "n/a")

@@ -29,13 +29,20 @@ replays of the spec, so tests assert kernel == fold value-for-value:
   rename chain the export shaping used to build, one DataFrame call per
   step, against production's single projection. Renames are positional
   (``toDF``) and keep a column's old name when its target is taken.
+
+Two reference plans sit beside the folds: ``curation_funnel_handwritten``
+(the hand-built canonical funnel that ``funnel.compile_funnel`` must
+reproduce row-for-row) and ``group_ols_slope`` (the ``applyInPandas``
+twin of ``pandas_ops.slope_grouped_agg``).
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from duva_spark.llm.bpe import greedy_merge, symbolize
+from duva_spark.llm.funnel import FUNNEL_STAGES, funnel_features
 from duva_spark.llm.similarity import _hyperplane, dot, norm
 from duva_spark.llm.textstats import (
     GOPHER_DUP_NGRAM_MAX,
@@ -428,7 +435,7 @@ def apply_export_settings_fold(
     reviews: DataFrame | None = None,
 ) -> DataFrame:
     """select-multiple split → group flatten → review join → label
-    rename, one ``withColumn`` per split column."""
+    rename or label metadata, one ``withColumn`` per split column."""
     out = df
     if not settings.do_not_split_select_multiple:
         for q, choices in (select_multiples or {}).items():
@@ -446,4 +453,101 @@ def apply_export_settings_fold(
         out = out.join(F.broadcast(reviews), on="_id", how="left")
     if settings.include_labels_only and question_labels:
         out = _rename_fold(out, lambda c: question_labels.get(c, c))
+    elif settings.include_labels and question_labels:
+        out = _labels_metadata_fold(out, question_labels)
     return out
+
+
+def _labels_metadata_fold(df: DataFrame, labels: dict[str, str]) -> DataFrame:
+    """Every column named by a key of ``labels`` gets ``{"label": ...}``
+    as its metadata, one ``withMetadata`` per column over positional
+    stand-in names."""
+    names = df.columns
+    out = df.toDF(*[f"_l{i}" for i in range(len(names))])
+    for i, c in enumerate(names):
+        if c in labels:
+            out = out.withMetadata(f"_l{i}", {"label": labels[c]})
+    return out.toDF(*names)
+
+
+def curation_funnel_handwritten(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """The original hand-built plan of ``funnel.curation_funnel``: the
+    compiler must reproduce it row-for-row."""
+    feats = funnel_features(docs, id_col, text_col)
+    b2 = F.col("h") >= 10
+    b3 = b2 & F.col("pass_gopher")
+    b4 = b3 & F.col("pass_repetition")
+    flags = feats.select(
+        id_col,
+        "ch",
+        "fp",
+        b2.alias("b2"),
+        b3.alias("b3"),
+        b4.alias("b4"),
+        F.col("cont"),
+    )
+    w_ch, w_fp = W.partitionBy("ch"), W.partitionBy("fp")
+    flags = (
+        flags.withColumn(
+            "b5",
+            F.col("b4")
+            & (F.col(id_col) == F.min(F.when(F.col("b4"), F.col(id_col))).over(w_ch)),
+        )
+        .withColumn(
+            "b6",
+            F.col("b5")
+            & (F.col(id_col) == F.min(F.when(F.col("b5"), F.col(id_col))).over(w_fp)),
+        )
+        .withColumn("b7", F.col("b6") & ~F.col("cont"))
+    )
+    agg = flags.agg(
+        F.count("*").alias("n1"),
+        *[
+            F.coalesce(F.sum(F.col(f"b{k}").cast("long")), F.lit(0)).alias(f"n{k}")
+            for k in range(2, 8)
+        ],
+    )
+    stages = []
+    for k, stage in enumerate(FUNNEL_STAGES, start=1):
+        src = F.col(f"n{k - 1}" if k > 1 else "n1")
+        out = F.col(f"n{k}")
+        stages.append(
+            F.struct(
+                F.lit(k).cast("long").alias("stage_ord"),
+                F.lit(stage).alias("stage"),
+                src.alias("docs_in"),
+                out.alias("docs_out"),
+                (src - out).alias("dropped"),
+                F.when(src > 0, F.round(out / src, 6)).otherwise(F.lit(0.0)).alias("retention"),
+                F.when(F.col("n1") > 0, F.round(out / F.col("n1"), 6))
+                .otherwise(F.lit(0.0))
+                .alias("cum_retention"),
+            )
+        )
+    return (
+        agg.select(F.explode(F.array(*stages)).alias("s"))
+        .select("s.*")
+        .orderBy("stage_ord")
+    )
+
+
+def group_ols_slope(
+    df: DataFrame, group_cols: list[str], x_col: str, y_col: str
+) -> DataFrame:
+    """OLS slope of y on x per group via ``groupBy().applyInPandas``:
+    the reference for ``pandas_ops.slope_grouped_agg``."""
+    out_schema = (
+        ", ".join(f"{c} string" for c in group_cols) + ", slope double, n bigint"
+    )
+
+    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+        x, y = pdf[x_col].astype(float), pdf[y_col].astype(float)
+        dx = x - x.mean()
+        denom = float((dx * dx).sum())
+        slope = float((dx * (y - y.mean())).sum() / denom) if denom else float("nan")
+        head = {c: [pdf[c].iloc[0]] for c in group_cols}
+        return pd.DataFrame({**head, "slope": [slope], "n": [len(pdf)]})
+
+    return df.groupBy(*group_cols).applyInPandas(fit, out_schema)

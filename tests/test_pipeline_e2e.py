@@ -141,10 +141,8 @@ def test_compiled_funnel_equals_handwritten(spark):
     """The declarative compiler must reproduce the hand-built canonical
     plan row-for-row on a corpus with every stage exercised (dupes,
     near-dupes, low-quality docs, contaminated docs)."""
-    from duva_spark.llm.funnel import (
-        curation_funnel,
-        curation_funnel_handwritten,
-    )
+    from duva_spark.llm.funnel import curation_funnel
+    from reference_folds import curation_funnel_handwritten
 
     rows = []
     filler = " ".join(f"w{i % 13} and the of" for i in range(20))

@@ -38,7 +38,7 @@ def test_asof_join_matches_pandas_merge_asof(spark):
     sl = spark.createDataFrame(left.astype({"k": "int64", "t": "int64"}))
     sr = spark.createDataFrame(right.astype({"k": "int64", "t": "int64"}))
     got = (
-        asof_join(sl, sr, on="k", ts="t", payload_cols=["v"])
+        asof_join(sl, sr, on="k", ts="t")
         .toPandas()
         .sort_values("lid")
         .reset_index(drop=True)

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 import duva_spark
 from duva_spark.catalog import load_table
-from duva_spark.layout import read_table, write_bucketed, write_partitioned_by_day
+from duva_spark.layout import write_bucketed
 from duva_spark.operators import asof_join, salted_join, top_k_per_group
 from duva_spark.operators.parallel import run_parallel
 
@@ -30,9 +30,12 @@ def _explain(df, mode="formatted") -> str:
 
 
 def test_partition_pruning(spark, sf_dir, tmp_path):
+    from duva_spark.sinks import full_refresh, read_dataset
+
     out = str(tmp_path / "events_by_day")
-    write_partitioned_by_day(load_table(spark, sf_dir, "events"), out)
-    df = spark.read.parquet(out).filter(F.col("dt") == "2024-01-05")
+    events = load_table(spark, sf_dir, "events")
+    full_refresh(events.withColumn("dt", F.to_date("ts")), out, partition_by=["dt"])
+    df = read_dataset(spark, out).filter(F.col("dt") == "2024-01-05")
     plan = _explain(df)
     assert "PartitionFilters: [isnotnull(dt" in plan  # pruned at the scan
     assert df.count() > 0
@@ -48,7 +51,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
         write_bucketed(
             cust.withColumnRenamed("c_custkey", "o_custkey"), "b_customer", "o_custkey", 8
         )
-        joined = read_table(spark, "b_orders").join(read_table(spark, "b_customer"), "o_custkey")
+        joined = spark.table("b_orders").join(spark.table("b_customer"), "o_custkey")
         plan = _explain(joined, "simple")
         assert "Exchange hashpartitioning" not in plan  # buckets co-located
         assert joined.count() > 0
@@ -105,7 +108,8 @@ def test_top_k_per_group_operator(spark, sf_dir):
 
 
 def test_apply_in_pandas_slope_matches_grouped_agg(spark, sf_dir):
-    from duva_spark.operators.pandas_ops import group_ols_slope, slope_grouped_agg
+    from duva_spark.operators.pandas_ops import slope_grouped_agg
+    from reference_folds import group_ols_slope
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.col("value").alias("y"), F.col("user_id").cast("double").alias("x")

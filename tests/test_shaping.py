@@ -294,6 +294,31 @@ def test_apply_export_settings_equals_fold(spark, wide, settings, variant):
     )
 
 
+@pytest.mark.parametrize("variant", ["plain", "names-with-${", "duplicate-name"])
+def test_include_labels_attaches_label_metadata(spark, wide, variant):
+    """include_labels without include_labels_only keeps the column names
+    and carries each question label as column metadata, keyed by the
+    names after flattening (``g1/x`` → ``x``; ``g2/x`` keeps its name);
+    both ``respondent`` columns of the duplicate frame are labelled.
+    With include_labels off, no label is attached."""
+    from duva_spark.shaping.ops import labels_of
+
+    frame, choices, _, question_labels = _variant(wide, variant)
+    kwargs = dict(question_labels=question_labels, select_multiples={"grp/services": choices})
+    out = apply_export_settings(frame, ExportSettings(include_labels_only=False), **kwargs)
+    assert labels_of(out) == {
+        "respondent": "Name",
+        "gender": question_labels["gender"],
+        "x": "X?",
+    }
+    n_respondent = 2 if variant == "duplicate-name" else 1
+    labelled = [f.metadata.get("label") for f in out.schema.fields if f.name == "respondent"]
+    assert labelled == ["Name"] * n_respondent
+    assert "g2/x" in out.columns and "Name" not in out.columns
+    off = ExportSettings(include_labels=False, include_labels_only=False)
+    assert labels_of(apply_export_settings(frame, off, **kwargs)) == {}
+
+
 def test_split_keeps_dollar_brace_text_as_written(spark, wide):
     frame, choices, labels, _ = _variant(wide, "names-with-${")
     out = split_select_multiple(frame, "grp/services", choices, choice_labels=labels)

@@ -13,7 +13,6 @@ from pyspark.sql import types as T
 
 from duva_spark.sources.csv_source import (
     EmptyInputError,
-    infer_csv_schema,
     read_csv_duva,
     schema_from_form,
 )
@@ -50,12 +49,6 @@ def test_three_type_universe(spark, csv_path):
     assert schema["consented"] == T.StringType()
     assert schema["visit_date"] == T.StringType()
     assert schema["respondent_name"] == T.StringType()
-
-
-def test_widened_types(spark, csv_path):
-    schema = {f.name: f.dataType for f in infer_csv_schema(spark, csv_path, widen_types=True).fields}
-    assert schema["visit_date"] in (T.DateType(), T.TimestampType())
-    assert schema["consented"] in (T.BooleanType(), T.StringType())
 
 
 def test_empty_input_aborts(spark, tmp_path):
@@ -259,280 +252,13 @@ def test_pointer_time_travel_and_vacuum(spark, tmp_path):
     assert {r._id for r in read_dataset(spark, out).collect()} == {1, 2, 3, 4}
 
 
-# ---------------------------------------------------------------------------
-# PySpark 4 Python DataSource: spark.read.format("onadata")
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture()
-def onadata_server():
-    """Live HTTP server speaking the reference's async-export protocol:
-    poll 1 answers a job_uuid, poll 2 (with the uuid re-attached) answers
-    SUCCESS + export_url, which serves the CSV (with S4 null tokens)."""
-    import json as _json
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-    csv_body = (
-        "name,age,score,notes\n"
-        "alice,34,1.5,ok\n"
-        "bob,n/a,2.25,\n"
-        "carol,41,,fine\n"
-        + "".join(f"u{i},{i},{i}.5,x\n" for i in range(50))
-    )
-    state = {"polls": 0}
-
-    class Handler(BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
-        def do_GET(self):
-            if self.path.startswith("/export_async"):
-                state["polls"] += 1
-                if "job_uuid" not in self.path:
-                    payload = {"job_uuid": "abc123"}
-                else:
-                    base = f"http://127.0.0.1:{self.server.server_address[1]}"
-                    payload = {"job_status": "SUCCESS", "export_url": f"{base}/data.csv"}
-                body = _json.dumps(payload).encode()
-                self.send_response(202)
-            else:
-                body = csv_body.encode()
-                self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    yield f"http://127.0.0.1:{server.server_address[1]}", state
-    server.shutdown()
-
-
-@pytest.mark.slow
-def test_onadata_datasource_end_to_end(spark, onadata_server):
-    """format('onadata') polls the async export, downloads with the retry
-    client, infers the 3-type universe, normalizes S4 nulls, and parses
-    in parallel line-range partitions on the executors."""
-    from duva_spark.sources.datasource import OnaDataSource
-
-    base, state = onadata_server
-    spark.dataSource.register(OnaDataSource)
-    df = (
-        spark.read.format("onadata")
-        .option("export_url", f"{base}/export_async?format=csv")
-        .option("partitions", "4")
-        .load()
-    )
-    assert [f.dataType.simpleString() for f in df.schema.fields] == [
-        "string", "bigint", "double", "string",
-    ]
-    assert df.rdd.getNumPartitions() == 4  # distributed parse
-    rows = {r["name"]: r for r in df.collect()}
-    assert len(rows) == 53
-    assert rows["bob"]["age"] is None and rows["bob"]["notes"] is None  # S4
-    assert rows["carol"]["score"] is None
-    assert rows["alice"]["age"] == 34 and rows["alice"]["score"] == 1.5
-    assert state["polls"] == 2  # job_uuid round-trip happened
-
-
-def test_onadata_datasource_local_path(spark, tmp_path):
-    from duva_spark.sources.datasource import OnaDataSource
-
-    p = tmp_path / "x.csv"
-    p.write_text("k,v\n1,a\n2,n/a\n")
-    spark.dataSource.register(OnaDataSource)
-    df = spark.read.format("onadata").option("path", str(p)).load()
-    got = sorted((r.k, r.v) for r in df.collect())
-    assert got == [(1, "a"), (2, None)]
-
-
-def test_onadata_streaming_source_incremental(spark):
-    """readStream.format('onadata'): each microbatch refetches the export
-    and emits only rows past the committed offset — the incremental
-    recast of the reference's full-refresh cron sync. Growing the
-    upstream export between processAllAvailable calls must append
-    exactly the new rows, no duplicates."""
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-    from duva_spark.sources.datasource import OnaDataSource
-
-    rows = ["1,a", "2,b"]
-
-    class Handler(BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
-        def do_GET(self):
-            body = ("k,v\n" + "\n".join(rows) + "\n").encode()
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    base = f"http://127.0.0.1:{server.server_address[1]}"
-    spark.dataSource.register(OnaDataSource)
-    spark.catalog.dropTempView("onastream") if "onastream" in [
-        t.name for t in spark.catalog.listTables()
-    ] else None
-    q = (
-        spark.readStream.format("onadata")
-        .schema("k long, v string")
-        .option("url", f"{base}/data.csv")
-        .load()
-        .writeStream.format("memory")
-        .queryName("onastream")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert sorted(
-            (r.k, r.v) for r in spark.table("onastream").collect()
-        ) == [(1, "a"), (2, "b")]
-        rows.append("3,n/a")
-        rows.append("4,d")
-        q.processAllAvailable()
-        assert sorted(
-            (r.k, r.v) for r in spark.table("onastream").collect()
-        ) == [(1, "a"), (2, "b"), (3, None), (4, "d")]
-    finally:
-        q.stop()
-        server.shutdown()
-
-
-@pytest.mark.slow
-def test_duva_artifact_writer_commit_contract(spark, tmp_path):
-    """Task-parallel shard write + atomic driver commit: the artifact
-    lands under the K2 key layout, _ROWCOUNT carries the summed task
-    counts (the S9 COPY contract), Nones round-trip as 'n/a', and a
-    repeat write drop-and-recreates (S8)."""
-    import os
-
-    from duva_spark.sources.datasource import DuvaArtifactSink
-
-    spark.dataSource.register(DuvaArtifactSink)
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, "c"), (4, "d")], "k long, v string"
-    ).repartition(3)
-    (
-        df.write.format("duva_artifact")
-        .option("path", str(tmp_path))
-        .option("server_id", "7")
-        .option("username", "bob")
-        .option("form_id", "42")
-        .mode("append")
-        .save()
-    )
-    final = tmp_path / "7" / "bob" / "42"
-    assert (final / "_ROWCOUNT").read_text() == "4"
-    shards = [f for f in os.listdir(final) if f.startswith("part-")]
-    assert len(shards) == 3  # one per task
-    body = "".join((final / s).read_text() for s in shards)
-    assert "2,n/a" in body  # None -> "n/a" on the way out
-    assert not [d for d in os.listdir(tmp_path / "7" / "bob") if "__staging" in d]
-    # refresh: write fewer rows, the old artifact is fully replaced
-    spark.createDataFrame([(9, "z")], "k long, v string").coalesce(1).write.format(
-        "duva_artifact"
-    ).option("path", str(tmp_path)).option("server_id", "7").option(
-        "username", "bob"
-    ).option("form_id", "42").mode("append").save()
-    assert (final / "_ROWCOUNT").read_text() == "1"
-
-
-def test_onadata_datasource_filter_pushdown(spark, tmp_path):
-    """Simple comparison filters reach the task's parse loop (Spark 4
-    pushFilters): end-to-end the filtered read returns the right rows,
-    and at the reader level the supported predicates are absorbed (and
-    applied during the scan) while unsupported ones are handed back to
-    Spark."""
-    from pyspark.sql.datasource import EqualNullSafe, EqualTo, GreaterThanOrEqual
-    from pyspark.sql.types import StructType
-
-    from duva_spark.sources.datasource import OnaDataReader, OnaDataSource
-
-    p = tmp_path / "f.csv"
-    p.write_text("k,v\n" + "".join(f"{i},x{i % 3}\n" for i in range(100)))
-    spark.dataSource.register(OnaDataSource)
-    df = (
-        spark.read.format("onadata")
-        .option("path", str(p))
-        .load()
-        .filter("k >= 90 and v = 'x0'")
-    )
-    assert sorted(r.k for r in df.collect()) == [90, 93, 96, 99]
-
-    # Plan-level proof the pushdown is NOT inert (ADVICE r3: a session-
-    # conf gate evaluated in the planning worker always chose the plain
-    # reader, and Spark's own re-filtering made this e2e pass vacuously):
-    # with every predicate pushable, no post-scan Filter node survives.
-    import contextlib
-    import io
-    import re
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert not re.search(r"\(\d+\) Filter", plan), plan
-
-    schema = StructType.fromDDL("k long, v string")
-    reader = OnaDataReader(schema, str(p), 100, 2)
-    remainder = reader.pushFilters(
-        [
-            GreaterThanOrEqual(("k",), 90),
-            EqualTo(("v",), "x0"),
-            EqualNullSafe(("v",), "x0"),  # not in the pushable set
-        ]
-    )
-    assert [type(f).__name__ for f in remainder] == ["EqualNullSafe"]
-    parts = reader.partitions()
-    got = sorted(r[0] for part in parts for r in reader.read(part))
-    assert got == [90, 93, 96, 99]  # filters applied inside the scan
-
-
-def test_onadata_datasource_permissive_parse(spark, tmp_path):
-    """Ragged rows pad with NULL and values that stop matching the
-    sample-inferred type degrade to NULL — the scan never fails on
-    malformed tail data (permissive-mode contract)."""
-    from duva_spark.sources.datasource import OnaDataSource
-
-    p = tmp_path / "ragged.csv"
-    # the malformed value sits past the 200-row inference sample, so the
-    # column is inferred BIGINT and row 250 must degrade, not crash
-    body = "k,v,w\n" + "".join(f"{i},x,{i}\n" for i in range(249)) + "249,y\n250,z,oops\n"
-    p.write_text(body)
-    spark.dataSource.register(OnaDataSource)
-    df = spark.read.format("onadata").option("path", str(p)).load()
-    assert df.schema["w"].dataType.simpleString() == "bigint"
-    rows = {r.k: (r.v, r.w) for r in df.collect()}
-    assert len(rows) == 251
-    assert rows[1] == ("x", 1)
-    assert rows[249] == ("y", None)  # ragged row padded
-    assert rows[250] == ("z", None)  # late non-integer degrades to NULL
-
-
 def test_digit_separators_read_as_text_in_both_sources(spark, tmp_path):
     """``1_000`` is text to a CSV reader, not the number Python's int()
-    makes of it: format('onadata') infers the column as STRING like
-    read_csv_duva, and a late ``1_000`` in a BIGINT column degrades to
-    NULL instead of parsing."""
-    from duva_spark.sources.datasource import OnaDataSource
-
+    makes of it: read_csv_duva infers the column as STRING and keeps the
+    value as written."""
     p = tmp_path / "sep.csv"
-    # w is inferred BIGINT from the 200-row sample; its row-250 value
-    # lies past it and must not parse as 1000
     rows = [f"{i},{'1_000' if i % 2 else '2_5'},{i}" for i in range(250)]
     p.write_text("k,n,w\n" + "\n".join(rows) + "\n250,7,1_000\n")
-    spark.dataSource.register(OnaDataSource)
-    ona = spark.read.format("onadata").option("path", str(p)).load()
     csv = read_csv_duva(spark, str(p))
-    assert ona.schema["n"].dataType == csv.schema["n"].dataType == T.StringType()
-    assert ona.schema["w"].dataType.simpleString() == "bigint"
-    got = {r.k: (r.n, r.w) for r in ona.collect()}
-    assert got[1] == ("1_000", 1) and got[2] == ("2_5", 2)
-    assert got[250] == ("7", None)
+    assert csv.schema["n"].dataType == T.StringType()
     assert {r.k: r.n for r in csv.collect()}[1] == "1_000"
