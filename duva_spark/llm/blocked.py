@@ -7,7 +7,11 @@ These operators bound that: blocks at or under ``max_block_size`` take
 the exact pairwise path; oversized blocks are routed through an LSH
 sub-bucketing stage (MinHash bands for text, sign-bit RP-LSH codes for
 embeddings) so the candidate join stays near-linear, then candidates are
-verified with the *same* exact metric as the small-block path.
+verified with the *same* exact metric as the small-block path. Both
+overflow stages are the package's one banded-LSH candidate path: the
+block columns join the bucket key of ``minhash.bucket_pairs`` over
+narrow rows, and the shingle hashes or vectors re-join the surviving
+pairs through ``minhash.pair_payload``.
 
 Semantics: exact below the cap, LSH-recall above it (banding can miss a
 pair; it never admits a false positive because every candidate is
@@ -167,51 +171,19 @@ def jaccard_overflow_candidates(
     the self-join is linear in the band-bucket sizes, not the block size.
     Input: block cols + (_id, _sh); output: (id_a, id_b, sh_a, sh_b).
     Exposed separately so tests can bound the candidate row count."""
-    # _sh already holds 60-bit shingle hashes; fold into [0, P) for the
-    # affine minhash family (== minhash.base_hash on the raw strings).
-    hs = F.transform("_sh", lambda h: h % minhash.MERSENNE_P)
-    sig = big.withColumn("_hs", hs).select(
-        *block_cols,
-        "_id",
-        "_sh",
-        *[
-            F.array_min(F.transform("_hs", _affine(a, b))).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(minhash.hash_params(n_hashes))
-        ],
+    # _sh already holds 60-bit shingle hashes; folded into [0, P) they
+    # equal minhash.base_hash on the raw strings. localCheckpoint: the
+    # band table feeds the bucket explode and both verify sides; blocks
+    # free themselves with the result, unlike a persist().
+    sig = (
+        big.withColumn("_hs", F.transform("_sh", lambda h: h % minhash.MERSENNE_P))
+        .select(*block_cols, "_id", "_sh", *minhash.minhash_signature("_hs", n_hashes))
+        .select(*block_cols, "_id", "_sh", *minhash.band_hashes(n_hashes, n_bands))
+        .localCheckpoint()
     )
-    # localCheckpoint: consumed by the bucket explode and both verify
-    # sides; blocks free themselves with the result (ADVICE r3).
-    sig = sig.localCheckpoint()
-    bands_arr = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_idx"), bh.alias("band_hash"))
-            for b, bh in enumerate(minhash.band_hashes(n_hashes, n_bands))
-        ]
-    )
-    buckets = sig.select(*block_cols, "_id", F.explode(bands_arr).alias("bk")).select(
-        *block_cols, "_id", "bk.band_idx", "bk.band_hash"
-    )
-    key = [*block_cols, "band_idx", "band_hash"]
-    a = buckets.select(*key, F.col("_id").alias("id_a"))
-    b = buckets.select(*key, F.col("_id").alias("id_b"))
-    pairs = (
-        a.join(b, key)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh = sig.select("_id", "_sh")
-    return (
-        pairs.join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b")
-        .select("id_a", "id_b", "sh_a", "sh_b")
-    )
-
-
-def _affine(a: int, b: int):
-    # closure, not default-arg lambda: PySpark counts lambda params to
-    # pick the HOF arity, so defaults would mis-bind.
-    return lambda h: (a * h + b) % minhash.MERSENNE_P
+    buckets = minhash.band_explode(sig, "_id", n_bands, block_cols=block_cols)
+    pairs = minhash.bucket_pairs(buckets, "_id", [*block_cols, "band_idx", "band_hash"])
+    return minhash.pair_payload(pairs, sig, "_id", "_sh", "sh_a", "sh_b")
 
 
 def bounded_jaccard_pairs(
@@ -349,22 +321,17 @@ def cosine_overflow_candidates(
     ``n_tables`` independent tables assigns an ``n_bits`` sign-bit code;
     pairs sharing (block, table, code) become candidates (OR across
     tables for recall). Sub-bucket population ≈ block/2^n_bits per
-    table, so the self-join is near-linear. Input: block cols +
-    (_id, _v); output: (id_a, id_b, va, vb) distinct pairs. Table t
-    codes with plane seed t (``similarity.rplsh_codes_arrow``)."""
+    table, so the self-join is near-linear; only (block, table, code,
+    id) rows enter it, and the vectors re-join for the surviving pairs.
+    Input: block cols + (_id, _v); output: (id_a, id_b, va, vb)
+    distinct pairs. Table t codes with plane seed t
+    (``similarity.rplsh_codes_arrow``)."""
     coded = similarity.rplsh_codes_arrow(
         big, dim, n_bits, n_tables, 0, "_id", "_v", out_id="_id", out_vec="_v",
         keep=tuple(block_cols),
     )
-    key = [*block_cols, "tbl", "code"]
-    a = coded.select(*key, F.col("_id").alias("id_a"), F.col("_v").alias("va"))
-    b = coded.select(*key, F.col("_id").alias("id_b"), F.col("_v").alias("vb"))
-    return (
-        a.join(b, key)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "va", "vb")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    pairs = minhash.bucket_pairs(coded, "_id", [*block_cols, "tbl", "code"])
+    return minhash.pair_payload(pairs, big, "_id", "_v", "va", "vb")
 
 
 def bounded_cosine_pairs(

@@ -6,12 +6,15 @@ Python UDFs and are reproducible across engines — the DuckDB oracle
 recomputes the identical pipeline (same md5-derived base hash, same
 affine constants, same banding).
 
-Scale design: candidate pairs come from an equi-join on (band_index,
-band_hash) — data shuffles once by band key, cost linear in corpus size;
-no O(n²) comparisons. The final Jaccard verification only touches
-candidate pairs. Skewed buckets (e.g. boilerplate-heavy corpora) are
-handled by AQE skew-join splitting; a hard bucket-size cap can be added
-by filtering bucket counts before the self-join.
+Scale design: every banded-LSH variant in the package (MinHash bands
+here and in ``blocked``, SimHash/aHash chunks in ``simhash``, hyperplane
+codes in ``blocked``) runs one candidate path: ``bucket_pairs`` self-joins
+narrow (id, bucket key) rows, keeps id_a < id_b and dedupes, then
+``pair_payload`` re-joins the payload each side needs for verification
+(shingle hashes, bit hashes, vectors) onto the surviving pairs only — so
+payloads never enter the bucket shuffle and no O(n²) comparisons run.
+Skewed buckets (e.g. boilerplate-heavy corpora) are handled by AQE
+skew-join splitting.
 
 (The reference has no dedup of any kind — duva full-refreshes every
 sync, SURVEY §2a; this is part of the BASELINE.json LLM-pipeline
@@ -19,6 +22,8 @@ extension.)
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -76,17 +81,18 @@ def word_shingles(words: Column, k: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def minhash_signature(shingles: Column, n_hashes: int = N_HASHES) -> list[Column]:
-    """n_hashes min-hash values over a shingle array (null if empty)."""
-    hs = F.transform(shingles, base_hash)
+def _affine(a: int, b: int):
+    # closure, not default-arg lambda: PySpark counts lambda params to
+    # pick the HOF arity, so defaults would mis-bind.
+    return lambda h: (a * h + b) % MERSENNE_P
 
-    def affine(a: int, b: int):
-        # closure, not default-arg lambda: PySpark counts lambda params to
-        # pick the HOF arity, so defaults would mis-bind.
-        return lambda h: (a * h + b) % MERSENNE_P
 
+def minhash_signature(hs: Column | str, n_hashes: int = N_HASHES) -> list[Column]:
+    """mh_0..mh_{n-1}: the min of each affine hash over ``hs``, an array
+    of shingle hashes already in [0, P) (null when the array is empty).
+    The one MinHash signature of the package."""
     return [
-        F.array_min(F.transform(hs, affine(a, b))).alias(f"mh_{i}")
+        F.array_min(F.transform(hs, _affine(a, b))).alias(f"mh_{i}")
         for i, (a, b) in enumerate(hash_params(n_hashes))
     ]
 
@@ -113,20 +119,10 @@ def with_signature(
     # multi-split input — guide §2.5/§6).
     df = ensure_min_parallelism(df)
     words = F.split(F.col(text_col), " ")
-
-    def affine(a: int, b: int):
-        return lambda h: (a * h + b) % MERSENNE_P
-
     return (
         df.withColumn("_shingles", word_shingles(words, k))
         .withColumn("_hs", F.array_distinct(F.transform("_shingles", base_hash)))
-        .select(
-            "*",
-            *[
-                F.array_min(F.transform("_hs", affine(a, b))).alias(f"mh_{i}")
-                for i, (a, b) in enumerate(hash_params(n_hashes))
-            ],
-        )
+        .select("*", *minhash_signature("_hs", n_hashes))
     )
 
 
@@ -140,9 +136,16 @@ def band_hashes(n_hashes: int = N_HASHES, n_bands: int = N_BANDS) -> list[Column
     ]
 
 
-def band_explode(sig: DataFrame, id_col: str, n_bands: int, out_id: str | None = None) -> DataFrame:
-    """Explode a signature frame to narrow (id, band_idx, band_hash) rows —
-    the only columns that enter the LSH bucket shuffle."""
+def band_explode(
+    sig: DataFrame,
+    id_col: str,
+    n_bands: int,
+    out_id: str | None = None,
+    block_cols: Sequence[str] = (),
+) -> DataFrame:
+    """Explode a signature frame (band_0..band_{B-1}) to narrow
+    (*block_cols, id, band_idx, band_hash) rows — the only columns that
+    enter the LSH bucket shuffle."""
     bands_arr = F.array(
         *[
             F.struct(F.lit(b).alias("band_idx"), F.col(f"band_{b}").alias("band_hash"))
@@ -150,8 +153,42 @@ def band_explode(sig: DataFrame, id_col: str, n_bands: int, out_id: str | None =
         ]
     )
     out = out_id or id_col
-    return sig.select(F.col(id_col).alias(out), F.explode(bands_arr).alias("bk")).select(
-        out, "bk.band_idx", "bk.band_hash"
+    return sig.select(
+        *block_cols, F.col(id_col).alias(out), F.explode(bands_arr).alias("bk")
+    ).select(*block_cols, out, "bk.band_idx", "bk.band_hash")
+
+
+def bucket_pairs(
+    buckets: DataFrame, id_col: str, key: Sequence[str], per: Sequence[str] = ()
+) -> DataFrame:
+    """The LSH bucket self-join: narrow (*per, *key, id) rows joined on
+    (*per, *key), kept where id_a < id_b and deduped on
+    (*per, id_a, id_b) — a pair that collides in several buckets counts
+    once. ``per`` columns tag independent configurations sharing one
+    shuffle (``band_sensitivity``'s grid); block columns belong in
+    ``key``, since a pair never spans two blocks. Returns
+    (*per, id_a, id_b); payloads re-join afterwards (``pair_payload``)."""
+    cols = [*per, *key]
+    a = buckets.select(*cols, F.col(id_col).alias("id_a"))
+    b = buckets.select(*cols, F.col(id_col).alias("id_b"))
+    return (
+        a.join(b, cols)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select(*per, "id_a", "id_b")
+        .dropDuplicates([*per, "id_a", "id_b"])
+    )
+
+
+def pair_payload(
+    pairs: DataFrame, side: DataFrame, id_col: str, col: str, out_a: str, out_b: str
+) -> DataFrame:
+    """Attach ``side``'s ``col`` to every (id_a, id_b) pair, once per
+    side: as ``out_a`` keyed by id_a and ``out_b`` keyed by id_b. The
+    shuffle is bounded by pair volume; the pairs' own columns come first."""
+    return (
+        pairs.join(side.select(F.col(id_col).alias("id_a"), F.col(col).alias(out_a)), "id_a")
+        .join(side.select(F.col(id_col).alias("id_b"), F.col(col).alias(out_b)), "id_b")
+        .select(*pairs.columns, out_a, out_b)
     )
 
 
@@ -162,7 +199,6 @@ def candidate_pairs(
     k: int = 3,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
-    max_bucket_size: int | None = None,
     sig: DataFrame | None = None,
 ) -> DataFrame:
     """LSH candidate pairs (id_a < id_b), deduplicated across bands.
@@ -178,10 +214,11 @@ def candidate_pairs(
        "write the signature table, then join against it");
     2. bands explode to narrow (id, band_idx, band_hash) rows — shingle
        arrays never enter the bucket shuffle;
-    3. self-equi-join on the band key + pair dedup on narrow rows;
-    4. HASHED shingle sets (array<long>, not strings) re-joined only for
-       surviving candidate pairs — Jaccard over hashes matches the
-       oracle, which hashes identically.
+    3. ``bucket_pairs``: self-equi-join on the band key + pair dedup on
+       narrow rows;
+    4. ``pair_payload``: HASHED shingle sets (array<long>, not strings)
+       re-joined only for surviving candidate pairs — Jaccard over
+       hashes matches the oracle, which hashes identically.
     """
     if sig is not None:
         # derive the band keys from the shared checkpoint's mh columns
@@ -207,31 +244,15 @@ def candidate_pairs(
     # and keeps the band join linear; q_lsh_band_load's census applies
     # the same exclusion.
     buckets = band_explode(sig.filter(F.size("_hs") > 0), id_col, n_bands)
-    if max_bucket_size is not None:
-        # Hot-bucket cap: boilerplate-heavy corpora put thousands of docs
-        # in one band bucket, turning the self-join quadratic. Dropping
-        # oversized buckets bounds the join at the cost of recall on
-        # content that frequent (usually exact-dup boilerplate better
-        # handled by exact dedup first). One extra narrow aggregation.
-        sizes = buckets.groupBy("band_idx", "band_hash").agg(F.count("*").alias("_bn"))
-        buckets = buckets.join(
-            sizes.filter(F.col("_bn") <= max_bucket_size).drop("_bn"),
-            ["band_idx", "band_hash"],
-            "left_semi",
-        )
-    a = buckets.select("band_idx", "band_hash", F.col(id_col).alias("id_a"))
-    b = buckets.select("band_idx", "band_hash", F.col(id_col).alias("id_b"))
-    pairs = (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh = sig.select(id_col, "_hs")
-    return (
-        pairs.join(sh.select(F.col(id_col).alias("id_a"), F.col("_hs").alias("sh_a")), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"), F.col("_hs").alias("sh_b")), "id_b")
-        .select("id_a", "id_b", "sh_a", "sh_b")
+    pairs = bucket_pairs(buckets, id_col, ["band_idx", "band_hash"])
+    return pair_payload(pairs, sig, id_col, "_hs", "sh_a", "sh_b")
+
+
+def shingle_jaccard() -> Column:
+    """Exact Jaccard of the re-joined hashed shingle sets sh_a/sh_b,
+    rounded to 6 places (the oracle rounds identically)."""
+    return F.round(
+        F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b")), 6
     )
 
 
@@ -243,7 +264,6 @@ def near_duplicates(
     k: int = 3,
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
-    max_bucket_size: int | None = None,
     sig: DataFrame | None = None,
 ) -> DataFrame:
     """LSH candidates verified with exact shingle-set Jaccard ≥ threshold.
@@ -251,14 +271,9 @@ def near_duplicates(
     Returns (id_a, id_b, jaccard) — jaccard rounded to 6 places.
     ``sig`` passes through to candidate_pairs (shared signature frame).
     """
-    cand = candidate_pairs(
-        df, id_col, text_col, k, n_hashes, n_bands, max_bucket_size, sig=sig
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = inter / union
+    cand = candidate_pairs(df, id_col, text_col, k, n_hashes, n_bands, sig=sig)
     return (
-        cand.withColumn("jaccard", F.round(jac, 6))
+        cand.withColumn("jaccard", shingle_jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -286,8 +301,9 @@ def band_sensitivity(
     keys are md5s over SLICES of those same columns, built as one
     struct-array explode — so the whole grid costs one signature pass
     plus a single narrow bucket shuffle carrying sum(n_bands) rows per
-    doc, with candidates deduped per config inside it. Verification
-    joins hashed shingle sets only for surviving candidates. Never
+    doc, with candidates deduped per config inside it (``bucket_pairs``
+    keyed ``per`` config). Verification re-joins hashed shingle sets
+    only for surviving candidates (``pair_payload``). Never
     all-pairs at any grid point; the ground-truth job is the separate
     linear prefix-filter operator.
     """
@@ -302,22 +318,18 @@ def band_sensitivity(
             id_col, "_hs", *[f"mh_{i}" for i in range(n_hashes)]
         )
         sig = sig.localCheckpoint()
-    entries = []
-    for nb, rows in grid:
-        for b in range(nb):
-            bh = F.md5(
-                F.concat_ws(
-                    ",", *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-                )
-            )
-            entries.append(
-                F.struct(
-                    F.lit(nb).alias("n_bands"),
-                    F.lit(rows).alias("rows_per_band"),
-                    F.lit(b).alias("band_idx"),
-                    bh.alias("band_hash"),
-                )
-            )
+    # each grid point's band keys are band_hashes over the first
+    # nb * rows of the shared mh columns
+    entries = [
+        F.struct(
+            F.lit(nb).alias("n_bands"),
+            F.lit(rows).alias("rows_per_band"),
+            F.lit(b).alias("band_idx"),
+            bh.alias("band_hash"),
+        )
+        for nb, rows in grid
+        for b, bh in enumerate(band_hashes(nb * rows, nb))
+    ]
     # short docs (empty shingle set) share md5('') in every band on the
     # Spark side only (concat_ws skips nulls; the SQL mirror's NULL band
     # keys never equi-join) — exclude them, as candidate_pairs does
@@ -330,38 +342,11 @@ def band_sensitivity(
     # could legitimately repeat n_bands at different row counts (e.g.
     # (8,3) vs (8,2) over 24 hashes), and collapsing on n_bands alone
     # would undercount one of them
-    a = buckets.select(
-        "n_bands", "rows_per_band", "band_idx", "band_hash",
-        F.col(id_col).alias("id_a"),
+    cand = bucket_pairs(
+        buckets, id_col, ["band_idx", "band_hash"], per=["n_bands", "rows_per_band"]
     )
-    b = buckets.select(
-        "n_bands", "rows_per_band", "band_idx", "band_hash",
-        F.col(id_col).alias("id_b"),
-    )
-    cand = (
-        a.join(b, ["n_bands", "rows_per_band", "band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("n_bands", "rows_per_band", "id_a", "id_b")
-        .dropDuplicates(["n_bands", "rows_per_band", "id_a", "id_b"])
-    )
-    sh = sig.select(id_col, "_hs")
-    ver = (
-        cand.join(
-            sh.select(F.col(id_col).alias("id_a"), F.col("_hs").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            sh.select(F.col(id_col).alias("id_b"), F.col("_hs").alias("sh_b")),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
+    ver = pair_payload(cand, sig, id_col, "_hs", "sh_a", "sh_b").withColumn(
+        "jaccard", shingle_jaccard()
     )
     ag = ver.groupBy("n_bands", "rows_per_band").agg(
         F.count("*").alias("n_candidates"),
@@ -448,11 +433,10 @@ def delta_pairs_against_index(
     )
     jn = sig_n.select(F.col(id_col).alias("new_id"), F.col("_hs").alias("sh_a"))
     jc = index.select(F.col(id_col).alias("corpus_id"), F.col("_hs").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
     return (
         cand.join(jn, "new_id")
         .join(jc, "corpus_id")
-        .withColumn("jaccard", F.round(jac, 6))
+        .withColumn("jaccard", shingle_jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "corpus_id", "jaccard")
     )

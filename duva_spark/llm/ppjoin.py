@@ -26,9 +26,10 @@ Dataflow, all narrow/keyed — no cartesian, no driver state:
    global rank window (a global row_number would be a single-partition
    stage; lexicographic (cnt, token) structs give the same total order
    for free);
-4. prefix explode → self equi-join on the token (the ONLY place pairs
-   form; bucket size is bounded by document frequency of the prefix
-   token, and the rarest tokens come first by construction);
+4. prefix explode → self equi-join on the token, ``minhash.bucket_pairs``
+   with the prefix token as the bucket key (the ONLY place pairs form;
+   bucket size is bounded by document frequency of the prefix token,
+   and the rarest tokens come first by construction);
 5. exact Jaccard verify on the candidate pairs.
 
 At 100 TB the shape holds: frequencies and ordered arrays are one
@@ -119,22 +120,10 @@ def prefix_filter_pairs(
         F.expr(f"transform({pref_slice}, x -> x.h)").alias("pref"),
     )
     ptoks = prefix.select("_id", F.explode("pref").alias("h"))
-    a = ptoks.select(F.col("_id").alias("id_a"), "h")
-    b = ptoks.select(F.col("_id").alias("id_b"), F.col("h").alias("h_b"))
-    cand = (
-        a.join(b, (a["h"] == b["h_b"]) & (a["id_a"] < b["id_b"]))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    left = docs.select(F.col("_id").alias("id_a"), F.col("hs").alias("sh_a"))
-    right = docs.select(F.col("_id").alias("id_b"), F.col("hs").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
+    cand = minhash.bucket_pairs(ptoks, "_id", ["h"])
     return (
-        cand.join(left, "id_a")
-        .join(right, "id_b")
-        .withColumn("jaccard", F.round(jac, 6))
+        minhash.pair_payload(cand, docs, "_id", "hs", "sh_a", "sh_b")
+        .withColumn("jaccard", minhash.shingle_jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )

@@ -7,8 +7,9 @@ across the (md5-derived) hashes of the document's words: bit_j = 1 iff
 Implementation is explode-free: one `aggregate` (fold) over the words
 array accumulates all per-bit counters as an array<int> inside codegen —
 no shuffle at all for signature computation. Near-dup pairs then use
-banded sub-hashes exactly like MinHash-LSH (hamming-similar docs share a
-band with high probability).
+bit-chunk bands on the MinHash-LSH candidate path (``minhash.bucket_pairs``
+over narrow (id, chunk) rows, hashes re-joined by ``minhash.pair_payload``):
+hamming-similar docs share a chunk by pigeonhole.
 
 Default 32 bits: bit 63 would risk signed-overflow in the final pack on
 engines without unsigned 64-bit ints (the DuckDB oracle among them).
@@ -20,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
-from duva_spark.llm.minhash import md5_hash60
+from duva_spark.llm.minhash import bucket_pairs, md5_hash60, pair_payload
 
 
 def simhash(words: Column, n_bits: int = 32) -> Column:
@@ -74,7 +75,8 @@ def hash_banded_pairs(
     agree exactly on at least one of n_chunks bit-chunks — so candidates
     come from equi-joins on (chunk_idx, chunk_value), linear like
     MinHash banding, and are verified with an exact popcount. Returns
-    (id_a, id_b, hamming)."""
+    (id_a, id_b, _ha, _hb, hamming): the pair's two hashes ride along
+    for ``banded_pair_explain``."""
     # Fail-closed guards (r11 ADVICE): uneven chunking would silently
     # drop the top n_bits % n_chunks bits from every band, and
     # max_hamming >= n_chunks voids the pigeonhole guarantee — either
@@ -93,31 +95,28 @@ def hash_banded_pairs(
         )
     chunk = n_bits // n_chunks
     mask = (1 << chunk) - 1
-    sh = F.col(hash_col)
     chunks_arr = F.array(
         *[
             F.struct(
                 F.lit(i).alias("chunk_idx"),
-                F.shiftright(sh, i * chunk).bitwiseAND(mask).alias("chunk_val"),
+                F.shiftright(F.col(hash_col), i * chunk).bitwiseAND(mask).alias("chunk_val"),
             )
             for i in range(n_chunks)
         ]
     )
-    buckets = sig.select(F.col(id_col), sh.alias("_sh"), F.explode(chunks_arr).alias("c")).select(
-        id_col, "_sh", "c.chunk_idx", "c.chunk_val"
+    # localCheckpoint: the signature table feeds the chunk explode and
+    # both hash re-joins, and it can be an Arrow mapInPandas pass over
+    # the payload column (the image-aHash leg) that would otherwise run
+    # three times; blocks free with the result's lineage
+    sig = sig.select(id_col, hash_col).localCheckpoint()
+    buckets = sig.select(id_col, F.explode(chunks_arr).alias("c")).select(
+        id_col, "c.chunk_idx", "c.chunk_val"
     )
-    a = buckets.select(
-        "chunk_idx", "chunk_val", F.col(id_col).alias("id_a"), F.col("_sh").alias("sh_a")
-    )
-    b = buckets.select(
-        "chunk_idx", "chunk_val", F.col(id_col).alias("id_b"), F.col("_sh").alias("sh_b")
-    )
+    pairs = bucket_pairs(buckets, id_col, ["chunk_idx", "chunk_val"])
     return (
-        a.join(b, ["chunk_idx", "chunk_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", hamming_distance(F.col("sh_a"), F.col("sh_b")).alias("hamming"))
+        pair_payload(pairs, sig, id_col, hash_col, "_ha", "_hb")
+        .withColumn("hamming", hamming_distance(F.col("_ha"), F.col("_hb")))
         .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -135,23 +134,11 @@ def banded_pair_explain(
     which band(s) actually produced the candidate), the exact hamming,
     and the margin to the threshold. The audit surface a production
     dedup pipeline exposes so a reviewer can see WHY two items were
-    merged. Shuffle bounded by pair volume (the pairs frame joins back
-    to the signature table twice on the id key), never all-pairs.
-
-    The signature frame feeds THREE consumers (the band join and both
-    explain re-joins), so it is localCheckpoint'ed first: signatures
-    can be an Arrow mapInPandas pass over the payload column (the
-    image-aHash leg), and without the checkpoint that corpus pass runs
-    three times — the blocks are freed with the result's lineage,
-    unlike a persist() that pins the session cache (ADVICE r3
-    discipline)."""
+    merged. Reads the pair hashes ``hash_banded_pairs`` already
+    re-joined (shuffle bounded by pair volume), never all-pairs."""
     from functools import reduce
 
-    sig = sig.select(id_col, hash_col).localCheckpoint()
-    pairs = hash_banded_pairs(sig, id_col, hash_col, n_bits, n_chunks, max_hamming)
-    a = sig.select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("_ha"))
-    b = sig.select(F.col(id_col).alias("id_b"), F.col(hash_col).alias("_hb"))
-    j = pairs.join(a, "id_a").join(b, "id_b")
+    j = hash_banded_pairs(sig, id_col, hash_col, n_bits, n_chunks, max_hamming)
     chunk = n_bits // n_chunks
     mask = (1 << chunk) - 1
     matches = [
@@ -187,7 +174,7 @@ def near_duplicate_pairs(
 ) -> DataFrame:
     """SimHash near-dup pairs via chunk-banded LSH (hash_banded_pairs
     over the SimHash signature). Returns (id_a, id_b, hamming)."""
-    sig = with_simhash(df.select(id_col, text_col), text_col, "sh", n_bits).select(
-        id_col, "sh"
+    sig = with_simhash(df.select(id_col, text_col), text_col, "sh", n_bits)
+    return hash_banded_pairs(sig, id_col, "sh", n_bits, n_chunks, max_hamming).select(
+        "id_a", "id_b", "hamming"
     )
-    return hash_banded_pairs(sig, id_col, "sh", n_bits, n_chunks, max_hamming)

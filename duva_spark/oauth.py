@@ -39,6 +39,7 @@ from dataclasses import dataclass, field
 from urllib.parse import urlsplit, urlunsplit
 
 from duva_spark.security import fernet_decrypt, fernet_encrypt
+from duva_spark.sources.http import FailedExternalRequest
 
 OAUTH_STATE_TTL = 300.0  # timedelta(minutes=5), oauth.py:50
 TOKEN_ENDPOINT = "/o/token/"  # common_tags.py:7
@@ -48,10 +49,6 @@ AUTHORIZE_ENDPOINT = "/o/authorize"  # oauth.py:52-55
 
 class FailedToRequestCredentials(RuntimeError):
     """security.py:55-71 failure type."""
-
-
-class FailedExternalRequest(RuntimeError):
-    pass
 
 
 class InvalidGrant(RuntimeError):

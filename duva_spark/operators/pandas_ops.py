@@ -19,9 +19,10 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
-@F.pandas_udf("double")
+@F.pandas_udf(T.DoubleType())
 def _slope_udf(x: pd.Series, y: pd.Series) -> float:
     dx = x.astype(float) - x.astype(float).mean()
     denom = float((dx * dx).sum())
@@ -30,7 +31,7 @@ def _slope_udf(x: pd.Series, y: pd.Series) -> float:
     return float((dx * (y.astype(float) - y.astype(float).mean())).sum() / denom)
 
 
-@F.pandas_udf("long")
+@F.pandas_udf(T.LongType())
 def _count_udf(x: pd.Series) -> int:
     return len(x)
 

@@ -37,7 +37,6 @@ def running_sum(
     value_col: str,
     out_col: str = "cum",
     num_partitions: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Adds ``out_col`` = running sum of ``value_col`` in ``order_col``
     order (a single column or a composite key list, e.g. a sort column
@@ -50,22 +49,15 @@ def running_sum(
     by the ContextCleaner with the result's lifetime, unlike a
     persist() entry that pins the cache until an explicit unpersist
     (ADVICE r3).
-
-    ``materialize=False`` keeps the full lazy lineage — the checkpoint
-    truncates explain() at a ``Scan ExistingRDD``, so plan tests that
-    assert on the range-partitioning pass need the untruncated plan.
-    Plan inspection only: without the checkpoint the ``_pid`` column is
-    not frozen, so the offsets and window passes could in principle see
-    different range ids under task retries.
     """
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
     spark = df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    ranged = df.repartitionByRange(n, *[F.col(c) for c in order_cols]).withColumn(
-        "_pid", F.spark_partition_id()
+    ranged = (
+        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()
     )
-    if materialize:
-        ranged = ranged.localCheckpoint()
     totals = ranged.groupBy("_pid").agg(F.sum(value_col).alias("_pt"))
     prior = totals.select(F.col("_pid").alias("_pid_b"), F.col("_pt").alias("_pt_b"))
     offsets = (

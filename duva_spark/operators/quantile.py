@@ -46,7 +46,6 @@ def quantile_cont(
     value_col: str,
     qs: Sequence[float],
     num_partitions: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact interpolated quantiles of ``value_col`` for each q in ``qs``.
 
@@ -63,14 +62,7 @@ def quantile_cont(
         .groupBy(F.col(value_col).alias("_v"))
         .agg(F.count("*").alias("_cnt"))
     )
-    cum = running_sum(
-        counts,
-        "_v",
-        "_cnt",
-        out_col="_cum",
-        num_partitions=num_partitions,
-        materialize=materialize,
-    )
+    cum = running_sum(counts, "_v", "_cnt", out_col="_cum", num_partitions=num_partitions)
     total = cum.agg(F.max("_cum").alias("_n"))
     qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
     targets = (

@@ -264,10 +264,11 @@ class SyncScheduler:
         self.out_root = out_root
 
     def _run_one(self, dataset_id: str) -> None:
+        # A failure propagates to UniqueJobScheduler.tick, which logs it
+        # with the job id (SyncJob.run has recorded it in the state
+        # machine already, except a LockHeld bounce).
         try:
             self.sync_job.run(dataset_id, f"{self.out_root}/{dataset_id}")
-        except Exception:
-            pass  # recorded by the state machine
         finally:
             state = self.store.get(dataset_id)
             if not state.is_active:

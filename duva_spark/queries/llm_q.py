@@ -494,23 +494,57 @@ _SHINGLES = (
 _H60 = "CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)"
 
 
-def _sql_minhash(i: int, a: int, b: int) -> str:
+def _hashed_shingles_sql(where: str = "") -> str:
+    """(doc_id, sh, hs): each document's 3-word shingle set ``sh`` and
+    ``hs``, its md5-derived hashes folded into [0, P) — the SQL mirror
+    of ``minhash.with_signature``'s ``_hs`` and the one spelling of the
+    hashed-shingle relation. ``where`` filters the documents."""
+    return f"""SELECT doc_id, sh, list_distinct(list_transform(sh, s -> {_H60} % {_P})) AS hs
+      FROM (SELECT doc_id, {_SHINGLES} AS sh
+            FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents {where}))"""
+
+
+def _mh_cols_sql(n_hashes: int) -> str:
+    """mh_0..mh_{n-1} over ``hs`` — the SQL mirror of
+    ``minhash.minhash_signature``."""
+    return ",\n           ".join(
+        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {_P})) AS mh_{i}"
+        for i, (a, b) in enumerate(minhash.hash_params(n_hashes))
+    )
+
+
+def _band_key_sql(b: int, rows: int) -> str:
+    """Band ``b``'s md5 key over mh columns b*rows..b*rows+rows-1 (NULL
+    when the shingle set is empty, so it never equi-joins)."""
+    return "md5(" + " || ',' || ".join(f"mh_{b * rows + r}" for r in range(rows)) + ")"
+
+
+def _bucket_pairs_sql(buckets: str, key: list[str], per: tuple[str, ...] = ()) -> str:
+    """The SQL mirror of ``minhash.bucket_pairs``: ``buckets`` (doc_id,
+    *per, *key) self-joined on (*per, *key), doc_id ascending within the
+    pair, deduped — (*per, id_a, id_b)."""
+    on = " AND ".join(f"a.{c} = b.{c}" for c in [*per, *key])
+    tags = "".join(f"a.{c}, " for c in per)
+    return f"""SELECT DISTINCT {tags}a.doc_id AS id_a, b.doc_id AS id_b
+      FROM {buckets} a JOIN {buckets} b ON {on} AND a.doc_id < b.doc_id"""
+
+
+def _jaccard_sql(a: str, b: str) -> str:
+    """Exact Jaccard of two hashed shingle sets, rounded like
+    ``minhash.shingle_jaccard``."""
     return (
-        f"list_min(list_transform(sh, s -> ({a} * ({_H60} % {_P}) + {b}) % {_P})) AS mh_{i}"
+        f"ROUND(len(list_intersect({a}, {b})) * 1.0 /"
+        f" len(list_distinct(list_concat({a}, {b}))), 6)"
     )
 
 
 def _minhash_sig_sql(n_hashes: int) -> str:
-    cols = ",\n           ".join(
-        _sql_minhash(i, a, b) for i, (a, b) in enumerate(minhash.hash_params(n_hashes))
-    )
     return f"""
-    WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-    s AS (SELECT doc_id, {_SHINGLES} AS sh FROM w)
+    WITH sh_h AS ({_hashed_shingles_sql()})
     SELECT doc_id,
            len(sh) AS n_shingles,
-           {cols}
-    FROM s
+           {_mh_cols_sql(n_hashes)}
+    FROM sh_h
     """
 
 
@@ -524,66 +558,51 @@ def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = F.split(F.col("text"), " ")
     sh = minhash.word_shingles(words, 3)
     return docs.select(
-        "doc_id", F.size(sh).cast("long").alias("n_shingles"), *[c for c in minhash.minhash_signature(sh, 8)]
-    ).select("doc_id", "n_shingles", *[f"mh_{i}" for i in range(8)])
+        "doc_id",
+        F.size(sh).cast("long").alias("n_shingles"),
+        *minhash.minhash_signature(F.transform(sh, minhash.base_hash), 8),
+    )
 
 
 def _lsh_buckets_sql(n_hashes: int, n_bands: int) -> str:
-    """The shared CTE prefix: documents → hashed shingle sets → minhash
-    signature → per-band md5 band keys, exploded to (doc_id, hs,
-    band_idx, band_hash) rows in ``buckets`` — the exact SQL mirror of
-    ``minhash.with_signature`` + ``band_hashes`` + ``band_explode``."""
+    """The shared CTE prefix: documents → hashed shingle sets ``sh_h``
+    → minhash signature → per-band md5 band keys, exploded to (doc_id,
+    hs, band_idx, band_hash) rows in ``buckets`` — the exact SQL mirror
+    of ``minhash.with_signature`` + ``band_hashes`` + ``band_explode``."""
     rows = n_hashes // n_bands
-    mh_cols = ",\n           ".join(
-        f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {_P})) AS mh_{i}"
-        for i, (a, b) in enumerate(minhash.hash_params(n_hashes))
-    )
-    band_cols = ", ".join(
-        "md5(" + " || ',' || ".join(f"mh_{b * rows + r}" for r in range(rows)) + f") AS band_{b}"
-        for b in range(n_bands)
-    )
+    band_cols = ", ".join(f"{_band_key_sql(b, rows)} AS band_{b}" for b in range(n_bands))
     band_union = " UNION ALL ".join(
         f"SELECT doc_id, hs, {b} AS band_idx, band_{b} AS band_hash FROM sig"
         for b in range(n_bands)
     )
     return f"""
-    WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-    s AS (SELECT doc_id, {_SHINGLES} AS sh FROM w),
-    sh_h AS (SELECT doc_id, list_distinct(list_transform(sh, s -> {_H60} % {_P})) AS hs FROM s),
+    WITH sh_h AS ({_hashed_shingles_sql()}),
     mh AS (SELECT doc_id, hs,
-           {mh_cols}
+           {_mh_cols_sql(n_hashes)}
            FROM sh_h),
     sig AS (SELECT doc_id, hs, {band_cols} FROM mh),
     buckets AS ({band_union})"""
 
 
 def _lsh_pairs_sql(n_hashes: int, n_bands: int, threshold: float) -> str:
-    # Mirrors the Spark pipeline exactly, including Jaccard over the
-    # HASHED shingle sets (list_distinct of the same md5-derived hash),
-    # so collision behavior is shared bit-for-bit.
+    # Mirrors the Spark pipeline exactly: narrow band-pair self-join,
+    # then the HASHED shingle sets re-joined for the Jaccard verify
+    # (list_distinct of the same md5-derived hash), so collision
+    # behavior is shared bit-for-bit.
     return f"""
     {_lsh_buckets_sql(n_hashes, n_bands)},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.hs AS sh_a, b.hs AS sh_b
-      FROM buckets a JOIN buckets b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
+    cand AS ({_bucket_pairs_sql("buckets", ["band_idx", "band_hash"])}),
+    ver AS (
+      SELECT c.id_a, c.id_b, {_jaccard_sql("x.hs", "y.hs")} AS jaccard
+      FROM cand c
+      JOIN sh_h x ON x.doc_id = c.id_a
+      JOIN sh_h y ON y.doc_id = c.id_b
     )
-    SELECT id_a, id_b,
-           ROUND(len(list_intersect(sh_a, sh_b)) * 1.0 /
-                 len(list_distinct(list_concat(sh_a, sh_b))), 6) AS jaccard
-    FROM cand
-    WHERE ROUND(len(list_intersect(sh_a, sh_b)) * 1.0 /
-                len(list_distinct(list_concat(sh_a, sh_b))), 6) >= {threshold}
+    SELECT id_a, id_b, jaccard FROM ver WHERE jaccard >= {threshold}
     """
 
 
 _SIG_LIST = "[" + ", ".join(f"mh_{i}" for i in range(minhash.N_HASHES)) + "]"
-_MH_COLS_SQL = ",\n           ".join(
-    f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {_P})) AS mh_{i}"
-    for i, (a, b) in enumerate(minhash.hash_params(minhash.N_HASHES))
-)
 
 
 def _closure_cc_sql(pairs_sql: str, tag: str = "", with_prefix: bool = True) -> str:
@@ -614,11 +633,9 @@ _CLOSURE_LSH = _closure_cc_sql(
 @register(
     "q_minhash_estimate_error",
     oracle=f"""
-    WITH p AS (SELECT * FROM ({{lsh}}) t),
-    w2 AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-    s2 AS (SELECT doc_id, {_SHINGLES} AS sh FROM w2),
-    hs2 AS (SELECT doc_id, list_distinct(list_transform(sh, s -> {_H60} % {_P})) AS hs FROM s2),
-    mh2 AS (SELECT doc_id, {_MH_COLS_SQL} FROM hs2),
+    WITH p AS ({_lsh_pairs_sql(minhash.N_HASHES, minhash.N_BANDS, 0.5)}),
+    hs2 AS ({_hashed_shingles_sql()}),
+    mh2 AS (SELECT doc_id, {_mh_cols_sql(minhash.N_HASHES)} FROM hs2),
     sigs AS (SELECT doc_id, {_SIG_LIST} AS sig FROM mh2)
     SELECT p.id_a, p.id_b, p.jaccard,
            ROUND(len(list_filter(range(1, {minhash.N_HASHES + 1}),
@@ -630,7 +647,7 @@ _CLOSURE_LSH = _closure_cc_sql(
     FROM p
     JOIN sigs a ON a.doc_id = p.id_a
     JOIN sigs b ON b.doc_id = p.id_b
-    """.replace("{lsh}", _lsh_pairs_sql(minhash.N_HASHES, minhash.N_BANDS, 0.5)),
+    """,
     description=(
         "Sketch-accuracy audit for the MinHash signatures (the fuzzy-"
         "dedup analogue of q_agg_approx_distinct_error for HLL): for "
@@ -659,8 +676,7 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) / {n}.0D"
     )
     return (
-        pairs.join(sig.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
-        .join(sig.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
+        minhash.pair_payload(pairs, sig, "doc_id", "sig", "sig_a", "sig_b")
         .select(
             "id_a",
             "id_b",
@@ -674,17 +690,11 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_ppjoin_exact_pairs",
     oracle=f"""
-    WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-    s AS (SELECT doc_id, {{_SH}} AS sh FROM w),
-    sh_h AS (SELECT doc_id, list_distinct(list_transform(sh, s -> {{_H}} % {_P})) AS hs FROM s),
-    ne AS (SELECT * FROM sh_h WHERE len(hs) > 0)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           ROUND(len(list_intersect(a.hs, b.hs)) * 1.0 /
-                 len(list_distinct(list_concat(a.hs, b.hs))), 6) AS jaccard
-    FROM ne a JOIN ne b ON a.doc_id < b.doc_id
-    WHERE ROUND(len(list_intersect(a.hs, b.hs)) * 1.0 /
-                len(list_distinct(list_concat(a.hs, b.hs))), 6) >= 0.5
-    """.replace("{_SH}", _SHINGLES).replace("{_H}", _H60),
+    WITH ne AS (SELECT doc_id, hs FROM ({_hashed_shingles_sql()}) t WHERE len(hs) > 0),
+    pj AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, {_jaccard_sql("a.hs", "b.hs")} AS jaccard
+           FROM ne a JOIN ne b ON a.doc_id < b.doc_id)
+    SELECT id_a, id_b, jaccard FROM pj WHERE jaccard >= 0.5
+    """,
     description=(
         "EXACT set-similarity self-join (prefix filtering, PPJoin/"
         "SSJoin): ALL shingle-set pairs with Jaccard >= 0.5, zero "
@@ -730,36 +740,24 @@ def _minhash_band_curve_oracle() -> str:
     truth = the q_ppjoin_exact_pairs oracle verbatim."""
     from duva_spark.queries import REGISTRY as _REG  # registered above
 
-    branches = []
-    for nb, rows in _MINHASH_GRID:
-        for b in range(nb):
-            key = " || ',' || ".join(f"mh_{b * rows + r}" for r in range(rows))
-            branches.append(
-                f"SELECT doc_id, {nb} AS n_bands, {rows} AS rows_per_band,"
-                f" {b} AS band_idx, md5({key}) AS band_hash FROM mh"
-            )
-    jac = (
-        "ROUND(len(list_intersect(x.hs, y.hs)) * 1.0 /"
-        " len(list_distinct(list_concat(x.hs, y.hs))), 6)"
+    branches = " UNION ALL ".join(
+        f"SELECT doc_id, {nb} AS n_bands, {rows} AS rows_per_band,"
+        f" {b} AS band_idx, {_band_key_sql(b, rows)} AS band_hash FROM mh"
+        for nb, rows in _MINHASH_GRID
+        for b in range(nb)
+    )
+    cand = _bucket_pairs_sql(
+        "buckets", ["band_idx", "band_hash"], per=("n_bands", "rows_per_band")
     )
     return f"""
-    WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-    s AS (SELECT doc_id, {_SHINGLES} AS sh FROM w),
-    sh_h AS (SELECT doc_id, list_distinct(list_transform(sh, s -> {_H60} % {_P})) AS hs FROM s),
-    mh AS (SELECT doc_id, hs, {_MH_COLS_SQL} FROM sh_h),
-    buckets AS ({" UNION ALL ".join(branches)}),
+    WITH sh_h AS ({_hashed_shingles_sql()}),
+    mh AS (SELECT doc_id, hs, {_mh_cols_sql(minhash.N_HASHES)} FROM sh_h),
+    buckets AS ({branches}),
     grid AS (SELECT * FROM (VALUES {", ".join(f"({nb}, {r})" for nb, r in _MINHASH_GRID)})
              g(n_bands, rows_per_band)),
-    cand AS (
-      SELECT DISTINCT a.n_bands, a.rows_per_band,
-             a.doc_id AS id_a, b.doc_id AS id_b
-      FROM buckets a JOIN buckets b
-        ON a.n_bands = b.n_bands AND a.rows_per_band = b.rows_per_band
-       AND a.band_idx = b.band_idx
-       AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-    ),
+    cand AS ({cand}),
     ver AS (
-      SELECT c.n_bands, c.rows_per_band, {jac} AS j
+      SELECT c.n_bands, c.rows_per_band, {_jaccard_sql("x.hs", "y.hs")} AS j
       FROM cand c
       JOIN sh_h x ON x.doc_id = c.id_a
       JOIN sh_h y ON y.doc_id = c.id_b
@@ -867,16 +865,23 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _simhash_sql(n_bits: int) -> str:
+def _simhash_bits_sql(n_bits: int) -> str:
+    """SimHash of the words array ``ws`` as a BIGINT — the SQL mirror
+    of ``simhash.simhash``: bit j set iff the md5-derived word hashes
+    vote it up."""
     h = "CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)"
     bit_terms = " + ".join(
         f"(CASE WHEN list_aggregate(list_transform(ws, w -> (({h} >> {j}) & 1) * 2 - 1), 'sum') > 0 "
         f"THEN CAST(1 AS BIGINT) << {j} ELSE 0 END)"
         for j in range(n_bits)
     )
+    return f"CAST({bit_terms} AS BIGINT)"
+
+
+def _simhash_sql(n_bits: int) -> str:
     return f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents WHERE doc_id <= 200)
-    SELECT doc_id, CAST({bit_terms} AS BIGINT) AS simhash
+    SELECT doc_id, {_simhash_bits_sql(n_bits)} AS simhash
     FROM w
     """
 
@@ -1082,40 +1087,46 @@ def _banded_explain_sql(
     )
 
 
-def _simhash_pairs_sql(
-    n_bits: int, n_chunks: int, max_hamming: int, explain: bool = False
-) -> str:
-    h = "CAST('0x' || substr(md5(w), 1, 15) AS BIGINT)"
-    bit_terms = " + ".join(
-        f"(CASE WHEN list_aggregate(list_transform(ws, w -> (({h} >> {j}) & 1) * 2 - 1), 'sum') > 0 "
-        f"THEN CAST(1 AS BIGINT) << {j} ELSE 0 END)"
-        for j in range(n_bits)
-    )
-    chunk = n_bits // n_chunks
+def _chunk_banded_pairs_sql(sig_ctes: str, chunk: int, n_chunks: int, max_hamming: int) -> str:
+    """The SQL mirror of ``simhash.hash_banded_pairs``, shared by the
+    SimHash and image-aHash oracles: ``sig_ctes`` is a WITH prefix
+    ending in ``sig(doc_id, h)``; each hash splits into ``n_chunks``
+    ``chunk``-bit bands, the bucket pairs re-join both hashes, and the
+    pairs within ``max_hamming`` come back as (id_a, id_b, h_a, h_b)."""
     mask = (1 << chunk) - 1
     chunk_union = " UNION ALL ".join(
-        f"SELECT doc_id, sh, {i} AS chunk_idx, (sh >> {i * chunk}) & {mask} AS chunk_val FROM sig"
+        f"SELECT doc_id, {i} AS chunk_idx, (h >> {i * chunk}) & {mask} AS chunk_val FROM sig"
         for i in range(n_chunks)
     )
-    return f"""
-    WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents WHERE doc_id <= 300),
-    sig AS (SELECT doc_id, CAST({bit_terms} AS BIGINT) AS sh FROM w),
+    return f"""{sig_ctes},
     buckets AS ({chunk_union}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sh AS sh_a, b.sh AS sh_b
-      FROM buckets a JOIN buckets b
-        ON a.chunk_idx = b.chunk_idx AND a.chunk_val = b.chunk_val AND a.doc_id < b.doc_id
-    )
-    SELECT {_banded_explain_sql('sh_a', 'sh_b', 'text', n_chunks, chunk, max_hamming) if explain
-            else "id_a, id_b, CAST(bit_count(xor(sh_a, sh_b)) AS INT) AS hamming"}
-    FROM cand
-    WHERE bit_count(xor(sh_a, sh_b)) <= {max_hamming}
+    cand AS ({_bucket_pairs_sql("buckets", ["chunk_idx", "chunk_val"])})
+    SELECT c.id_a, c.id_b, x.h AS h_a, y.h AS h_b
+    FROM cand c JOIN sig x ON x.doc_id = c.id_a JOIN sig y ON y.doc_id = c.id_b
+    WHERE bit_count(xor(x.h, y.h)) <= {max_hamming}
     """
+
+
+def _hamming_pairs_sql(hash_pairs: str) -> str:
+    """(id_a, id_b, hamming) over a ``_chunk_banded_pairs_sql`` result."""
+    return f"""SELECT id_a, id_b, CAST(bit_count(xor(h_a, h_b)) AS INT) AS hamming
+    FROM ({hash_pairs}) hp"""
+
+
+def _simhash_pairs_sql(n_bits: int, n_chunks: int, max_hamming: int) -> str:
+    return _chunk_banded_pairs_sql(
+        f"""
+    WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents WHERE doc_id <= 300),
+    sig AS (SELECT doc_id, {_simhash_bits_sql(n_bits)} AS h FROM w)""",
+        n_bits // n_chunks,
+        n_chunks,
+        max_hamming,
+    )
 
 
 @register(
     "q_simhash_near_dup",
-    oracle=_simhash_pairs_sql(16, 4, 2),
+    oracle=_hamming_pairs_sql(_simhash_pairs_sql(16, 4, 2)),
     description="SimHash near-dup pairs: chunk-banded LSH candidates (pigeonhole) verified by exact popcount hamming ≤ 2.",
 )
 def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2415,8 +2426,7 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fingerprints are copy candidates. The join is an EQUI-join on "
         "the fingerprint value — cost is sum of posting-list-squared "
         "per fingerprint (bounded: winnowing emits ~2/(window+1) of "
-        "positions, and hot fingerprints are boilerplate cappable like "
-        "LSH buckets via max_bucket_size) — never all-pairs. Third "
+        "positions) — never all-pairs. Third "
         "near-dup family beside MinHash-LSH (set overlap) and SimHash "
         "(Hamming): winnowing catches contiguous-substring plagiarism "
         "that bag-of-shingles measures dilute."
@@ -5263,19 +5273,13 @@ def _simhash_radius_oracle() -> str:
     hamming <= 3), exact-Jaccard truth once (the ppjoin oracle scoped
     to the same doc universe), then every radius level reads from ONE
     tagged aggregate row (the funnel-report unpivot)."""
+    hs300 = _hashed_shingles_sql("WHERE doc_id <= 300")
     truth = f"""
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM (SELECT doc_id, list_distinct(list_transform({{_SH}}, s -> {{_H}} % {_P})) AS hs
-            FROM (SELECT doc_id, string_split(text, ' ') AS ws
-                  FROM documents WHERE doc_id <= 300)) a
-      JOIN (SELECT doc_id, list_distinct(list_transform({{_SH}}, s -> {{_H}} % {_P})) AS hs
-            FROM (SELECT doc_id, string_split(text, ' ') AS ws
-                  FROM documents WHERE doc_id <= 300)) b
-        ON a.doc_id < b.doc_id
+      FROM ({hs300}) a JOIN ({hs300}) b ON a.doc_id < b.doc_id
       WHERE len(a.hs) > 0 AND len(b.hs) > 0
-        AND ROUND(len(list_intersect(a.hs, b.hs)) * 1.0 /
-                  len(list_distinct(list_concat(a.hs, b.hs))), 6) >= 0.5
-    """.replace("{_SH}", _SHINGLES).replace("{_H}", _H60)
+        AND {_jaccard_sql("a.hs", "b.hs")} >= 0.5
+    """
     sums = []
     for r in range(_SIMHASH_MAX_R + 1):
         sums.append(
@@ -5292,7 +5296,7 @@ def _simhash_radius_oracle() -> str:
         for r in range(_SIMHASH_MAX_R + 1)
     )
     return f"""
-    WITH cand AS ({_simhash_pairs_sql(16, 4, _SIMHASH_MAX_R)}),
+    WITH cand AS ({_hamming_pairs_sql(_simhash_pairs_sql(16, 4, _SIMHASH_MAX_R))}),
     truth AS ({truth}),
     tag AS (
       SELECT c.hamming, CASE WHEN t.id_a IS NOT NULL THEN 1 ELSE 0 END AS ist
@@ -7184,9 +7188,7 @@ def q_hll_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _image_ahash_pairs_sql(
-    n_chunks: int = 9, max_hamming: int = 8, explain: bool = False
-) -> str:
+def _image_ahash_pairs_sql(n_chunks: int = 9, max_hamming: int = 8) -> str:
     hh = "CAST('0x' || substr(md5(bg), 1, 15) AS BIGINT)"
     bgs = (
         "list_transform(range(1, len(string_split(text, ' '))), "
@@ -7201,34 +7203,20 @@ def _image_ahash_pairs_sql(
         f"ELSE CAST(0 AS BIGINT) END)"
         for i in range(63)
     )
-    chunk = 63 // n_chunks
-    mask = (1 << chunk) - 1
-    chunk_union = " UNION ALL ".join(
-        f"SELECT doc_id, ah, {i} AS chunk_idx,"
-        f" (ah >> {i * chunk}) & {mask} AS chunk_val FROM h"
-        for i in range(n_chunks)
-    )
-    return f"""
+    return _chunk_banded_pairs_sql(
+        f"""
     WITH px AS (SELECT doc_id, {px} AS g FROM documents),
-    h AS (SELECT doc_id, CAST({bit_terms} AS BIGINT) AS ah
-          FROM (SELECT doc_id, g, list_aggregate(g, 'sum') AS tot FROM px)),
-    b AS ({chunk_union}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.ah AS ah_a, b.ah AS ah_b
-      FROM b a JOIN b b
-        ON a.chunk_idx = b.chunk_idx AND a.chunk_val = b.chunk_val
-       AND a.doc_id < b.doc_id
+    sig AS (SELECT doc_id, CAST({bit_terms} AS BIGINT) AS h
+            FROM (SELECT doc_id, g, list_aggregate(g, 'sum') AS tot FROM px))""",
+        63 // n_chunks,
+        n_chunks,
+        max_hamming,
     )
-    SELECT {_banded_explain_sql('ah_a', 'ah_b', 'image', n_chunks, chunk, max_hamming) if explain
-            else "id_a, id_b, CAST(bit_count(xor(ah_a, ah_b)) AS INT) AS hamming"}
-    FROM cand
-    WHERE bit_count(xor(ah_a, ah_b)) <= {max_hamming}
-    """
 
 
 @register(
     "q_image_phash_near_dup",
-    oracle=_image_ahash_pairs_sql(),
+    oracle=_hamming_pairs_sql(_image_ahash_pairs_sql()),
     description=(
         "Perceptual-hash image near-dup; completes the dedup modality "
         "symmetry (text MinHash/SimHash, embedding cosine, now image): "
@@ -7336,13 +7324,13 @@ def q_image_dhash_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _neardup_explain_oracle() -> str:
-    return (
-        "SELECT * FROM ("
-        + _simhash_pairs_sql(16, 4, 2, explain=True)
-        + ") UNION ALL SELECT * FROM ("
-        + _image_ahash_pairs_sql(explain=True)
-        + ")"
-    )
+    return f"""
+    SELECT {_banded_explain_sql("h_a", "h_b", "text", 4, 4, 2)}
+    FROM ({_simhash_pairs_sql(16, 4, 2)}) t
+    UNION ALL
+    SELECT {_banded_explain_sql("h_a", "h_b", "image", 9, 7, 8)}
+    FROM ({_image_ahash_pairs_sql()}) i
+    """
 
 
 @register(

@@ -87,14 +87,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_true_tumbling",
-    oracle=f"""
-    SELECT {_EPOCH.format(x="time_bucket(INTERVAL '1 day', ts)")} AS window_start,
-           event_type,
-           COUNT(*) AS n_events,
-           ROUND(SUM(CAST(ROUND(value * 100) AS BIGINT)) / 100.0, 4) AS total_value
-    FROM events
-    GROUP BY 1, 2
-    """,
+    oracle=REGISTRY["q_stream_tumbling"].oracle,
     description=(
         "TRUE streaming execution under the value-hash gate: a real "
         "readStream file source -> watermarked tumbling window agg -> "
@@ -115,27 +108,7 @@ def q_stream_true_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_true_sessions",
-    oracle=f"""
-    WITH gaps AS (
-      SELECT user_id, ts, value,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                    OR ts - LAG(ts) OVER w >= INTERVAL '30 minutes' THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-    ),
-    sess AS (
-      SELECT user_id, ts, value,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-      FROM gaps
-    )
-    SELECT user_id,
-           {_EPOCH.format(x="MIN(ts)")} AS session_start,
-           COUNT(*) AS n_events,
-           ROUND(SUM(CAST(ROUND(value * 100) AS BIGINT)) / 100.0, 4) AS total_value
-    FROM sess
-    GROUP BY user_id, sid
-    """,
+    oracle=REGISTRY["q_stream_sessions"].oracle,
     description=(
         "TRUE streaming session windows under the value-hash gate: real "
         "readStream -> session_window merging-state agg -> memory sink, "
@@ -153,13 +126,7 @@ def q_stream_true_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_true_sliding",
-    oracle=f"""
-    SELECT {_EPOCH.format(x="time_bucket(INTERVAL '30 minutes', ts) - o * INTERVAL '30 minutes'")} AS window_start,
-           event_type,
-           COUNT(*) AS n_events
-    FROM events CROSS JOIN (VALUES (0), (1)) offsets(o)
-    GROUP BY 1, 2
-    """,
+    oracle=REGISTRY["q_stream_sliding"].oracle,
     description=(
         "TRUE streaming sliding windows (1h every 30min) under the "
         "value-hash gate: every event lands in both overlapping windows "

@@ -274,25 +274,6 @@ def test_multimodal_decode_stub_and_fake(docs):
     assert sorted(map(tuple, feats)) == sorted(map(tuple, again))  # deterministic
 
 
-def test_lsh_bucket_cap_bounds_candidates(spark):
-    """With a hot bucket (many exact dups), the cap drops the flooded
-    bucket but distinct near-dups still pair up."""
-    from duva_spark.llm import minhash
-
-    boiler = [(i, "the same boilerplate text repeated again and again here") for i in range(50)]
-    pair = [
-        (100, "a unique document about spark window aggregation semantics today"),
-        (101, "a unique document about spark window aggregation semantics tonight"),
-    ]
-    df = spark.createDataFrame(boiler + pair, "doc_id long, text string")
-    capped = minhash.near_duplicates(df, "doc_id", threshold=0.5, max_bucket_size=10)
-    pairs = {(r.id_a, r.id_b) for r in capped.collect()}
-    assert (100, 101) in pairs
-    assert not any(a < 50 and b < 50 for a, b in pairs)  # flooded bucket dropped
-    uncapped = minhash.near_duplicates(df, "doc_id", threshold=0.5)
-    assert any(a < 50 and b < 50 for a, b in {(r.id_a, r.id_b) for r in uncapped.collect()})
-
-
 def test_short_docs_never_enter_band_buckets(spark):
     """Docs with <k words have empty shingle sets; concat_ws skips their
     all-NULL minhash columns, so without the explicit exclusion they'd

@@ -90,7 +90,7 @@ def test_lsh_pairs_plan_has_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan  # candidates via equi-join only
 
 
-def test_shard_packing_has_no_single_partition_stage(spark, sf_dir):
+def test_shard_packing_has_no_single_partition_stage(spark, sf_dir, monkeypatch):
     """The running-cumsum behind shard packing must be the distributed
     two-pass prefix sum: range partition + per-range window + broadcast
     offsets — never a global one-task window."""
@@ -100,12 +100,14 @@ def test_shard_packing_has_no_single_partition_stage(spark, sf_dir):
     assert "BroadcastExchange" in plan  # offsets frame is broadcast, O(#partitions)
     # the localCheckpoint inside running_sum truncates explain() at a
     # Scan ExistingRDD, hiding the range-partitioning pass — assert it
-    # on the untruncated operator lineage instead
+    # on the untruncated operator lineage instead, with the checkpoint
+    # inlined as tools/plan_report.py does
     from duva_spark.catalog import load_table as lt
     from duva_spark.operators.prefix_sum import running_sum
 
     t = lt(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    full = _plan(running_sum(t, "doc_id", "n_chars", materialize=False))
+    monkeypatch.setattr(type(t), "localCheckpoint", lambda self, eager=True: self)
+    full = _plan(running_sum(t, "doc_id", "n_chars"))
     assert "Exchange SinglePartition" not in full
     assert "rangepartitioning" in full.lower()  # pass 1: ordered ranges
 
@@ -484,7 +486,7 @@ def test_quantile_cont_matches_exact_percentile(spark, sf_dir):
         assert abs(got[k] - want[k]) < 1e-9, (k, got[k], want[k])
 
 
-def test_quantile_cont_has_no_single_partition_stage(spark, sf_dir):
+def test_quantile_cont_has_no_single_partition_stage(spark, sf_dir, monkeypatch):
     """The percentile family must never buffer the whole group on one
     reducer: per-value counts + prefix-sum rank lookup, all parallel
     (the broadcast side of the rank join is the |qs|-row targets)."""
@@ -492,7 +494,9 @@ def test_quantile_cont_has_no_single_partition_stage(spark, sf_dir):
     from duva_spark.operators.quantile import quantile_cont
 
     t = lt(spark, sf_dir, "orders").select(F.col("o_totalprice").alias("v"))
-    plan = _plan(quantile_cont(t, "v", [0.5, 0.99], materialize=False))
+    # untruncated plan: the checkpoint inlined, as tools/plan_report.py does
+    monkeypatch.setattr(type(t), "localCheckpoint", lambda self, eager=True: self)
+    plan = _plan(quantile_cont(t, "v", [0.5, 0.99]))
     # (a global SinglePartition exchange does appear here, but only for
     # the O(#partitions)-row partial-agg of the 1-row total — benign;
     # the data-sized stages are the range partition + ranged window)

@@ -133,13 +133,19 @@ def test_schedule_persists_job_id_and_runs(sync_world, spark, tmp_path):
     assert store.get("42").job_id is None and ss.scheduler.get_jobs() == []
 
 
-def test_failure_cap_cancels_the_schedule(sync_world):
+def test_failure_cap_cancels_the_schedule(sync_world, caplog, monkeypatch):
+    # caplog listens on the root logger; see the propagate note above
+    monkeypatch.setattr(logging.getLogger("duva_spark"), "propagate", True)
     ss, store, calls, now = sync_world
-    ss.schedule("13", "*/15 * * * *")
+    job = ss.schedule("13", "*/15 * * * *")
     calls["fail"] = True
-    for _ in range(FAILURE_CAP):
+    for tick in range(1, FAILURE_CAP + 1):
         now[0] += 16 * 60
-        ss.scheduler.tick()
+        with caplog.at_level(logging.ERROR, logger="duva_spark.orchestration.scheduler"):
+            ss.scheduler.tick()
+        # every failing run is logged once, naming its job
+        errors = [r for r in caplog.records if r.levelno >= logging.ERROR]
+        assert len(errors) == tick and job.id in errors[-1].getMessage()
     state = store.get("13")
     assert state.sync_failures >= FAILURE_CAP and not state.is_active
     # The cron is gone and the persisted job id cleared — not just the flag.

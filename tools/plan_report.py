@@ -39,8 +39,8 @@ def main() -> None:
         "normalized members) is materialized once in its own job and reused by",
         "every consumer below. The materialized sub-plan's structure (range",
         "partitioning, no single-partition stages) is asserted separately in",
-        "tests/test_plans.py via the operators' materialize=False inspection",
-        "mode. Queries whose executed plan truncates at a checkpoint also get",
+        "tests/test_plans.py with localCheckpoint patched to a no-op.",
+        "Queries whose executed plan truncates at a checkpoint also get",
         "an `expanded` plan below it: the same query re-planned (explain only,",
         "never executed) with localCheckpoint patched to a no-op, showing the",
         "full lineage the checkpoint materializes.",
@@ -56,14 +56,16 @@ def main() -> None:
 
     @contextlib.contextmanager
     def inline_checkpoints():
-        from pyspark.sql import DataFrame
-
-        orig = DataFrame.localCheckpoint
-        DataFrame.localCheckpoint = lambda self, eager=True: self
+        # patch the concrete frame class: pyspark 4 defines
+        # localCheckpoint on the classic subclass, so patching
+        # pyspark.sql.DataFrame would leave every checkpoint in place
+        cls = type(spark.range(0))
+        orig = cls.localCheckpoint
+        cls.localCheckpoint = lambda self, eager=True: self
         try:
             yield
         finally:
-            DataFrame.localCheckpoint = orig
+            cls.localCheckpoint = orig
 
     for name, q in sorted(load_all().items()):
         if not q.headline:
