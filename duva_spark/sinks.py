@@ -8,25 +8,35 @@ Reference behavior reproduced:
 - COPY returns the loaded row count, the only metric duva reports
   (app/core/importer.py:251-256) → returned by every writer.
 
-Commit protocol: every writer here (full_refresh, merge_upsert,
-delete_where, compact) goes through `_commit`. It writes a NEW immutable
-version directory ``v<N+1>`` through Spark's committer (task-parallel
-write, atomic job commit), then atomically replaces the one small
-``_CURRENT`` file naming it, then vacuums. No directory is ever renamed:
-on S3/GCS the pointer replace is a single-object PUT, which is atomic;
-``os.replace`` emulates that locally. A crash leaves at worst an orphan
-version directory, overwritten by the next commit; the live dataset is
-never absent. Read a dataset through `read_dataset` (or `read_version`
-for time travel), never with a bare ``spark.read.parquet`` on its root.
-Every read here declares the schema from one parquet footer
-(`catalog.table_schema`), so it launches no schema-inference job;
-partition columns are still discovered from the ``key=value`` dirs.
-`partition_by` gives hive-style partitioning inside each version, so a
-100 TB dataset prunes on read.
+Commit protocol: every writer goes through `_commit`. It writes a NEW
+immutable version directory ``v<N+1>`` through Spark's committer, then
+atomically replaces the one small ``_CURRENT`` file naming it, then
+vacuums. No directory is ever renamed: on S3/GCS the pointer replace is
+a single-object PUT, which is atomic; ``os.replace`` emulates that
+locally. A crash leaves at worst an orphan version directory, which the
+next commit overwrites; the live dataset is never absent.
+
+Merge-on-read (Delta Lake deletion vectors, Iceberg v2 equality
+deletes): `merge_upsert` writes only the delta as ``v<N+1>``, with a
+``_LAYERS`` manifest naming the ordered ``(dir, key)`` layers the
+version reads, written before the pointer replace. A read anti-joins
+each layer on the keys of every later layer and unions the survivors by
+name: the sequential copy-on-write merge, deferred to the read.
+`full_refresh`, `delete_where` and `compact` commit one layer (a version
+with no manifest is its own one layer), so `compact` is the fold.
+`vacuum` marks versions beyond `retain` ``_RETIRED`` (unreadable) and
+deletes a version directory only once no retained version names it.
+
+Read through `read_dataset` (or `read_version` for time travel), never
+with a bare ``spark.read.parquet`` on the root. Each layer's schema is
+declared from one parquet footer (`catalog.table_schema`): no
+schema-inference job. `partition_by` gives hive-style partitioning
+inside a version, so a 100 TB dataset prunes on read.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
@@ -37,6 +47,8 @@ from pyspark.sql import DataFrame
 from duva_spark.catalog import table_schema
 
 CURRENT_POINTER = "_CURRENT"
+LAYERS = "_LAYERS"
+RETIRED = "_RETIRED"
 
 
 def _current_version(path: str) -> int | None:
@@ -52,15 +64,27 @@ def _version_dir(path: str, version: int) -> str:
     return os.path.join(path, f"v{version}")
 
 
+def _layers(path: str, version: int) -> list[tuple[str, str | None]]:
+    """The ``(dir, key)`` layers `version` reads, oldest first: its
+    ``_LAYERS`` manifest, or the version directory alone. A layer's key
+    is the one its upsert replaced earlier rows on (None for a base)."""
+    try:
+        with open(os.path.join(_version_dir(path, version), LAYERS)) as f:
+            return [(d, key) for d, key in json.load(f)]
+    except FileNotFoundError:
+        return [(f"v{version}", None)]
+
+
 def _commit(
-    df: DataFrame, path: str, partition_by: list[str] | None = None, retain: int = 1
+    df: DataFrame, path: str, partition_by: list[str] | None = None, retain: int = 1, key: str | None = None
 ) -> int:
     """Commit `df` as the next version of the dataset at `path`; returns
-    its row count, taken from the same scan that feeds the write via an
-    observation (one distributed pass).
-
-    ``retain`` keeps that many trailing versions (current included) for
-    time travel via `read_version`; older ones are garbage-collected."""
+    its row count. Without a `key`, `df` is the whole version, counted
+    by an observation on the scan that feeds the write. With one, `df` is
+    a delta layered over the current version if there is one (see
+    `merge_upsert`), counted by a key-only scan of the layered view
+    before the pointer names it. ``retain`` keeps that many trailing versions (current
+    included) readable via `read_version`."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -72,6 +96,14 @@ def _commit(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(_version_dir(path, version))
+    if key is not None and current is not None:
+        layers = [*_layers(path, current), (f"v{version}", key)]
+        with open(os.path.join(_version_dir(path, version), LAYERS), "w") as f:
+            json.dump(layers, f)
+        # count() prunes every payload column: only the keys are scanned
+        n_rows = _read_layers(df.sparkSession, path, version).count()
+    else:
+        n_rows = obs.get["n_rows"]
     fd, tmp = tempfile.mkstemp(dir=path, suffix=".ptr")
     with os.fdopen(fd, "w") as f:
         f.write(f"v{version}")
@@ -81,7 +113,7 @@ def _commit(
         os.remove(tmp)
         raise
     vacuum(path, retain=retain)
-    return int(obs.get["n_rows"])
+    return int(n_rows)
 
 
 def full_refresh(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
@@ -98,36 +130,37 @@ def read_dataset(spark, path: str) -> DataFrame:
     """Read the current version of a dataset written by this module. A
     `path` with no ``_CURRENT`` is read as a plain parquet dir."""
     current = _current_version(path)
-    return _read(spark, path if current is None else _version_dir(path, current))
+    if current is None:
+        return _read(spark, path)
+    return _read_layers(spark, path, current)
+
+
+def _version_dirs(path: str) -> list[int]:
+    """Every version directory on disk, retired ones included."""
+    names = [e for e in os.listdir(path) if e.startswith("v") and e[1:].isdigit()]
+    return sorted(int(e[1:]) for e in names if os.path.isdir(os.path.join(path, e)))
 
 
 def list_versions(path: str) -> list[int]:
-    """Version numbers present on disk, oldest first."""
-    out = []
-    for entry in os.listdir(path):
-        if entry.startswith("v") and entry[1:].isdigit() and os.path.isdir(
-            os.path.join(path, entry)
-        ):
-            out.append(int(entry[1:]))
-    return sorted(out)
+    """Readable version numbers on disk, oldest first."""
+    dirs = {v: _version_dir(path, v) for v in _version_dirs(path)}
+    return [v for v, d in dirs.items() if not os.path.exists(os.path.join(d, RETIRED))]
 
 
 def read_version(spark, path: str, version: int) -> DataFrame:
     """Time travel: read a retained historical version of a dataset
     (Delta's ``VERSION AS OF`` on the pointer scheme). Raises if the
-    version was vacuumed."""
-    full = _version_dir(path, version)
-    if not os.path.isdir(full):
-        raise FileNotFoundError(
-            f"version {version} not on disk (retained: {list_versions(path)})"
-        )
-    return _read(spark, full)
+    version was vacuumed, also when its directory lives on as a layer
+    of a later version."""
+    if version not in list_versions(path):
+        raise FileNotFoundError(f"version {version} not on disk (retained: {list_versions(path)})")
+    return _read_layers(spark, path, version)
 
 
 def _read(spark, directory: str) -> DataFrame:
-    """One version directory, its schema read from a parquet footer. With
-    no readable footer (a missing or empty dir, a corrupt file) Spark's
-    own reader is left to raise its error, e.g. UNABLE_TO_INFER_SCHEMA."""
+    """One directory, its schema read from a parquet footer. With no
+    readable footer (a missing or empty dir, a corrupt file) Spark's own
+    reader is left to raise its error, e.g. UNABLE_TO_INFER_SCHEMA."""
     try:
         schema = table_schema(directory)
     except (FileNotFoundError, pa.ArrowInvalid):
@@ -135,21 +168,38 @@ def _read(spark, directory: str) -> DataFrame:
     return spark.read.schema(schema).parquet(directory)
 
 
+def _read_layers(spark, path: str, version: int) -> DataFrame:
+    """One lazy plan over the layers of `version`: each layer anti-joined
+    on the keys of every later layer, the survivors unioned by name,
+    oldest first. Column order and types are those of the sequential
+    copy-on-write merge. A layer's key frame is one plan wherever it is
+    used, so Spark scans and broadcasts it once per read."""
+    layers = [(_read(spark, os.path.join(path, d)), key) for d, key in _layers(path, version)]
+    out = None
+    for i, (frame, _) in enumerate(layers):
+        for later, key in layers[i + 1:]:
+            frame = frame.join(later.select(key), on=key, how="left_anti")
+        out = frame if out is None else out.unionByName(frame, allowMissingColumns=True)
+    return out
+
+
 def vacuum(path: str, retain: int = 1) -> list[int]:
-    """Drop all but the trailing `retain` versions up to the current
-    pointer, plus any orphan directories NEWER than current (half-written
-    crashed commits). Returns the removed version numbers."""
+    """Retire all but the trailing `retain` readable versions up to the
+    current pointer, plus orphans NEWER than current (crashed commits).
+    A directory no retained version names as a layer is deleted; one
+    still named is marked retired. Returns the retired versions."""
     cur_ver = _current_version(path)
     if cur_ver is None:
         return []
-    keep = {v for v in list_versions(path) if v <= cur_ver}
-    keep = set(sorted(keep)[-max(retain, 1):])
-    removed = []
-    for v in list_versions(path):
-        if v not in keep and v != cur_ver:
+    readable = list_versions(path)
+    keep = [v for v in readable if v <= cur_ver][-max(retain, 1):]
+    named = {d for v in keep for d, _ in _layers(path, v)}
+    for v in _version_dirs(path):
+        if f"v{v}" not in named:
             shutil.rmtree(_version_dir(path, v), ignore_errors=True)
-            removed.append(v)
-    return removed
+        elif v not in keep:
+            open(os.path.join(_version_dir(path, v), RETIRED), "w").close()
+    return [v for v in readable if v not in keep]
 
 
 def merge_upsert(spark, new_df: DataFrame, path: str, key: str, retain: int = 1) -> int:
@@ -157,26 +207,22 @@ def merge_upsert(spark, new_df: DataFrame, path: str, key: str, retain: int = 1)
     (it drop-and-recreates every sync, app/core/importer.py:242-246; the
     natural key is the OnaData `_id`/`_uuid` system column).
 
-    Without a table format that supports MERGE, the portable emulation
-    is: existing ⟕anti⟕ new → union → commit as the next version (one
-    anti-join shuffle on the key, the same dataflow as a native MERGE).
-    An empty or absent `path` takes `new_df` as its first version; a
-    non-empty `path` with no ``_CURRENT`` raises rather than commit the
-    delta alone. ``retain`` > 1 keeps trailing versions for time travel
-    (`read_version` / `vacuum`). Returns the resulting row count.
+    Merge-on-read: `new_df` alone is committed, as a layer over the
+    current version; earlier rows whose `key` it holds drop out when the
+    dataset is read (existing ⟕anti⟕ new ∪ new, deferred), and `compact`
+    folds the layers. Returns the resulting row count, from a key-only
+    scan. An empty or absent `path` takes `new_df` as its first version;
+    a non-empty `path` with no ``_CURRENT`` raises rather than commit
+    the delta alone. ``retain`` > 1 keeps trailing versions for time
+    travel (`read_version` / `vacuum`).
     """
-    current = _current_version(path)
-    if current is None:
-        if os.path.exists(path) and os.listdir(path):
-            raise FileExistsError(
-                f"{path} is not empty and has no {CURRENT_POINTER}; "
-                "full_refresh it before upserting"
-            )
-        return _commit(new_df, path, retain=retain)
-    existing = _read(spark, _version_dir(path, current))
-    keep = existing.join(new_df.select(key), on=key, how="left_anti")
-    merged = keep.unionByName(new_df, allowMissingColumns=True)
-    return _commit(merged, path, retain=retain)
+    if _current_version(path) is None and os.path.exists(path) and os.listdir(path):
+        raise FileExistsError(
+            f"{path} is not empty and has no {CURRENT_POINTER}; "
+            "full_refresh it before upserting"
+        )
+    new_df.select(key)  # an unknown key fails here, before anything is written
+    return _commit(new_df, path, retain=retain, key=key)
 
 
 def _retain_all(path: str, retain: int | None) -> int:
@@ -186,29 +232,23 @@ def _retain_all(path: str, retain: int | None) -> int:
     return retain if retain is not None else len(list_versions(path)) + 1
 
 
-def _require_current(path: str) -> str:
+def _require_current(path: str) -> int:
     current = _current_version(path)
     if current is None:
         raise FileNotFoundError(f"{path} has no {CURRENT_POINTER}: not a sinks dataset")
-    return _version_dir(path, current)
+    return current
 
 
-def delete_where(
-    spark,
-    path: str,
-    condition,
-    retain: int | None = None,
-) -> int:
+def delete_where(spark, path: str, condition, retain: int | None = None) -> int:
     """Versioned DELETE (right-to-be-forgotten / data-retention
     enforcement — the op a GDPR request needs; duva can only drop whole
     tables, app/core/importer.py:242-246).
 
-    Rows matching `condition` (a Column predicate) are removed by
-    committing the complement as a new version. The previous version
-    stays readable via `read_version` until `vacuum` drops it, which is
-    what makes the delete auditable AND reversible within the retention
-    window. One filtered scan, no shuffle. Returns the surviving row
-    count.
+    Rows matching `condition` (a Column predicate) go from every layer:
+    the rest of the current view is committed as a one-layer version.
+    The previous version stays readable via `read_version` until
+    `vacuum` drops it, which makes the delete auditable AND reversible
+    within the retention window. Returns the surviving row count.
     """
     from pyspark.sql import functions as F
 
@@ -216,33 +256,40 @@ def delete_where(
     # SQL DELETE semantics: only rows where the predicate is TRUE go;
     # a NULL-evaluating predicate must KEEP the row (a bare ~condition
     # would silently over-delete NULL rows — fatal in a GDPR helper).
-    remaining = _read(spark, current).filter(~F.coalesce(condition, F.lit(False)))
+    remaining = _read_layers(spark, path, current).filter(~F.coalesce(condition, F.lit(False)))
     return _commit(remaining, path, retain=_retain_all(path, retain))
 
 
+def _data_files(path: str, version: int) -> list[str]:
+    """The parquet data files of every layer of `version`, partition
+    dirs included."""
+    return [
+        os.path.join(root, f)
+        for d, _ in _layers(path, version)
+        for root, _, files in os.walk(os.path.join(path, d))
+        for f in files
+        if f.endswith(".parquet")
+    ]
+
+
 def compact(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    retain: int | None = None,
+    spark, path: str, target_file_bytes: int = 128 * 1024 * 1024, retain: int | None = None
 ) -> tuple[int, int]:
     """Small-file compaction — the OPTIMIZE pass every streaming/
-    incremental ingest needs: micro-batch commits accumulate many small
-    files, and at 100 TB the resulting task-per-file scheduling and
-    footer overhead dominate scan cost. Rewrites the current version
-    into ceil(bytes / target_file_bytes) files and commits it as a new
-    version (old version retained for time travel). Returns
-    (files_before, files_after).
+    incremental ingest needs: micro-batch commits accumulate small files
+    and upsert layers, and at 100 TB task-per-file scheduling, footers
+    and per-layer anti-joins dominate scan cost. Folds the current
+    version's layers into one of ceil(bytes / target_file_bytes) files,
+    committed as a new version (the old one retained for time travel).
+    Returns (files_before, files_after), counted across all layers.
     """
     current = _require_current(path)
-    files = [f for f in os.listdir(current) if f.endswith(".parquet")]
-    total_bytes = sum(os.path.getsize(os.path.join(current, f)) for f in files)
+    files = _data_files(path, current)
+    total_bytes = sum(os.path.getsize(f) for f in files)
     n_target = max(1, -(-total_bytes // target_file_bytes))
     # coalesce, not repartition: merging small files needs NO shuffle
     # (coalesce only narrows partitioning); at 100 TB a repartition
     # would double the IO of the OPTIMIZE pass for nothing.
-    df = _read(spark, current).coalesce(n_target)
+    df = _read_layers(spark, path, current).coalesce(n_target)
     _commit(df, path, retain=_retain_all(path, retain))
-    new_current = _require_current(path)
-    files_after = len([f for f in os.listdir(new_current) if f.endswith(".parquet")])
-    return len(files), files_after
+    return len(files), len(_data_files(path, _require_current(path)))

@@ -28,7 +28,11 @@ replays of the spec, so tests assert kernel == fold value-for-value:
   ``rename_to_labels``): the ``withColumn``-per-choice and
   rename chain the export shaping used to build, one DataFrame call per
   step, against production's single projection. Renames are positional
-  (``toDF``) and keep a column's old name when its target is taken.
+  (``toDF``) and keep a column's old name when its target is taken;
+- ``merge_upsert_fold`` pins ``sinks.merge_upsert`` + ``sinks.read_dataset``:
+  the copy-on-write merge the upsert used to commit whole (existing
+  anti-joined on the delta's keys, then the delta unioned by name),
+  against production's delta layer and read-side anti-join.
 
 Two reference plans sit beside the folds: ``curation_funnel_handwritten``
 (the hand-built canonical funnel that ``funnel.compile_funnel`` must
@@ -468,6 +472,14 @@ def _labels_metadata_fold(df: DataFrame, labels: dict[str, str]) -> DataFrame:
         if c in labels:
             out = out.withMetadata(f"_l{i}", {"label": labels[c]})
     return out.toDF(*names)
+
+
+def merge_upsert_fold(existing: DataFrame, new_df: DataFrame, key: str) -> DataFrame:
+    """One keyed upsert, copy-on-write: rows of ``existing`` whose ``key``
+    the delta holds are replaced by the delta's rows; columns only one
+    side has are kept, NULL on the other side's rows."""
+    keep = existing.join(new_df.select(key), on=key, how="left_anti")
+    return keep.unionByName(new_df, allowMissingColumns=True)
 
 
 def curation_funnel_handwritten(

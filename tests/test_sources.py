@@ -111,15 +111,23 @@ def _jobs_in_group(spark, fn):
 
 
 def test_read_dataset_launches_no_spark_job(spark, tmp_path):
-    """The read declares the footer schema: no schema-inference job."""
-    from duva_spark.sinks import _version_dir, full_refresh, read_dataset
+    """The read declares the footer schema: no schema-inference job. A
+    two-layer version reads its manifest on the driver: no job either."""
+    from duva_spark.sinks import _layers, _version_dir, full_refresh, merge_upsert, read_dataset
 
     out = str(tmp_path / "ds")
-    full_refresh(spark.createDataFrame([(1, "a", 2.5)], "`_id` long, name string, score double"), out)
+    schema = "`_id` long, name string, score double"
+    full_refresh(spark.createDataFrame([(1, "a", 2.5)], schema), out)
     back, jobs = _jobs_in_group(spark, lambda: read_dataset(spark, out))
     assert jobs == []
     assert back.schema == spark.read.parquet(_version_dir(out, 0)).schema
     assert [tuple(r) for r in back.collect()] == [(1, "a", 2.5)]
+    merge_upsert(spark, spark.createDataFrame([(2, "b", 1.0)], schema), out, "_id")
+    assert len(_layers(out, 1)) == 2
+    back, jobs = _jobs_in_group(spark, lambda: read_dataset(spark, out))
+    assert jobs == []
+    assert back.schema == spark.read.parquet(_version_dir(out, 0)).schema
+    assert sorted(tuple(r) for r in back.collect()) == [(1, "a", 2.5), (2, "b", 1.0)]
 
 
 def test_read_dataset_discovers_partition_columns(spark, tmp_path):
@@ -190,7 +198,7 @@ def test_merge_upsert_pointer_commit_never_renames_a_directory(spark, tmp_path, 
     the next commit replaces."""
     import os
 
-    from duva_spark.sinks import list_versions, merge_upsert, read_dataset
+    from duva_spark.sinks import _layers, list_versions, merge_upsert, read_dataset
 
     real_rename = os.rename
 
@@ -214,13 +222,20 @@ def test_merge_upsert_pointer_commit_never_renames_a_directory(spark, tmp_path, 
         with pytest.raises(OSError, match="simulated crash"):
             merge_upsert(spark, orphan, out, "_id")
     assert list_versions(out) == [0, 1]  # v1 written, never committed
+    orphan_files = {f for f in os.listdir(os.path.join(out, "v1")) if f.startswith("part-")}
+    assert orphan_files
     assert {r._id for r in read_dataset(spark, out).collect()} == {1, 2}
     second = spark.createDataFrame([(2, "B"), (3, "c")], "`_id` long, v string")
     assert merge_upsert(spark, second, out, "_id") == 3
     rows = {r._id: r.v for r in read_dataset(spark, out).collect()}
     assert rows == {1: "a", 2: "B", 3: "c"}  # the orphan's row is gone
-    # Superseded version directories were garbage-collected.
-    assert sorted(os.listdir(out)) == ["_CURRENT", "v1"]
+    # The orphan's files were replaced, and every directory left is a
+    # layer the current version reads: v0 is retired as a version but
+    # lives on as v1's base layer.
+    assert not orphan_files & set(os.listdir(os.path.join(out, "v1")))
+    assert sorted(os.listdir(out)) == ["_CURRENT", "v0", "v1"]
+    assert [d for d, _ in _layers(out, 1)] == ["v0", "v1"]
+    assert list_versions(out) == [1]
 
 
 def test_pointer_time_travel_and_vacuum(spark, tmp_path):
@@ -250,6 +265,127 @@ def test_pointer_time_travel_and_vacuum(spark, tmp_path):
     with _pytest.raises(FileNotFoundError, match="retained"):
         read_version(spark, out, 1)
     assert {r._id for r in read_dataset(spark, out).collect()} == {1, 2, 3, 4}
+
+
+def _frame_pin(df):
+    """Column names in order, their types, and the row multiset."""
+    rows = sorted((tuple(r) for r in df.collect()), key=repr)
+    return [(f.name, f.dataType) for f in df.schema.fields], rows
+
+
+def test_merge_upsert_chain_equals_copy_on_write_fold(spark, tmp_path):
+    """Three upserts read back through their layers equal the sequential
+    copy-on-write fold at every version: names, order, types and rows.
+    The chain updates and inserts, carries a NULL key and a key twice in
+    one delta, adds a column and drops one, and replays a delta."""
+    from duva_spark.sinks import _layers, merge_upsert, read_dataset, read_version
+    from tests.reference_folds import merge_upsert_fold
+
+    out = str(tmp_path / "ds")
+    base = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0), (None, "n", 0.0)],
+        "`_id` long, name string, score double",
+    )
+    adds_col = spark.createDataFrame(
+        [(2, "B", 20.0, "x"), (4, "d", 4.0, "y"), (None, "N", 5.0, "z")],
+        "`_id` long, name string, score double, extra string",
+    )
+    drops_col = spark.createDataFrame(
+        [(3, "C", "p"), (5, "e", "q"), (5, "E", "r")], "`_id` long, name string, extra string"
+    )
+    deltas = [adds_col, drops_col, drops_col]  # the last one replays the second
+    assert merge_upsert(spark, base, out, "_id", retain=4) == 4
+    fold = read_dataset(spark, out)
+    folds = [fold]
+    for i, delta in enumerate(deltas, start=1):
+        fold = merge_upsert_fold(fold, delta, "_id")
+        folds.append(fold)
+        assert merge_upsert(spark, delta, out, "_id", retain=4) == fold.count()
+        assert len(_layers(out, i)) == i + 1
+    for version, fold in enumerate(folds):
+        assert _frame_pin(read_version(spark, out, version)) == _frame_pin(fold)
+    names, rows = _frame_pin(read_dataset(spark, out))
+    assert [n for n, _ in names] == ["_id", "name", "score", "extra"]
+    assert _frame_pin(read_version(spark, out, 3)) == _frame_pin(read_version(spark, out, 2))
+    assert [r for r in rows if r[0] == 5] == [(5, "E", None, "r"), (5, "e", None, "q")]
+    assert sorted(r[1] for r in rows if r[0] is None) == ["N", "n"]
+
+
+def test_merge_upsert_writes_only_the_delta(spark, tmp_path):
+    """An upsert of k rows onto n rows writes exactly k rows: the data
+    files it adds hold k rows by their parquet footers, and the files
+    already there are left as they were."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from duva_spark.sinks import full_refresh, merge_upsert
+
+    out = tmp_path / "ds"
+    n, k = 1000, 60
+    base = spark.range(n).selectExpr("id AS `_id`", "CAST(id AS string) AS v", "id * 0.5 AS w")
+    full_refresh(base.repartition(4), str(out))
+
+    def parts():
+        return {(p, p.stat().st_ino, p.stat().st_mtime_ns) for p in Path(out).rglob("part-*")}
+
+    before = parts()
+    # half updates, half inserts
+    delta = spark.range(n - k // 2, n + k // 2).selectExpr(
+        "id AS `_id`", "'new' AS v", "id * 2.0 AS w"
+    )
+    assert merge_upsert(spark, delta, str(out), "_id") == n + k // 2
+    after = parts()
+    assert before <= after
+    assert sum(pq.read_metadata(p).num_rows for p, _, _ in after - before) == k
+
+
+def test_full_refresh_after_upsert_leaves_one_layer(spark, tmp_path):
+    """A full refresh commits a one-layer version and deletes every
+    layer the upserted version read."""
+    import os
+
+    from duva_spark.sinks import _layers, full_refresh, list_versions, merge_upsert, read_dataset
+
+    out = str(tmp_path / "ds")
+    schema = "`_id` long, v string"
+    full_refresh(spark.createDataFrame([(1, "a"), (2, "b")], schema), out)
+    merge_upsert(spark, spark.createDataFrame([(2, "B")], schema), out, "_id")
+    assert sorted(os.listdir(out)) == ["_CURRENT", "v0", "v1"]
+    assert full_refresh(spark.createDataFrame([(7, "z")], schema), out) == 1
+    assert sorted(os.listdir(out)) == ["_CURRENT", "v2"]
+    assert _layers(out, 2) == [("v2", None)]
+    assert list_versions(out) == [2]
+    assert [tuple(r) for r in read_dataset(spark, out).collect()] == [(7, "z")]
+
+
+def test_compact_and_delete_fold_the_layers(spark, tmp_path):
+    """`compact` folds a layered version into one layer with the same
+    rows, counting files across layers, and its read plan has no join;
+    `delete_where` removes matches from every layer and keeps the
+    previous version readable."""
+    from pyspark.sql import functions as F
+
+    from duva_spark.sinks import _layers, compact, delete_where, merge_upsert, read_dataset, read_version
+
+    out = str(tmp_path / "ds")
+    schema = "`_id` long, owner string"
+    merge_upsert(spark, spark.createDataFrame([(i, f"u{i % 3}") for i in range(30)], schema).repartition(3), out, "_id")
+    delta = spark.createDataFrame([(i, f"u{i % 2}") for i in range(25, 40)], schema).repartition(2)
+    merge_upsert(spark, delta, out, "_id")
+    layered = _frame_pin(read_dataset(spark, out))
+    before, after = compact(spark, out, target_file_bytes=10**9, retain=5)
+    assert (before, after) == (5, 1)
+    assert _layers(out, 2) == [("v2", None)]
+    compacted = read_dataset(spark, out)
+    assert "Join" not in compacted._jdf.queryExecution().optimizedPlan().toString()
+    assert _frame_pin(compacted) == layered
+
+    merge_upsert(spark, delta.withColumn("owner", F.lit("u1")), out, "_id", retain=5)
+    pre_delete = _frame_pin(read_dataset(spark, out))
+    assert delete_where(spark, out, F.col("owner") == "u1") == 17
+    assert read_dataset(spark, out).filter("owner = 'u1'").count() == 0
+    assert _frame_pin(read_version(spark, out, 3)) == pre_delete
 
 
 def test_digit_separators_read_as_text_in_both_sources(spark, tmp_path):

@@ -43,7 +43,11 @@ def main() -> None:
         "Queries whose executed plan truncates at a checkpoint also get",
         "an `expanded` plan below it: the same query re-planned (explain only,",
         "never executed) with localCheckpoint patched to a no-op, showing the",
-        "full lineage the checkpoint materializes.",
+        "full lineage the checkpoint materializes. A `Scan ExistingRDD` that",
+        "inlining leaves in place is a frame built on the driver (a",
+        "`createDataFrame` of a bounded driver-side result, e.g. DoReMi's",
+        "per-domain weights): it has no lineage to expand, so it gets no",
+        "expanded plan.",
         "",
     ]
 
@@ -77,6 +81,8 @@ def main() -> None:
         if "Scan ExistingRDD" in tree:
             with inline_checkpoints():
                 expanded = _tree(q.fn(spark, args.sf))
+            if expanded.count("Scan ExistingRDD") == tree.count("Scan ExistingRDD"):
+                continue  # no checkpoint: the scans are driver-built frames
             lines += [
                 "expanded (checkpoint-inlined, explain-only):",
                 "",
