@@ -23,7 +23,10 @@ version reads, written before the pointer replace. A read anti-joins
 each layer on the keys of every later layer and unions the survivors by
 name: the sequential copy-on-write merge, deferred to the read.
 `full_refresh`, `delete_where` and `compact` commit one layer (a version
-with no manifest is its own one layer), so `compact` is the fold.
+with no manifest is its own one layer), so `compact` is the fold. An
+upsert onto a version of `MAX_LAYERS` layers, or whose deltas outweigh
+half its base on disk, commits the folded view as one layer (an LSM
+merge), so no read plans more than MAX_LAYERS·(MAX_LAYERS−1)/2 joins.
 `vacuum` marks versions beyond `retain` ``_RETIRED`` (unreadable) and
 deletes a version directory only once no retained version names it.
 
@@ -49,6 +52,7 @@ from duva_spark.catalog import table_schema
 CURRENT_POINTER = "_CURRENT"
 LAYERS = "_LAYERS"
 RETIRED = "_RETIRED"
+MAX_LAYERS = 4
 
 
 def _current_version(path: str) -> int | None:
@@ -83,8 +87,8 @@ def _commit(
     by an observation on the scan that feeds the write. With one, `df` is
     a delta layered over the current version if there is one (see
     `merge_upsert`), counted by a key-only scan of the layered view
-    before the pointer names it. ``retain`` keeps that many trailing versions (current
-    included) readable via `read_version`."""
+    before the pointer names it. ``retain`` keeps that many trailing
+    versions (current included) readable via `read_version`."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -101,7 +105,7 @@ def _commit(
         with open(os.path.join(_version_dir(path, version), LAYERS), "w") as f:
             json.dump(layers, f)
         # count() prunes every payload column: only the keys are scanned
-        n_rows = _read_layers(df.sparkSession, path, version).count()
+        n_rows = _fold(_layer_frames(df.sparkSession, path, version)).count()
     else:
         n_rows = obs.get["n_rows"]
     fd, tmp = tempfile.mkstemp(dir=path, suffix=".ptr")
@@ -132,7 +136,7 @@ def read_dataset(spark, path: str) -> DataFrame:
     current = _current_version(path)
     if current is None:
         return _read(spark, path)
-    return _read_layers(spark, path, current)
+    return _fold(_layer_frames(spark, path, current))
 
 
 def _version_dirs(path: str) -> list[int]:
@@ -148,13 +152,12 @@ def list_versions(path: str) -> list[int]:
 
 
 def read_version(spark, path: str, version: int) -> DataFrame:
-    """Time travel: read a retained historical version of a dataset
-    (Delta's ``VERSION AS OF`` on the pointer scheme). Raises if the
-    version was vacuumed, also when its directory lives on as a layer
-    of a later version."""
+    """Time travel (Delta's ``VERSION AS OF``): read a retained version.
+    Raises if it was vacuumed, also when its directory lives on as a
+    layer of a later version."""
     if version not in list_versions(path):
         raise FileNotFoundError(f"version {version} not on disk (retained: {list_versions(path)})")
-    return _read_layers(spark, path, version)
+    return _fold(_layer_frames(spark, path, version))
 
 
 def _read(spark, directory: str) -> DataFrame:
@@ -168,13 +171,15 @@ def _read(spark, directory: str) -> DataFrame:
     return spark.read.schema(schema).parquet(directory)
 
 
-def _read_layers(spark, path: str, version: int) -> DataFrame:
-    """One lazy plan over the layers of `version`: each layer anti-joined
-    on the keys of every later layer, the survivors unioned by name,
-    oldest first. Column order and types are those of the sequential
-    copy-on-write merge. A layer's key frame is one plan wherever it is
-    used, so Spark scans and broadcasts it once per read."""
-    layers = [(_read(spark, os.path.join(path, d)), key) for d, key in _layers(path, version)]
+def _layer_frames(spark, path: str, version: int) -> list[tuple[DataFrame, str | None]]:
+    """The `(frame, key)` layers of `version`, oldest first: `_fold` them."""
+    return [(_read(spark, os.path.join(path, d)), key) for d, key in _layers(path, version)]
+
+
+def _fold(layers: list[tuple[DataFrame, str | None]]) -> DataFrame:
+    """One lazy plan: each layer anti-joined on the keys of every later
+    layer (one key plan per layer, so Spark scans and broadcasts it
+    once), the survivors unioned by name, as the copy-on-write merge."""
     out = None
     for i, (frame, _) in enumerate(layers):
         for later, key in layers[i + 1:]:
@@ -209,26 +214,29 @@ def merge_upsert(spark, new_df: DataFrame, path: str, key: str, retain: int = 1)
 
     Merge-on-read: `new_df` alone is committed, as a layer over the
     current version; earlier rows whose `key` it holds drop out when the
-    dataset is read (existing ⟕anti⟕ new ∪ new, deferred), and `compact`
-    folds the layers. Returns the resulting row count, from a key-only
-    scan. An empty or absent `path` takes `new_df` as its first version;
-    a non-empty `path` with no ``_CURRENT`` raises rather than commit
-    the delta alone. ``retain`` > 1 keeps trailing versions for time
-    travel (`read_version` / `vacuum`).
+    dataset is read (existing ⟕anti⟕ new ∪ new, deferred). A current
+    version of `MAX_LAYERS` layers, or whose deltas hold more than half
+    its base's bytes, is folded with `new_df` into one layer instead.
+    Returns the resulting row count. An empty or absent `path` takes
+    `new_df` as its first version; a non-empty `path` with no
+    ``_CURRENT`` raises rather than commit the delta alone. ``retain`` >
+    1 keeps trailing versions for time travel (`read_version`/`vacuum`).
     """
-    if _current_version(path) is None and os.path.exists(path) and os.listdir(path):
-        raise FileExistsError(
-            f"{path} is not empty and has no {CURRENT_POINTER}; "
-            "full_refresh it before upserting"
-        )
+    current = _current_version(path)
+    if current is None and os.path.exists(path) and os.listdir(path):
+        raise FileExistsError(f"{path} is not empty and has no {CURRENT_POINTER}; full_refresh it first")
     new_df.select(key)  # an unknown key fails here, before anything is written
+    if current is not None:
+        sizes = [sum(map(os.path.getsize, _layer_files(path, d))) for d, _ in _layers(path, current)]
+        if len(sizes) >= MAX_LAYERS or 2 * sum(sizes[1:]) > sizes[0]:
+            folded = _fold([*_layer_frames(spark, path, current), (new_df, key)])
+            return _commit(folded, path, retain=retain)
     return _commit(new_df, path, retain=retain, key=key)
 
 
 def _retain_all(path: str, retain: int | None) -> int:
-    """None = preserve every version currently on disk plus the new one —
-    a maintenance op must not silently shrink a retention window the
-    caller built with a larger retain."""
+    """None = keep every version on disk plus the new one: a maintenance
+    op must not shrink a retention window the caller built."""
     return retain if retain is not None else len(list_versions(path)) + 1
 
 
@@ -244,45 +252,41 @@ def delete_where(spark, path: str, condition, retain: int | None = None) -> int:
     enforcement — the op a GDPR request needs; duva can only drop whole
     tables, app/core/importer.py:242-246).
 
-    Rows matching `condition` (a Column predicate) go from every layer:
-    the rest of the current view is committed as a one-layer version.
-    The previous version stays readable via `read_version` until
-    `vacuum` drops it, which makes the delete auditable AND reversible
-    within the retention window. Returns the surviving row count.
-    """
+    Rows matching `condition` (a Column predicate) go from every layer;
+    the rest is committed as a one-layer version. The previous version
+    stays readable via `read_version` until `vacuum` drops it: the delete
+    is auditable AND reversible within the retention window. Returns the
+    surviving row count."""
     from pyspark.sql import functions as F
 
     current = _require_current(path)
     # SQL DELETE semantics: only rows where the predicate is TRUE go;
     # a NULL-evaluating predicate must KEEP the row (a bare ~condition
     # would silently over-delete NULL rows — fatal in a GDPR helper).
-    remaining = _read_layers(spark, path, current).filter(~F.coalesce(condition, F.lit(False)))
+    remaining = _fold(_layer_frames(spark, path, current)).filter(~F.coalesce(condition, F.lit(False)))
     return _commit(remaining, path, retain=_retain_all(path, retain))
 
 
+def _layer_files(path: str, layer: str) -> list[str]:
+    """The parquet data files of one layer, partition dirs included."""
+    walk = os.walk(os.path.join(path, layer))
+    return [os.path.join(root, f) for root, _, files in walk for f in files if f.endswith(".parquet")]
+
+
 def _data_files(path: str, version: int) -> list[str]:
-    """The parquet data files of every layer of `version`, partition
-    dirs included."""
-    return [
-        os.path.join(root, f)
-        for d, _ in _layers(path, version)
-        for root, _, files in os.walk(os.path.join(path, d))
-        for f in files
-        if f.endswith(".parquet")
-    ]
+    return [f for d, _ in _layers(path, version) for f in _layer_files(path, d)]
 
 
 def compact(
     spark, path: str, target_file_bytes: int = 128 * 1024 * 1024, retain: int | None = None
 ) -> tuple[int, int]:
     """Small-file compaction — the OPTIMIZE pass every streaming/
-    incremental ingest needs: micro-batch commits accumulate small files
-    and upsert layers, and at 100 TB task-per-file scheduling, footers
-    and per-layer anti-joins dominate scan cost. Folds the current
-    version's layers into one of ceil(bytes / target_file_bytes) files,
-    committed as a new version (the old one retained for time travel).
-    Returns (files_before, files_after), counted across all layers.
-    """
+    incremental ingest needs: micro-batch commits accumulate small files,
+    and at 100 TB task-per-file scheduling and footers dominate scan
+    cost. Folds the current version's layers into one of
+    ceil(bytes / target_file_bytes) files, committed as a new version
+    (the old one retained for time travel). Returns (files_before,
+    files_after), counted across all layers."""
     current = _require_current(path)
     files = _data_files(path, current)
     total_bytes = sum(os.path.getsize(f) for f in files)
@@ -290,6 +294,6 @@ def compact(
     # coalesce, not repartition: merging small files needs NO shuffle
     # (coalesce only narrows partitioning); at 100 TB a repartition
     # would double the IO of the OPTIMIZE pass for nothing.
-    df = _read_layers(spark, path, current).coalesce(n_target)
+    df = _fold(_layer_frames(spark, path, current)).coalesce(n_target)
     _commit(df, path, retain=_retain_all(path, retain))
     return len(files), len(_data_files(path, _require_current(path)))

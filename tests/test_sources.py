@@ -282,19 +282,21 @@ def test_merge_upsert_chain_equals_copy_on_write_fold(spark, tmp_path):
     from tests.reference_folds import merge_upsert_fold
 
     out = str(tmp_path / "ds")
+    # a base far larger than the deltas, so no upsert folds the layers
     base = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0), (None, "n", 0.0)],
+        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0), (None, "n", 0.0)]
+        + [(i, f"f{i}", i / 2) for i in range(10, 3000)],
         "`_id` long, name string, score double",
-    )
+    ).coalesce(1)
     adds_col = spark.createDataFrame(
         [(2, "B", 20.0, "x"), (4, "d", 4.0, "y"), (None, "N", 5.0, "z")],
         "`_id` long, name string, score double, extra string",
-    )
+    ).coalesce(1)
     drops_col = spark.createDataFrame(
         [(3, "C", "p"), (5, "e", "q"), (5, "E", "r")], "`_id` long, name string, extra string"
-    )
+    ).coalesce(1)
     deltas = [adds_col, drops_col, drops_col]  # the last one replays the second
-    assert merge_upsert(spark, base, out, "_id", retain=4) == 4
+    assert merge_upsert(spark, base, out, "_id", retain=4) == 2994
     fold = read_dataset(spark, out)
     folds = [fold]
     for i, delta in enumerate(deltas, start=1):
@@ -309,6 +311,32 @@ def test_merge_upsert_chain_equals_copy_on_write_fold(spark, tmp_path):
     assert _frame_pin(read_version(spark, out, 3)) == _frame_pin(read_version(spark, out, 2))
     assert [r for r in rows if r[0] == 5] == [(5, "E", None, "r"), (5, "e", None, "q")]
     assert sorted(r[1] for r in rows if r[0] is None) == ["N", "n"]
+
+
+def test_repeated_upserts_fold_at_the_layer_bound(spark, tmp_path):
+    """Thirty upserts in a row, as a stream sink makes one per
+    micro-batch: no version reads more than MAX_LAYERS layers, so neither
+    the read plan nor the upsert's key count grows with the history; the
+    rows equal the sequential merge throughout."""
+    from duva_spark.sinks import MAX_LAYERS, _current_version, _layers, merge_upsert, read_dataset
+
+    out = str(tmp_path / "ds")
+    schema = "`_id` long, v string"
+    want = {i: "base" for i in range(2000)}
+    merge_upsert(spark, spark.createDataFrame(list(want.items()), schema).coalesce(1), out, "_id")
+    depths = []
+    for k in range(30):
+        # each delta updates 30 keys of the one before, and runs past the base
+        rows = [(i, f"u{k}") for i in range(k * 70, k * 70 + 100)]
+        want.update(rows)
+        delta = spark.createDataFrame(rows, schema).coalesce(1)
+        assert merge_upsert(spark, delta, out, "_id") == len(want)
+        depths.append(len(_layers(out, _current_version(out))))
+    assert 2 < max(depths) <= MAX_LAYERS and 1 in depths
+    back = read_dataset(spark, out)
+    plan = back._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join") <= MAX_LAYERS * (MAX_LAYERS - 1) // 2
+    assert dict(map(tuple, back.collect())) == want
 
 
 def test_merge_upsert_writes_only_the_delta(spark, tmp_path):
